@@ -35,6 +35,40 @@ object Metrics {
                         shuffleReadBytes: Long, shuffleWriteBytes: Long,
                         spillBytes: Long)
 
+  /** How many [[drainBus]] calls fell back to the 500 ms sleep — 0
+    * whenever the pinned Spark exposes `LiveListenerBus.waitUntilEmpty`
+    * (listener-fed counts taken after a fallback may be short). */
+  val drainFallbacks = new java.util.concurrent.atomic.AtomicLong
+
+  /** `SparkContext.listenerBus` and `LiveListenerBus.waitUntilEmpty()`,
+    * resolved once. Both are private[spark] (what Spark's own UI tests
+    * call), hence reflection. */
+  private lazy val busMethods
+      : Option[(java.lang.reflect.Method, java.lang.reflect.Method)] =
+    try {
+      val listenerBus =
+        classOf[org.apache.spark.SparkContext].getMethod("listenerBus")
+      Some(listenerBus -> listenerBus.getReturnType.getMethod("waitUntilEmpty"))
+    } catch { case _: ReflectiveOperationException => None }
+
+  /** Block until the async listener bus has delivered every queued
+    * event, so a listener detached right after sees all finished jobs.
+    * Falls back to a bounded 500 ms sleep — logged and counted in
+    * [[drainFallbacks]] — when the drain cannot be reached. */
+  def drainBus(spark: SparkSession): Unit = {
+    val drained = busMethods.exists { case (listenerBus, waitUntilEmpty) =>
+      try { waitUntilEmpty.invoke(listenerBus.invoke(spark.sparkContext)); true }
+      catch { case _: ReflectiveOperationException => false }
+    }
+    if (!drained) {
+      drainFallbacks.incrementAndGet()
+      org.apache.log4j.Logger.getLogger(getClass).warn(
+        "listener-bus drain unavailable; slept 500 ms instead — " +
+          "listener-fed job counts may be short")
+      Thread.sleep(500L)
+    }
+  }
+
   private class Collector(label: String, onlyLabelled: Boolean = false)
       extends SparkListener {
     val jobs = new ConcurrentLinkedQueue[JobMetrics]()
@@ -94,14 +128,8 @@ object Metrics {
       try body
       finally {
         // the bus is async: drain queued events before detaching so
-        // short jobs are not lost. waitUntilEmpty is private[spark]
-        // (it is what Spark's own UI tests call) — reached via
-        // reflection, with a bounded sleep as the fallback.
-        try {
-          val sc = spark.sparkContext
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: ReflectiveOperationException => Thread.sleep(500L) }
+        // short jobs are not lost
+        drainBus(spark)
         spark.sparkContext.removeSparkListener(c)
       }
     (result, c.jobs.asScala.toSeq)
@@ -127,10 +155,7 @@ object Metrics {
       try body
       finally {
         sc.setJobDescription(prevDesc)
-        try {
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: ReflectiveOperationException => Thread.sleep(500L) }
+        drainBus(spark)
         sc.removeSparkListener(c)
       }
     (result, c.jobs.asScala.toSeq)
@@ -156,11 +181,7 @@ object Metrics {
   def observedOr[T](spark: SparkSession,
                     obs: org.apache.spark.sql.Observation,
                     key: String)(fallback: => T): T = {
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: ReflectiveOperationException => Thread.sleep(500L) }
+    drainBus(spark)
     // non-blocking probe: the observation's future is complete iff the
     // observed query delivered its metrics (never block — absence must
     // take the fallback, not hang)

@@ -17,6 +17,13 @@ import org.apache.spark.sql.types
   * any existing version are never disturbed (copy-on-write semantics,
   * the same isolation Iceberg's copy-on-write mode gives).
   *
+  * Every commit runs ONE protocol, owned by two helpers: [[stageNext]]
+  * claims `v=N` (N = max on-disk version + 1), runs the entry point's
+  * write, records `_parent` and stamps `_committed`; [[publish]] reads
+  * the base, runs a staging half against it, writes the optional
+  * `_txn` stamp and moves `_latest`. Every `stage*` half is a
+  * [[stageNext]] body; every public commit is a [[publish]] over one.
+  *
   * Scale: a snapshot write is one distributed parquet job; commit is a
   * single tiny marker rename. Time-travel reads are ordinary
   * partition-pruned scans of one version directory.
@@ -61,22 +68,56 @@ object SnapshotTable {
     }
   }
 
-  /** Publish `df` as the next snapshot; returns the new version.
-    * The next version is max(existing)+1, NOT marker+1 — after a
-    * rollback the still-on-disk newer versions must never be
-    * overwritten in place (copy-on-write isolation). The version dir is
-    * claimed atomically first, so a concurrent committer racing to the
-    * same version number fails instead of silently overwriting.
-    * `statsCols` additionally records per-FILE min/max manifest stats
-    * for those columns ([[readSkipping]] prunes files with them). */
-  def commit(df: DataFrame, root: String,
-             statsCols: Seq[String] = Seq.empty,
-             bloomCols: Seq[String] = Seq.empty): Long = {
-    val base = latestVersion(root)
-    val next = stageVersion(df, root, base, statsCols, bloomCols)
-    moveMarker(root, next)
+  /** Stage the next version against `base`: claim `v=N` (N = max
+    * on-disk version + 1, NOT marker + 1 — after a rollback the
+    * still-on-disk newer versions must never be overwritten in place),
+    * run `write(N)`, record `_parent` = `base` (ancestry for
+    * fast-forward checks) and stamp `_committed`. Nothing is
+    * published. Validation that must not leave an orphan claim runs
+    * BEFORE this call. */
+  private def stageNext(root: String, base: Long)(write: Long => Unit): Long = {
+    val next = nextVersion(root)
+    claimVersion(root, next)
+    write(next)
+    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), base.toString)
+    stampCommitted(root, next)
     next
   }
+
+  private def nextVersion(root: String): Long =
+    versions(root).lastOption.getOrElse(-1L) + 1
+
+  /** Publish one staged version: read the base (the `_latest` marker),
+    * run `stage` against it, write the idempotent-writer stamp `txn`
+    * (`(writerId, batchId)`, see [[lastTxnBatch]]) into the staged
+    * directory, and move the marker. A stage returning -1 or `base`
+    * staged nothing: the marker stays and `base` is returned. */
+  private[graft] def publish(root: String, txn: Option[(String, Long)] = None)
+                            (stage: Long => Long): Long = {
+    txn.foreach { case (w, _) =>
+      require(!w.contains("\n"), "writerId must be newline-free") }
+    val base = latestVersion(root)
+    val next = stage(base)
+    if (next < 0 || next == base) base
+    else {
+      txn.foreach { case (w, b) =>
+        MetaIO.writeString(MetaIO.join(root, s"v=$next", "_txn"), s"$w\n$b")
+      }
+      moveMarker(root, next)
+      next
+    }
+  }
+
+  /** Publish `df` as the next snapshot; returns the new version. The
+    * version dir is claimed atomically first ([[stageNext]]), so a
+    * concurrent committer racing to the same version number fails
+    * instead of silently overwriting. `statsCols` additionally records
+    * per-FILE min/max manifest stats for those columns
+    * ([[readSkipping]] prunes files with them). */
+  def commit(df: DataFrame, root: String,
+             statsCols: Seq[String] = Seq.empty,
+             bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root)(stageVersion(df, root, _, statsCols, bloomCols))
 
   /** Write `df` as a fully-materialized version directory WITHOUT
     * advancing any ref — the "write data files, publish later" half of
@@ -89,15 +130,11 @@ object SnapshotTable {
   private[graft] def stageVersion(df: DataFrame, root: String,
                                   parent: Long = -1L,
                                   statsCols: Seq[String] = Seq.empty,
-                                  bloomCols: Seq[String] = Seq.empty): Long = {
-    val next = versions(root).lastOption.getOrElse(-1L) + 1
-    claimVersion(root, next)
-    df.write.mode("overwrite").parquet(s"$root/v=$next")
-    commitChecksAndStats(df.sparkSession, root, next, statsCols, bloomCols)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), parent.toString)
-    stampCommitted(root, next)
-    next
-  }
+                                  bloomCols: Seq[String] = Seq.empty): Long =
+    stageNext(root, parent) { next =>
+      df.write.mode("overwrite").parquet(s"$root/v=$next")
+      commitChecksAndStats(df.sparkSession, root, next, statsCols, bloomCols)
+    }
 
   /** Mark a version directory's data write as complete. Written AFTER
     * the parquet job and BEFORE the ref advance: a directory claimed by
@@ -230,34 +267,37 @@ object SnapshotTable {
     }
   }
 
-  /** Anti-join a position-carrying scan against the accumulated delete
-    * files and drop the identity columns. The delete relation is tiny
-    * relative to the data (rows deleted since the last
-    * [[applyDeletes]] fold), so AQE plans this as a broadcast anti
-    * join — merge-on-read cost is a broadcast probe, not a shuffle. */
-  private def applyDeleteFiles(spark: SparkSession, root: String,
-                               dels: Seq[Long], df: DataFrame): DataFrame =
-    if (dels.isEmpty) df
-    else df.join(readDeleteFiles(spark, root, dels),
-      Seq(FileCol, PosCol), "left_anti").drop(FileCol, PosCol)
-
   /** Resolve BOTH merge-on-read delete flavors over a
-    * position-carrying scan — position sidecars first (exact (file,
-    * row) identities), then equality sidecars under the Iceberg
-    * sequence rule — and drop the identity columns. */
+    * position-carrying frame — position sidecars first (exact (file,
+    * row) identities; the delete relation is tiny relative to the
+    * data, so AQE plans a broadcast anti join), then equality sidecars
+    * under the Iceberg sequence rule — KEEPING the identity columns
+    * (write paths locate rows by them). */
+  private def resolvePositioned(spark: SparkSession, root: String,
+                                dels: Seq[Long],
+                                eqs: Seq[(Long, Seq[String])],
+                                df: DataFrame): DataFrame = {
+    val afterPos =
+      if (dels.isEmpty) df
+      else df.join(readDeleteFiles(spark, root, dels),
+        Seq(FileCol, PosCol), "left_anti")
+    applyEqDeleteFiles(spark, root, eqs, afterPos)
+  }
+
+  /** [[resolvePositioned]] for readers: the identity columns dropped. */
   private def resolveDeletes(spark: SparkSession, root: String,
                              dels: Seq[Long],
                              eqs: Seq[(Long, Seq[String])],
                              df: DataFrame): DataFrame =
     if (dels.isEmpty && eqs.isEmpty) df
-    else {
-      val afterPos =
-        if (dels.isEmpty) df
-        else df.join(readDeleteFiles(spark, root, dels),
-          Seq(FileCol, PosCol), "left_anti")
-      applyEqDeleteFiles(spark, root, eqs, afterPos)
-        .drop(FileCol, PosCol)
-    }
+    else resolvePositioned(spark, root, dels, eqs, df).drop(FileCol, PosCol)
+
+  /** Version `v`'s live rows with their (file, position) identities. */
+  private def livePositioned(spark: SparkSession, root: String, v: Long,
+                             dels: Seq[Long],
+                             eqs: Seq[(Long, Seq[String])]): DataFrame =
+    resolvePositioned(spark, root, dels, eqs,
+      scan(spark, root, v, withPos = true))
 
   /** A row's storage version (the `v=M` its file lives under) — the
     * sequence number of the Iceberg equality-delete rule. */
@@ -276,21 +316,35 @@ object SnapshotTable {
                                  eqs: Seq[(Long, Seq[String])],
                                  df: DataFrame): DataFrame =
     if (eqs.isEmpty) df
-    else {
-      val rowV = regexp_extract(col(FileCol), "^v=(\\d+)/", 1).cast("long")
-      eqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
-        .foldLeft(df.withColumn(SeqCol, rowV)) {
-          case (cur, (keyCols, group)) =>
-            val delDf = group.map { case (d, _) =>
-              spark.read.parquet(s"$root/v=$d/_eqdeletes")
-                .select(keyCols.map(col): _*)
-                .withColumn(EqVerCol, lit(d))
-            }.reduce(_.unionByName(_))
-            val cond = keyCols.map(k => cur(k) <=> delDf(k))
-              .reduce(_ && _) && cur(SeqCol) < delDf(EqVerCol)
-            cur.join(broadcast(delDf), cond, "left_anti")
-        }.drop(SeqCol)
+    else eqDeleteGroups(spark, root, eqs).foldLeft(withSeq(df)) {
+      case (cur, (keyCols, delDf)) =>
+        cur.join(broadcast(delDf), eqMasked(cur, keyCols, delDf), "left_anti")
+    }.drop(SeqCol)
+
+  /** A position-carrying frame plus each row's storage version. */
+  private def withSeq(df: DataFrame): DataFrame =
+    df.withColumn(SeqCol,
+      regexp_extract(col(FileCol), "^v=(\\d+)/", 1).cast("long"))
+
+  /** Equality-delete sidecars grouped by key-column set (a stable
+    * order), each group one (keys…, [[EqVerCol]]) frame. */
+  private def eqDeleteGroups(spark: SparkSession, root: String,
+                             eqs: Seq[(Long, Seq[String])])
+      : Seq[(Seq[String], DataFrame)] =
+    eqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(",")).map {
+      case (keyCols, group) => keyCols -> group.map { case (d, _) =>
+        spark.read.parquet(s"$root/v=$d/_eqdeletes")
+          .select(keyCols.map(col): _*)
+          .withColumn(EqVerCol, lit(d))
+      }.reduce(_.unionByName(_))
     }
+
+  /** The sequence rule over a [[withSeq]] frame: the sidecar row masks
+    * a row iff the keys match null-safely and the row is older. */
+  private def eqMasked(cur: DataFrame, keyCols: Seq[String],
+                       delDf: DataFrame): Column =
+    keyCols.map(k => cur(k) <=> delDf(k)).reduce(_ && _) &&
+      cur(SeqCol) < delDf(EqVerCol)
 
   private def readDeleteFiles(spark: SparkSession, root: String,
                               dels: Seq[Long]): DataFrame =
@@ -423,9 +477,9 @@ object SnapshotTable {
     * The partition column cannot be renamed (its name is the physical
     * directory layout). */
   def renameColumn(spark: SparkSession, root: String, oldName: String,
-                   newName: String): Long = {
-    commitMetadataEvolution(spark, root, "rename", oldName, Some(newName))
-  }
+                   newName: String): Long =
+    publish(root)(stageMetadataEvolution(spark, root, "rename", oldName,
+      Some(newName), None, _))
 
   /** DROP a column as a METADATA-ONLY commit: the field id leaves the
     * schema, files keep their bytes (readers stop projecting them), and
@@ -433,7 +487,8 @@ object SnapshotTable {
     * can never resurrect. Time travel still reads the dropped column at
     * pre-drop versions. */
   def dropColumn(spark: SparkSession, root: String, name: String): Long =
-    commitMetadataEvolution(spark, root, "drop", name, None)
+    publish(root)(stageMetadataEvolution(spark, root, "drop", name, None,
+      None, _))
 
   /** ADD a column as a METADATA-ONLY commit (the third field-id
     * evolution beside rename/drop): the new field allocates a FRESH id
@@ -451,20 +506,8 @@ object SnapshotTable {
   def addColumn(spark: SparkSession, root: String, name: String,
                 dataType: types.DataType,
                 default: Option[String] = None): Long =
-    commitMetadataEvolution(spark, root, "add", name, None, Some(dataType),
-      default)
-
-  private def commitMetadataEvolution(spark: SparkSession, root: String,
-                                      op: String, name: String,
-                                      to: Option[String],
-                                      addType: Option[types.DataType] = None,
-                                      default: Option[String] = None)
-      : Long = {
-    val next = stageMetadataEvolution(spark, root, op, name, to, addType,
-      latestVersion(root), default)
-    moveMarker(root, next)
-    next
-  }
+    publish(root)(stageMetadataEvolution(spark, root, "add", name, None,
+      Some(dataType), _, default))
 
   /** The staging half of the metadata-only column evolutions
     * (rename/drop/add) against an EXPLICIT base version — what lets
@@ -569,25 +612,22 @@ object SnapshotTable {
         s"cannot $op '$name': it is a key of the unapplied equality " +
           s"delete at version $d — run applyDeletes first")
     }
-    val next = versions(root).lastOption.getOrElse(-1L) + 1
-    claimVersion(root, next)
-    // every entry inherited — zero data moved; unapplied MoR delete
-    // files ride along (dropping them would resurrect deleted rows)
-    writeManifest(root, next, m, deleteEntries(root, base),
-      eqDeleteEntries(root, base))
-    MetaIO.writeString(schemaPath(root, next), newSchema.json)
-    // the high-water mark survives a drop — that is the whole point
-    writeFields(root, next, newFields, lastId)
-    // initial defaults ride along: a drop releases its entry (the id
-    // never returns), an add-with-default records one under the fresh
-    // id, a rename keeps ids — and therefore defaults — untouched
-    carryDefaults(root, base, next,
-      drop = if (op == "drop") baseFields.find(_._2 == name).map(_._1)
-             else None,
-      add = if (op == "add") foldedDefault.map(d => lastId -> d) else None)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), base.toString)
-    stampCommitted(root, next)
-    next
+    stageNext(root, base) { next =>
+      // every entry inherited — zero data moved; unapplied MoR delete
+      // files ride along (dropping them would resurrect deleted rows)
+      writeManifest(root, next, m, deleteEntries(root, base),
+        eqDeleteEntries(root, base))
+      MetaIO.writeString(schemaPath(root, next), newSchema.json)
+      // the high-water mark survives a drop — that is the whole point
+      writeFields(root, next, newFields, lastId)
+      // initial defaults ride along: a drop releases its entry (the id
+      // never returns), an add-with-default records one under the
+      // fresh id, a rename keeps ids — and therefore defaults — untouched
+      carryDefaults(root, base, next,
+        drop = if (op == "drop") baseFields.find(_._2 == name).map(_._1)
+               else None,
+        add = if (op == "add") foldedDefault.map(d => lastId -> d) else None)
+    }
   }
 
   /** Id-resolved manifested read: None when the reading version has no
@@ -936,16 +976,18 @@ object SnapshotTable {
     * touch `_latest`, so main readers are fully isolated. */
   def commitToBranch(df: DataFrame, root: String, branch: String): Long =
     withBranchLock(root, branch) {
-      val base = branchVersion(root, branch)
-      val next = versions(root).lastOption.getOrElse(-1L) + 1
-      claimVersion(root, next)
-      df.write.mode("overwrite").parquet(s"$root/v=$next")
-      MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), base.toString)
-      stampCommitted(root, next)
-      if (branch == MainBranch) moveMarker(root, next)
-      else writeRef(root, "branch", branch, next)
+      // the full commit path: CHECK constraints and `_stats` apply to a
+      // branch commit exactly as to a main one, so a violating frame
+      // can never reach main by a later fast-forward
+      val next = stageVersion(df, root, branchVersion(root, branch))
+      moveBranch(root, branch, next)
       next
     }
+
+  /** Re-point a branch head (main = the `_latest` marker). */
+  private def moveBranch(root: String, branch: String, version: Long): Unit =
+    if (branch == MainBranch) moveMarker(root, version)
+    else writeRef(root, "branch", branch, version)
 
   /** `version`'s recorded parent, or -1 (root commit, or a version
     * written by plain [[commit]] before ancestry tracking). */
@@ -978,10 +1020,7 @@ object SnapshotTable {
       require(isAncestor(root, target, source),
         s"'$toBranch' (v$target) is not an ancestor of '$fromBranch' " +
           s"(v$source): not a fast-forward — merge instead")
-      if (source != target) {
-        if (toBranch == MainBranch) moveMarker(root, source)
-        else writeRef(root, "branch", toBranch, source)
-      }
+      if (source != target) moveBranch(root, toBranch, source)
       source
     }
 
@@ -1251,7 +1290,7 @@ object SnapshotTable {
     require(newCol.nonEmpty, "empty partition column")
     val norm = normSpec(newCol)
     require(norm != cur, s"partition spec is already '$cur'")
-    val from = versions(root).lastOption.getOrElse(-1L) + 1
+    val from = nextVersion(root)
     // append an era line with one atomic-visible publish
     MetaIO.publishString(specPath(root),
       MetaIO.readString(specPath(root)) + s"\n$norm@$from")
@@ -1274,19 +1313,18 @@ object SnapshotTable {
     * `rewrite_data_files` spec-migration story; after this the table
     * is single-era and copy-on-write delta ops work again. Returns
     * the new version (or the current one when already single-era). */
-  def migrateSpec(spark: SparkSession, root: String): Long = {
-    val v = latestVersion(root)
+  def migrateSpec(spark: SparkSession, root: String): Long =
+    publish(root)(stageMigrateSpec(spark, root, _))
+
+  /** The staging half of [[migrateSpec]]; returns `v` when the table
+    * is already single-era. */
+  private def stageMigrateSpec(spark: SparkSession, root: String,
+                               v: Long): Long = {
     val cur = partitionSpec(root).getOrElse(return v)
-    val entries = manifestEntries(root, v)
-    val foreign = foreignEraEntries(root, entries)
+    val foreign = foreignEraEntries(root, manifestEntries(root, v))
     if (foreign.isEmpty) return v
-    val dels = deleteEntries(root, v)
-    val eqs = eqDeleteEntries(root, v)
-    val scanned = scan(spark, root, v, withPos = true)
-    val resolved = applyEqDeleteFiles(spark, root, eqs,
-      if (dels.isEmpty) scanned
-      else scanned.join(readDeleteFiles(spark, root, dels),
-        Seq(FileCol, PosCol), "left_anti"))
+    val resolved = livePositioned(spark, root, v, deleteEntries(root, v),
+      eqDeleteEntries(root, v))
     val foreignDirs = foreign.map { case (p, sv) => s"v=$sv/$p" }
     val dirOfRow = regexp_extract(col(FileCol), "^(v=\\d+/.+)/[^/]+$", 1)
     // a rewritten delta partition must hold its COMPLETE content: if a
@@ -1301,10 +1339,8 @@ object SnapshotTable {
     val movers = resolved
       .filter(dirc.isin(affected: _*))
       .drop(FileCol, PosCol)
-    val next = stageManifested(movers, root, cur, v, append = false,
+    stageManifested(movers, root, cur, v, append = false,
       removeParts = foreign.map(_._1).toSet, allowCrossEra = true)
-    moveMarker(root, next)
-    next
   }
 
   /** First manifested commit records the spec (exclusive create — of
@@ -1593,13 +1629,9 @@ object SnapshotTable {
     * from empty. */
   def commitDelta(slice: DataFrame, root: String, partitionCol: String,
                   statsCols: Seq[String] = Seq.empty,
-                  bloomCols: Seq[String] = Seq.empty): Long = {
-    val base = latestVersion(root)
-    val next = stageDelta(slice, root, partitionCol, base, statsCols,
-      bloomCols)
-    moveMarker(root, next)
-    next
-  }
+                  bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root)(stageDelta(slice, root, partitionCol, _, statsCols,
+      bloomCols))
 
   /** The staging half of [[commitDelta]] (fully written + manifested,
     * nothing published), against an EXPLICIT base version — which is
@@ -1626,12 +1658,9 @@ object SnapshotTable {
     * via a delta commit. */
   def commitAppend(slice: DataFrame, root: String, partitionCol: String,
                    statsCols: Seq[String] = Seq.empty,
-                   bloomCols: Seq[String] = Seq.empty): Long = {
-    val next = stageAppend(slice, root, partitionCol, latestVersion(root),
-      statsCols, bloomCols)
-    moveMarker(root, next)
-    next
-  }
+                   bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root)(stageAppend(slice, root, partitionCol, _, statsCols,
+      bloomCols))
 
   /** The staging half of [[commitAppend]] (fully written + manifested,
     * nothing published), against an explicit base version. */
@@ -1658,15 +1687,9 @@ object SnapshotTable {
   def commitAppendTxn(slice: DataFrame, root: String, partitionCol: String,
                       writerId: String, batchId: Long,
                       statsCols: Seq[String] = Seq.empty,
-                      bloomCols: Seq[String] = Seq.empty): Long = {
-    require(!writerId.contains("\n"), "writerId must be newline-free")
-    val next = stageAppend(slice, root, partitionCol, latestVersion(root),
-      statsCols, bloomCols)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_txn"),
-      s"$writerId\n$batchId")
-    moveMarker(root, next)
-    next
-  }
+                      bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root, Some(writerId -> batchId))(stageAppend(slice, root,
+      partitionCol, _, statsCols, bloomCols))
 
   /** The MoR-upsert twin of [[commitAppendTxn]] (an Update-mode
     * streaming sink: each trigger's rows REPLACE their key's older
@@ -1676,15 +1699,9 @@ object SnapshotTable {
   def commitUpsertTxn(source: DataFrame, root: String, partitionCol: String,
                       keyCols: Seq[String], writerId: String, batchId: Long,
                       statsCols: Seq[String] = Seq.empty,
-                      bloomCols: Seq[String] = Seq.empty): Long = {
-    require(!writerId.contains("\n"), "writerId must be newline-free")
-    val next = stageUpsertMor(source, root, partitionCol, keyCols,
-      latestVersion(root), statsCols, bloomCols)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_txn"),
-      s"$writerId\n$batchId")
-    moveMarker(root, next)
-    next
-  }
+                      bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root, Some(writerId -> batchId))(stageUpsertMor(source, root,
+      partitionCol, keyCols, _, statsCols, bloomCols))
 
   /** The full-snapshot twin of [[commitAppendTxn]] (a Complete-mode
     * streaming sink replaces the table every trigger): stage + stamp +
@@ -1692,14 +1709,9 @@ object SnapshotTable {
   def commitTxn(df: DataFrame, root: String,
                 writerId: String, batchId: Long,
                 statsCols: Seq[String] = Seq.empty,
-                bloomCols: Seq[String] = Seq.empty): Long = {
-    require(!writerId.contains("\n"), "writerId must be newline-free")
-    val next = stageVersion(df, root, latestVersion(root), statsCols, bloomCols)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_txn"),
-      s"$writerId\n$batchId")
-    moveMarker(root, next)
-    next
-  }
+                bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root, Some(writerId -> batchId))(stageVersion(df, root, _,
+      statsCols, bloomCols))
 
   /** The newest batch id `writerId` has COMMITTED to this table, or
     * None — the replay-detection read of the idempotent-write
@@ -1723,15 +1735,6 @@ object SnapshotTable {
     }.nextOption()
   }
 
-  /** Row-level DELETE as a partition-pruned copy-on-write delta commit
-    * (the GDPR-delete / `DELETE FROM ... WHERE` of the table formats):
-    * only partitions holding matching rows are rewritten without them;
-    * everything else is inherited by manifest reference. A partition
-    * emptied by the delete is REMOVED from the manifest rather than
-    * silently inherited (the classic delete-resurrection bug). Rows
-    * where the predicate evaluates to null are kept, per SQL DELETE
-    * semantics. Returns the new version, or the current one when
-    * nothing matches. */
   /** Whether a predicate Column is a pure function of `df`'s rows —
     * judged on the ANALYZED plan (the unresolved tree defaults every
     * UnresolvedFunction deterministic: `rand()` and
@@ -1744,13 +1747,20 @@ object SnapshotTable {
     !df.select(c.as("__graft_det_probe")).queryExecution.analyzed
       .exists(p => p.expressions.exists(_.exists(e => !e.deterministic)))
 
-  def deleteWhere(spark: SparkSession, root: String, partitionCol: String,
-                  predicate: Column): Long = {
-    val cur0 = read(spark, root)
-    // A nondeterministic predicate is drawn ONCE (pinned per-row
-    // flag), same single-draw discipline as [[stageUpdateWhere]]:
-    // touched-partition discovery and the survivor filter must see
-    // the same match set or rows can be missed or doubly kept.
+  /** The copy-on-write match of `predicate` over the base rows `cur0`:
+    * (rows to rewrite from, per-row hit flag, partition-dir column,
+    * touched partition dirs sorted). A nondeterministic predicate is
+    * drawn ONCE: touched-partition discovery and the rewrite are
+    * otherwise two independent draws — rows matching only the second
+    * draw in partitions the first missed would never be rewritten, and
+    * an empty first draw could report "nothing matched" off a
+    * discarded sample. So a per-row match flag is materialized
+    * (localCheckpoint pins the draw, the MERGE path's discipline) and
+    * both derive from it. Deterministic predicates keep the cheap
+    * two-scan plan — both scans compute the same function. */
+  private def cowMatch(cur0: DataFrame, predicate: Column,
+                       partitionCol: String)
+      : (DataFrame, Column, Column, Seq[String]) = {
     val (cur, hit) =
       if (columnDeterministic(cur0, predicate))
         (cur0, coalesce(predicate, lit(false)))
@@ -1766,16 +1776,35 @@ object SnapshotTable {
     val touched = cur.filter(hit)
       .select(dirc).distinct()
       .collect().map(_.getString(0)).filter(_ != null).toSeq.sorted
-    if (touched.isEmpty) return latestVersion(root)
+    (cur, hit, dirc, touched)
+  }
+
+  /** Row-level DELETE as a partition-pruned copy-on-write delta commit
+    * (the GDPR-delete / `DELETE FROM ... WHERE` of the table formats):
+    * only partitions holding matching rows are rewritten without them;
+    * everything else is inherited by manifest reference. A partition
+    * emptied by the delete is REMOVED from the manifest rather than
+    * silently inherited (the classic delete-resurrection bug). Rows
+    * where the predicate evaluates to null are kept, per SQL DELETE
+    * semantics. Returns the new version, or the current one when
+    * nothing matches. */
+  def deleteWhere(spark: SparkSession, root: String, partitionCol: String,
+                  predicate: Column): Long =
+    publish(root)(stageDeleteWhere(spark, root, partitionCol, predicate, _))
+
+  /** The staging half of [[deleteWhere]]; -1 when nothing matches. */
+  private def stageDeleteWhere(spark: SparkSession, root: String,
+                               partitionCol: String, predicate: Column,
+                               base: Long): Long = {
+    val cur0 = read(spark, root, base)
+    val (cur, hit, dirc, touched) = cowMatch(cur0, predicate, partitionCol)
+    if (touched.isEmpty) return -1L
     val survivors = cur
       .filter(dirc.isin(touched: _*))
       .filter(!hit)
       .select(cur0.columns.map(col).toSeq: _*)
-    val next = stageManifested(survivors, root, partitionCol,
-      latestVersion(root), append = false,
+    stageManifested(survivors, root, partitionCol, base, append = false,
       removeParts = touched.toSet)
-    moveMarker(root, next)
-    next
   }
 
   /** Row-level UPDATE as a partition-pruned copy-on-write delta commit
@@ -1790,11 +1819,27 @@ object SnapshotTable {
     * in-place delta. Returns the new version, or the current one when
     * nothing matches. */
   def updateWhere(spark: SparkSession, root: String, partitionCol: String,
-                  predicate: Column, sets: Seq[(String, Column)]): Long = {
-    val next = stageUpdateWhere(spark, root, partitionCol, predicate,
-      sets, latestVersion(root))
-    if (next >= 0) moveMarker(root, next)
-    latestVersion(root)
+                  predicate: Column, sets: Seq[(String, Column)]): Long =
+    publish(root)(stageUpdateWhere(spark, root, partitionCol, predicate,
+      sets, _))
+
+  /** The base rows of an in-place UPDATE, after its shared refusals:
+    * no assignments, an assignment to a layout (partition-spec source)
+    * column — rows would have to move between partitions — or to a
+    * column the table lacks. */
+  private def updateBase(spark: SparkSession, root: String,
+                         partitionCol: String, sets: Seq[(String, Column)],
+                         base: Long): DataFrame = {
+    require(sets.nonEmpty, "UPDATE needs at least one assignment")
+    val layout = parseSpecs(partitionCol).map(_.source).toSet
+    val bad = sets.map(_._1).filter(layout.contains)
+    require(bad.isEmpty,
+      s"cannot update layout column(s) ${bad.mkString(", ")} in place — " +
+        "rows would have to move between partitions")
+    val cur = read(spark, root, base)
+    sets.foreach { case (n, _) => require(cur.columns.contains(n),
+      s"no column '$n' in ${cur.columns.mkString(", ")}") }
+    cur
   }
 
   /** The staging half of [[updateWhere]] against an EXPLICIT base
@@ -1807,37 +1852,8 @@ object SnapshotTable {
                                       predicate: Column,
                                       sets: Seq[(String, Column)],
                                       base: Long): Long = {
-    require(sets.nonEmpty, "UPDATE needs at least one assignment")
-    val layout = parseSpecs(partitionCol).map(_.source).toSet
-    val bad = sets.map(_._1).filter(layout.contains)
-    require(bad.isEmpty,
-      s"cannot update layout column(s) ${bad.mkString(", ")} in place — " +
-        "rows would have to move between partitions")
-    val cur0 = read(spark, root, base)
-    sets.foreach { case (n, _) => require(cur0.columns.contains(n),
-      s"no column '$n' in ${cur0.columns.mkString(", ")}") }
-    // A nondeterministic predicate must be drawn ONCE: the touched-
-    // partition discovery and the when(hit, ...) rewrite below are
-    // otherwise two independent draws — rows matching only the second
-    // draw in partitions the first missed would never update, and an
-    // empty first draw could report "nothing matched" off a discarded
-    // sample. Materialize a per-row match flag (localCheckpoint pins
-    // the draw, the MERGE path's discipline) and derive BOTH from it.
-    // Deterministic predicates keep the cheap two-scan plan — both
-    // scans compute the same function, no pin needed.
-    val (cur, hit) =
-      if (columnDeterministic(cur0, predicate))
-        (cur0, coalesce(predicate, lit(false)))
-      else {
-        val pinned = cur0
-          .withColumn("__graft_hit", coalesce(predicate, lit(false)))
-          .localCheckpoint(eager = true)
-        (pinned, col("__graft_hit"))
-      }
-    val dirc = rowDirExpr(parseSpecs(partitionCol), cur0.schema)
-    val touched = cur.filter(hit)
-      .select(dirc).distinct()
-      .collect().map(_.getString(0)).filter(_ != null).toSeq.sorted
+    val cur0 = updateBase(spark, root, partitionCol, sets, base)
+    val (cur, hit, dirc, touched) = cowMatch(cur0, predicate, partitionCol)
     if (touched.isEmpty) return -1L
     val setMap = sets.toMap
     val updated = cur.filter(dirc.isin(touched: _*))
@@ -1890,15 +1906,7 @@ object SnapshotTable {
                                     base: Long,
                                     predicateRefs: Set[String] = Set.empty)
       : Long = {
-    require(sets.nonEmpty, "UPDATE needs at least one assignment")
-    val layout = parseSpecs(partitionCol).map(_.source).toSet
-    val bad = sets.map(_._1).filter(layout.contains)
-    require(bad.isEmpty,
-      s"cannot update layout column(s) ${bad.mkString(", ")} in place — " +
-        "rows would have to move between partitions")
-    val cur = read(spark, root, base)
-    sets.foreach { case (n, _) => require(cur.columns.contains(n),
-      s"no column '$n' in ${cur.columns.mkString(", ")}") }
+    val cur = updateBase(spark, root, partitionCol, sets, base)
     // one materialized snapshot of the matched rows: the append and
     // the sidecar must see the SAME row set (localCheckpoint, the
     // MERGE path's discipline) and the table read must not re-run
@@ -1924,14 +1932,9 @@ object SnapshotTable {
   def updateWhereMor(spark: SparkSession, root: String,
                      partitionCol: String, predicate: Column,
                      sets: Seq[(String, Column)],
-                     predicateRefs: Set[String] = Set.empty): Long = {
-    val base = latestVersion(root)
-    require(base >= 0, s"no committed version at $root")
-    val next = stageUpdateMor(spark, root, partitionCol, predicate,
-      sets, base, predicateRefs)
-    if (next < 0) base
-    else { moveMarker(root, next); next }
-  }
+                     predicateRefs: Set[String] = Set.empty): Long =
+    publish(root)(stageUpdateMor(spark, root, partitionCol, predicate,
+      sets, _, predicateRefs))
 
   /** Row-level DELETE as a MERGE-ON-READ commit (Iceberg v2 position
     * deletes): instead of rewriting every touched partition
@@ -1950,13 +1953,8 @@ object SnapshotTable {
     * null are kept (SQL DELETE semantics). Returns the new version, or
     * the current one when nothing matches. */
   def deleteWhereMor(spark: SparkSession, root: String,
-                     predicate: Column): Long = {
-    val base = latestVersion(root)
-    require(base >= 0, s"no committed version at $root")
-    val next = stageMorDelete(spark, root, predicate, base)
-    if (next < 0) base
-    else { moveMarker(root, next); next }
-  }
+                     predicate: Column): Long =
+    publish(root)(stageMorDelete(spark, root, predicate, _))
 
   /** The staging half of [[deleteWhereMor]] against an EXPLICIT base
     * version (sidecar + manifest written, nothing published) — what
@@ -1965,34 +1963,26 @@ object SnapshotTable {
     * predicate matches nothing (no version staged). */
   private[graft] def stageMorDelete(spark: SparkSession, root: String,
                                     predicate: Column, base: Long): Long = {
+    require(base >= 0, s"no committed version at $root")
     val dels = deleteEntries(root, base)
-    val scanned = scan(spark, root, base, withPos = true)
-    val afterPos =
-      if (dels.isEmpty) scanned
-      else scanned.join(readDeleteFiles(spark, root, dels),
-        Seq(FileCol, PosCol), "left_anti")
     // rows already masked by an equality delete must not re-land as
     // position-delete rows (harmless but unbounded growth otherwise)
-    val live = applyEqDeleteFiles(spark, root,
-      eqDeleteEntries(root, base), afterPos)
+    val live = livePositioned(spark, root, base, dels,
+      eqDeleteEntries(root, base))
     val matches = live.filter(predicate)
       .select(col(FileCol), col(PosCol)).persist()
     try {
       if (matches.head(1).isEmpty) return -1L
       val baseEntries = inheritedEntries(root, base,
         partitionSpec(root).getOrElse("<partition>"))
-      val next = versions(root).lastOption.getOrElse(-1L) + 1
-      claimVersion(root, next)
-      // one sidecar file: the delete set is small by the operation's
-      // nature (a production writer would target file sizes instead)
-      matches.coalesce(1).write.parquet(s"$root/v=$next/_deletes")
-      writeManifest(root, next, baseEntries, dels :+ next,
-        eqDeleteEntries(root, base))
-      carryVersionMeta(spark, root, base, next)
-      MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"),
-        base.toString)
-      stampCommitted(root, next)
-      next
+      stageNext(root, base) { next =>
+        // one sidecar file: the delete set is small by the operation's
+        // nature (a production writer would target file sizes instead)
+        matches.coalesce(1).write.parquet(s"$root/v=$next/_deletes")
+        writeManifest(root, next, baseEntries, dels :+ next,
+          eqDeleteEntries(root, base))
+        carryVersionMeta(spark, root, base, next)
+      }
     } finally matches.unpersist()
   }
 
@@ -2008,11 +1998,8 @@ object SnapshotTable {
     * [[applyDeletes]] folds it back into clean data. Returns the new
     * version. */
   def deleteEqualityMor(spark: SparkSession, root: String,
-                        keys: DataFrame): Long = {
-    val next = stageEqualityDelete(spark, root, keys, latestVersion(root))
-    moveMarker(root, next)
-    next
-  }
+                        keys: DataFrame): Long =
+    publish(root)(stageEqualityDelete(spark, root, keys, _))
 
   /** The staging half of [[deleteEqualityMor]] against an EXPLICIT
     * base version (sidecar + manifest written, nothing published) —
@@ -2025,16 +2012,13 @@ object SnapshotTable {
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
     val baseEntries = inheritedEntries(root, base,
       partitionSpec(root).getOrElse("<partition>"))
-    val next = versions(root).lastOption.getOrElse(-1L) + 1
-    claimVersion(root, next)
-    keys.distinct().coalesce(1)
-      .write.parquet(s"$root/v=$next/_eqdeletes")
-    writeManifest(root, next, baseEntries, deleteEntries(root, base),
-      eqDeleteEntries(root, base) :+ (next -> keyCols))
-    carryVersionMeta(spark, root, base, next)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), base.toString)
-    stampCommitted(root, next)
-    next
+    stageNext(root, base) { next =>
+      keys.distinct().coalesce(1)
+        .write.parquet(s"$root/v=$next/_eqdeletes")
+      writeManifest(root, next, baseEntries, deleteEntries(root, base),
+        eqDeleteEntries(root, base) :+ (next -> keyCols))
+      carryVersionMeta(spark, root, base, next)
+    }
   }
 
   /** MERGE-upsert whose write cost tracks the BATCH, not the table —
@@ -2054,12 +2038,9 @@ object SnapshotTable {
   def upsertMor(spark: SparkSession, root: String, partitionCol: String,
                 source: DataFrame, keyCols: Seq[String],
                 statsCols: Seq[String] = Seq.empty,
-                bloomCols: Seq[String] = Seq.empty): Long = {
-    val next = stageUpsertMor(source, root, partitionCol, keyCols,
-      latestVersion(root), statsCols, bloomCols)
-    moveMarker(root, next)
-    next
-  }
+                bloomCols: Seq[String] = Seq.empty): Long =
+    publish(root)(stageUpsertMor(source, root, partitionCol, keyCols, _,
+      statsCols, bloomCols))
 
   /** The staging half of [[upsertMor]] against an EXPLICIT base
     * version (appended files + equality sidecar + manifest written,
@@ -2105,14 +2086,6 @@ object SnapshotTable {
       eqDeleteFrame = del)
   }
 
-  /** Fold accumulated merge-on-read delete files back into clean data
-    * (Iceberg's `rewrite_position_delete_files` + compaction): every
-    * partition holding LIVE delete rows is rewritten without them as
-    * one delta commit that drops all `!deletes` references; untouched
-    * partitions move zero bytes. Stale delete rows (their files were
-    * already rewritten by later deltas) are dropped for free. Returns
-    * the new version, or the current one when there are no delete
-    * files to fold. */
   /** Live unapplied merge-on-read sidecars of a version — position-
     * delete files + equality-delete sidecars. Each unfolded sidecar
     * adds one broadcast anti-join to EVERY read until [[applyDeletes]]
@@ -2125,18 +2098,19 @@ object SnapshotTable {
     else deleteEntries(root, v).size + eqDeleteEntries(root, v).size
   }
 
+  /** Fold accumulated merge-on-read delete files back into clean data
+    * (Iceberg's `rewrite_position_delete_files` + compaction): every
+    * partition holding LIVE delete rows is rewritten without them as
+    * one delta commit that drops all `!deletes` references; untouched
+    * partitions move zero bytes. Stale delete rows (their files were
+    * already rewritten by later deltas) are dropped for free. Returns
+    * the new version, or the current one when there are no delete
+    * files to fold. */
   def applyDeletes(spark: SparkSession, root: String): Long = {
     // a mixed-era table migrates first: the fold's touched-partition
     // rewrite assumes partition names and the current spec agree
-    locally {
-      val v0 = latestVersion(root)
-      if (v0 >= 0 &&
-        foreignEraEntries(root, manifestEntries(root, v0)).nonEmpty)
-        migrateSpec(spark, root)
-    }
-    val next = stageApplyDeletes(spark, root, latestVersion(root))
-    if (next != latestVersion(root)) moveMarker(root, next)
-    next
+    migrateSpec(spark, root)
+    publish(root)(stageApplyDeletes(spark, root, _))
   }
 
   /** The staging half of [[applyDeletes]] against an EXPLICIT base
@@ -2174,55 +2148,33 @@ object SnapshotTable {
     val eqTouched: Seq[String] =
       if (eqs.isEmpty) Seq.empty
       else {
-        val scanned0 = scan(spark, root, v, withPos = true)
-        val afterPos =
-          if (dels.isEmpty) scanned0
-          else scanned0.join(readDeleteFiles(spark, root, dels),
-            Seq(FileCol, PosCol), "left_anti")
-        val rowV = regexp_extract(col(FileCol), "^v=(\\d+)/", 1)
-          .cast("long")
-        val dead = eqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(","))
-          .map { case (keyCols, group) =>
-            val delDf = group.map { case (d, _) =>
-              spark.read.parquet(s"$root/v=$d/_eqdeletes")
-                .select(keyCols.map(col): _*)
-                .withColumn(EqVerCol, lit(d))
-            }.reduce(_.unionByName(_))
-            val withSeq = afterPos.withColumn(SeqCol, rowV)
-            val cond = keyCols.map(k => withSeq(k) <=> delDf(k))
-              .reduce(_ && _) && withSeq(SeqCol) < delDf(EqVerCol)
-            withSeq.join(broadcast(delDf), cond, "left_semi")
-              .select(FileCol)
+        val afterPos = livePositioned(spark, root, v, dels, Seq.empty)
+        val dead = eqDeleteGroups(spark, root, eqs)
+          .map { case (keyCols, delDf) =>
+            val cur = withSeq(afterPos)
+            cur.join(broadcast(delDf), eqMasked(cur, keyCols, delDf),
+              "left_semi").select(FileCol)
           }.reduce(_.unionByName(_))
           .distinct().collect().map(_.getString(0)).toSeq
         toParts(dead)
       }
     val touched = (posTouched ++ eqTouched).distinct.sorted
-    val next =
-      if (touched.isEmpty) {
-        // every delete row references a vanished file (or masks
-        // nothing live): metadata-only commit that drops the now-dead
-        // `!deletes` / `!eqdeletes` references
-        val n = versions(root).lastOption.getOrElse(-1L) + 1
-        claimVersion(root, n)
+    if (touched.isEmpty)
+      // every delete row references a vanished file (or masks nothing
+      // live): metadata-only commit that drops the now-dead
+      // `!deletes` / `!eqdeletes` references
+      stageNext(root, v) { n =>
         writeManifest(root, n, entries)
         carryVersionMeta(spark, root, v, n)
-        MetaIO.writeString(MetaIO.join(root, s"v=$n", "_parent"), v.toString)
-        stampCommitted(root, n)
-        n
-      } else {
-        val scanned = scan(spark, root, v, withPos = true)
-        val resolved = applyEqDeleteFiles(spark, root, eqs,
-          if (dels.isEmpty) scanned
-          else scanned.join(readDeleteFiles(spark, root, dels),
-            Seq(FileCol, PosCol), "left_anti"))
-        val partOf = regexp_extract(col(FileCol), "^v=\\d+/(.+)/[^/]+$", 1)
-        val survivors = resolved.filter(partOf.isin(touched: _*))
-          .drop(FileCol, PosCol)
-        stageManifested(survivors, root, partCol, v, append = false,
-          removeParts = touched.toSet, dropDeletes = true)
       }
-    next
+    else {
+      val partOf = regexp_extract(col(FileCol), "^v=\\d+/(.+)/[^/]+$", 1)
+      val survivors = livePositioned(spark, root, v, dels, eqs)
+        .filter(partOf.isin(touched: _*))
+        .drop(FileCol, PosCol)
+      stageManifested(survivors, root, partCol, v, append = false,
+        removeParts = touched.toSet, dropDeletes = true)
+    }
   }
 
   /** Record `next`'s schema + field-id metadata as inherited unchanged
@@ -2316,8 +2268,6 @@ object SnapshotTable {
           "migrateSpec (or the maintenance cadence) before a " +
           "copy-on-write delta commit")
     }
-    val next = versions(root).lastOption.getOrElse(-1L) + 1
-    claimVersion(root, next)
     // hidden partitioning: a transform spec derives the directory value
     // at write time; the source column stays in the data files and the
     // derived field exists ONLY as the directory layer (readers drop
@@ -2370,76 +2320,75 @@ object SnapshotTable {
     val clustered =
       if (pss.isEmpty || sliceBytes < BigInt(rebalanceBytes)) writeDf
       else writeDf.hint("rebalance", pss.map(_.field): _*)
-    clustered.write.mode("append").partitionBy(pss.map(_.field): _*)
-      .parquet(s"$root/v=$next")
-    commitChecksAndStats(slice.sparkSession, root, next, statsCols, bloomCols)
-    val touched = listPartitionDirs(root, next)
-    val kept =
-      if (append) baseEntries
-      else baseEntries.filterNot(e =>
-        touched.contains(e._1) || removeParts.contains(e._1))
-    // unapplied MoR delete files ride along: a delta rewrite of some
-    // partitions computed its slice through [[read]] (deletes already
-    // applied, so they're baked into the rewritten files) and the
-    // carried entries still mask deleted rows in every INHERITED file;
-    // entries whose files were rewritten anti-join nothing (no-op).
-    // [[applyDeletes]] is the fold that rewrites and drops them.
-    val carried =
-      if (dropDeletes || base < 0) Seq.empty else deleteEntries(root, base)
-    // carried equality deletes stay correct across a delta rewrite for
-    // free: rewritten files land at storage version `next` >= every
-    // carried delete version, so the strict sequence rule never
-    // re-masks rows the rewrite already resolved, while inherited
-    // files stay masked
-    val carriedEq =
-      if (dropDeletes || base < 0) Seq.empty
-      else eqDeleteEntries(root, base)
-    // an upsert commit lands its batch's key set as an equality-delete
-    // sidecar IN THIS version: older twins die, the batch survives
-    val ownEq = eqDeleteKeys.toSeq.map { ks =>
-      // key tuples re-read from the files just written, not recomputed
-      // through the slice's lineage (which may be arbitrarily deep)
-      slice.sparkSession.read.parquet(s"$root/v=$next")
-        .select(ks.map(col): _*).distinct()
-        .coalesce(1).write.parquet(s"$root/v=$next/_eqdeletes")
-      next -> ks
-    } ++ eqDeleteFrame.toSeq.map { keys =>
-      // an EXPLICIT key set in the same version (conditional-MERGE
-      // writes: the tombstoned keys are the matched rows the statement
-      // updated or deleted, NOT the appended batch's own keys) — the
-      // strict sequence rule still spares the batch's appended rows
-      keys.distinct().coalesce(1)
-        .write.parquet(s"$root/v=$next/_eqdeletes")
-      next -> keys.columns.toSeq
+    stageNext(root, base) { next =>
+      clustered.write.mode("append").partitionBy(pss.map(_.field): _*)
+        .parquet(s"$root/v=$next")
+      commitChecksAndStats(slice.sparkSession, root, next, statsCols, bloomCols)
+      val touched = listPartitionDirs(root, next)
+      val kept =
+        if (append) baseEntries
+        else baseEntries.filterNot(e =>
+          touched.contains(e._1) || removeParts.contains(e._1))
+      // unapplied MoR delete files ride along: a delta rewrite of some
+      // partitions computed its slice through [[read]] (deletes already
+      // applied, so they're baked into the rewritten files) and the
+      // carried entries still mask deleted rows in every INHERITED file;
+      // entries whose files were rewritten anti-join nothing (no-op).
+      // [[applyDeletes]] is the fold that rewrites and drops them.
+      val carried =
+        if (dropDeletes || base < 0) Seq.empty else deleteEntries(root, base)
+      // carried equality deletes stay correct across a delta rewrite for
+      // free: rewritten files land at storage version `next` >= every
+      // carried delete version, so the strict sequence rule never
+      // re-masks rows the rewrite already resolved, while inherited
+      // files stay masked
+      val carriedEq =
+        if (dropDeletes || base < 0) Seq.empty
+        else eqDeleteEntries(root, base)
+      // an upsert commit lands its batch's key set as an equality-delete
+      // sidecar IN THIS version: older twins die, the batch survives
+      val ownEq = eqDeleteKeys.toSeq.map { ks =>
+        // key tuples re-read from the files just written, not recomputed
+        // through the slice's lineage (which may be arbitrarily deep)
+        slice.sparkSession.read.parquet(s"$root/v=$next")
+          .select(ks.map(col): _*).distinct()
+          .coalesce(1).write.parquet(s"$root/v=$next/_eqdeletes")
+        next -> ks
+      } ++ eqDeleteFrame.toSeq.map { keys =>
+        // an EXPLICIT key set in the same version (conditional-MERGE
+        // writes: the tombstoned keys are the matched rows the statement
+        // updated or deleted, NOT the appended batch's own keys) — the
+        // strict sequence rule still spares the batch's appended rows
+        keys.distinct().coalesce(1)
+          .write.parquet(s"$root/v=$next/_eqdeletes")
+        next -> keys.columns.toSeq
+      }
+      writeManifest(root, next, kept ++ touched.map(_ -> next), carried,
+        carriedEq ++ ownEq)
+      // record the evolved table schema: base columns keep their TYPE
+      // (an append/delta may ADD columns but never silently flip an
+      // existing column's type — the Iceberg evolution rule), new slice
+      // columns are appended; readers null-fill added columns over files
+      // written before they existed
+      val baseSchema: Option[types.StructType] =
+        if (base < 0 || baseEntries.isEmpty) None
+        else recordedSchema(root, base)
+          .orElse(Some(read(slice.sparkSession, root, base).schema))
+      val evolved = baseSchema match {
+        case None => slice.schema
+        case Some(bs) => types.StructType(bs.fields ++
+          slice.schema.fields.filterNot(f => bs.fieldNames.contains(f.name)))
+      }
+      MetaIO.writeString(schemaPath(root, next), evolved.json)
+      // stable field ids ride every manifested commit: base names keep
+      // their ids, new columns allocate past the id high-water mark
+      // (rename/drop readers resolve physical names through these)
+      locally {
+        val (fids, lastId) = assignFieldIds(root, base, evolved)
+        writeFields(root, next, fids, lastId)
+        carryDefaults(root, base, next)
+      }
     }
-    writeManifest(root, next, kept ++ touched.map(_ -> next), carried,
-      carriedEq ++ ownEq)
-    // record the evolved table schema: base columns keep their TYPE
-    // (an append/delta may ADD columns but never silently flip an
-    // existing column's type — the Iceberg evolution rule), new slice
-    // columns are appended; readers null-fill added columns over files
-    // written before they existed
-    val baseSchema: Option[types.StructType] =
-      if (base < 0 || baseEntries.isEmpty) None
-      else recordedSchema(root, base)
-        .orElse(Some(read(slice.sparkSession, root, base).schema))
-    val evolved = baseSchema match {
-      case None => slice.schema
-      case Some(bs) => types.StructType(bs.fields ++
-        slice.schema.fields.filterNot(f => bs.fieldNames.contains(f.name)))
-    }
-    MetaIO.writeString(schemaPath(root, next), evolved.json)
-    // stable field ids ride every manifested commit: base names keep
-    // their ids, new columns allocate past the id high-water mark
-    // (rename/drop readers resolve physical names through these)
-    locally {
-      val (fids, lastId) = assignFieldIds(root, base, evolved)
-      writeFields(root, next, fids, lastId)
-      carryDefaults(root, base, next)
-    }
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), base.toString)
-    stampCommitted(root, next)
-    next
   }
 
   /** Relative LEAF partition directories of a version — one path per

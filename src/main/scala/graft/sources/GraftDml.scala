@@ -112,22 +112,18 @@ object GraftDml {
       case Warehouse(root) =>
         if (!syncDelete)
           SnapshotTable.upsertMor(spark, root, partitionCol, aligned, keyCols)
-        else {
-          val base = baseVersion(target)
-          val anti = antiKeys(base)
-          try {
-            val d1 = SnapshotTable.stageUpsertMor(aligned, root,
-              partitionCol, keyCols, base)
-            // both halves stage unpublished, ONE marker move publishes
-            // — a reader never sees the upserts without the
-            // sync-deletes
-            val head =
+        else
+          // both halves stage unpublished, ONE marker move publishes —
+          // a reader never sees the upserts without the sync-deletes
+          SnapshotTable.publish(root) { base =>
+            val anti = antiKeys(base)
+            try {
+              val d1 = SnapshotTable.stageUpsertMor(aligned, root,
+                partitionCol, keyCols, base)
               if (anti.isEmpty) d1
               else SnapshotTable.stageEqualityDelete(spark, root, anti, d1)
-            SnapshotTable.moveMarker(root, head)
-            head
-          } finally anti.unpersist()
-        }
+            } finally anti.unpersist()
+          }
       case g: Governed =>
         casCommit(g) { prev =>
           if (!syncDelete)
@@ -280,12 +276,10 @@ object GraftDml {
 
     target match {
       case Warehouse(root) =>
-        val base = SnapshotTable.latestVersion(root)
-        val (app, del) = derive(base)
-        val v = SnapshotTable.stageMergeBatch(app, root, partitionCol,
-          del, base)
-        SnapshotTable.moveMarker(root, v)
-        v
+        SnapshotTable.publish(root) { base =>
+          val (app, del) = derive(base)
+          SnapshotTable.stageMergeBatch(app, root, partitionCol, del, base)
+        }
       case g: Governed =>
         casCommit(g) { prev =>
           val (app, del) = derive(prev)

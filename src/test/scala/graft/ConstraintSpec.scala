@@ -53,6 +53,28 @@ class ConstraintSpec extends GraftSuite {
     assert(SnapshotTable.read(spark, root).count() === 1)
   }
 
+  test("branch commits enforce too: a violating frame never reaches main") {
+    val root = tmp("graft-con-branch")
+    SnapshotTable.commit(Seq((1L, 1.0)).toDF("id", "price"), root)
+    SnapshotTable.addConstraint(spark, root, "price_pos", "price > 0")
+    val head = SnapshotTable.createBranch(root, "dev")
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.commitToBranch(Seq((2L, -1.0)).toDF("id", "price"),
+        root, "dev")
+    }
+    assert(e.getMessage.contains("price_pos"))
+    // the branch head did not move, so nothing violating can be
+    // fast-forwarded onto main
+    assert(SnapshotTable.branchVersion(root, "dev") === head)
+    // a valid branch commit lands and still fast-forwards main
+    val v = SnapshotTable.commitToBranch(
+      Seq((1L, 1.0), (2L, 2.0)).toDF("id", "price"), root, "dev")
+    assert(SnapshotTable.fastForward(root, SnapshotTable.MainBranch,
+      "dev") === v)
+    assert(SnapshotTable.latestVersion(root) === v)
+    assert(SnapshotTable.read(spark, root).count() === 2)
+  }
+
   test("SQL CHECK semantics: UNKNOWN passes, NOT NULL rejects nulls") {
     val root = tmp("graft-con-null")
     SnapshotTable.commitAppend(

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Retrieval, SnapshotTable}
+import graft.operators.{Metrics, Retrieval, SnapshotTable}
 
 /** Pins the Spark-job count of one index-maintenance call — the
   * bm25_incremental key is job-submission-floor bound at bench scale,
@@ -40,10 +40,7 @@ class MaintenanceJobCountSpec extends GraftSuite {
     val r =
       try body
       finally {
-        try {
-          val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: ReflectiveOperationException => Thread.sleep(500L) }
+        Metrics.drainBus(spark)
         sc.removeSparkListener(l)
       }
     (r, n.get)

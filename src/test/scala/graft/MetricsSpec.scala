@@ -35,4 +35,14 @@ class MetricsSpec extends GraftSuite {
     Seq(4, 5).toDF("x").agg(sum("x")).collect()
     assert(m1.count() === n1)
   }
+
+  test("listener-bus drain resolves on this Spark build: no sleep fallback") {
+    Metrics.collectJobs(spark, "drain") {
+      Seq(1, 2, 3).toDF("x").agg(sum("x")).collect()
+    }
+    Metrics.drainBus(spark)
+    // every drain in this JVM so far (this suite's and any earlier
+    // suite's) reached waitUntilEmpty
+    assert(Metrics.drainFallbacks.get === 0L)
+  }
 }
