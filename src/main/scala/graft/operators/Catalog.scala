@@ -326,14 +326,11 @@ object Catalog {
     // analyze coverage survives the rewrite (the compactSnapshot
     // contract): covered stats/bloom columns re-record through the
     // staged commit's footer pass, NDV re-sketches the new version
-    val statsCov = SnapshotTable.statsCoverage(tr, prev(table))
-    val bloomCov = SnapshotTable.bloomCoverage(tr, prev(table))
-    val ndvCov = SnapshotTable.ndvCoverage(tr, prev(table))
+    val cov = SnapshotTable.coverage(tr, prev(table))
     val staged = SnapshotTable.stageDelta(slice, tr, partitionCol,
-      prev(table), statsCols = statsCov, bloomCols = bloomCov)
+      prev(table), statsCols = cov.stats, bloomCols = cov.blooms)
     val c = commitStaged(root, Map(table -> staged), base)
-    if (ndvCov.nonEmpty)
-      SnapshotTable.collectNdv(spark, tr, ndvCov, staged)
+    cov.resketch(spark, tr, staged)
     c
   }
 

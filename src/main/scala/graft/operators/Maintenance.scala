@@ -67,12 +67,10 @@ object Maintenance {
                       minInputFiles: Int): Long = {
     val current = SnapshotTable.read(spark, root)
     if (current.inputFiles.length < minInputFiles) return -1L
-    val statsCov = SnapshotTable.statsCoverage(root)
-    val bloomCov = SnapshotTable.bloomCoverage(root)
-    val ndvCov = SnapshotTable.ndvCoverage(root)
+    val cov = SnapshotTable.coverage(root)
     val v = SnapshotTable.commit(current.repartition(targetFiles), root,
-      statsCols = statsCov, bloomCols = bloomCov)
-    if (ndvCov.nonEmpty) SnapshotTable.collectNdv(spark, root, ndvCov)
+      statsCols = cov.stats, bloomCols = cov.blooms)
+    cov.resketch(spark, root)
     v
   }
 
@@ -109,18 +107,13 @@ object Maintenance {
     // so previously covered stats/bloom columns re-record through the
     // commit's footer pass and NDV re-sketches after (one scan of the
     // new version only — collectNdv skips covered versions)
-    val statsCov = SnapshotTable.statsCoverage(root)
-    val bloomCov = SnapshotTable.bloomCoverage(root)
-    val ndvCov = SnapshotTable.ndvCoverage(root)
-    def reNdv(nv: Long): Long = {
-      if (ndvCov.nonEmpty) SnapshotTable.collectNdv(spark, root, ndvCov)
-      nv
-    }
+    val cov = SnapshotTable.coverage(root)
+    def reNdv(nv: Long): Long = { cov.resketch(spark, root); nv }
     SnapshotTable.sortOrderSpec(root) match {
       case None =>
         reNdv(SnapshotTable.commitDelta(touched.repartition(dirc),
-          root, partitionCol, statsCols = statsCov,
-          bloomCols = bloomCov))
+          root, partitionCol, statsCols = cov.stats,
+          bloomCols = cov.blooms))
       case Some((sortCols, false)) =>
         // the table declares a WRITE ORDER: compaction is where it is
         // applied (appends land unsorted by design) — range-split each
@@ -132,8 +125,8 @@ object Maintenance {
             dirc +: sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
         reNdv(SnapshotTable.commitDelta(slice, root, partitionCol,
-          statsCols = (sortCols ++ statsCov).distinct,
-          bloomCols = bloomCov))
+          statsCols = (sortCols ++ cov.stats).distinct,
+          bloomCols = cov.blooms))
       case Some((sortCols, true)) =>
         // Z-ORDER write order (Delta OPTIMIZE ZORDER BY): cluster the
         // fragmented partitions along the Morton curve of the two
@@ -144,8 +137,8 @@ object Maintenance {
         Layout.mortonColumn(touched, sortCols(0), sortCols(1)) match {
           case None => // degenerate slice (empty / all-NULL dimension)
             reNdv(SnapshotTable.commitDelta(touched.repartition(dirc),
-              root, partitionCol, statsCols = statsCov,
-              bloomCols = bloomCov))
+              root, partitionCol, statsCols = cov.stats,
+              bloomCols = cov.blooms))
           case Some(z) =>
             val slice = touched.withColumn("_zorder", z)
               .repartitionByRange(fragmented.size * filesPerPartition,
@@ -153,8 +146,8 @@ object Maintenance {
               .sortWithinPartitions("_zorder")
               .drop("_zorder")
             reNdv(SnapshotTable.commitDelta(slice, root, partitionCol,
-              statsCols = (sortCols ++ statsCov).distinct,
-              bloomCols = bloomCov))
+              statsCols = (sortCols ++ cov.stats).distinct,
+              bloomCols = cov.blooms))
         }
     }
   }

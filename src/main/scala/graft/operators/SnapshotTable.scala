@@ -1122,7 +1122,7 @@ object SnapshotTable {
   // [[boundsSql]] machinery as file stats (integral truncate
   // likewise); bucket and string-truncate directories refute
   // equality/IN conjuncts by recomputing the transform of each literal
-  // driver-side (the [[probePositions]] discipline, literal cast to
+  // driver-side (the [[literalHashes]] discipline, literal cast to
   // the column's recorded type first). Queries never mention the
   // layout — which is the point: nobody writes `WHERE ts_day = ...` in
   // one query and forgets it in the next.
@@ -1608,6 +1608,36 @@ object SnapshotTable {
   def manifest(root: String, version: Long): Map[String, Long] =
     manifestEntries(root, version).groupBy(_._1)
       .view.mapValues(_.map(_._2).max).toMap
+
+  /** The (root-relative dir, storage version) pairs version `v`'s scan
+    * reads: its manifest entries, or `v=N` itself for an unmanifested
+    * snapshot. Reads the manifest and nothing else. */
+  private def liveDirs(root: String, v: Long): Seq[(String, Long)] = {
+    val entries = manifestEntries(root, v)
+    if (entries.isEmpty) Seq(s"v=$v" -> v)
+    else entries.sorted.map { case (p, sv) => s"v=$sv/$p" -> sv }
+  }
+
+  /** The storage versions whose files (and sidecars) version `v` reads. */
+  private def storageVersions(root: String, v: Long): Seq[Long] =
+    liveDirs(root, v).map(_._2).distinct.sorted
+
+  /** Root-relative DATA files of version `v` — the one live-file
+    * listing. Descends into partition subdirectories with
+    * [[FooterStats.dataFiles]]'s rule (an unmanifested PARTITIONED
+    * snapshot keeps its parquet under `v=N/part=.../`); these raw FS
+    * names are what the sidecars' decoded `_file` values compare
+    * against. */
+  private[graft] def liveFiles(root: String, v: Long): Seq[String] =
+    liveDirs(root, v).flatMap { case (rel, _) =>
+      val d = MetaIO.join(root, rel)
+      FooterStats.dataFiles(d).map(abs =>
+        s"$rel/" + abs.stripPrefix(d).stripPrefix("/"))
+    }
+
+  /** The storage version of a root-relative data file (`v=M/...`). */
+  private[graft] def svOf(file: String): Long =
+    file.stripPrefix("v=").takeWhile(_.isDigit).toLong
 
   private def writeManifest(root: String, version: Long,
                             m: Seq[(String, Long)],
@@ -2130,11 +2160,11 @@ object SnapshotTable {
       throw new IllegalStateException(
         s"table at $root has MoR deletes but no partition spec"))
     val entries = manifestEntries(root, v)
-    val liveDirs = entries.map { case (p, sv) => s"v=$sv/$p" }.toSet
+    val liveRel = entries.map { case (p, sv) => s"v=$sv/$p" }.toSet
     // partition dirs whose live files still carry delete rows
     val dirOf = "^(v=\\d+/(.+))/[^/]+$".r
     def toParts(files: Seq[String]): Seq[String] = files.flatMap {
-      case dirOf(full, part) if liveDirs.contains(full) => Some(part)
+      case dirOf(full, part) if liveRel.contains(full) => Some(part)
       case _ => None
     }.distinct
     val posTouched: Seq[String] =
@@ -2408,20 +2438,24 @@ object SnapshotTable {
       .flatMap(p => leaves(p, MetaIO.name(p))).sorted
   }
 
-  // ───────── file-level column stats (manifest data skipping) ─────────
+  // ───────── per-file sidecars: stats, blooms, NDV sketches ─────────
   //
-  // The one Iceberg read-path capability beyond partition pruning: the
-  // manifest records per-FILE min/max bounds for chosen columns, and a
-  // selective predicate on a NON-partition column prunes files before
-  // Spark ever plans the scan. Stats live as a tiny TYPED parquet
-  // sidecar under the storage version that wrote the files
-  // (`v=N/_stats/`, underscore-prefixed so data scans ignore it), so a
-  // manifested read collects bounds across every referenced storage
-  // version. Files without stats are always kept — skipping is purely
-  // an IO optimization, never an answer change.
-
-  private def statsPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_stats")
+  // The manifest's per-file metadata — Iceberg's manifest min/max
+  // stats, bloom filters and Puffin NDV sketches — lives in three
+  // sidecar kinds ([[Sidecar]]) under one contract:
+  // - layout: `v=N/_<kind>/`, a tiny parquet holding one row per data
+  //   file of storage version N, keyed by the root-relative `_file`
+  //   (underscore-prefixed, so data scans never see it);
+  // - a commit writes its sidecars straight into its own, still
+  //   unpublished `v=N` ([[commitChecksAndStats]]);
+  // - a backfill (the `collect*` ANALYZE family, [[backfill]]) writes
+  //   the existing plus the requested columns to a tmp dir, then swaps
+  //   it in with an exclusive move ([[writeSidecar]]);
+  // - coverage is the union over the storage versions the read
+  //   references ([[coverageOf]]).
+  // Sidecars only ever refute or answer from metadata: a file without
+  // one is kept by every pruning path and makes every metadata-answer
+  // path decline — an IO cost, never an answer change.
 
   /** Test/audit hook: commit-time jobs that had to RE-READ just-written
     * data (fallback stats scans for footer-unusable columns, constraint
@@ -2434,9 +2468,11 @@ object SnapshotTable {
     * files, sharing ONE parquet-FOOTER pass: CHECK constraints
     * (bounds-proven where possible), the `_stats` sidecar (`__rows`
     * always — [[fastCount]]'s metadata count — plus min/max for
-    * `statsCols`), and bloom sidecars. Footers are what the write
-    * job's tasks just produced, so the common path reads ZERO data
-    * bytes after the write itself; only footer-unusable columns
+    * `statsCols`), bloom sidecars, and sketches for the declared
+    * auto-NDV columns ([[setNdvColumns]]: one column-pruned scan of the
+    * new files, the O(batch) tax it opts into). Footers are what the
+    * write job's tasks just produced, so the common path reads ZERO
+    * data bytes after the write itself; only footer-unusable columns
     * (INT96 timestamps, FP NaN semantics — see [[FooterStats]]) or
     * unprovable constraints fall back to one column-pruned scan. */
   private def commitChecksAndStats(spark: SparkSession, root: String,
@@ -2454,34 +2490,155 @@ object SnapshotTable {
       MetaIO.join(root, s"v=$version"),
       (statsCols ++ constraintCols ++ autoNdv).distinct)
     enforceConstraints(spark, root, version, footer, cs, proofs)
-    completeStats(spark, root, version, (statsCols ++ autoNdv).distinct,
-      footer).foreach {
-      _.coalesce(1)
-        .write.mode("overwrite").parquet(statsPath(root, version).toString)
-    }
-    recordFileBlooms(spark, root, version, bloomCols)
+    writeSidecar(root, version, Stats, completeStats(spark, root, version,
+      (statsCols ++ autoNdv).distinct, footer))
+    if (bloomCols.nonEmpty)
+      writeSidecar(root, version, Blooms,
+        Blooms.frame(spark, root, version, bloomCols))
     if (autoNdv.nonEmpty && footer.nonEmpty)
-      recordFileNdv(spark, root, version, autoNdv)
+      writeSidecar(root, version, Ndv,
+        Ndv.frame(spark, root, version, autoNdv))
   }
 
-  /** Write the `_ndv` sidecar for ONE freshly written storage version
-    * (the auto-NDV half of [[collectNdv]]'s backfill): one
-    * column-pruned scan of the new files only — the per-commit
-    * O(batch) tax [[setNdvColumns]] opts into. */
-  private def recordFileNdv(spark: SparkSession, root: String, sv: Long,
-                            cols: Seq[String]): Unit = {
+  /** One sidecar kind: its `v=N/` directory, the columns a recorded
+    * sidecar covers, its frame builder over storage version `sv`'s
+    * files (None: nothing to record), and the memo caches a backfill
+    * of it invalidates. */
+  private sealed abstract class Sidecar(val dir: String) {
+    def covered(sidecar: DataFrame): Seq[String]
+    def frame(spark: SparkSession, root: String, sv: Long,
+              cols: Seq[String]): Option[DataFrame]
+    def clearCaches(): Unit = ()
+  }
+
+  /** `__rows` plus typed `c__min`/`c__max` per column, footer-lifted
+    * ([[completeStats]]): manifest data skipping and metadata counts. */
+  private case object Stats extends Sidecar("_stats") {
+    def covered(st: DataFrame): Seq[String] = suffixed(st, "__min")
+    def frame(spark: SparkSession, root: String, sv: Long,
+              cols: Seq[String]): Option[DataFrame] =
+      completeStats(spark, root, sv, cols, FooterStats.collect(spark,
+        MetaIO.join(root), MetaIO.join(root, s"v=$sv"), cols))
+    override def clearCaches(): Unit = {
+      fastBoundsCache.clear()
+      fastRangesCache.clear()
+    }
+  }
+
+  /** (`_file`, `column`, `bits`) rows — point-lookup skipping
+    * ([[bloomFrame]]). */
+  private case object Blooms extends Sidecar("_blooms") {
+    def covered(b: DataFrame): Seq[String] =
+      b.select("column").distinct().collect().map(_.getString(0)).toSeq
+    def frame(spark: SparkSession, root: String, sv: Long,
+              cols: Seq[String]): Option[DataFrame] =
+      scanFrame(spark, root, sv, cols)(bloomFrame)
+  }
+
+  /** Mergeable HLL sketches, estimates and null counts per column
+    * ([[ndvFrame]]) — CBO statistics. */
+  private case object Ndv extends Sidecar("_ndv") {
+    def covered(n: DataFrame): Seq[String] = suffixed(n, "__hll")
+    def frame(spark: SparkSession, root: String, sv: Long,
+              cols: Seq[String]): Option[DataFrame] =
+      scanFrame(spark, root, sv, cols)(ndvFrame)
+    override def clearCaches(): Unit = ndvTableCache.clear()
+  }
+
+  private def suffixed(df: DataFrame, suffix: String): Seq[String] =
+    df.columns.toSeq.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix))
+
+  /** `build` over storage version `sv`'s data, restricted to the `cols`
+    * the data has (None when it has none of them). */
+  private def scanFrame(spark: SparkSession, root: String, sv: Long,
+                        cols: Seq[String])
+                       (build: (DataFrame, Seq[String]) => DataFrame)
+      : Option[DataFrame] = {
     val df = spark.read.parquet(s"$root/v=$sv")
     val present = cols.filter(df.columns.contains)
-    if (present.isEmpty) return
-    val tmp = MetaIO.join(root, s"v=$sv",
-      s".ndv.new-${java.util.UUID.randomUUID()}")
-    ndvFrame(df, present).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val target = ndvPath(root, sv)
-    MetaIO.delete(target, recursive = true)
-    MetaIO.moveTree(tmp, target)
-    ndvTableCache.clear()
+    if (present.isEmpty) None else Some(build(df, present))
   }
+
+  private def sidecarPath(root: String, sv: Long, kind: Sidecar): String =
+    MetaIO.join(root, s"v=$sv", kind.dir)
+
+  /** Storage version `sv`'s `kind` sidecar (None when it has none). */
+  private def readSidecar(spark: SparkSession, root: String, sv: Long,
+                          kind: Sidecar): Option[DataFrame] =
+    if (MetaIO.exists(sidecarPath(root, sv, kind)))
+      Some(spark.read.parquet(sidecarPath(root, sv, kind)))
+    else None
+
+  /** Write `frame`, if any, as `sv`'s `kind` sidecar; true when written.
+    * A commit writes straight into its unpublished `v=N`. With `swap`
+    * (a backfill of a published version) the frame goes to a tmp dir,
+    * the old sidecar is dropped, then the exclusive move lands the new
+    * one (on object stores an arbiter-decided copy + delete: racing
+    * recomputes lose loudly instead of interleaving files); a reader
+    * in the window between drop and move keeps every file. */
+  private def writeSidecar(root: String, sv: Long, kind: Sidecar,
+                           frame: Option[DataFrame],
+                           swap: Boolean = false): Boolean =
+    frame.exists { f =>
+      val target = sidecarPath(root, sv, kind)
+      val out = if (!swap) target else MetaIO.join(root, s"v=$sv",
+        s".${kind.dir.stripPrefix("_")}.new-${java.util.UUID.randomUUID()}")
+      f.coalesce(1).write.mode("overwrite").parquet(out)
+      if (swap) {
+        MetaIO.delete(target, recursive = true)
+        MetaIO.moveTree(out, target)
+      }
+      true
+    }
+
+  /** Columns `kind` covers in ANY storage version `version` references
+    * — the `*.columns` inspection properties. */
+  private def coverageOf(root: String, version: Long,
+                         kind: Sidecar): Seq[String] = {
+    val v = if (version >= 0) version else latestVersion(root)
+    if (v < 0) Seq.empty
+    else storageVersions(root, v)
+      .flatMap(readSidecar(SparkSession.active, root, _, kind))
+      .flatMap(kind.covered).distinct.sorted
+  }
+
+  /** BACKFILL `kind` sidecars for files that already exist, without
+    * rewriting a byte of data: one frame build per storage version
+    * whose sidecar is missing or lacks a requested column, over only
+    * that version's files, with its previously covered columns
+    * recomputed alongside (preserved). Covered versions are skipped
+    * (idempotent). Returns the storage versions recomputed. */
+  private def backfill(spark: SparkSession, root: String, kind: Sidecar,
+                       cols: Seq[String], version: Long): Seq[Long] = {
+    val v = if (version >= 0) version else latestVersion(root)
+    require(v >= 0, s"no committed version at $root")
+    val done = storageVersions(root, v).filter { sv =>
+      val have = readSidecar(spark, root, sv, kind).map(kind.covered)
+      !have.exists(h => cols.forall(h.contains)) &&
+        writeSidecar(root, sv, kind, kind.frame(spark, root, sv,
+          (have.getOrElse(Seq.empty) ++ cols).distinct), swap = true)
+    }
+    kind.clearCaches()
+    done
+  }
+
+  /** The ANALYZE coverage of a version, per sidecar kind — what a
+    * rewrite must re-record so a compacted table keeps its skipping
+    * stats, blooms and NDV sketches (the staleness trap Iceberg
+    * documents on `rewrite_data_files`). */
+  private[graft] final case class Coverage(stats: Seq[String],
+                                           blooms: Seq[String],
+                                           ndv: Seq[String]) {
+    /** Re-sketch NDV after the rewrite committed `version` (stats and
+      * blooms re-record through the commit's own footer pass). */
+    def resketch(spark: SparkSession, root: String,
+                 version: Long = -1L): Unit =
+      if (ndv.nonEmpty) collectNdv(spark, root, ndv, version)
+  }
+
+  private[graft] def coverage(root: String, version: Long = -1L): Coverage =
+    Coverage(statsCoverage(root, version), bloomCoverage(root, version),
+      ndvCoverage(root, version))
 
   /** The `_stats` sidecar frame for storage version `sv` — `_file`
     * (root-relative, reader-decoded form), `__rows`, and typed
@@ -2573,94 +2730,26 @@ object SnapshotTable {
     * columns differ by table; None when the version carries none). */
   def fileStats(spark: SparkSession, root: String,
                 version: Long): Option[DataFrame] =
-    if (MetaIO.exists(statsPath(root, version)))
-      Some(spark.read.parquet(statsPath(root, version).toString))
-    else None
+    readSidecar(spark, root, version, Stats)
 
   /** Columns with recorded min/max bounds in ANY storage version
     * `version` references — the `stats.columns` inspection property.
     * Schema-only sidecar reads, zero data bytes. */
-  def statsCoverage(root: String, version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else latestVersion(root)
-    if (v < 0) return Seq.empty
-    val svs = manifestEntries(root, v).map(_._2).distinct match {
-      case Seq() => Seq(v)
-      case s => s
-    }
-    svs.flatMap(sv => fileStats(SparkSession.active, root, sv))
-      .flatMap(_.columns.filter(_.endsWith("__min"))
-        .map(_.stripSuffix("__min")))
-      .distinct.sorted
-  }
+  def statsCoverage(root: String, version: Long = -1L): Seq[String] =
+    coverageOf(root, version, Stats)
 
-  /** BACKFILL stats sidecars for files that already exist — the
-    * Iceberg `compute_table_stats` / SQL ANALYZE analog: a table
-    * written without `statsCols` (or before the skipping feature)
-    * gains per-file min/max bounds + `__rows` WITHOUT rewriting a
-    * byte of data, turning on [[readSkipping]] file pruning and
-    * [[fastCount]] metadata counts retroactively. One scan per
-    * storage version that lacks coverage, over only that version's
-    * files; versions whose sidecar already covers every requested
-    * column are skipped (idempotent), and previously-recorded columns
-    * are preserved (the recompute unions them in). The sidecar swap
-    * is a tmp-dir atomic move; in the brief window between old-drop
-    * and new-move readers simply keep all files (skipping is IO-only
-    * by construction). Returns the storage versions recomputed. */
+  /** BACKFILL stats sidecars ([[backfill]]) — the Iceberg
+    * `compute_table_stats` / SQL ANALYZE analog: a table written
+    * without `statsCols` (or before the skipping feature) gains
+    * per-file min/max bounds + `__rows`, turning on [[readSkipping]]
+    * file pruning and [[fastCount]] metadata counts retroactively.
+    * Footer-lifted like every commit. Returns the storage versions
+    * recomputed. */
   def collectStats(spark: SparkSession, root: String,
                    statsCols: Seq[String], version: Long = -1L): Seq[Long] = {
     require(statsCols.nonEmpty, "collectStats needs at least one column")
-    fastBoundsCache.clear()
-    fastRangesCache.clear() // a backfill changes per-file bounds too
-    val v = if (version >= 0) version else latestVersion(root)
-    require(v >= 0, s"no committed version at $root")
-    val storageVersions = {
-      val m = manifestEntries(root, v)
-      if (m.isEmpty) Seq(v) else m.map(_._2).distinct.sorted
-    }
-    storageVersions.flatMap { sv =>
-      val existingCols: Seq[String] = fileStats(spark, root, sv)
-        .map(_.columns.toSeq.filter(_.endsWith("__min"))
-          .map(_.stripSuffix("__min")))
-        .getOrElse(Seq.empty)
-      val covered = fileStats(spark, root, sv).isDefined &&
-        statsCols.forall(existingCols.contains)
-      if (covered) None
-      else {
-        val want = (existingCols ++ statsCols).distinct
-        // footer-lifted like every commit; recompute into a tmp
-        // sidecar, then swap atomically
-        val footer = FooterStats.collect(spark, MetaIO.join(root),
-          MetaIO.join(root, s"v=$sv"), want)
-        completeStats(spark, root, sv, want, footer).map { st =>
-          val tmp = MetaIO.join(root, s"v=$sv",
-            s".stats.new-${java.util.UUID.randomUUID()}")
-          st.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val target = statsPath(root, sv)
-          // drop the old sidecar first, then the exclusive move (on
-          // object stores: arbiter-decided copy + delete; racing
-          // recomputes lose loudly instead of interleaving files)
-          MetaIO.delete(target, recursive = true)
-          MetaIO.moveTree(tmp, target)
-          sv
-        }
-      }
-    }
+    backfill(spark, root, Stats, statsCols, version)
   }
-
-  /** Root-relative DATA files under the given (relative dir, storage
-    * version) entries, DESCENDING into partition subdirectories — an
-    * unmanifested PARTITIONED snapshot keeps its parquet under
-    * `v=N/part=.../`, which a flat listing would miss (making every
-    * coverage check silently fail table-wide). The raw FS names the
-    * sidecars' decoded `_file` values compare against. */
-  private def candidateDataFiles(root: String,
-                                 dirs: Seq[(String, Long)]): Set[String] =
-    dirs.flatMap { case (rel, _) =>
-      val d = MetaIO.join(root, rel).toString
-      FooterStats.dataFiles(d).map { abs =>
-        s"$rel/" + abs.stripPrefix(d).stripPrefix("/")
-      }
-    }.toSet
 
   /** MIN/MAX of a column from METADATA — the stats-sidecar twin of
     * [[fastCount]]: folds the recorded per-file bounds over the
@@ -2673,28 +2762,31 @@ object SnapshotTable {
                  version: Long = -1L): Option[(Any, Any)] = {
     val v = if (version >= 0) version else latestVersion(root)
     require(v >= 0, s"no committed version at $root")
-    if (deleteEntries(root, v).nonEmpty ||
-      eqDeleteEntries(root, v).nonEmpty) return None
-    val entries = manifestEntries(root, v)
-    val dirs: Seq[(String, Long)] =
-      if (entries.isEmpty) Seq(s"v=$v" -> v)
-      else entries.sorted.map { case (p, sv) => s"v=$sv/$p" -> sv }
-    val candidates: Set[String] = candidateDataFiles(root, dirs)
-    val stats = dirs.map(_._2).distinct.sorted
+    fastBoundsFiles(spark, root, column, v, liveFiles(root, v))
+  }
+
+  /** The recorded non-null (min, max) bounds of `column` over exactly
+    * `files` (root-relative) — the shared fold of every bounds answer.
+    * None when `files` is empty, any of them lacks recorded bounds, or
+    * a merge-on-read delete is unapplied; all-null files record null
+    * bounds and contribute none (None when no file has any). */
+  private def fileBounds(spark: SparkSession, root: String, column: String,
+                         version: Long, files: Seq[String])
+      : Option[Seq[(Any, Any)]] = {
+    if (files.isEmpty) return None
+    if (deleteEntries(root, version).nonEmpty ||
+        eqDeleteEntries(root, version).nonEmpty) return None
+    val want = files.toSet
+    val stats = files.map(svOf).distinct.sorted
       .flatMap(fileStats(spark, root, _))
       .filter(st => st.columns.contains(s"${column}__min"))
-      .map(_.select(col("_file"), col(s"${column}__min"),
-        col(s"${column}__max")).collect().toSeq)
-      .flatten
+      .flatMap(_.select(col("_file"), col(s"${column}__min"),
+        col(s"${column}__max")).collect())
       .map(r => (decodeReportedPath(r.getString(0)), r.get(1), r.get(2)))
-      .filter { case (f, _, _) => candidates(f) }
-    val covered = stats.map(_._1).toSet
-    if (!candidates.forall(covered) || stats.isEmpty) return None
-    // all-null files record null bounds — they cannot contribute
-    val nonNull = stats.filter(s => s._2 != null && s._3 != null)
-    if (nonNull.isEmpty) return None
-    implicit val ord: Ordering[Any] = statValueOrdering
-    Some((nonNull.map(_._2).min, nonNull.map(_._3).max))
+      .filter { case (f, _, _) => want(f) }
+    if (stats.map(_._1).toSet != want) return None
+    Some(stats.collect { case (_, lo, hi) if lo != null && hi != null =>
+      (lo, hi) }).filter(_.nonEmpty)
   }
 
   /** Driver-side ordering over stats-sidecar values, matching Spark's
@@ -2723,25 +2815,11 @@ object SnapshotTable {
   private[graft] def fastBoundsFiles(spark: SparkSession, root: String,
                                      column: String, version: Long,
                                      files: Seq[String])
-      : Option[(Any, Any)] = {
-    if (files.isEmpty) return None
-    if (deleteEntries(root, version).nonEmpty ||
-        eqDeleteEntries(root, version).nonEmpty) return None
-    val svs = files.map(f =>
-      f.stripPrefix("v=").takeWhile(_.isDigit).toLong).distinct.sorted
-    val want = files.toSet
-    val stats = svs.flatMap(fileStats(spark, root, _))
-      .filter(st => st.columns.contains(s"${column}__min"))
-      .flatMap(_.select(col("_file"), col(s"${column}__min"),
-        col(s"${column}__max")).collect())
-      .map(r => (decodeReportedPath(r.getString(0)), r.get(1), r.get(2)))
-      .filter { case (f, _, _) => want(f) }
-    if (stats.map(_._1).toSet != want) return None
-    val nonNull = stats.filter(s => s._2 != null && s._3 != null)
-    if (nonNull.isEmpty) return None
-    implicit val ord: Ordering[Any] = statValueOrdering
-    Some((nonNull.map(_._2).min, nonNull.map(_._3).max))
-  }
+      : Option[(Any, Any)] =
+    fileBounds(spark, root, column, version, files).map { b =>
+      implicit val ord: Ordering[Any] = statValueOrdering
+      (b.map(_._1).min, b.map(_._2).max)
+    }
 
   /** A stats-sidecar value on a NUMERIC measuring stick (for sizing
     * gaps between ranges — ordering alone cannot say which of two
@@ -2777,25 +2855,10 @@ object SnapshotTable {
                                            files: Seq[String],
                                            maxRanges: Int = 8)
       : Option[Seq[(Any, Any)]] = {
-    if (files.isEmpty || maxRanges < 1) return None
-    if (deleteEntries(root, version).nonEmpty ||
-        eqDeleteEntries(root, version).nonEmpty) return None
-    val svs = files.map(f =>
-      f.stripPrefix("v=").takeWhile(_.isDigit).toLong).distinct.sorted
-    val want = files.toSet
-    val stats = svs.flatMap(fileStats(spark, root, _))
-      .filter(st => st.columns.contains(s"${column}__min"))
-      .flatMap(_.select(col("_file"), col(s"${column}__min"),
-        col(s"${column}__max")).collect())
-      .map(r => (decodeReportedPath(r.getString(0)), r.get(1), r.get(2)))
-      .filter { case (f, _, _) => want(f) }
-    if (stats.map(_._1).toSet != want) return None
-    val nonNull = stats.filter(s => s._2 != null && s._3 != null)
-    if (nonNull.isEmpty) return None
+    if (maxRanges < 1) return None
     val ord = statValueOrdering
-    val sorted = nonNull.map(s => (s._2, s._3)).sortWith {
-      (a, b) => ord.lt(a._1, b._1)
-    }
+    val sorted = fileBounds(spark, root, column, version, files)
+      .getOrElse(return None).sortWith((a, b) => ord.lt(a._1, b._1))
     // merge overlaps: ranges sorted by lo, the next merges in when
     // its lo sits at or under the running hi
     val merged = sorted.tail.foldLeft(Vector(sorted.head)) {
@@ -2841,14 +2904,9 @@ object SnapshotTable {
     val key = (MetaIO.join(root).toString, v, column, maxRanges)
     val cached = fastRangesCache.get(key)
     if (cached != null) return cached
-    val computed: Option[Seq[(Any, Any)]] = {
-      val entries = manifestEntries(root, v)
-      val dirs: Seq[(String, Long)] =
-        if (entries.isEmpty) Seq(s"v=$v" -> v)
-        else entries.sorted.map { case (p, sv) => s"v=$sv/$p" -> sv }
-      fastBoundsRangesFiles(spark, root, column, v,
-        candidateDataFiles(root, dirs).toSeq, maxRanges)
-    }
+    val computed =
+      fastBoundsRangesFiles(spark, root, column, v, liveFiles(root, v),
+        maxRanges)
     val prev = fastRangesCache.putIfAbsent(key, computed)
     if (prev != null) prev else computed
   }
@@ -2914,45 +2972,23 @@ object SnapshotTable {
   def dataSizeBytes(root: String, version: Long = -1L): Long = {
     val v = if (version >= 0) version else latestVersion(root)
     require(v >= 0, s"no committed version at $root")
-    val entries = manifestEntries(root, v)
-    val dirs: Seq[String] =
-      if (entries.isEmpty) Seq(s"v=$v")
-      else entries.sorted.map { case (p, sv) => s"v=$sv/$p" }
-    dirs.flatMap { rel =>
-      MetaIO.list(MetaIO.join(root, rel))
-        .filterNot(p => MetaIO.name(p).startsWith("_") ||
-          MetaIO.name(p).startsWith("."))
-        .filterNot(MetaIO.isDir(_))
-        .map(MetaIO.size)
-    }.sum
+    liveFiles(root, v).map(f => MetaIO.size(MetaIO.join(root, f))).sum
   }
 
   /** (every candidate data file of version `v`, the recorded per-file
     * row counts) — the shared metadata walk of the count paths. */
   private def countedFiles(spark: SparkSession, root: String,
                            v: Long): (Seq[String], Map[String, Long]) = {
-    val entries = manifestEntries(root, v)
-    val dirs: Seq[(String, Long)] =
-      if (entries.isEmpty) Seq(s"v=$v" -> v)
-      else entries.sorted.map { case (p, sv) => s"v=$sv/$p" -> sv }
-    // every candidate data file of the read, root-relative
-    val candidates: Seq[String] = dirs.flatMap { case (rel, _) =>
-      val d = MetaIO.join(root, rel)
-      MetaIO.listNames(d)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .filterNot(n => MetaIO.isDir(MetaIO.join(root, rel, n)))
-        .map(n => s"$rel/$n")
-    }
     // stats paths are Spark-reported (URI-encoded) — decode them to
-    // the raw filesystem form the candidate listing uses
-    val counted: Map[String, Long] = dirs.map(_._2).distinct.sorted
+    // the raw filesystem form the live-file listing uses
+    val counted: Map[String, Long] = storageVersions(root, v)
       .flatMap(fileStats(spark, root, _))
       .filter(_.columns.contains("__rows"))
       .map(_.select("_file", "__rows").collect()
         .map(r => decodeReportedPath(r.getString(0)) -> r.getLong(1))
         .toMap)
       .foldLeft(Map.empty[String, Long])(_ ++ _)
-    (candidates, counted)
+    (liveFiles(root, v), counted)
   }
 
   /** Live position-delete rows of version `v` landing in `live` files
@@ -2970,44 +3006,30 @@ object SnapshotTable {
       .map(_.getLong(1)).sum
   }
 
-  // ─────────── file-level bloom filters (point-lookup skipping) ───────────
-  //
-  // Min/max bounds cannot prune a point lookup over UNSORTED data —
-  // every file's range spans the whole key space. The table formats
-  // answer with per-file bloom filters (parquet's column bloom
-  // filters; Iceberg carries them as Puffin sidecars): k hash probes
-  // per value into an m-bit set, a file whose filter misses any probe
-  // of the literal CANNOT contain it. Same sidecar discipline as the
-  // stats: `v=N/_blooms/` rows (_file, column, bits array<long>),
-  // built by one aggregation over only the just-written files.
-  // Membership is one-sided — a missing filter or a false positive
-  // only costs IO, never correctness.
-
-  /** Bloom geometry: 8192 bits (128 longs ≈ 1 KB per file per column),
-    * 3 probes — ~1-2% false positives at ~1k distinct values/file. */
+  /** Bloom geometry of the `_blooms` sidecar: 8192 bits (128 longs ≈
+    * 1 KB per file per column), 3 probes — ~1-2% false positives at ~1k
+    * distinct values/file. Min/max bounds cannot prune a point lookup
+    * over UNSORTED data (every file's range spans the key space); a
+    * file whose filter misses any probe of a literal CANNOT hold it. */
   private val BloomBits = 8192
   private val BloomWords = BloomBits / 64
   private val BloomK = 3
 
-  private def bloomsPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_blooms")
-
   /** The k probe positions of a value, as column expressions — double
     * hashing pos_i = (xxhash64 + i·murmur3) mod m, both seeds Spark's
-    * defaults so [[probePositions]] reproduces them driver-side for a
-    * literal. Long overflow wraps identically in both places. */
-  private def probeCols(c: Column): Seq[Column] =
-    (0 until BloomK).map(i =>
-      pmod(xxhash64(c) + lit(i.toLong) * hash(c).cast("long"),
-        lit(BloomBits.toLong)))
-
-  /** [[probeCols]] at caller-chosen geometry — the dim-key runtime
-    * bloom's row-side probe (same double-hash discipline and seeds, so
-    * the driver-built filter and the scan's codegen'd probes agree). */
+    * defaults so [[probeBits]] reproduces them driver-side for a
+    * literal (the file sidecars and the dim-key runtime bloom alike).
+    * Long overflow wraps identically in both places. */
   private[graft] def probeColsAt(c: Column, mBits: Long, k: Int): Seq[Column] =
     (0 until k).map(i =>
       pmod(xxhash64(c) + lit(i.toLong) * hash(c).cast("long"),
         lit(mBits)))
+
+  /** [[probeColsAt]]'s positions, driver-side, for a value hashed by
+    * [[literalHashes]]. */
+  private[graft] def probeBits(h: (Long, Long), mBits: Long,
+                               k: Int): Seq[Long] =
+    (0 until k).map(i => Math.floorMod(h._1 + i.toLong * h._2, mBits))
 
   /** Row-level might-contain over a driver-built bloom (`words` =
     * mBits/64 little-endian longs): true/null only when every probe
@@ -3023,22 +3045,11 @@ object SnapshotTable {
     }.reduce(_ && _)
   }
 
-  /** Driver-side probe positions of a literal CAST TO the column's
-    * recorded type (hashing an int literal against a long column would
-    * probe the wrong bits and falsely refute — so an uncastable or
-    * unknown type yields None and the file is kept). */
-  private def probePositions(
-      lit0: org.apache.spark.sql.catalyst.expressions.Literal,
-      dt: types.DataType): Option[Seq[Int]] =
-    literalHashes(lit0, dt).map { case (h1, h2) =>
-      (0 until BloomK).map(i =>
-        Math.floorMod(h1 + i.toLong * h2, BloomBits.toLong).toInt)
-    }
-
-  /** The (xxhash64, murmur3) pair of a literal cast to `dt` — the
-    * shared driver-side half of every bloom probe derivation (file
-    * sidecars and the runtime dim-key bloom); None when the cast is
-    * impossible or yields null. */
+  /** The (xxhash64, murmur3) pair of a literal CAST TO the column's
+    * recorded type — the shared driver-side half of every bloom probe
+    * derivation (hashing an int literal against a long column would
+    * probe the wrong bits and falsely refute, so an impossible cast or
+    * a null result yields None and the file is kept). */
   private[graft] def literalHashes(
       lit0: org.apache.spark.sql.catalyst.expressions.Literal,
       dt: types.DataType): Option[(Long, Long)] = {
@@ -3056,10 +3067,16 @@ object SnapshotTable {
     * `[word1, mask1, word2, mask2, word3, mask3]` so the distributed
     * sidecar test is pure array/bit arithmetic. */
   private[graft] def fileBloomProbeWords(h: (Long, Long)): Seq[Long] =
-    (0 until BloomK).flatMap { i =>
-      val p = Math.floorMod(h._1 + i.toLong * h._2, BloomBits.toLong).toInt
-      Seq((p / 64).toLong, 1L << (p % 64))
-    }
+    probeBits(h, BloomBits, BloomK).flatMap(p => Seq(p / 64, 1L << (p % 64)))
+
+  /** "All k probe bits set" on a `_blooms` row's `bits`: probe i's
+    * (1-based word index, bit mask) from `probe` — the sidecar
+    * might-contain test of [[bloomRefuted]] and [[bloomKeysKept]]. */
+  private def bloomMay(probe: Int => (Column, Column)): Column =
+    (0 until BloomK).map { i =>
+      val (word, mask) = probe(i)
+      (element_at(col("bits"), word).bitwiseAND(mask)) =!= lit(0L)
+    }.reduce(_ && _)
 
   /** Candidates minus the files whose bloom sidecar on `column`
     * refutes EVERY probed key (`keyProbes` rows from
@@ -3071,32 +3088,27 @@ object SnapshotTable {
                                    keyProbes: Seq[Seq[Long]],
                                    candidates: Seq[String]): Seq[String] = {
     if (keyProbes.isEmpty || candidates.isEmpty) return candidates
-    val statVersions = candidates
-      .map(f => f.stripPrefix("v=").takeWhile(_.isDigit).toLong)
-      .distinct.sorted
-    val blooms = statVersions.flatMap(fileBlooms(spark, root, _))
+    val blooms = candidates.map(svOf).distinct.sorted
+      .flatMap(fileBlooms(spark, root, _))
       .reduceOption(_.unionByName(_))
       .getOrElse(return candidates)
-    val mayAny = exists(typedLit(keyProbes), t =>
-      (0 until BloomK).map(i =>
-        (element_at(col("bits"), element_at(t, i * 2 + 1).cast("int") + 1)
-          .bitwiseAND(element_at(t, i * 2 + 2))) =!= lit(0L))
-        .reduce(_ && _))
+    val mayAny = exists(typedLit(keyProbes), t => bloomMay(i =>
+      (element_at(t, i * 2 + 1).cast("int") + 1, element_at(t, i * 2 + 2))))
     val refuted = blooms.filter(col("column") === column).filter(!mayAny)
       .select("_file").collect()
       .map(r => decodeReportedPath(r.getString(0))).toSet
     candidates.filterNot(refuted)
   }
 
-  /** Build per-file bloom sidecars for `bloomCols` over version
-    * `version`'s freshly-written files — one distributed aggregation
-    * per covered column over only the new files (the write's own cost
+  /** The per-file bloom frame over storage version data `df`: one
+    * distributed aggregation per covered column (the write's own cost
     * class; a production writer lifts parquet's built-in column bloom
     * filters instead of rescanning). */
   private def bloomFrame(df: DataFrame, present: Seq[String]): DataFrame =
     present.map { c =>
       df.select(input_file_name().as("_file"),
-          explode(array(probeCols(col(c)): _*)).as("p"))
+          explode(array(probeColsAt(col(c), BloomBits, BloomK): _*))
+            .as("p"))
         .distinct()
         .groupBy("_file")
         .agg(collect_set(col("p")).as("ps"))
@@ -3109,104 +3121,48 @@ object SnapshotTable {
             .as("bits"))
     }.reduce(_.unionByName(_))
 
-  private def recordFileBlooms(spark: SparkSession, root: String,
-                               version: Long, bloomCols: Seq[String]): Unit = {
-    if (bloomCols.isEmpty) return
-    val df = spark.read.parquet(s"$root/v=$version")
-    val present = bloomCols.filter(df.columns.contains)
-    if (present.isEmpty) return
-    bloomFrame(df, present)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(bloomsPath(root, version).toString)
-  }
-
-  /** BACKFILL bloom sidecars for files that already exist — the
-    * point-lookup twin of [[collectStats]]: pre-bloom tables gain
-    * per-(file, column) filters without rewriting data, turning on
-    * equality/IN file pruning on hash/unsorted layouts where min/max
-    * bounds refute nothing. Same contract: one scan per uncovered
-    * storage version, idempotent, existing columns preserved, atomic
-    * sidecar swap. Returns the storage versions recomputed. */
+  /** BACKFILL bloom sidecars ([[backfill]]) — the point-lookup twin of
+    * [[collectStats]]: pre-bloom tables gain per-(file, column) filters
+    * without rewriting data, turning on equality/IN file pruning on
+    * hash/unsorted layouts where min/max bounds refute nothing.
+    * Returns the storage versions recomputed. */
   def collectBlooms(spark: SparkSession, root: String,
                     bloomCols: Seq[String], version: Long = -1L): Seq[Long] = {
     require(bloomCols.nonEmpty, "collectBlooms needs at least one column")
-    val v = if (version >= 0) version else latestVersion(root)
-    require(v >= 0, s"no committed version at $root")
-    val storageVersions = {
-      val m = manifestEntries(root, v)
-      if (m.isEmpty) Seq(v) else m.map(_._2).distinct.sorted
-    }
-    storageVersions.flatMap { sv =>
-      val existing: Seq[String] = fileBlooms(spark, root, sv)
-        .map(_.select("column").distinct()
-          .collect().map(_.getString(0)).toSeq)
-        .getOrElse(Seq.empty)
-      if (fileBlooms(spark, root, sv).isDefined &&
-          bloomCols.forall(existing.contains)) None
-      else {
-        val df = spark.read.parquet(s"$root/v=$sv")
-        val present = (existing ++ bloomCols).distinct
-          .filter(df.columns.contains)
-        if (present.isEmpty) None
-        else {
-          val tmp = MetaIO.join(root, s"v=$sv",
-            s".blooms.new-${java.util.UUID.randomUUID()}")
-          bloomFrame(df, present).coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val target = bloomsPath(root, sv)
-          MetaIO.delete(target, recursive = true)
-          MetaIO.moveTree(tmp, target)
-          Some(sv)
-        }
-      }
-    }
+    backfill(spark, root, Blooms, bloomCols, version)
   }
 
   /** The recorded per-file bloom filters of a storage version (None
     * when it carries none). */
   def fileBlooms(spark: SparkSession, root: String,
                  version: Long): Option[DataFrame] =
-    if (MetaIO.exists(bloomsPath(root, version)))
-      Some(spark.read.parquet(bloomsPath(root, version).toString))
-    else None
+    readSidecar(spark, root, version, Blooms)
 
   /** Columns with recorded bloom filters in ANY storage version
     * `version` references — the `bloom.columns` inspection property
     * (one tiny sidecar scan per referenced version). */
-  def bloomCoverage(root: String, version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else latestVersion(root)
-    if (v < 0) return Seq.empty
-    val svs = manifestEntries(root, v).map(_._2).distinct match {
-      case Seq() => Seq(v)
-      case s => s
-    }
-    svs.flatMap(sv => fileBlooms(SparkSession.active, root, sv))
-      .flatMap(_.select("column").distinct().collect().map(_.getString(0)))
-      .distinct.sorted
-  }
+  def bloomCoverage(root: String, version: Long = -1L): Seq[String] =
+    coverageOf(root, version, Blooms)
 
-  /** Files DEFINITELY not containing any of the predicate's equality
-    * literals, per its top-level conjuncts of shape `c = lit` /
-    * `c IN (lits)` over bloom-covered columns. A file is refuted by a
-    * conjunct iff for EVERY literal some probe bit is clear; files
-    * without a filter row for the column are never refuted. */
-  private def bloomRefuted(spark: SparkSession, root: String, v: Long,
-                           statVersions: Seq[Long],
-                           parsed: org.apache.spark.sql.catalyst.expressions.Expression): Set[String] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, In, Literal => CLit}
-    val blooms = statVersions
-      .flatMap(fileBlooms(spark, root, _))
-      .reduceOption(_.unionByName(_))
-      .getOrElse(return Set.empty)
-    val schema: Option[types.StructType] =
-      Some(recordedSchema(root, v).getOrElse(read(spark, root, v).schema))
-    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression):
-        Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+  /** The top-level conjuncts of a parsed predicate. */
+  private def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.And
+    e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
-    val eqLeaves: Seq[(String, Seq[CLit])] = conjuncts(parsed).collect {
+  }
+
+  /** The top-level `c = lit` / `c IN (lits)` conjuncts of a parsed
+    * predicate, as (column, literals) — what blooms and hashed or
+    * string-truncated partition values can refute. */
+  private def eqLeaves(
+      parsed: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Literal])] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, In, Literal => CLit}
+    conjuncts(parsed).collect {
       case EqualTo(a: UnresolvedAttribute, l: CLit) =>
         a.nameParts.last -> Seq(l)
       case EqualTo(l: CLit, a: UnresolvedAttribute) =>
@@ -3214,16 +3170,29 @@ object SnapshotTable {
       case In(a: UnresolvedAttribute, ls) if ls.forall(_.isInstanceOf[CLit]) =>
         a.nameParts.last -> ls.map(_.asInstanceOf[CLit])
     }
-    eqLeaves.flatMap { case (c, lits) =>
-      val dtOpt = schema.flatMap(_.fields.find(_.name == c)).map(_.dataType)
-      val probes = dtOpt.map(dt => lits.map(probePositions(_, dt)))
+  }
+
+  /** Files DEFINITELY not containing any of the predicate's equality
+    * literals, per its [[eqLeaves]] over bloom-covered columns. A file
+    * is refuted by a conjunct iff for EVERY literal some probe bit is
+    * clear; files without a filter row for the column are never
+    * refuted. */
+  private def bloomRefuted(spark: SparkSession, root: String, v: Long,
+                           statVersions: Seq[Long],
+                           parsed: org.apache.spark.sql.catalyst.expressions.Expression): Set[String] = {
+    val blooms = statVersions
+      .flatMap(fileBlooms(spark, root, _))
+      .reduceOption(_.unionByName(_))
+      .getOrElse(return Set.empty)
+    val schema = recordedSchema(root, v).getOrElse(read(spark, root, v).schema)
+    eqLeaves(parsed).flatMap { case (c, lits) =>
+      val dtOpt = schema.fields.find(_.name == c).map(_.dataType)
+      val probes = dtOpt.map(dt =>
+        lits.map(literalHashes(_, dt).map(fileBloomProbeWords)))
       probes match {
         case Some(ps) if ps.forall(_.isDefined) =>
-          // "may contain literal l" = all k probe bits set
-          val mayAny = ps.flatten.map(pos =>
-            pos.map(p => (element_at(col("bits"), p / 64 + 1)
-              .bitwiseAND(lit(1L << (p % 64)))) =!= lit(0L))
-              .reduce(_ && _)).reduce(_ || _)
+          val mayAny = ps.flatten.map(ws => bloomMay(i =>
+            (lit(ws(2 * i).toInt + 1), lit(ws(2 * i + 1))))).reduce(_ || _)
           blooms.filter(col("column") === c).filter(!mayAny)
             .select("_file").collect().map(_.getString(0)).toSeq
         case _ => Seq.empty // unknown type / uncastable literal: keep
@@ -3241,7 +3210,7 @@ object SnapshotTable {
     * `bucket` / string-`truncate` directories refute top-level
     * equality/IN conjuncts by recomputing the transform of each
     * literal driver-side, cast to the column's recorded type first
-    * (the [[probePositions]] discipline — hashing an int literal
+    * (the [[literalHashes]] discipline — hashing an int literal
     * against a long column would bucket differently and falsely
     * refute). Identity fields prune as exact [v, v] bounds — classic
     * partition pruning, applied at the manifest file listing so the
@@ -3253,9 +3222,7 @@ object SnapshotTable {
       candidates: Seq[String],
       parsed: org.apache.spark.sql.catalyst.expressions.Expression)
       : Set[String] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, In, Murmur3Hash, Literal => CLit}
-    def svOf(f: String): Long = f.stripPrefix("v=").takeWhile(_.isDigit).toLong
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Murmur3Hash, Literal => CLit}
     // one (field, files) task per era × spec field — each field of a
     // multi-column spec refutes independently. Identity fields prune
     // too: their directory value is an exact [v, v] bound on the data
@@ -3268,11 +3235,6 @@ object SnapshotTable {
     if (transforms.isEmpty) return Set.empty
     lazy val schema: types.StructType =
       recordedSchema(root, v).getOrElse(read(spark, root, v).schema)
-    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression):
-        Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     // `keep ⇔ bounds cannot refute` over a driver-built stats-shaped
     // relation (file, src__min, src__max)
     def refuteBounds(src: String, rows: Seq[(String, String)],
@@ -3288,16 +3250,7 @@ object SnapshotTable {
     // equality/IN conjuncts on `src`, as literal groups (one group per
     // conjunct — EACH conjunct may independently refute)
     def eqLiteralGroups(src: String): Seq[Seq[CLit]] =
-      conjuncts(parsed).collect {
-        case EqualTo(a: UnresolvedAttribute, l: CLit)
-          if a.nameParts.last == src => Seq(l)
-        case EqualTo(l: CLit, a: UnresolvedAttribute)
-          if a.nameParts.last == src => Seq(l)
-        case In(a: UnresolvedAttribute, ls)
-          if a.nameParts.last == src &&
-            ls.forall(_.isInstanceOf[CLit]) =>
-          ls.map(_.asInstanceOf[CLit])
-      }
+      eqLeaves(parsed).collect { case (c, lits) if c == src => lits }
     def castLit(l: CLit, dt: types.DataType): Option[Any] = {
       if (!Cast.canCast(l.dataType, dt)) return None
       Option(Cast(l, dt, Some("UTC")).eval(null))
@@ -3426,19 +3379,8 @@ object SnapshotTable {
       : Seq[String] = {
     val v = if (version >= 0) version else latestVersion(root)
     require(v >= 0, s"no committed version at $root")
-    val entries = manifestEntries(root, v)
-    // (relative dir, storage version) pairs the read would scan
-    val dirs: Seq[(String, Long)] =
-      if (entries.isEmpty) Seq(s"v=$v" -> v)
-      else entries.sorted.map { case (part, sv) => s"v=$sv/$part" -> sv }
-    val candidates: Seq[String] = dirs.flatMap { case (rel, _) =>
-      val d = MetaIO.join(root, rel)
-      MetaIO.listNames(d)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .filterNot(n => MetaIO.isDir(MetaIO.join(root, rel, n)))
-        .map(n => s"$rel/$n")
-    }
-    val statVersions = dirs.map(_._2).distinct.sorted
+    val candidates = liveFiles(root, v)
+    val statVersions = storageVersions(root, v)
     val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
     val stats = statVersions.flatMap(fileStats(spark, root, _))
       .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
@@ -3567,12 +3509,11 @@ object SnapshotTable {
   private final case class TopNMeta(rows: Map[String, Long],
       cols: Map[(String, String), TopNColMeta])
 
-  private def topNFileMeta(spark: SparkSession, root: String, version: Long,
-                           dirs: Seq[(String, Long)],
+  private def topNFileMeta(spark: SparkSession, root: String,
+                           svs: Seq[Long],
                            candidates: Set[String], cols: Seq[String],
                            tableSchema: () => types.StructType)
       : TopNMeta = {
-    val svs = dirs.map(_._2).distinct.sorted
     // ONE collect per sidecar frame, grabbing _file + __rows + every
     // requested column's pieces at once — the naive per-(frame ×
     // column) selects multiply tiny plan-time jobs on the serving
@@ -3617,8 +3558,6 @@ object SnapshotTable {
       }
     }
     lazy val schema: types.StructType = tableSchema()
-    def svOf(f: String): Long =
-      f.stripPrefix("v=").takeWhile(_.isDigit).toLong
     val derived =
       scala.collection.mutable.Map.empty[(String, String), TopNColMeta]
     // merge, never overwrite: a column can source several specs (e.g.
@@ -3828,15 +3767,10 @@ object SnapshotTable {
     if (n <= 0) return None
     if (deleteEntries(root, version).nonEmpty ||
         eqDeleteEntries(root, version).nonEmpty) return None
-    val entries = manifestEntries(root, version)
-    val dirs: Seq[(String, Long)] =
-      if (entries.isEmpty) Seq(s"v=$version" -> version)
-      else entries.sorted.map { case (p, sv) => s"v=$sv/$p" -> sv }
     // under a pushed filter the caller hands the skipping survivors —
     // the prefix search runs over exactly the files the scan would read
     val candidates: Set[String] =
-      candidatesOverride.map(_.toSet)
-        .getOrElse(candidateDataFiles(root, dirs))
+      candidatesOverride.getOrElse(liveFiles(root, version)).toSet
     // the prefix search below is O(files log files) driver work, but
     // the sidecar collect above it is still per-file rows — past this
     // the planning pass would dominate; decline, scan plain
@@ -3851,8 +3785,8 @@ object SnapshotTable {
     // without a recorded schema pays read-plan inference exactly once)
     lazy val tblSchema: types.StructType = recordedSchema(root, version)
       .getOrElse(read(spark, root, version).schema)
-    val meta = topNFileMeta(spark, root, version, dirs, candidates,
-      (column +: filterCols).distinct, () => tblSchema)
+    val meta = topNFileMeta(spark, root, storageVersions(root, version),
+      candidates, (column +: filterCols).distinct, () => tblSchema)
     val stats: Map[String, (Any, Any, Long)] = candidates.toSeq.flatMap {
       f =>
         for {
@@ -4001,8 +3935,6 @@ object SnapshotTable {
     // collides with the storage layer and scans per storage version
     val recSchema = recordedSchema(root, v)
     val vCollision = recSchema.exists(_.fieldNames.contains("v"))
-    def svOf(f: String): Long =
-      f.stripPrefix("v=").takeWhile(_.isDigit).toLong
     // field-id evolution: old-era files must resolve physical names by
     // id (a renamed column read under the current name null-fills) —
     // the same era projection [[scan]] applies, over kept FILES
@@ -4037,24 +3969,6 @@ object SnapshotTable {
       scans.reduce(_.unionByName(_))))
   }
 
-  // ───────── per-column NDV sketches (CBO statistics; Puffin analog) ─────────
-  //
-  // Iceberg ships theta sketches as Puffin blobs so engines can feed
-  // join-order estimation; the graft analog is a `v=N/_ndv/` sidecar
-  // holding one MERGEABLE Datasketches HLL sketch per (file, column)
-  // (`hll_sketch_agg` over the column's xxhash64 — a 64-bit hash
-  // makes every column type sketchable and collision noise is far
-  // below HLL's own error), plus that file's own estimate for the
-  // `files` inspection surface. Table-level NDV folds the LIVE files'
-  // sketches with `hll_union_agg` — no data rescan, any subset of
-  // files composes (the point of mergeable sketches: a partial
-  // rewrite invalidates only the rewritten files' rows). Collection
-  // is an explicit ANALYZE-style action ([[collectNdv]]), not a
-  // per-commit tax: one scan per uncovered storage version.
-
-  private def ndvPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_ndv")
-
   private def ndvColsPath(root: String) = MetaIO.join(root, "_ndvcols")
 
   /** Declare columns whose NDV sketches every FUTURE data-writing
@@ -4079,26 +3993,16 @@ object SnapshotTable {
     else MetaIO.readString(ndvColsPath(root)).trim.split(",").toSeq
       .map(_.trim).filter(_.nonEmpty)
 
+  /** The recorded per-file NDV sketches of a storage version (None
+    * when it carries none). */
   def fileNdv(spark: SparkSession, root: String,
               version: Long): Option[DataFrame] =
-    if (MetaIO.exists(ndvPath(root, version)))
-      Some(spark.read.parquet(ndvPath(root, version).toString))
-    else None
+    readSidecar(spark, root, version, Ndv)
 
   /** Columns with recorded NDV sketches in ANY storage version
     * `version` references — the `ndv.columns` inspection property. */
-  def ndvCoverage(root: String, version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else latestVersion(root)
-    if (v < 0) return Seq.empty
-    val svs = manifestEntries(root, v).map(_._2).distinct match {
-      case Seq() => Seq(v)
-      case s => s
-    }
-    svs.flatMap(sv => fileNdv(SparkSession.active, root, sv))
-      .flatMap(_.columns.filter(_.endsWith("__hll"))
-        .map(_.stripSuffix("__hll")))
-      .distinct.sorted
-  }
+  def ndvCoverage(root: String, version: Long = -1L): Seq[String] =
+    coverageOf(root, version, Ndv)
 
   /** The per-file sketch frame: `_file`, and per column a binary
     * `${c}__hll` sketch plus its own `${c}__ndv` estimate. Nulls are
@@ -4119,52 +4023,20 @@ object SnapshotTable {
       .withColumn("_file", regexp_extract(col("_file"), "(v=\\d+/.*)$", 1))
   }
 
-  /** BACKFILL NDV sketch sidecars — the Iceberg `compute_table_stats`
-    * (Puffin theta) analog, same contract as [[collectStats]] /
-    * [[collectBlooms]]: one scan per storage version lacking coverage,
-    * idempotent, previously-recorded columns preserved, atomic sidecar
-    * swap. Returns the storage versions recomputed. */
+  /** BACKFILL NDV sketch sidecars ([[backfill]]) — the Iceberg
+    * `compute_table_stats` (Puffin theta) analog. Returns the storage
+    * versions recomputed. */
   def collectNdv(spark: SparkSession, root: String,
                  ndvCols: Seq[String], version: Long = -1L): Seq[Long] = {
     require(ndvCols.nonEmpty, "collectNdv needs at least one column")
     val v = if (version >= 0) version else latestVersion(root)
-    require(v >= 0, s"no committed version at $root")
     // ONE analyze call yields full CBO statistics: Catalyst's range-
     // overlap check treats a counts-only numeric ColumnStat as an
     // all-null column (NullRange -> "disjoint" -> zero-row joins), so
     // NDV is only usable next to min/max bounds — backfill them
     // through the footer-lifted stats path for the same columns
     collectStats(spark, root, ndvCols, v)
-    val storageVersions = {
-      val m = manifestEntries(root, v)
-      if (m.isEmpty) Seq(v) else m.map(_._2).distinct.sorted
-    }
-    val recomputed = storageVersions.flatMap { sv =>
-      val existing: Seq[String] = fileNdv(spark, root, sv)
-        .map(_.columns.toSeq.filter(_.endsWith("__hll"))
-          .map(_.stripSuffix("__hll")))
-        .getOrElse(Seq.empty)
-      if (fileNdv(spark, root, sv).isDefined &&
-          ndvCols.forall(existing.contains)) None
-      else {
-        val df = spark.read.parquet(s"$root/v=$sv")
-        val present = (existing ++ ndvCols).distinct
-          .filter(df.columns.contains)
-        if (present.isEmpty) None
-        else {
-          val tmp = MetaIO.join(root, s"v=$sv",
-            s".ndv.new-${java.util.UUID.randomUUID()}")
-          ndvFrame(df, present).coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val target = ndvPath(root, sv)
-          MetaIO.delete(target, recursive = true)
-          MetaIO.moveTree(tmp, target)
-          Some(sv)
-        }
-      }
-    }
-    ndvTableCache.clear() // estimates may have changed
-    recomputed
+    backfill(spark, root, Ndv, ndvCols, v)
   }
 
   /** Table-level NDV per covered column of `version`'s LIVE files,
@@ -4189,52 +4061,37 @@ object SnapshotTable {
     val cached = ndvTableCache.get(cacheKey)
     if (cached != null) return cached
     val computed: Map[String, NdvStat] = {
-      val entries = manifestEntries(root, v)
-      val dirs: Seq[(String, Long)] =
-        if (entries.isEmpty) Seq(s"v=$v" -> v)
-        else entries.sorted.map { case (p, sv) => s"v=$sv/$p" -> sv }
-      val svs = dirs.map(_._2).distinct.sorted
-      // metadata-only fast path: no sidecars anywhere → no jobs
-      if (!svs.exists(sv => MetaIO.exists(ndvPath(root, sv))))
+      // no sidecar anywhere: no listing, no jobs
+      val frames = storageVersions(root, v).flatMap(fileNdv(spark, root, _))
+      val candidates =
+        if (frames.isEmpty) Set.empty[String] else liveFiles(root, v).toSet
+      lazy val byFile = frames
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .collect().map(r =>
+          decodeReportedPath(r.getAs[String]("_file")) -> r).toMap
+      if (candidates.isEmpty || !candidates.forall(byFile.contains))
         Map.empty
       else {
-        val candidates: Set[String] = candidateDataFiles(root, dirs)
-        val frames = svs.flatMap(fileNdv(spark, root, _))
-        if (frames.isEmpty) Map.empty
-        else {
-          val all = frames
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-            .collect()
-          val byFile = all.map(r =>
-            decodeReportedPath(r.getAs[String]("_file")) -> r).toMap
-          val covered = candidates.forall(byFile.contains)
-          if (!covered || candidates.isEmpty) Map.empty
-          else {
-            val cols = frames.flatMap(_.columns).distinct
-              .filter(_.endsWith("__hll")).map(_.stripSuffix("__hll"))
-            val rows = candidates.toSeq.map(byFile)
-            cols.flatMap { c =>
-              val sketches = rows.map { r =>
-                val i = r.fieldIndex(s"${c}__hll")
-                if (r.isNullAt(i)) null else r.getAs[Array[Byte]](i)
-              }
-              if (sketches.contains(null)) None // partial column coverage
-              else {
-                val est = spark
-                  .createDataset(sketches)(
-                    org.apache.spark.sql.Encoders.BINARY)
-                  .toDF("sk")
-                  .agg(hll_sketch_estimate(hll_union_agg(col("sk"))))
-                  .first.getLong(0)
-                val nulls = rows.map { r =>
-                  val i = r.fieldIndex(s"${c}__nulls")
-                  if (r.isNullAt(i)) 0L else r.getLong(i)
-                }.sum
-                Some(c -> NdvStat(est, nulls))
-              }
-            }.toMap
+        val rows = candidates.toSeq.map(byFile)
+        frames.flatMap(Ndv.covered).distinct.flatMap { c =>
+          val sketches = rows.map { r =>
+            val i = r.fieldIndex(s"${c}__hll")
+            if (r.isNullAt(i)) null else r.getAs[Array[Byte]](i)
           }
-        }
+          if (sketches.contains(null)) None // partial column coverage
+          else {
+            val est = spark
+              .createDataset(sketches)(org.apache.spark.sql.Encoders.BINARY)
+              .toDF("sk")
+              .agg(hll_sketch_estimate(hll_union_agg(col("sk"))))
+              .first.getLong(0)
+            val nulls = rows.map { r =>
+              val i = r.fieldIndex(s"${c}__nulls")
+              if (r.isNullAt(i)) 0L else r.getLong(i)
+            }.sum
+            Some(c -> NdvStat(est, nulls))
+          }
+        }.toMap
       }
     }
     val prev = ndvTableCache.putIfAbsent(cacheKey, computed)

@@ -35,7 +35,8 @@ object TableInspect {
       val entries = SnapshotTable.manifestEntries(root, v)
       val dels = SnapshotTable.deleteEntries(root, v)
       val eqs = SnapshotTable.eqDeleteEntries(root, v)
-      val ownsData = hasDataFiles(root, s"v=$v")
+      // a manifested version owns data iff an entry names its own dir
+      val ownsData = entries.exists(_._2 == v)
       val kind =
         if (entries.isEmpty) "snapshot"
         else if (!ownsData && (dels.lastOption.contains(v) ||
@@ -62,20 +63,16 @@ object TableInspect {
     import spark.implicits._
     val v = if (version >= 0) version else SnapshotTable.latestVersion(root)
     require(v >= 0, s"no committed version at $root")
-    val entries = SnapshotTable.manifestEntries(root, v)
-    val dirs: Seq[(String, String, Long)] = // (rel dir, partition, sv)
-      if (entries.isEmpty) Seq((s"v=$v", "", v))
-      else entries.sorted.map { case (p, sv) => (s"v=$sv/$p", p, sv) }
-    val rows = dirs.flatMap { case (rel, part, sv) =>
-      listFilesUnder(root, rel).map { f =>
-        (s"$rel/$f", part, sv,
-          MetaIO.size(MetaIO.join(root, rel, f)))
-      }
+    // (file, partition dirs between `v=M/` and the name, M, bytes)
+    val rows = SnapshotTable.liveFiles(root, v).sorted.map { f =>
+      val segs = f.split("/")
+      (f, segs.slice(1, segs.length - 1).mkString("/"),
+        SnapshotTable.svOf(f), MetaIO.size(MetaIO.join(root, f)))
     }
     val base = rows.toDF("file", "partition", "storage_version",
       "size_bytes")
     // stats sidecars are keyed by the same root-relative path
-    val statVersions = dirs.map(_._3).distinct.sorted
+    val statVersions = rows.map(_._3).distinct.sorted
     val stats = statVersions
       .flatMap(SnapshotTable.fileStats(spark, root, _))
       .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
@@ -165,15 +162,13 @@ object TableInspect {
       val col = fieldNames.flatMap(_.get(id)).getOrElse(id.toString)
       rows += (s"default.$col" -> d)
     }
-    val stats = SnapshotTable.statsCoverage(root, v)
-    if (stats.nonEmpty)
-      rows += ("stats.columns" -> stats.mkString(","))
-    val blooms = SnapshotTable.bloomCoverage(root, v)
-    if (blooms.nonEmpty)
-      rows += ("bloom.columns" -> blooms.mkString(","))
-    val ndvCols = SnapshotTable.ndvCoverage(root, v)
-    if (ndvCols.nonEmpty) {
-      rows += ("ndv.columns" -> ndvCols.mkString(","))
+    val cov = SnapshotTable.coverage(root, v)
+    if (cov.stats.nonEmpty)
+      rows += ("stats.columns" -> cov.stats.mkString(","))
+    if (cov.blooms.nonEmpty)
+      rows += ("bloom.columns" -> cov.blooms.mkString(","))
+    if (cov.ndv.nonEmpty) {
+      rows += ("ndv.columns" -> cov.ndv.mkString(","))
       // folded table-level estimates (sketch union over live files —
       // sidecar reads only, memoized; columns with partial file
       // coverage are absent)
@@ -181,18 +176,5 @@ object TableInspect {
         .foreach { case (c, n) => rows += (s"ndv.$c" -> n.ndv.toString) }
     }
     rows.result().toDF("key", "value")
-  }
-
-  /** Does any DATA parquet live under `rel` (recursively), sidecar
-    * dirs (`_deletes`, `_stats`) excluded? */
-  private def hasDataFiles(root: String, rel: String): Boolean =
-    FooterStats.dataFiles(MetaIO.join(root, rel)).nonEmpty
-
-  private def listFilesUnder(root: String, rel: String): Seq[String] = {
-    val d = MetaIO.join(root, rel)
-    MetaIO.listNames(d)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      .filterNot(n => MetaIO.isDir(MetaIO.join(d, n)))
-      .sorted
   }
 }

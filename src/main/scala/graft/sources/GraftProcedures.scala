@@ -125,35 +125,7 @@ private[sources] object GraftProcedures {
         Seq(row(SnapshotTable.migrateSpec(SparkSession.active,
           rootOf(in.getUTF8String(0).toString))))
       }
-    case "collect_stats" => // ANALYZE: backfill skipping stats sidecars
-      proc("collect_stats",
-        Seq("table" -> StringType, "columns" -> StringType),
-        VersionOut) { in =>
-        versionRows(SnapshotTable.collectStats(SparkSession.active,
-          rootOf(in.getUTF8String(0).toString),
-          in.getUTF8String(1).toString.split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq))
-      }
-    case "collect_blooms" => // the point-lookup twin of collect_stats
-      proc("collect_blooms",
-        Seq("table" -> StringType, "columns" -> StringType),
-        VersionOut) { in =>
-        versionRows(SnapshotTable.collectBlooms(SparkSession.active,
-          rootOf(in.getUTF8String(0).toString),
-          in.getUTF8String(1).toString.split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq))
-      }
-    case "collect_ndv" => // Iceberg compute_table_stats: NDV sketches
-      // (+ min/max backfill) for CBO join estimation — the folded
-      // per-column estimate lands in db.t.properties as ndv.<col>
-      proc("collect_ndv",
-        Seq("table" -> StringType, "columns" -> StringType),
-        VersionOut) { in =>
-        versionRows(SnapshotTable.collectNdv(SparkSession.active,
-          rootOf(in.getUTF8String(0).toString),
-          in.getUTF8String(1).toString.split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq))
-      }
+    case n if analyzers.contains(n) => analyze(n, t => rootOf(t) -> -1L)
     case "set_sort_order" => // WRITE ORDERED BY / OPTIMIZE ZORDER BY
       proc("set_sort_order",
         Seq("table" -> StringType, "columns" -> StringType,
@@ -251,31 +223,38 @@ private[sources] object GraftProcedures {
     // state, so backfilling them needs no commit and every pinned read
     // of a covered version benefits. Governed tables have no table
     // marker — the current commit's manifest names the version.
-    case "collect_stats" =>
-      governedAnalyze(catalogRoot, "collect_stats",
-        SnapshotTable.collectStats(SparkSession.active, _, _, _))
-    case "collect_blooms" =>
-      governedAnalyze(catalogRoot, "collect_blooms",
-        SnapshotTable.collectBlooms(SparkSession.active, _, _, _))
-    case "collect_ndv" =>
-      governedAnalyze(catalogRoot, "collect_ndv",
-        SnapshotTable.collectNdv(SparkSession.active, _, _, _))
+    case n if analyzers.contains(n) =>
+      analyze(n, { table =>
+        val vs = Catalog.tableVersions(catalogRoot)
+        require(vs.contains(table),
+          s"no table '$table' in the current catalog commit")
+        Catalog.tableRoot(catalogRoot, table) -> vs(table)
+      })
   }
 
-  /** One governed ANALYZE procedure: resolve the table's version from
-    * the current catalog commit, run the collector against it. */
-  private def governedAnalyze(catalogRoot: String, pname: String,
-                              collect: (String, Seq[String], Long) => Seq[Long])
+  /** The ANALYZE family, one sidecar backfill per procedure:
+    * `collect_stats` (skipping stats), `collect_blooms` (its
+    * point-lookup twin) and `collect_ndv` (Iceberg's
+    * `compute_table_stats`: NDV sketches plus min/max, for CBO join
+    * estimation — the folded estimates land in the table's properties
+    * as `ndv.<col>`). */
+  private val analyzers
+      : Map[String, (SparkSession, String, Seq[String], Long) => Seq[Long]] =
+    Map("collect_stats" -> SnapshotTable.collectStats,
+      "collect_blooms" -> SnapshotTable.collectBlooms,
+      "collect_ndv" -> SnapshotTable.collectNdv)
+
+  /** One ANALYZE procedure for both catalogs: `resolve` maps the
+    * `table` argument to its (root, version), -1 meaning the table's
+    * current version. */
+  private def analyze(pname: String, resolve: String => (String, Long))
       : UnboundProcedure =
     proc(pname, Seq("table" -> StringType, "columns" -> StringType),
       VersionOut) { in =>
-      val table = in.getUTF8String(0).toString
-      val vs = Catalog.tableVersions(catalogRoot)
-      require(vs.contains(table),
-        s"no table '$table' in the current catalog commit")
-      versionRows(collect(Catalog.tableRoot(catalogRoot, table),
+      val (root, v) = resolve(in.getUTF8String(0).toString)
+      versionRows(analyzers(pname)(SparkSession.active, root,
         in.getUTF8String(1).toString.split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq, vs(table)))
+          .filter(_.nonEmpty).toSeq, v))
     }
 
   /** Resolve `ident` (must be `system.<name>`) through `procs`. */

@@ -362,15 +362,10 @@ case class GraftRuntimeFilterRule(session: SparkSession)
     val k = 4
     val mBits = math.max(8192L, ((10L * keys.size + 63) / 64) * 64)
     val words = new Array[Long]((mBits / 64).toInt)
-    val fileProbes = hashes.map { h =>
-      val (h1, h2) = h.get
-      var i = 0
-      while (i < k) {
-        val p = Math.floorMod(h1 + i.toLong * h2, mBits)
-        words((p / 64).toInt) |= 1L << (p % 64)
-        i += 1
-      }
-      SnapshotTable.fileBloomProbeWords((h1, h2))
+    val fileProbes = hashes.flatten.map { h =>
+      SnapshotTable.probeBits(h, mBits, k)
+        .foreach(p => words((p / 64).toInt) |= 1L << (p % 64))
+      SnapshotTable.fileBloomProbeWords(h)
     }
     Some(RuntimeBloom(factCol, mBits, k, words.toSeq, fileProbes,
       keys.size.toLong))

@@ -49,6 +49,7 @@ class BloomSkippingSpec extends GraftSuite {
     // idempotent; extending preserves the recorded column
     assert(SnapshotTable.collectBlooms(spark, root, Seq("id")).isEmpty)
     assert(SnapshotTable.collectBlooms(spark, root, Seq("user")).nonEmpty)
+    assert(sidecarTmpLeft(root).isEmpty) // the swap left no tmp dir
     assert(SnapshotTable.readSkipping(spark, root, "id = 4242")
       .inputFiles.length < 8)
     assert(SnapshotTable.readSkipping(spark, root, "user = 'u9@h.io'")

@@ -87,6 +87,7 @@ class DataSkippingSpec extends GraftSuite {
     assert(SnapshotTable.collectStats(spark, root, Seq("id")).isEmpty)
     // extending preserves previously recorded columns
     assert(SnapshotTable.collectStats(spark, root, Seq("score")).nonEmpty)
+    assert(sidecarTmpLeft(root).isEmpty) // the swap left no tmp dir
     assert(SnapshotTable.readSkipping(spark, root, "id <= 100")
       .inputFiles.length < 4) // id bounds survived the extension
     assert(SnapshotTable.readSkipping(spark, root, "score > 5700.0")

@@ -30,4 +30,14 @@ abstract class GraftSuite extends AnyFunSuite {
     s
   }
   def sf: String = SparkTestBase.Sf
+
+  /** Sidecar-swap tmp dirs (`.stats.new-*`, `.blooms.new-*`,
+    * `.ndv.new-*`) left under any `v=N` of `root` — a finished
+    * backfill leaves none. */
+  def sidecarTmpLeft(root: String): Seq[String] = {
+    import graft.operators.MetaIO
+    MetaIO.list(root).filter(p => MetaIO.name(p).startsWith("v="))
+      .flatMap(MetaIO.list)
+      .filter(p => MetaIO.name(p).matches("\\.(stats|blooms|ndv)\\.new-.*"))
+  }
 }

@@ -35,9 +35,16 @@ class NdvStatsSpec extends GraftSuite {
     SnapshotTable.commitAppend(
       (3000 until 4000).map(i => (i.toLong, (i % 37).toLong, s"s${i % 500}"))
         .toDF("id", "bucket", "name"), root, "bucket")
-    val done = SnapshotTable.collectNdv(spark, root,
-      Seq("id", "bucket", "name"))
+    val done = SnapshotTable.collectNdv(spark, root, Seq("id", "bucket"))
     assert(done.nonEmpty)
+    // extending to a new column keeps the previously sketched ones
+    assert(SnapshotTable.collectNdv(spark, root, Seq("name")) === done)
+    assert(SnapshotTable.ndvCoverage(root) === Seq("bucket", "id", "name"))
+    done.foreach { sv =>
+      assert(SnapshotTable.fileNdv(spark, root, sv).get.columns.toSet
+        .intersect(Set("id__hll", "bucket__hll", "name__hll")).size === 3)
+    }
+    assert(sidecarTmpLeft(root).isEmpty) // no swap left a tmp dir
     val ndv = SnapshotTable.tableNdv(spark, root)
     val exact = Map("id" -> 4000L, "bucket" -> 37L, "name" -> 500L)
     // null counts are exact (per-file counters summed)
@@ -82,11 +89,28 @@ class NdvStatsSpec extends GraftSuite {
     MetaIO.writeString(MetaIO.join(root, "v=0", "_committed"), "")
     SnapshotTable.moveMarker(root, 0L)
     assert(SnapshotTable.read(spark, root).count() === 200L)
+    // every live-file path sees the partitioned files: counts, the
+    // connector's count pushdown, skipping reads, size, `files`
+    def countsAndReads(): Unit = {
+      assert(SnapshotTable.fastCount(spark, root) === 200L)
+      assert(spark.read.format("graft").load(root).count() === 200L)
+      assert(SnapshotTable.readSkipping(spark, root, "id >= 0")
+        .count() === 200L)
+      assert(SnapshotTable.readSkipping(spark, root, "id < 50")
+        .count() === 50L)
+    }
+    countsAndReads()
+    assert(SnapshotTable.dataSizeBytes(root) > 0L)
+    assert(TableInspect.files(spark, root).count() ===
+      SnapshotTable.read(spark, root).inputFiles.length.toLong)
     SnapshotTable.collectNdv(spark, root, Seq("id"))
     assert(SnapshotTable.tableNdv(spark, root).get("id").map(_.ndv)
       .exists(n => math.abs(n - 200L) <= 10L))
     assert(SnapshotTable.fastBounds(spark, root, "id")
       === Some((0L, 199L)))
+    // the stats backfill turned the metadata count on
+    assert(SnapshotTable.fastCountMeta(spark, root) === Some(200L))
+    countsAndReads()
   }
 
   test("NDV reaches the optimizer as attribute statistics") {
