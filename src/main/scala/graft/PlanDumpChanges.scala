@@ -43,7 +43,7 @@ object PlanDumpChanges {
     println(s"[plandump] wrote changes_cdf_$tag")
     spark.stop()
     // temp snapshot table cleaned up after the session releases it
-    // (mirrors ProfilePipeline — repeated dev runs must not leak disk)
+    // (repeated dev runs must not leak disk)
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(root).getParentFile)
   }

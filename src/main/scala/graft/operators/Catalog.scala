@@ -725,12 +725,11 @@ object Catalog {
         names.map { name =>
           val tr = tableRoot(root, name)
           val direct = referenced.getOrElse(name, Set.empty)
-          // delta-manifested versions keep their storage roots alive:
-          // reachability extends through each live version's partition
-          // manifest (targets are storage versions — one hop suffices)
-          val keep = direct ++
-            direct.flatMap(v => SnapshotTable.manifestEntries(tr, v).map(_._2)
-              ++ SnapshotTable.deleteEntries(tr, v))
+          // delta-manifested versions keep their storage roots and
+          // merge-on-read sidecars alive: reachability extends through
+          // each live version's record (targets are storage versions —
+          // one hop suffices)
+          val keep = direct.flatMap(SnapshotTable.reachableFrom(tr, _))
           val dead = SnapshotTable.versions(tr)
             .filter(v => !keep(v) && SnapshotTable.isCommitted(tr, v))
           dead.foreach { v =>

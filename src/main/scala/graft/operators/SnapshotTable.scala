@@ -19,10 +19,12 @@ import org.apache.spark.sql.types
   *
   * Every commit runs ONE protocol, owned by two helpers: [[stageNext]]
   * claims `v=N` (N = max on-disk version + 1), runs the entry point's
-  * write, records `_parent` and stamps `_committed`; [[publish]] reads
-  * the base, runs a staging half against it, writes the optional
-  * `_txn` stamp and moves `_latest`. Every `stage*` half is a
-  * [[stageNext]] body; every public commit is a [[publish]] over one.
+  * write and publishes the version's one commit record `v=N/_commit`
+  * ([[Commit]]: parent, manifest, schema, field ids, defaults — its
+  * existence is the committed stamp); [[publish]] reads the base,
+  * runs a staging half against it, writes the optional `_txn` stamp
+  * and moves `_latest`. Every `stage*` half is a [[stageNext]] body;
+  * every public commit is a [[publish]] over one.
   *
   * Scale: a snapshot write is one distributed parquet job; commit is a
   * single tiny marker rename. Time-travel reads are ordinary
@@ -38,11 +40,12 @@ object SnapshotTable {
     if (MetaIO.exists(m)) MetaIO.readString(m).trim.toLong else -1L
   }
 
-  /** All committed versions present on disk, ascending. */
+  /** Every version directory on disk (committed or a live claim),
+    * ascending; non-numeric `v=` names are not versions. */
   def versions(root: String): Seq[Long] =
     MetaIO.listNames(root)
       .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
+      .flatMap(_.stripPrefix("v=").toLongOption)
       .sorted
 
   private[graft] def moveMarker(root: String, version: Long): Unit = {
@@ -71,16 +74,15 @@ object SnapshotTable {
   /** Stage the next version against `base`: claim `v=N` (N = max
     * on-disk version + 1, NOT marker + 1 — after a rollback the
     * still-on-disk newer versions must never be overwritten in place),
-    * run `write(N)`, record `_parent` = `base` (ancestry for
-    * fast-forward checks) and stamp `_committed`. Nothing is
-    * published. Validation that must not leave an orphan claim runs
-    * BEFORE this call. */
-  private def stageNext(root: String, base: Long)(write: Long => Unit): Long = {
+    * run `write(N)` — which returns the version's record — and publish
+    * that record with `parent` = `base` (ancestry for fast-forward
+    * checks) as the LAST step. Nothing is published to readers.
+    * Validation that must not leave an orphan claim runs BEFORE this
+    * call. */
+  private def stageNext(root: String, base: Long)(write: Long => Commit): Long = {
     val next = nextVersion(root)
     claimVersion(root, next)
-    write(next)
-    MetaIO.writeString(MetaIO.join(root, s"v=$next", "_parent"), base.toString)
-    stampCommitted(root, next)
+    writeCommit(root, next, write(next).copy(parent = base))
     next
   }
 
@@ -125,7 +127,7 @@ object SnapshotTable {
     * [[Catalog.transact]] stages across MANY tables first and then
     * publishes them all with one catalog-level marker move (the
     * multi-table atomicity Nessie commits have and per-table markers
-    * cannot give). The `_parent` recorded is the version this staging
+    * cannot give). The recorded parent is the version this staging
     * logically succeeds (ancestry for fast-forward checks). */
   private[graft] def stageVersion(df: DataFrame, root: String,
                                   parent: Long = -1L,
@@ -134,19 +136,137 @@ object SnapshotTable {
     stageNext(root, parent) { next =>
       df.write.mode("overwrite").parquet(s"$root/v=$next")
       commitChecksAndStats(df.sparkSession, root, next, statsCols, bloomCols)
+      Commit()
     }
 
-  /** Mark a version directory's data write as complete. Written AFTER
-    * the parquet job and BEFORE the ref advance: a directory claimed by
-    * a writer that crashed mid-write never carries it, which is what
-    * [[sweepOrphans]] keys on (Iceberg gets the same signal from "is
-    * this file reachable from any snapshot manifest"). */
-  private def stampCommitted(root: String, version: Long): Unit =
-    MetaIO.writeString(MetaIO.join(root, s"v=$version", "_committed"), "")
+  // ──────────────── the commit record (`v=N/_commit`) ────────────────
+  //
+  // Everything a version knows about itself is ONE write-once file,
+  // published by [[stageNext]] after the version's data and sidecars
+  // (tmp write + no-replace rename; the arbiter decides on object
+  // stores). Its existence IS the committed stamp: a claim whose
+  // writer crashed carries none, which is what [[sweepOrphans]] keys
+  // on (Iceberg gets the same signal from "is this file reachable from
+  // any snapshot"), and a record is never partly visible. The grammar
+  // is the manifest's: one `dir sv` line per live (partition dir,
+  // storage version) entry — split on the LAST space, escaped dir
+  // names may carry spaces — plus `!`-prefixed records, which no
+  // partition dir name starts with:
+  //
+  //   !parent P            the version this one was staged against
+  //   !manifested          reads resolve through the entries (an
+  //                        emptied table has none)
+  //   !deletes D           position deletes at `v=D/_deletes/`
+  //   !eqdeletes D k1,k2   equality deletes at `v=D/_eqdeletes/`
+  //   !schema <json>       the table schema at this version
+  //   !last I              the field-id high-water mark
+  //   !field I<TAB>name    field id I's name at this version
+  //   !default I<TAB>sql   field id I's initial default
+  //
+  // A field a commit kind does not write stays absent (a plain
+  // [[commit]] records no schema), and every accessor below is a
+  // projection of one parse. Records are read per call, never cached:
+  // after GC a version number can be claimed again.
 
-  /** Is `version`'s data write complete? */
+  /** One version's commit record. `fields` is None for a version
+    * that records no field-id table (plain commits). */
+  private[graft] final case class Commit(
+      parent: Long = -1L,
+      manifested: Boolean = false,
+      entries: Seq[(String, Long)] = Vector.empty,
+      deletes: Seq[Long] = Vector.empty,
+      eqDeletes: Seq[(Long, Seq[String])] = Vector.empty,
+      schemaJson: Option[String] = None,
+      fields: Option[Seq[(Int, String)]] = None,
+      lastId: Int = 0,
+      defaults: Seq[(Int, String)] = Vector.empty) {
+    lazy val schema: Option[types.StructType] = schemaJson.map(
+      types.DataType.fromJson(_).asInstanceOf[types.StructType])
+
+    def withSchema(s: types.StructType): Commit = copy(schemaJson = Some(s.json))
+
+    /** Unapplied merge-on-read deletes: reads must resolve them. */
+    def hasDeletes: Boolean = deletes.nonEmpty || eqDeletes.nonEmpty
+
+    def render: String = (Seq(s"!parent $parent") ++
+      Option.when(manifested)("!manifested") ++
+      entries.distinct.sorted.map { case (p, v) => s"$p $v" } ++
+      deletes.distinct.sorted.map(d => s"!deletes $d") ++
+      eqDeletes.distinct.sortBy(_._1).map { case (d, ks) =>
+        s"!eqdeletes $d ${ks.mkString(",")}" } ++
+      schemaJson.map(j => s"!schema $j") ++
+      fields.toSeq.flatMap(fs => s"!last $lastId" +:
+        fs.map { case (id, n) => s"!field $id\t$n" }) ++
+      defaults.map { case (id, sql) => s"!default $id\t$sql" }
+    ).mkString("\n")
+  }
+
+  private def parseCommit(text: String): Commit = {
+    def idAnd(rest: String): (Int, String) = {
+      val i = rest.indexOf('\t')
+      rest.substring(0, i).toInt -> rest.substring(i + 1)
+    }
+    text.linesIterator.filter(_.nonEmpty).foldLeft(Commit()) { (c, line) =>
+      if (!line.startsWith("!")) {
+        val i = line.lastIndexOf(' ')
+        c.copy(entries = c.entries :+ (line.substring(0, i) ->
+          line.substring(i + 1).toLong))
+      } else {
+        val sp = line.indexOf(' ')
+        val rest = if (sp < 0) "" else line.substring(sp + 1)
+        (if (sp < 0) line else line.substring(0, sp)) match {
+          case "!parent" => c.copy(parent = rest.toLong)
+          case "!manifested" => c.copy(manifested = true)
+          case "!deletes" => c.copy(deletes = c.deletes :+ rest.toLong)
+          case "!eqdeletes" =>
+            val i = rest.indexOf(' ')
+            c.copy(eqDeletes = c.eqDeletes :+ (rest.substring(0, i).toLong ->
+              rest.substring(i + 1).split(",").toSeq.filter(_.nonEmpty)))
+          case "!schema" => c.copy(schemaJson = Some(rest))
+          case "!last" =>
+            c.copy(lastId = rest.toInt, fields = c.fields.orElse(Some(Vector.empty)))
+          case "!field" =>
+            c.copy(fields = Some(c.fields.getOrElse(Vector.empty) :+ idAnd(rest)))
+          case "!default" => c.copy(defaults = c.defaults :+ idAnd(rest))
+          case other => throw new IllegalStateException(
+            s"unknown commit record line '$other'")
+        }
+      }
+    }
+  }
+
+  private def commitPath(root: String, version: Long) =
+    MetaIO.join(root, s"v=$version", "_commit")
+
+  /** Publish `version`'s record (create-only). [[stageNext]] is the
+    * protocol's caller; tests adopting an external `v=N` directory
+    * stamp it with an empty plain record. */
+  private[graft] def writeCommit(root: String, version: Long,
+                                 record: Commit = Commit()): Unit =
+    MetaIO.publishExclusive(commitPath(root, version), record.render)
+
+  /** `version`'s record, or None when it has none (a live or crashed
+    * claim, an expired version, or a negative version). */
+  private def record(root: String, version: Long): Option[Commit] = {
+    val p = commitPath(root, version)
+    if (version < 0 || !MetaIO.exists(p)) None
+    else Some(parseCommit(MetaIO.readString(p)))
+  }
+
+  /** `version`'s record, or the empty one every accessor answers for a
+    * version without a record. */
+  private def commitOf(root: String, version: Long): Commit =
+    record(root, version).getOrElse(Commit())
+
+  /** Is `version` committed (its record published)? */
   def isCommitted(root: String, version: Long): Boolean =
-    MetaIO.exists(MetaIO.join(root, s"v=$version", "_committed"))
+    MetaIO.exists(commitPath(root, version))
+
+  /** When `version` was committed (epoch millis: its record's
+    * modification time), or None when it is not. */
+  def commitTime(root: String, version: Long): Option[Long] =
+    Option.when(isCommitted(root, version))(
+      MetaIO.mtimeMillis(commitPath(root, version)))
 
   /** Read the current snapshot (or a specific `version` — time
     * travel). Manifest-aware: a delta-committed version
@@ -159,10 +279,8 @@ object SnapshotTable {
   def read(spark: SparkSession, root: String, version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else latestVersion(root)
     require(v >= 0, s"no committed version at $root")
-    val dels = deleteEntries(root, v)
-    val eqs = eqDeleteEntries(root, v)
-    val df = scan(spark, root, v, withPos = dels.nonEmpty || eqs.nonEmpty)
-    resolveDeletes(spark, root, dels, eqs, df)
+    val c = commitOf(root, v)
+    resolveDeletes(spark, root, c, scan(spark, root, v, c, c.hasDeletes))
   }
 
   /** Reserved (file, position) column names carried by [[scan]] when a
@@ -180,16 +298,15 @@ object SnapshotTable {
     * era-projected — optionally carrying each row's (file, position)
     * identity from the parquet reader's `_metadata` column (needed to
     * resolve merge-on-read position deletes). */
-  private def scan(spark: SparkSession, root: String, v: Long,
+  private def scan(spark: SparkSession, root: String, v: Long, c: Commit,
                    withPos: Boolean): DataFrame = {
-    val m = manifestEntries(root, v)
-    if (m.isEmpty) {
+    if (c.entries.isEmpty) {
       // a MANIFESTED version with zero live entries — everything was
       // deleted (deleteWhere emptying every partition) or truncated:
       // an empty frame under the version's recorded schema, NOT a
       // doomed schema-inference over an empty directory
-      if (MetaIO.exists(manifestPath(root, v))) {
-        val schema = recordedSchema(root, v).getOrElse(
+      if (c.manifested) {
+        val schema = c.schema.getOrElse(
           throw new IllegalStateException(
             s"version $v at $root has an empty manifest and no " +
               "recorded schema"))
@@ -202,14 +319,14 @@ object SnapshotTable {
       }
       val base = spark.read.parquet(s"$root/v=$v")
       if (withPos) base.select(col("*") +: posCols: _*) else base
-    } else scanEntries(spark, root, v, m, withPos)
+    } else scanEntries(spark, root, c, c.entries, withPos)
   }
 
-  /** The manifested scan of version `v` RESTRICTED to `m` — the
-    * entry-set parameterization [[scan]] and [[appendedBetween]]
-    * share (era projection, per-spec grouping, v-collision fallback
-    * all apply to whatever subset is passed). */
-  private def scanEntries(spark: SparkSession, root: String, v: Long,
+  /** The manifested scan of the version recorded by `c`, RESTRICTED
+    * to `m` — the entry-set parameterization [[scan]] and
+    * [[appendedBetween]] share (era projection, per-spec grouping,
+    * v-collision fallback all apply to whatever subset is passed). */
+  private def scanEntries(spark: SparkSession, root: String, c: Commit,
                           m: Seq[(String, Long)],
                           withPos: Boolean): DataFrame = {
     {
@@ -218,7 +335,7 @@ object SnapshotTable {
       // era's PHYSICAL column names resolve to the current names by id
       // — a renamed column reads correctly from files written under its
       // old name, a dropped-then-readded name never resurrects old data
-      val eras = eraProjections(spark, root, v,
+      val eras = eraProjections(spark, root, c,
         m.map { case (part, sv) => (s"v=$sv/$part", sv) }, withPos)
       if (eras.isDefined) return eras.get
       // one scan per partition-spec ERA (usually one): directories
@@ -233,7 +350,7 @@ object SnapshotTable {
       // Iceberg rule): a union scan over storage versions written
       // before a column existed must still surface it (null-filled),
       // and planning must not read every footer at 100 TB file counts
-      val recSchema = recordedSchema(root, v)
+      val recSchema = c.schema
       // a DATA column literally named "v" collides with the storage
       // layer's `v=N` partition inference under a table-root basePath
       // (drop("v") would silently erase user data) — such tables scan
@@ -284,20 +401,23 @@ object SnapshotTable {
     applyEqDeleteFiles(spark, root, eqs, afterPos)
   }
 
-  /** [[resolvePositioned]] for readers: the identity columns dropped. */
-  private def resolveDeletes(spark: SparkSession, root: String,
-                             dels: Seq[Long],
-                             eqs: Seq[(Long, Seq[String])],
+  /** [[resolvePositioned]] of record `c`'s deletes for readers: the
+    * identity columns dropped. */
+  private def resolveDeletes(spark: SparkSession, root: String, c: Commit,
                              df: DataFrame): DataFrame =
-    if (dels.isEmpty && eqs.isEmpty) df
-    else resolvePositioned(spark, root, dels, eqs, df).drop(FileCol, PosCol)
+    if (!c.hasDeletes) df
+    else resolvePositioned(spark, root, c.deletes, c.eqDeletes, df)
+      .drop(FileCol, PosCol)
 
-  /** Version `v`'s live rows with their (file, position) identities. */
+  /** Version `v`'s live rows (record `c`) with their (file, position)
+    * identities; `withEqDeletes = false` resolves position deletes
+    * only. */
   private def livePositioned(spark: SparkSession, root: String, v: Long,
-                             dels: Seq[Long],
-                             eqs: Seq[(Long, Seq[String])]): DataFrame =
-    resolvePositioned(spark, root, dels, eqs,
-      scan(spark, root, v, withPos = true))
+                             c: Commit,
+                             withEqDeletes: Boolean = true): DataFrame =
+    resolvePositioned(spark, root, c.deletes,
+      if (withEqDeletes) c.eqDeletes else Seq.empty,
+      scan(spark, root, v, c, withPos = true))
 
   /** A row's storage version (the `v=M` its file lives under) — the
     * sequence number of the Iceberg equality-delete rule. */
@@ -350,62 +470,26 @@ object SnapshotTable {
                               dels: Seq[Long]): DataFrame =
     spark.read.parquet(dels.map(d => s"$root/v=$d/_deletes"): _*)
 
-  private def schemaPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_schema")
-
   /** The schema recorded when `version` was staged (manifested
-    * versions only; None for plain commits and pre-evolution tables). */
-  def recordedSchema(root: String, version: Long): Option[types.StructType] = {
-    val p = schemaPath(root, version)
-    if (!MetaIO.exists(p)) None
-    else Some(types.DataType.fromJson(MetaIO.readString(p))
-      .asInstanceOf[types.StructType])
-  }
+    * versions only; None for plain commits). */
+  def recordedSchema(root: String, version: Long): Option[types.StructType] =
+    commitOf(root, version).schema
 
   // ──────── field-id schema evolution (rename/drop as metadata) ────────
   //
   // Iceberg's rule: every column carries a STABLE field id; a rename or
   // drop is a metadata-only commit (zero data movement) and readers
-  // resolve each file era's physical names by id. `_fields` in a
-  // version dir maps id → the name current AT THAT VERSION; files of a
-  // storage era are projected onto the reading version's names through
-  // the shared ids. Versions written before field ids existed fall back
-  // to name-identity (documented: a drop-then-readd across that
-  // boundary could resurrect — impossible once `_fields` exists, since
-  // the re-added column gets a fresh id).
-
-  private def fieldsPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_fields")
+  // resolve each file era's physical names by id. A version's record
+  // maps id → the name current AT THAT VERSION (`!field` lines); files
+  // of a storage era are projected onto the reading version's names
+  // through the shared ids. Eras whose record has no field-id table
+  // (plain commits) fall back to name-identity (a drop-then-readd
+  // across that boundary could resurrect — impossible between eras
+  // that record ids, since the re-added column gets a fresh id).
 
   /** The field-id table of `version`: (id, name-at-that-version). */
-  def fieldIds(root: String, version: Long): Option[Seq[(Int, String)]] = {
-    val p = fieldsPath(root, version)
-    if (!MetaIO.exists(p)) None
-    else Some(MetaIO.readString(p).linesIterator
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
-        val i = l.indexOf('\t')
-        l.substring(0, i).toInt -> l.substring(i + 1)
-      }.toSeq)
-  }
-
-  /** The monotone id high-water mark (Iceberg's `last-column-id`): ids
-    * allocate strictly past it FOREVER, so a column dropped and later
-    * re-added under the same name can never reclaim the dropped id (and
-    * thus never resurrects old files' bytes). */
-  private def lastFieldId(root: String, version: Long): Int = {
-    val p = fieldsPath(root, version)
-    if (!MetaIO.exists(p)) return 0
-    val lines = MetaIO.readString(p).linesIterator.toSeq
-    lines.find(_.startsWith("#last\t"))
-      .map(_.stripPrefix("#last\t").toInt)
-      .getOrElse(fieldIds(root, version).map(_.map(_._1)).getOrElse(Seq(0)).max)
-  }
-
-  private def writeFields(root: String, version: Long,
-                          fields: Seq[(Int, String)], lastId: Int): Unit =
-    MetaIO.writeString(fieldsPath(root, version),
-      (s"#last\t$lastId" +: fields.map { case (id, n) => s"$id\t$n" })
-        .mkString("\n"))
+  def fieldIds(root: String, version: Long): Option[Seq[(Int, String)]] =
+    commitOf(root, version).fields
 
   // ──────── initial defaults (Iceberg v3 `initial-default`) ────────
   //
@@ -413,53 +497,31 @@ object SnapshotTable {
   // every file written before the column existed; files written after
   // the add carry real values (genuine NULLs stay NULL — the reader
   // distinguishes the eras by field id, which a blanket coalesce could
-  // not). Stored per version as fieldId → literal SQL, carried by
-  // every later commit like `_fields`; time travel to pre-add versions
-  // has no such column at all.
-
-  private def defaultsPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_defaults")
+  // not). Recorded per version as fieldId → literal SQL (`!default`
+  // lines), carried by every later record like the field ids; time
+  // travel to pre-add versions has no such column at all.
 
   /** `version`'s initial defaults: field id → default SQL literal. */
-  def columnDefaults(root: String, version: Long): Seq[(Int, String)] = {
-    val p = defaultsPath(root, version)
-    if (!MetaIO.exists(p)) Seq.empty
-    else MetaIO.readString(p).linesIterator.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('\t')
-      l.substring(0, i).toInt -> l.substring(i + 1)
-    }.toSeq
-  }
+  def columnDefaults(root: String, version: Long): Seq[(Int, String)] =
+    commitOf(root, version).defaults
 
-  /** Carry `base`'s defaults onto `next` (every commit that writes a
-    * field-id table must also carry these), minus a dropped field's
-    * entry, plus a freshly-added one. */
-  private def carryDefaults(root: String, base: Long, next: Long,
-                            drop: Option[Int] = None,
-                            add: Option[(Int, String)] = None): Unit = {
-    val carried = (if (base < 0) Seq.empty else columnDefaults(root, base))
-      .filterNot(d => drop.contains(d._1)) ++ add
-    if (carried.nonEmpty)
-      MetaIO.writeString(defaultsPath(root, next),
-        carried.map { case (id, sql) => s"$id\t$sql" }.mkString("\n"))
-  }
-
-  /** Ids for `schema`'s fields at a version whose base is `base`:
+  /** Ids for `schema`'s fields at a version whose base record is `b`:
     * names present in the base keep their ids (or their base-schema
-    * POSITION when the base predates field ids — the name-identity
+    * POSITION when the base records no field ids — the name-identity
     * fallback the reader applies to those eras), new names allocate
-    * past the base's id high-water mark. Returns (assignment, new high
-    * water). */
-  private def assignFieldIds(root: String, base: Long,
+    * past the base's id high-water mark (Iceberg's `last-column-id`:
+    * ids allocate strictly past it FOREVER, so a column dropped and
+    * later re-added under the same name can never reclaim the dropped
+    * id, and thus never resurrects old files' bytes). Returns
+    * (assignment, new high water). */
+  private def assignFieldIds(b: Commit,
       schema: types.StructType): (Seq[(Int, String)], Int) = {
     val baseIds: Map[String, Int] =
-      if (base < 0) Map.empty
-      else fieldIds(root, base).map(_.map(t => t._2 -> t._1).toMap)
-        .getOrElse(recordedSchema(root, base)
+      b.fields.map(_.map(t => t._2 -> t._1).toMap)
+        .getOrElse(b.schema
           .map(_.fieldNames.toSeq.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap)
           .getOrElse(Map.empty))
-    var nextId = math.max(
-      if (base < 0) 0 else lastFieldId(root, base),
-      (baseIds.values.toSeq :+ 0).max)
+    var nextId = math.max(b.lastId, (baseIds.values.toSeq :+ 0).max)
     val assigned = schema.fields.toSeq.map { f =>
       baseIds.get(f.name) match {
         case Some(id) => id -> f.name
@@ -467,6 +529,16 @@ object SnapshotTable {
       }
     }
     (assigned, nextId)
+  }
+
+  /** `b` with its field ids re-derived for `schema` ([[assignFieldIds]])
+    * — the carry every manifested version makes from its base record
+    * (defaults, and whatever the caller does not replace, ride
+    * along). */
+  private def withFieldIds(b: Commit, schema: types.StructType): Commit = {
+    val (fids, lastId) = assignFieldIds(b, schema)
+    b.withSchema(schema).copy(manifested = true, fields = Some(fids),
+      lastId = lastId)
   }
 
   /** RENAME a column as a METADATA-ONLY commit: the new version
@@ -558,14 +630,14 @@ object SnapshotTable {
         s"cannot $op '$name': CHECK constraint '$cn' ($ce) references " +
           "it — drop the constraint first")
     }
-    val m = manifestEntries(root, base)
-    require(m.nonEmpty,
+    val b = commitOf(root, base)
+    require(b.entries.nonEmpty,
       s"$op is metadata-only on manifested tables; plain snapshots " +
         "rewrite via commit()")
     // every spec era with LIVE directories is a directory layout —
     // including pre-evolution eras not yet migrated
     if (op != "add") locally {
-      val liveSpecs = manifestEntries(root, base)
+      val liveSpecs = b.entries
         .flatMap(e => partitionSpecAt(root, e._2)).toSet ++
         partitionSpec(root)
       // a transform spec's SOURCE column is equally a layout column —
@@ -575,8 +647,7 @@ object SnapshotTable {
         s"cannot $op partition column '$name' — a live directory " +
           "layout (current or unmigrated era) derives from it")
     }
-    val schema = recordedSchema(root, base)
-      .getOrElse(read(spark, root, base).schema)
+    val schema = b.schema.getOrElse(read(spark, root, base).schema)
     if (op == "add")
       require(!schema.fieldNames.contains(name),
         s"column '$name' already exists")
@@ -585,7 +656,7 @@ object SnapshotTable {
         s"no column '$name' in ${schema.fieldNames.mkString(", ")}")
     to.foreach(n => require(!schema.fieldNames.contains(n),
       s"column '$n' already exists"))
-    val (baseFields, baseLast) = assignFieldIds(root, base, schema)
+    val (baseFields, baseLast) = assignFieldIds(b, schema)
     val (newSchema, newFields, lastId) = op match {
       case "rename" =>
         (types.StructType(schema.fields.map(f =>
@@ -607,27 +678,23 @@ object SnapshotTable {
     // names; renaming/dropping one out from under it would break (or
     // silently skip) its resolution — fold first, evolve after (an ADD
     // cannot collide: the name provably isn't a recorded key)
-    if (op != "add") eqDeleteEntries(root, base).foreach { case (d, ks) =>
+    if (op != "add") b.eqDeletes.foreach { case (d, ks) =>
       require(!ks.contains(name),
         s"cannot $op '$name': it is a key of the unapplied equality " +
           s"delete at version $d — run applyDeletes first")
     }
-    stageNext(root, base) { next =>
-      // every entry inherited — zero data moved; unapplied MoR delete
-      // files ride along (dropping them would resurrect deleted rows)
-      writeManifest(root, next, m, deleteEntries(root, base),
-        eqDeleteEntries(root, base))
-      MetaIO.writeString(schemaPath(root, next), newSchema.json)
-      // the high-water mark survives a drop — that is the whole point
-      writeFields(root, next, newFields, lastId)
-      // initial defaults ride along: a drop releases its entry (the id
-      // never returns), an add-with-default records one under the
-      // fresh id, a rename keeps ids — and therefore defaults — untouched
-      carryDefaults(root, base, next,
-        drop = if (op == "drop") baseFields.find(_._2 == name).map(_._1)
-               else None,
-        add = if (op == "add") foldedDefault.map(d => lastId -> d) else None)
-    }
+    // every entry inherited — zero data moved; unapplied MoR delete
+    // files ride along (dropping them would resurrect deleted rows);
+    // the high-water mark survives a drop — that is the whole point;
+    // initial defaults ride along: a drop releases its entry (the id
+    // never returns), an add-with-default records one under the fresh
+    // id, a rename keeps ids — and therefore defaults — untouched
+    val dropped =
+      if (op == "drop") baseFields.find(_._2 == name).map(_._1) else None
+    stageNext(root, base)(_ => b.withSchema(newSchema).copy(
+      fields = Some(newFields), lastId = lastId,
+      defaults = b.defaults.filterNot(d => dropped.contains(d._1)) ++
+        foldedDefault.map(lastId -> _)))
   }
 
   /** Id-resolved manifested read: None when the reading version has no
@@ -644,16 +711,17 @@ object SnapshotTable {
     * an individual FILE on the [[readSkipping]] path (file pruning must
     * keep per-era name resolution, or a renamed column silently
     * null-fills from old-era files). */
-  private def eraProjections(spark: SparkSession, root: String, v: Long,
+  private def eraProjections(spark: SparkSession, root: String, c: Commit,
                              m: Seq[(String, Long)],
                              withPos: Boolean = false): Option[DataFrame] = {
-    val curFields = fieldIds(root, v).getOrElse(return None)
-    val curSchema = recordedSchema(root, v).getOrElse(return None)
+    val curFields = c.fields.getOrElse(return None)
+    val curSchema = c.schema.getOrElse(return None)
     val nameToId = curFields.map(t => t._2 -> t._1).toMap
     // physical name of each current field in era `sv` (None = absent)
     def projOf(sv: Long): Seq[Option[String]] = {
-      val eraIds = fieldIds(root, sv).map(_.toMap)
-      val eraNames = recordedSchema(root, sv).map(_.fieldNames.toSet)
+      val era = commitOf(root, sv)
+      val eraIds = era.fields.map(_.toMap)
+      val eraNames = era.schema.map(_.fieldNames.toSet)
       curSchema.fields.toSeq.map { f =>
         val phys = eraIds match {
           case Some(ids) => nameToId.get(f.name).flatMap(ids.get)
@@ -686,7 +754,7 @@ object SnapshotTable {
       // one was declared at add time (pre-add files read the default;
       // eras that HAVE the column read real values, NULLs included),
       // null otherwise
-      val defs = columnDefaults(root, v).toMap
+      val defs = c.defaults.toMap
       val projected = curSchema.fields.toSeq.zip(proj)
         .sortBy { case (f, _) => orderKey(f) }
         .map {
@@ -791,7 +859,8 @@ object SnapshotTable {
     require(to >= 0, s"no committed version at $root")
     if (fromVersion < 0) return read(spark, root, to)
     val fromEntries = manifestEntries(root, fromVersion)
-    val toEntries = manifestEntries(root, to)
+    val toC = commitOf(root, to)
+    val toEntries = toC.entries
     require(fromEntries.nonEmpty && toEntries.nonEmpty,
       "incremental read needs manifested versions on both ends")
     val dropped = fromEntries.toSet -- toEntries.toSet
@@ -806,11 +875,8 @@ object SnapshotTable {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    val dels = deleteEntries(root, to)
-    val eqs = eqDeleteEntries(root, to)
-    val df = scanEntries(spark, root, to, newEntries,
-      withPos = dels.nonEmpty || eqs.nonEmpty)
-    resolveDeletes(spark, root, dels, eqs, df)
+    resolveDeletes(spark, root, toC,
+      scanEntries(spark, root, toC, newEntries, toC.hasDeletes))
   }
 
   /** Expire old snapshots, keeping the current one, the newest
@@ -821,33 +887,37 @@ object SnapshotTable {
     * the versions removed.
     *
     * Only COMMITTED versions participate — a crashed claim without a
-    * `_committed` stamp must neither be "expired" here nor occupy a
+    * commit record must neither be "expired" here nor occupy a
     * retainLast slot that should protect a real snapshot; it is
     * [[sweepOrphans]]' to remove.
     *
     * Delta-aware: a retired version's directory survives while any
-    * LIVE manifest still references its partitions (structural sharing
-    * keeps storage roots alive — Iceberg's reachability rule at
-    * partition granularity); it is physically removed by a later call
-    * once nothing references it. Returns the versions actually
-    * removed. */
+    * LIVE record still references its partitions or delete sidecars
+    * (structural sharing keeps storage roots alive — Iceberg's
+    * reachability rule at partition granularity); it is physically
+    * removed by a later call once nothing references it. Returns the
+    * versions actually removed. */
   def expireSnapshots(root: String, retainLast: Int): Seq[Long] = {
     val current = latestVersion(root)
     val pinned = refs(root).values.toSet
     val retire = versions(root).filter(v => v < current && isCommitted(root, v))
       .sorted.dropRight(math.max(retainLast, 0))
       .filterNot(pinned).toSet
-    val reachable = versions(root).filterNot(retire).flatMap { v =>
-      val m = manifestEntries(root, v)
-      (if (m.nonEmpty) m.map(_._2) :+ v else Seq(v)) ++
-        deleteEntries(root, v) ++ // MoR sidecar versions stay reachable
-        eqDeleteEntries(root, v).map(_._1)
-    }.toSet
+    val reachable =
+      versions(root).filterNot(retire).flatMap(reachableFrom(root, _)).toSet
     val removed = retire.filterNot(reachable).toSeq.sorted
     removed.foreach { v =>
       MetaIO.delete(MetaIO.join(root, s"v=$v"), recursive = true)
     }
     removed
+  }
+
+  /** The version directories a read of `v` touches — its own, every
+    * storage version its entries name, and its merge-on-read sidecars'
+    * — which expiry must keep while `v` is live. */
+  private[graft] def reachableFrom(root: String, v: Long): Seq[Long] = {
+    val c = commitOf(root, v)
+    v +: (c.entries.map(_._2) ++ c.deletes ++ c.eqDeletes.map(_._1))
   }
 
   // ───────────────────────── named refs (Nessie analog) ─────────────────────
@@ -858,7 +928,7 @@ object SnapshotTable {
   //
   //   <root>/_refs/branch.<name>   one line: the version the branch heads
   //   <root>/_refs/tag.<name>      one line: the version the tag pins
-  //   <root>/v=N/_parent           one line: N's parent version (ancestry)
+  //   <root>/v=N/_commit           N's record; `!parent P` is its ancestry
   //
   // `_latest` IS the main branch (back-compat: every pre-refs table
   // already has it). Refs are re-pointed with the same tmp-file +
@@ -989,16 +1059,14 @@ object SnapshotTable {
     if (branch == MainBranch) moveMarker(root, version)
     else writeRef(root, "branch", branch, version)
 
-  /** `version`'s recorded parent, or -1 (root commit, or a version
-    * written by plain [[commit]] before ancestry tracking). */
-  def parentVersion(root: String, version: Long): Long = {
-    val p = MetaIO.join(root, s"v=$version", "_parent")
-    if (MetaIO.exists(p)) MetaIO.readString(p).trim.toLong else -1L
-  }
+  /** `version`'s recorded parent, or -1 (a root commit, or a version
+    * without a record). */
+  def parentVersion(root: String, version: Long): Long =
+    commitOf(root, version).parent
 
   /** Is `anc` an ancestor of (or equal to) `desc` by the recorded
-    * parent chain? The walk stops at the first commit with no recorded
-    * parent, so pre-refs linear history is conservatively NOT assumed. */
+    * parent chain? The walk stops at the first version with no
+    * recorded parent. */
   def isAncestor(root: String, anc: Long, desc: Long): Boolean = {
     var v = desc
     while (v >= 0) {
@@ -1056,26 +1124,23 @@ object SnapshotTable {
   // handful of date partitions. Delta commits fix the cost model the
   // way Iceberg/Delta do, one level coarser (partition-granular instead
   // of file-granular): version N's directory holds ONLY the rewritten
-  // partitions plus a `_manifest` mapping EVERY live partition to the
-  // version directory that physically stores it. Untouched partitions
-  // are inherited by reference — structural sharing, zero copies — so a
-  // commit's write cost is the batch's partitions, while readers of any
-  // version still get one unified partition-pruned scan. Time travel,
-  // refs, `_committed` stamping, and the marker protocol are unchanged;
-  // only expiry must honor manifest REACHABILITY (a version directory
-  // stays on disk while any live manifest references its partitions —
-  // see [[expireDeltaSnapshots]]).
+  // partitions, and its record's entries map EVERY live partition to
+  // the version directory that physically stores it. Untouched
+  // partitions are inherited by reference — structural sharing, zero
+  // copies — so a commit's write cost is the batch's partitions, while
+  // readers of any version still get one unified partition-pruned
+  // scan. Time travel, refs, and the marker protocol are unchanged;
+  // only expiry must honor entry REACHABILITY (a version directory
+  // stays on disk while any live record references its partitions —
+  // see [[expireSnapshots]]).
   //
-  //   v=0/_manifest   p=2024-01-01 -> v=0, p=2024-01-02 -> v=0
-  //   v=1/_manifest   p=2024-01-01 -> v=0, p=2024-01-02 -> v=1   (delta)
+  //   v=0/_commit   p=2024-01-01 -> v=0, p=2024-01-02 -> v=0
+  //   v=1/_commit   p=2024-01-01 -> v=0, p=2024-01-02 -> v=1   (delta)
   //
   // Reading v=1 scans v=0/p=2024-01-01 ∪ v=1/p=2024-01-02 as ONE
   // parquet relation (basePath = table root; the `v` layer is inferred
   // as a partition column and dropped), so predicate pushdown and
   // partition pruning work exactly as on a plain partitioned table.
-
-  private def manifestPath(root: String, version: Long) =
-    MetaIO.join(root, s"v=$version", "_manifest")
 
   private def specPath(root: String) = MetaIO.join(root, "_partition_spec")
 
@@ -1321,10 +1386,10 @@ object SnapshotTable {
   private def stageMigrateSpec(spark: SparkSession, root: String,
                                v: Long): Long = {
     val cur = partitionSpec(root).getOrElse(return v)
-    val foreign = foreignEraEntries(root, manifestEntries(root, v))
+    val c = commitOf(root, v)
+    val foreign = foreignEraEntries(root, c.entries)
     if (foreign.isEmpty) return v
-    val resolved = livePositioned(spark, root, v, deleteEntries(root, v),
-      eqDeleteEntries(root, v))
+    val resolved = livePositioned(spark, root, v, c)
     val foreignDirs = foreign.map { case (p, sv) => s"v=$sv/$p" }
     val dirOfRow = regexp_extract(col(FileCol), "^(v=\\d+/.+)/[^/]+$", 1)
     // a rewritten delta partition must hold its COMPLETE content: if a
@@ -1371,7 +1436,7 @@ object SnapshotTable {
   // CONSTRAINT` surface; `NOT NULL` is the constraint `c IS NOT
   // NULL`): every data-writing commit validates the rows it is about
   // to publish and REFUSES on violation — the claimed version dir
-  // never gets its `_committed` stamp, so nothing is published and
+  // never gets its commit record, so nothing is published and
   // [[sweepOrphans]] GCs the leftover. Validation reads back the
   // just-written files (one O(batch) scan; the input plan is never
   // re-computed) and uses SQL CHECK semantics: a row passes when the
@@ -1554,52 +1619,23 @@ object SnapshotTable {
     * [[commitAppend]] represents an append: the partition's content is
     * the union of every listed directory. Keys are the partition
     * directory names (`col=value`). */
-  def manifestEntries(root: String, version: Long): Seq[(String, Long)] = {
-    val p = manifestPath(root, version)
-    if (!MetaIO.exists(p)) return Seq.empty
-    MetaIO.readString(p).linesIterator.filter(_.nonEmpty)
-      // `!`-prefixed lines are non-data manifest records (currently
-      // `!deletes N` — merge-on-read delete files, [[deleteEntries]]);
-      // partition dir names never start with `!`
-      .filterNot(_.startsWith("!"))
-      .map { line =>
-        // split on the LAST space: escaped partition dir names could
-        // themselves carry spaces
-        val i = line.lastIndexOf(' ')
-        line.substring(0, i) -> line.substring(i + 1).toLong
-      }.toSeq.distinct
-  }
+  def manifestEntries(root: String, version: Long): Seq[(String, Long)] =
+    commitOf(root, version).entries
 
   /** Storage versions whose `v=N/_deletes/` parquet holds merge-on-read
     * position-delete rows applicable to this version's scan, in commit
     * order (empty for tables with no unapplied MoR deletes). */
-  def deleteEntries(root: String, version: Long): Seq[Long] = {
-    val p = manifestPath(root, version)
-    if (!MetaIO.exists(p)) return Seq.empty
-    MetaIO.readString(p).linesIterator
-      .filter(_.startsWith("!deletes "))
-      .map(_.stripPrefix("!deletes ").trim.toLong)
-      .toSeq.distinct.sorted
-  }
+  def deleteEntries(root: String, version: Long): Seq[Long] =
+    commitOf(root, version).deletes
 
   /** Storage versions carrying equality-delete sidecars
     * (`v=D/_eqdeletes/`) applicable to this version's scan, each with
     * the key columns its rows match on — empty for tables with no
-    * unapplied equality deletes. Manifest record:
+    * unapplied equality deletes. Record line:
     * `!eqdeletes D col1,col2`. */
   def eqDeleteEntries(root: String,
-                      version: Long): Seq[(Long, Seq[String])] = {
-    val p = manifestPath(root, version)
-    if (!MetaIO.exists(p)) return Seq.empty
-    MetaIO.readString(p).linesIterator
-      .filter(_.startsWith("!eqdeletes "))
-      .map { line =>
-        val rest = line.stripPrefix("!eqdeletes ").trim
-        val i = rest.indexOf(' ')
-        rest.substring(0, i).toLong ->
-          rest.substring(i + 1).split(",").toSeq.filter(_.nonEmpty)
-      }.toSeq.distinct.sortBy(_._1)
-  }
+                      version: Long): Seq[(Long, Seq[String])] =
+    commitOf(root, version).eqDeletes
 
   /** The NEWEST storage version per partition — the full mapping for
     * delta-committed versions (one entry per partition); for
@@ -1611,7 +1647,7 @@ object SnapshotTable {
 
   /** The (root-relative dir, storage version) pairs version `v`'s scan
     * reads: its manifest entries, or `v=N` itself for an unmanifested
-    * snapshot. Reads the manifest and nothing else. */
+    * snapshot. Reads the commit record and nothing else. */
   private def liveDirs(root: String, v: Long): Seq[(String, Long)] = {
     val entries = manifestEntries(root, v)
     if (entries.isEmpty) Seq(s"v=$v" -> v)
@@ -1638,17 +1674,6 @@ object SnapshotTable {
   /** The storage version of a root-relative data file (`v=M/...`). */
   private[graft] def svOf(file: String): Long =
     file.stripPrefix("v=").takeWhile(_.isDigit).toLong
-
-  private def writeManifest(root: String, version: Long,
-                            m: Seq[(String, Long)],
-                            deletes: Seq[Long] = Seq.empty,
-                            eqDeletes: Seq[(Long, Seq[String])] = Seq.empty)
-      : Unit =
-    MetaIO.writeString(manifestPath(root, version),
-      (m.distinct.sorted.map { case (p, v) => s"$p $v" } ++
-        deletes.distinct.sorted.map(d => s"!deletes $d") ++
-        eqDeletes.distinct.sortBy(_._1).map { case (d, ks) =>
-          s"!eqdeletes $d ${ks.mkString(",")}" }).mkString("\n"))
 
   /** Commit ONLY the partitions present in `slice`, inheriting every
     * other live partition from the current version by reference. The
@@ -1745,25 +1770,32 @@ object SnapshotTable {
 
   /** The newest batch id `writerId` has COMMITTED to this table, or
     * None — the replay-detection read of the idempotent-write
-    * protocol. Scans version stamps newest-first (metadata-sized: one
-    * tiny file per version, no data reads), considering only versions
-    * AT OR BELOW the published marker: a claim that crashed before its
-    * marker move and a version undone by [[rollback]] both sit above
-    * it, and a replayed batch must RE-commit in exactly those states.
-    * Note [[expireSnapshots]] can eventually remove old stamped
-    * versions, but a live writer's newest stamp rides the current
-    * version, which expiry always keeps. */
-  def lastTxnBatch(root: String, writerId: String): Option[Long] = {
-    val published = latestVersion(root)
-    versions(root).filter(_ <= published).sorted.reverse.iterator.flatMap { v =>
+    * protocol. Walks the [[publishedChain]] newest-first
+    * (metadata-sized: one record and one stamp per step, no data
+    * reads): a claim that crashed before its marker move and a version
+    * undone by [[rollback]] are off that chain — even once later
+    * commits land on top of the rollback — and a replayed batch must
+    * RE-commit in exactly those states. Note [[expireSnapshots]] can
+    * eventually remove old stamped versions (the walk stops there),
+    * but a live writer's newest stamp rides the current version, which
+    * expiry always keeps. */
+  def lastTxnBatch(root: String, writerId: String): Option[Long] =
+    publishedChain(root).flatMap { v =>
       val p = MetaIO.join(root, s"v=$v", "_txn")
-      if (!isCommitted(root, v) || !MetaIO.exists(p)) None
+      if (!MetaIO.exists(p)) None
       else MetaIO.readString(p).split("\n", 2) match {
         case Array(w, b) if w == writerId => Some(b.trim.toLong)
         case _ => None
       }
     }.nextOption()
-  }
+
+  /** The published version's ancestry, newest first: the `_latest`
+    * version, then each recorded parent (one record read per step),
+    * ending at a root commit or at a version without a record
+    * (expired). */
+  private[graft] def publishedChain(root: String): Iterator[Long] =
+    Iterator.unfold(latestVersion(root))(v =>
+      record(root, v).map(c => v -> c.parent))
 
   /** Whether a predicate Column is a pure function of `df`'s rows —
     * judged on the ANALYZED plan (the unresolved tree defaults every
@@ -1994,24 +2026,20 @@ object SnapshotTable {
   private[graft] def stageMorDelete(spark: SparkSession, root: String,
                                     predicate: Column, base: Long): Long = {
     require(base >= 0, s"no committed version at $root")
-    val dels = deleteEntries(root, base)
+    val b = commitOf(root, base)
     // rows already masked by an equality delete must not re-land as
     // position-delete rows (harmless but unbounded growth otherwise)
-    val live = livePositioned(spark, root, base, dels,
-      eqDeleteEntries(root, base))
+    val live = livePositioned(spark, root, base, b)
     val matches = live.filter(predicate)
       .select(col(FileCol), col(PosCol)).persist()
     try {
       if (matches.head(1).isEmpty) return -1L
-      val baseEntries = inheritedEntries(root, base,
-        partitionSpec(root).getOrElse("<partition>"))
+      val carried = carryMeta(spark, root, base, b)
       stageNext(root, base) { next =>
         // one sidecar file: the delete set is small by the operation's
         // nature (a production writer would target file sizes instead)
         matches.coalesce(1).write.parquet(s"$root/v=$next/_deletes")
-        writeManifest(root, next, baseEntries, dels :+ next,
-          eqDeleteEntries(root, base))
-        carryVersionMeta(spark, root, base, next)
+        carried.copy(deletes = b.deletes :+ next)
       }
     } finally matches.unpersist()
   }
@@ -2040,14 +2068,12 @@ object SnapshotTable {
     require(base >= 0, s"no committed version at $root")
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
-    val baseEntries = inheritedEntries(root, base,
-      partitionSpec(root).getOrElse("<partition>"))
+    val b = commitOf(root, base)
+    val carried = carryMeta(spark, root, base, b)
     stageNext(root, base) { next =>
       keys.distinct().coalesce(1)
         .write.parquet(s"$root/v=$next/_eqdeletes")
-      writeManifest(root, next, baseEntries, deleteEntries(root, base),
-        eqDeleteEntries(root, base) :+ (next -> keyCols))
-      carryVersionMeta(spark, root, base, next)
+      carried.copy(eqDeletes = b.eqDeletes :+ (next -> keyCols))
     }
   }
 
@@ -2124,8 +2150,8 @@ object SnapshotTable {
     * pattern applied to MoR debt). */
   def morDebt(root: String, version: Long = -1L): Int = {
     val v = if (version >= 0) version else latestVersion(root)
-    if (v < 0) 0
-    else deleteEntries(root, v).size + eqDeleteEntries(root, v).size
+    val c = commitOf(root, v)
+    c.deletes.size + c.eqDeletes.size
   }
 
   /** Fold accumulated merge-on-read delete files back into clean data
@@ -2153,14 +2179,14 @@ object SnapshotTable {
   private[graft] def stageApplyDeletes(spark: SparkSession, root: String,
                                        base: Long): Long = {
     val v = base
-    val dels = deleteEntries(root, v)
-    val eqs = eqDeleteEntries(root, v)
-    if (dels.isEmpty && eqs.isEmpty) return v
+    val b = commitOf(root, v)
+    if (!b.hasDeletes) return v
+    val dels = b.deletes
+    val eqs = b.eqDeletes
     val partCol = partitionSpec(root).getOrElse(
       throw new IllegalStateException(
         s"table at $root has MoR deletes but no partition spec"))
-    val entries = manifestEntries(root, v)
-    val liveRel = entries.map { case (p, sv) => s"v=$sv/$p" }.toSet
+    val liveRel = b.entries.map { case (p, sv) => s"v=$sv/$p" }.toSet
     // partition dirs whose live files still carry delete rows
     val dirOf = "^(v=\\d+/(.+))/[^/]+$".r
     def toParts(files: Seq[String]): Seq[String] = files.flatMap {
@@ -2178,7 +2204,7 @@ object SnapshotTable {
     val eqTouched: Seq[String] =
       if (eqs.isEmpty) Seq.empty
       else {
-        val afterPos = livePositioned(spark, root, v, dels, Seq.empty)
+        val afterPos = livePositioned(spark, root, v, b, withEqDeletes = false)
         val dead = eqDeleteGroups(spark, root, eqs)
           .map { case (keyCols, delDf) =>
             val cur = withSeq(afterPos)
@@ -2193,13 +2219,11 @@ object SnapshotTable {
       // every delete row references a vanished file (or masks nothing
       // live): metadata-only commit that drops the now-dead
       // `!deletes` / `!eqdeletes` references
-      stageNext(root, v) { n =>
-        writeManifest(root, n, entries)
-        carryVersionMeta(spark, root, v, n)
-      }
+      stageNext(root, v)(_ => carryMeta(spark, root, v, b)
+        .copy(deletes = Seq.empty, eqDeletes = Seq.empty))
     else {
       val partOf = regexp_extract(col(FileCol), "^v=\\d+/(.+)/[^/]+$", 1)
-      val survivors = livePositioned(spark, root, v, dels, eqs)
+      val survivors = livePositioned(spark, root, v, b)
         .filter(partOf.isin(touched: _*))
         .drop(FileCol, PosCol)
       stageManifested(survivors, root, partCol, v, append = false,
@@ -2207,18 +2231,17 @@ object SnapshotTable {
     }
   }
 
-  /** Record `next`'s schema + field-id metadata as inherited unchanged
-    * from `base` (metadata-only and delete-only commits move no data
-    * but must stay era-resolvable). */
-  private def carryVersionMeta(spark: SparkSession, root: String,
-                               base: Long, next: Long): Unit = {
-    val schema = recordedSchema(root, base)
-      .getOrElse(scan(spark, root, base, withPos = false).schema)
-    MetaIO.writeString(schemaPath(root, next), schema.json)
-    val (fids, lastId) = assignFieldIds(root, base, schema)
-    writeFields(root, next, fids, lastId)
-    carryDefaults(root, base, next)
-  }
+  /** `base`'s record `b` carried onto a version that moves no data
+    * (metadata-only and delete-only commits): the inherited entries,
+    * deletes and defaults, and the schema — inferred once when
+    * unrecorded — with field ids re-derived, so the version stays
+    * era-resolvable. */
+  private def carryMeta(spark: SparkSession, root: String, base: Long,
+                        b: Commit): Commit =
+    withFieldIds(b, b.schema.getOrElse(
+      scan(spark, root, base, b, withPos = false).schema))
+      .copy(entries = inheritedEntries(root, base, b,
+        partitionSpec(root).getOrElse("<partition>")))
 
   /** Partition-pruned MERGE-upsert commit — the Delta `MERGE INTO`
     * with dynamic partition pruning: only the partitions the source
@@ -2242,27 +2265,23 @@ object SnapshotTable {
   }
 
   /** The (partition dir, storage version) entries a manifested commit
-    * inherits from `base`: its manifest if it has one, else the plain
-    * partitioned commit's own directories. */
-  private def inheritedEntries(root: String, base: Long,
+    * inherits from `base` (record `b`): its entries if it is
+    * manifested — an emptied base (everything deleted/truncated)
+    * legitimately inherits nothing — else the plain partitioned
+    * commit's own directories. */
+  private def inheritedEntries(root: String, base: Long, b: Commit,
                                partitionCol: String): Seq[(String, Long)] =
     if (base < 0) Seq.empty
+    else if (b.manifested) b.entries
     else {
-      val m = manifestEntries(root, base)
-      if (m.nonEmpty) m
-      // an emptied-but-manifested base (everything deleted/truncated)
-      // legitimately inherits nothing
-      else if (MetaIO.exists(manifestPath(root, base))) Seq.empty
-      else {
-        // a plain partitioned commit works as the inherited base; an
-        // UNpartitioned one cannot (no partition dirs to reference —
-        // inheriting nothing would silently drop its rows)
-        val dirs = listPartitionDirs(root, base)
-        require(dirs.nonEmpty,
-          s"version $base at $root has no $partitionCol=... partition " +
-            "directories; commitDelta needs a partitioned (or empty) base")
-        dirs.map(_ -> base)
-      }
+      // a plain partitioned commit works as the inherited base; an
+      // UNpartitioned one cannot (no partition dirs to reference —
+      // inheriting nothing would silently drop its rows)
+      val dirs = listPartitionDirs(root, base)
+      require(dirs.nonEmpty,
+        s"version $base at $root has no $partitionCol=... partition " +
+          "directories; commitDelta needs a partitioned (or empty) base")
+      dirs.map(_ -> base)
     }
 
   private def stageManifested(slice: DataFrame, root: String,
@@ -2278,7 +2297,8 @@ object SnapshotTable {
       : Long = {
     require(eqDeleteKeys.isEmpty || eqDeleteFrame.isEmpty,
       "eqDeleteKeys and eqDeleteFrame are exclusive (one sidecar per commit)")
-    val baseEntries = inheritedEntries(root, base, partitionCol)
+    val b = commitOf(root, base)
+    val baseEntries = inheritedEntries(root, base, b, partitionCol)
     // validate the spec BEFORE claiming a version dir: a mismatch must
     // fail clean, not leave an orphan claim behind
     MetaIO.mkdirs(MetaIO.join(root))
@@ -2365,16 +2385,12 @@ object SnapshotTable {
       // carried entries still mask deleted rows in every INHERITED file;
       // entries whose files were rewritten anti-join nothing (no-op).
       // [[applyDeletes]] is the fold that rewrites and drops them.
-      val carried =
-        if (dropDeletes || base < 0) Seq.empty else deleteEntries(root, base)
-      // carried equality deletes stay correct across a delta rewrite for
+      // Carried equality deletes stay correct across a delta rewrite for
       // free: rewritten files land at storage version `next` >= every
       // carried delete version, so the strict sequence rule never
       // re-masks rows the rewrite already resolved, while inherited
       // files stay masked
-      val carriedEq =
-        if (dropDeletes || base < 0) Seq.empty
-        else eqDeleteEntries(root, base)
+      val carried = if (dropDeletes) Commit() else b
       // an upsert commit lands its batch's key set as an equality-delete
       // sidecar IN THIS version: older twins die, the batch survives
       val ownEq = eqDeleteKeys.toSeq.map { ks =>
@@ -2393,8 +2409,6 @@ object SnapshotTable {
           .write.parquet(s"$root/v=$next/_eqdeletes")
         next -> keys.columns.toSeq
       }
-      writeManifest(root, next, kept ++ touched.map(_ -> next), carried,
-        carriedEq ++ ownEq)
       // record the evolved table schema: base columns keep their TYPE
       // (an append/delta may ADD columns but never silently flip an
       // existing column's type — the Iceberg evolution rule), new slice
@@ -2402,22 +2416,19 @@ object SnapshotTable {
       // written before they existed
       val baseSchema: Option[types.StructType] =
         if (base < 0 || baseEntries.isEmpty) None
-        else recordedSchema(root, base)
-          .orElse(Some(read(slice.sparkSession, root, base).schema))
+        else b.schema.orElse(Some(read(slice.sparkSession, root, base).schema))
       val evolved = baseSchema match {
         case None => slice.schema
         case Some(bs) => types.StructType(bs.fields ++
           slice.schema.fields.filterNot(f => bs.fieldNames.contains(f.name)))
       }
-      MetaIO.writeString(schemaPath(root, next), evolved.json)
       // stable field ids ride every manifested commit: base names keep
       // their ids, new columns allocate past the id high-water mark
-      // (rename/drop readers resolve physical names through these)
-      locally {
-        val (fids, lastId) = assignFieldIds(root, base, evolved)
-        writeFields(root, next, fids, lastId)
-        carryDefaults(root, base, next)
-      }
+      // (rename/drop readers resolve physical names through these);
+      // the base's defaults ride along
+      withFieldIds(b, evolved).copy(
+        entries = kept ++ touched.map(_ -> next),
+        deletes = carried.deletes, eqDeletes = carried.eqDeletes ++ ownEq)
     }
   }
 
@@ -2774,8 +2785,7 @@ object SnapshotTable {
                          version: Long, files: Seq[String])
       : Option[Seq[(Any, Any)]] = {
     if (files.isEmpty) return None
-    if (deleteEntries(root, version).nonEmpty ||
-        eqDeleteEntries(root, version).nonEmpty) return None
+    if (commitOf(root, version).hasDeletes) return None
     val want = files.toSet
     val stats = files.map(svOf).distinct.sorted
       .flatMap(fileStats(spark, root, _))
@@ -3439,9 +3449,7 @@ object SnapshotTable {
                 version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else latestVersion(root)
     require(v >= 0, s"no committed version at $root")
-    if (minRows <= 0 || deleteEntries(root, v).nonEmpty ||
-        eqDeleteEntries(root, v).nonEmpty)
-      return read(spark, root, v)
+    if (minRows <= 0 || commitOf(root, v).hasDeletes) return read(spark, root, v)
     val (candidates, counted) = countedFiles(spark, root, v)
     val known = candidates.filter(counted.contains)
       .sortBy(f => (-counted(f), f))
@@ -3765,8 +3773,7 @@ object SnapshotTable {
                               filterSql: Option[String] = None)
       : Option[Seq[String]] = {
     if (n <= 0) return None
-    if (deleteEntries(root, version).nonEmpty ||
-        eqDeleteEntries(root, version).nonEmpty) return None
+    if (commitOf(root, version).hasDeletes) return None
     // under a pushed filter the caller hands the skipping survivors —
     // the prefix search runs over exactly the files the scan would read
     val candidates: Set[String] =
@@ -3928,20 +3935,18 @@ object SnapshotTable {
     // basePath-rooted union so partition columns resolve; the storage
     // `v` layer is inferred as a partition and dropped — and unapplied
     // MoR delete files mask their rows here exactly as in [[read]]
-    val dels = deleteEntries(root, v)
-    val eqs = eqDeleteEntries(root, v)
+    val c = commitOf(root, v)
     // one scan per spec era (see [[scan]]): mixed dir layouts cannot
     // share a partition-discovery pass; a data column named "v"
     // collides with the storage layer and scans per storage version
-    val recSchema = recordedSchema(root, v)
+    val recSchema = c.schema
     val vCollision = recSchema.exists(_.fieldNames.contains("v"))
     // field-id evolution: old-era files must resolve physical names by
     // id (a renamed column read under the current name null-fills) —
     // the same era projection [[scan]] applies, over kept FILES
-    val eras = eraProjections(spark, root, v,
-      kept.map(f => (f, svOf(f))), withPos = dels.nonEmpty || eqs.nonEmpty)
-    if (eras.isDefined)
-      return filtered(resolveDeletes(spark, root, dels, eqs, eras.get))
+    val eras = eraProjections(spark, root, c,
+      kept.map(f => (f, svOf(f))), withPos = c.hasDeletes)
+    if (eras.isDefined) return filtered(resolveDeletes(spark, root, c, eras.get))
     val keptGroups: Seq[(Option[String], Seq[String])] =
       if (!vCollision)
         kept.groupBy(f => partitionSpecAt(root, svOf(f)))
@@ -3959,14 +3964,10 @@ object SnapshotTable {
       def hide(df: DataFrame): DataFrame = hidden.foldLeft(df)(_.drop(_))
       val base = reader.option("basePath", bp)
         .parquet(fs.map(f => s"$root/$f"): _*)
-      val b2 =
-        if (dels.nonEmpty || eqs.nonEmpty)
-          base.select(col("*") +: posCols: _*)
-        else base
+      val b2 = if (c.hasDeletes) base.select(col("*") +: posCols: _*) else base
       hide(if (!vCollision) b2.drop("v") else b2)
     }
-    filtered(resolveDeletes(spark, root, dels, eqs,
-      scans.reduce(_.unionByName(_))))
+    filtered(resolveDeletes(spark, root, c, scans.reduce(_.unionByName(_))))
   }
 
   private def ndvColsPath(root: String) = MetaIO.join(root, "_ndvcols")
@@ -4139,15 +4140,11 @@ object SnapshotTable {
     * between [[claimVersion]] and commit — the `remove_orphan_files`
     * analog of the reference's maintenance DAG
     * (`iceberg_maintenance.py:1-117`). A directory is an orphan iff it
-    * carries no `_committed` stamp (the data write never finished), no
-    * ref or marker points at it, and it is older than `graceMs`
-    * (protecting a commit legitimately in flight right now — the same
-    * `older_than` guard Iceberg's procedure takes). Returns the
-    * versions removed.
-    *
-    * Note: versions created before `_committed` stamping existed are
-    * indistinguishable from orphans; on such a table, stamp them first
-    * or keep them ref-pinned. */
+    * carries no commit record (its staging never finished — data,
+    * sidecars or a `._commit.tmp-*` leftover may sit there), no ref or
+    * marker points at it, and it is older than `graceMs` (protecting a
+    * commit legitimately in flight right now — the same `older_than`
+    * guard Iceberg's procedure takes). Returns the versions removed. */
   def sweepOrphans(root: String, graceMs: Long = 3600000L): Seq[Long] = {
     val now = System.currentTimeMillis()
     val referenced = refs(root).values.toSet + latestVersion(root)

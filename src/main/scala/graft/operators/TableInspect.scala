@@ -117,7 +117,7 @@ object TableInspect {
   }
 
   /** The commit ancestry of `version` (default: current) walked
-    * oldest-first through the recorded `_parent` chain — the Iceberg
+    * oldest-first through the recorded parent chain — the Iceberg
     * `t$history` analog (is_current_ancestor is always true here by
     * construction; rolled-back-from versions simply aren't on the
     * walked chain). */

@@ -137,28 +137,21 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     * at or before the instant. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val root = requireTable(ident)
-    val cutoff = timestampMicros / 1000L // commit stamps are millis
-    // clamp to the PUBLISHED marker: staging writes `_committed` before
-    // the marker move and rollback() only moves the marker, so versions
-    // above it are rolled-back or staged-but-never-published states —
-    // timestamp travel must never resolve into them (same rule as
-    // lastTxnBatch's published-chain walk)
-    val published = SnapshotTable.latestVersion(root)
-    val committedAtOrBefore = listVersions(root).filter { v =>
-      val marker = MetaIO.join(root, s"v=$v", "_committed")
-      v <= published && MetaIO.exists(marker) &&
-        MetaIO.mtimeMillis(marker) <= cutoff
-    }
-    require(committedAtOrBefore.nonEmpty,
+    val cutoff = timestampMicros / 1000L // commit times are millis
+    // walk the PUBLISHED chain (the marker's version, then its recorded
+    // parents — the same walk lastTxnBatch makes): rollback() only
+    // moves the marker, so rolled-back and staged-but-never-published
+    // versions are off it, also once later commits land on top of the
+    // rollback — timestamp travel must never resolve into them. Commit
+    // times grow along the chain, so the first at or before the cutoff
+    // is the newest.
+    val version = SnapshotTable.publishedChain(root)
+      .find(SnapshotTable.commitTime(root, _).exists(_ <= cutoff))
+    require(version.nonEmpty,
       s"no version of ${ident.name} committed at or before " +
         s"timestamp $timestampMicros")
-    loadAt(ident, committedAtOrBefore.max)
+    loadAt(ident, version.get)
   }
-
-  private def listVersions(root: String): Seq[Long] =
-    MetaIO.listNames(root)
-      .filter(_.startsWith("v="))
-      .flatMap(_.stripPrefix("v=").toLongOption)
 
   private def requireTable(ident: Identifier): String = {
     val root = rootOf(ident)

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.SnapshotTable
 
 /** The commit protocol, checked over EVERY public commit entry point
-  * (table-driven): the returned version records `_parent` = the base
-  * the commit read and carries `_committed`, the `_latest` marker
+  * (table-driven): the returned version holds ONE commit record
+  * (`_commit`, plus `_txn` on the idempotent-writer paths) naming the
+  * base the commit read as its parent, the `_latest` marker
   * moves exactly once and lands on the returned version, the
   * idempotent-writer variants make [[SnapshotTable.lastTxnBatch]]
   * answer their batch, and a DML statement matching nothing returns
@@ -52,6 +53,16 @@ class CommitProtocolSpec extends GraftSuite {
       }
       (result, moves)
     } finally ws.close()
+  }
+
+  /** `v=N`'s protocol files are its one record — plus the `_txn`
+    * stamp iff `txn` — and none of the per-file layout it replaced. */
+  private def assertOneRecord(root: String, v: Long, txn: Boolean): Unit = {
+    val names = graft.operators.MetaIO.listNames(s"$root/v=$v").toSet
+    assert(names.contains("_commit"), names)
+    assert(names.contains("_txn") === txn, names)
+    assert((names & Set("_parent", "_committed", "_manifest", "_schema",
+      "_fields", "_defaults")).isEmpty, names)
   }
 
   /** One entry point: `prep` readies the seeded table, `run` commits. */
@@ -103,6 +114,7 @@ class CommitProtocolSpec extends GraftSuite {
       assert(v > base)
       assert(SnapshotTable.parentVersion(root, v) === base)
       assert(SnapshotTable.isCommitted(root, v))
+      assertOneRecord(root, v, txn = e.txn.isDefined)
       assert(SnapshotTable.versions(root) === before :+ v)
       assert(SnapshotTable.latestVersion(root) === v)
       assert(moves === 1, s"${e.name} moved _latest $moves times")
@@ -120,6 +132,7 @@ class CommitProtocolSpec extends GraftSuite {
       markerMoves(root)(SnapshotTable.commitToBranch(batch, root, "dev"))
     assert(SnapshotTable.parentVersion(root, v) === main)
     assert(SnapshotTable.isCommitted(root, v))
+    assertOneRecord(root, v, txn = false)
     assert(SnapshotTable.branchVersion(root, "dev") === v)
     assert(SnapshotTable.latestVersion(root) === main)
     assert(moves === 0)

@@ -70,6 +70,15 @@ class GraftSqlCatalogSpec extends GraftSuite {
     assert(spark.sql(
       s"SELECT count(*) FROM gtest.db.tt TIMESTAMP AS OF '$now'")
       .first.getLong(0) === 2)
+    // a later commit lands on top of the rollback (v2, parent v0): the
+    // undone v1 now sits below the marker but stays unresolvable
+    Thread.sleep(10)
+    spark.sql("INSERT INTO gtest.db.tt VALUES ('d', 4)")
+    assert(SnapshotTable.parentVersion(root, 2L) === 0L)
+    assert(spark.sql(
+      s"SELECT count(*) FROM gtest.db.tt TIMESTAMP AS OF '$now'")
+      .first.getLong(0) === 2)
+    assert(spark.sql("SELECT count(*) FROM gtest.db.tt").first.getLong(0) === 3)
   }
 
   test("ALTER RENAME COLUMN is metadata-only; filtered (skipping) reads era-project") {

@@ -483,5 +483,13 @@ class GraftStreamingSpec extends GraftSuite {
     // has to re-commit to be visible again
     SnapshotTable.rollback(root, 0L)
     assert(SnapshotTable.lastTxnBatch(root, "w1") === Some(0L))
+    // ...also once another writer commits on top of the rollback: the
+    // undone v1 now sits below the marker but is off the published chain
+    assert(SnapshotTable.commitAppendTxn(Seq(("c", 3L, "d1")).toDF("k", "n",
+      "day"), root, "day", "w2", 0L) === 2L)
+    assert(SnapshotTable.parentVersion(root, 2L) === 0L)
+    assert(SnapshotTable.read(spark, root).count() === 2L)
+    assert(SnapshotTable.lastTxnBatch(root, "w1") === Some(0L))
+    assert(SnapshotTable.lastTxnBatch(root, "w2") === Some(0L))
   }
 }

@@ -29,12 +29,25 @@ class MaintenanceSpec extends GraftSuite {
     // source) but is not committed
     assert(SnapshotTable.versions(root) === Seq(0L, 1L, 2L))
     assert(!SnapshotTable.isCommitted(root, 2L))
+    // another dies between its record's tmp write and the rename: data,
+    // a `_stats` sidecar and the tmp record, but no record
+    SnapshotTable.claimVersion(root, 3L)
+    Files.writeString(Paths.get(root, "v=3", "part-0.parquet"), "junk")
+    Files.createDirectories(Paths.get(root, "v=3", "_stats"))
+    Files.writeString(Paths.get(root, "v=3", "._commit.tmp-crashed"),
+      "!parent 1\n!manifested\npart=x 3")
+    assert(!SnapshotTable.isCommitted(root, 3L))
+    assert(SnapshotTable.parentVersion(root, 3L) === -1L)
+    assert(SnapshotTable.manifestEntries(root, 3L).isEmpty)
+    assert(SnapshotTable.latestVersion(root) === 1L)
+    assert(SnapshotTable.read(spark, root).count() === 100)
 
     // inside the grace window nothing moves
     assert(SnapshotTable.sweepOrphans(root, graceMs = 3600000L) === Seq.empty)
-    // past it, exactly the crashed claim goes
-    assert(SnapshotTable.sweepOrphans(root, graceMs = 0L) === Seq(2L))
+    // past it, exactly the crashed claims go
+    assert(SnapshotTable.sweepOrphans(root, graceMs = 0L) === Seq(2L, 3L))
     assert(!Files.exists(Paths.get(root, "v=2")))
+    assert(!Files.exists(Paths.get(root, "v=3")))
     assert(SnapshotTable.versions(root) === Seq(0L, 1L))
     // committed versions are stamped and never swept
     assert(SnapshotTable.isCommitted(root, 0L) && SnapshotTable.isCommitted(root, 1L))

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -90,6 +90,19 @@ class UpsertStreamSpec extends GraftSuite {
     assert(Catalog.read(spark, cat, "state", c1.get - 1)
       .select("k").collect().map(_.getString(0)).toSet
       === Set("a", "b", "c"))
+    // catalog GC keeps every equality-delete sidecar the live version
+    // reads — also the delete-only version's, whose directory holds
+    // nothing else, once a later batch lands on top of it
+    GovernedStream.commitCdcBatch(spark, cat, "state", "k", Seq("k"),
+      "src", 3L, Seq(("e", 50.0, "y")).toDF("k", "v", "p"),
+      spark.emptyDataFrame.select())
+    val root = Catalog.tableRoot(cat, "state")
+    val eqVersions = SnapshotTable.eqDeleteEntries(root,
+      Catalog.tableVersions(cat)("state")).map(_._1)
+    Catalog.expireCommits(cat, retainLast = 0, graceMs = 0L)
+    eqVersions.foreach(d =>
+      assert(Files.exists(Paths.get(root, s"v=$d", "_eqdeletes")), s"v=$d"))
+    assert(state() === Map("b" -> 21.0, "c" -> 30.0, "e" -> 50.0))
   }
 
   test("writeLatestGoverned maintains the per-product latest row exactly once") {

@@ -78,7 +78,6 @@ class NdvStatsSpec extends GraftSuite {
   }
 
   test("coverage checks descend into partitioned flat snapshots") {
-    import graft.operators.MetaIO
     // an adopted external table: partition subdirs under v=0, no
     // manifest — the flat listing used to see zero data files here,
     // silently disabling fastBounds and table NDV while collectNdv
@@ -86,7 +85,7 @@ class NdvStatsSpec extends GraftSuite {
     val root = Files.createTempDirectory("graft-ndv-flat").toString + "/t"
     (0 until 200).map(i => (i.toLong, s"g${i % 4}")).toDF("id", "p")
       .write.partitionBy("p").parquet(s"$root/v=0")
-    MetaIO.writeString(MetaIO.join(root, "v=0", "_committed"), "")
+    SnapshotTable.writeCommit(root, 0L)
     SnapshotTable.moveMarker(root, 0L)
     assert(SnapshotTable.read(spark, root).count() === 200L)
     // every live-file path sees the partitioned files: counts, the
