@@ -70,19 +70,24 @@ private[graft] object FooterStats {
 
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** All data files under a version directory (skips `_`/`.`-prefixed
-    * sidecars and temp dirs at every level). */
-  def dataFiles(versionDir: String): Seq[String] = {
-    if (!MetaIO.isDir(versionDir)) return Seq.empty
+  /** All data files under a version or entry directory, descending
+    * into partition subdirectories. Hidden names are skipped at every
+    * level by Spark's own rule: `.`-prefixed, and `_`-prefixed unless
+    * the name holds a `=` — so a `_x=v` partition directory is data,
+    * while sidecars (`_stats`, `_deletes`), markers and temp dirs are
+    * not. */
+  def dataFiles(dir: String): Seq[String] = {
+    if (!MetaIO.isDir(dir)) return Seq.empty
     def walk(d: String): Seq[String] =
       MetaIO.list(d).flatMap { p =>
         val n = MetaIO.name(p)
-        if (n.startsWith("_") || n.startsWith(".")) Seq.empty
+        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
+          Seq.empty
         else if (MetaIO.isDir(p)) walk(p)
         else if (n.endsWith(".parquet")) Seq(p)
         else Seq.empty
       }
-    walk(versionDir)
+    walk(dir)
   }
 
   /** Footer-read every data file under `versionDir` and report rows +

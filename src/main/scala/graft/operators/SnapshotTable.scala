@@ -3,6 +3,8 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types
 
@@ -135,9 +137,26 @@ object SnapshotTable {
                                   bloomCols: Seq[String] = Seq.empty): Long =
     stageNext(root, parent) { next =>
       df.write.mode("overwrite").parquet(s"$root/v=$next")
+      // the footer schema, made nullable, is what read-time inference
+      // returns: recording it lets every read of this version plan
+      // without a footer-sampling job
       commitChecksAndStats(df.sparkSession, root, next, statsCols, bloomCols)
-      Commit()
+        .map(_.schema).find(_.nonEmpty)
+        .fold(Commit())(sc => Commit().withSchema(asNullable(sc)))
     }
+
+  /** `st` with every field, array element and map value nullable —
+    * the shape Spark's file sources give a data schema on read. */
+  private def asNullable(st: types.StructType): types.StructType = {
+    def of(dt: types.DataType): types.DataType = dt match {
+      case s: types.StructType => asNullable(s)
+      case a: types.ArrayType => types.ArrayType(of(a.elementType), true)
+      case m: types.MapType => types.MapType(of(m.keyType), of(m.valueType), true)
+      case other => other
+    }
+    types.StructType(st.fields.map(f =>
+      f.copy(dataType = of(f.dataType), nullable = true)))
+  }
 
   // ──────────────── the commit record (`v=N/_commit`) ────────────────
   //
@@ -158,15 +177,17 @@ object SnapshotTable {
   //                        emptied table has none)
   //   !deletes D           position deletes at `v=D/_deletes/`
   //   !eqdeletes D k1,k2   equality deletes at `v=D/_eqdeletes/`
-  //   !schema <json>       the table schema at this version
+  //   !schema <json>       the table schema at this version (every
+  //                        commit kind records it; only an adopted
+  //                        external `v=N` lacks it and infers)
   //   !last I              the field-id high-water mark
   //   !field I<TAB>name    field id I's name at this version
   //   !default I<TAB>sql   field id I's initial default
   //
   // A field a commit kind does not write stays absent (a plain
-  // [[commit]] records no schema), and every accessor below is a
-  // projection of one parse. Records are read per call, never cached:
-  // after GC a version number can be claimed again.
+  // [[commit]] records no manifest and no field ids), and every
+  // accessor below is a projection of one parse. Records are read per
+  // call, never cached: after GC a version number can be claimed again.
 
   /** One version's commit record. `fields` is None for a version
     * that records no field-id table (plain commits). */
@@ -317,10 +338,17 @@ object SnapshotTable {
           Seq(lit(null).cast("string").as(FileCol),
             lit(null).cast("long").as(PosCol)): _*)
       }
-      val base = spark.read.parquet(s"$root/v=$v")
+      val base = reader(spark, c).parquet(s"$root/v=$v")
       if (withPos) base.select(col("*") +: posCols: _*) else base
     } else scanEntries(spark, root, c, c.entries, withPos)
   }
+
+  /** A parquet reader under record `c`'s schema — version METADATA,
+    * not file-footer sampling (the Iceberg rule: planning reads no
+    * footer and runs no inference job); a version without a recorded
+    * schema infers. */
+  private def reader(spark: SparkSession, c: Commit) =
+    c.schema.fold(spark.read)(spark.read.schema(_))
 
   /** The manifested scan of the version recorded by `c`, RESTRICTED
     * to `m` — the entry-set parameterization [[scan]] and
@@ -364,18 +392,16 @@ object SnapshotTable {
         val hidden = specOpt.toSeq.flatMap(parseSpecs)
           .filterNot(_.isIdentity).map(_.field)
         def hide(df: DataFrame): DataFrame = hidden.foldLeft(df)(_.drop(_))
-        def reader = recSchema.map(spark.read.schema(_))
-          .getOrElse(spark.read)
         if (!vCollision) {
           val dirs = entries.map { case (part, sv) => s"$root/v=$sv/$part" }
-          val base = reader.option("basePath", root).parquet(dirs: _*)
+          val base = reader(spark, c).option("basePath", root).parquet(dirs: _*)
           val b2 =
             if (withPos) base.select(col("*") +: posCols: _*) else base
           Seq(hide(b2.drop("v")))
         } else entries.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (sv, es) =>
             val dirs = es.map { case (part, _) => s"$root/v=$sv/$part" }
-            val base = reader.option("basePath", s"$root/v=$sv")
+            val base = reader(spark, c).option("basePath", s"$root/v=$sv")
               .parquet(dirs: _*)
             hide(if (withPos) base.select(col("*") +: posCols: _*) else base)
           }
@@ -470,8 +496,8 @@ object SnapshotTable {
                               dels: Seq[Long]): DataFrame =
     spark.read.parquet(dels.map(d => s"$root/v=$d/_deletes"): _*)
 
-  /** The schema recorded when `version` was staged (manifested
-    * versions only; None for plain commits). */
+  /** The schema recorded when `version` was staged (every commit kind
+    * records one; None for a version adopted without a record). */
   def recordedSchema(root: String, version: Long): Option[types.StructType] =
     commitOf(root, version).schema
 
@@ -723,11 +749,11 @@ object SnapshotTable {
       val eraIds = era.fields.map(_.toMap)
       val eraNames = era.schema.map(_.fieldNames.toSet)
       curSchema.fields.toSeq.map { f =>
-        val phys = eraIds match {
+        eraIds match {
           case Some(ids) => nameToId.get(f.name).flatMap(ids.get)
+            .filter(p => eraNames.forall(_.contains(p)))
           case None => Some(f.name) // pre-field-id era: name identity
         }
-        phys.filter(p => eraNames.forall(_.contains(p)))
       }
     }
     val identity = curSchema.fieldNames.toSeq.map(Option(_))
@@ -2454,16 +2480,22 @@ object SnapshotTable {
   // The manifest's per-file metadata — Iceberg's manifest min/max
   // stats, bloom filters and Puffin NDV sketches — lives in three
   // sidecar kinds ([[Sidecar]]) under one contract:
-  // - layout: `v=N/_<kind>/`, a tiny parquet holding one row per data
-  //   file of storage version N, keyed by the root-relative `_file`
-  //   (underscore-prefixed, so data scans never see it);
+  // - layout: `v=N/_<kind>`, one row per data file of storage version
+  //   N, keyed by the root-relative `_file` (underscore-prefixed, so
+  //   data scans never see it);
+  // - each kind owns its storage: `_stats` is a small text file in the
+  //   commit record's line grammar, written and parsed on the driver
+  //   (no Spark job either way — its frame is local); `_blooms` and
+  //   `_ndv` are tiny parquet dirs (their frames scan data anyway);
   // - a commit writes its sidecars straight into its own, still
   //   unpublished `v=N` ([[commitChecksAndStats]]);
   // - a backfill (the `collect*` ANALYZE family, [[backfill]]) writes
-  //   the existing plus the requested columns to a tmp dir, then swaps
-  //   it in with an exclusive move ([[writeSidecar]]);
+  //   the existing plus the requested columns to a tmp name, then
+  //   swaps it in with an exclusive move ([[writeSidecar]]);
   // - coverage is the union over the storage versions the read
   //   references ([[coverageOf]]).
+  // Stats are their own file, not lines of `_commit`: the record is
+  // write-once, while a backfill rewrites a published version's stats.
   // Sidecars only ever refute or answer from metadata: a file without
   // one is kept by every pruning path and makes every metadata-answer
   // path decline — an IO cost, never an answer change.
@@ -2479,16 +2511,19 @@ object SnapshotTable {
     * files, sharing ONE parquet-FOOTER pass: CHECK constraints
     * (bounds-proven where possible), the `_stats` sidecar (`__rows`
     * always — [[fastCount]]'s metadata count — plus min/max for
-    * `statsCols`), bloom sidecars, and sketches for the declared
-    * auto-NDV columns ([[setNdvColumns]]: one column-pruned scan of the
-    * new files, the O(batch) tax it opts into). Footers are what the
-    * write job's tasks just produced, so the common path reads ZERO
-    * data bytes after the write itself; only footer-unusable columns
-    * (INT96 timestamps, FP NaN semantics — see [[FooterStats]]) or
-    * unprovable constraints fall back to one column-pruned scan. */
+    * `statsCols`; written on the driver, no job), bloom sidecars, and
+    * sketches for the declared auto-NDV columns ([[setNdvColumns]]:
+    * one column-pruned scan of the new files, the O(batch) tax it opts
+    * into). Footers are what the write job's tasks just produced, so
+    * the common path reads ZERO data bytes and runs ZERO jobs after
+    * the write itself; only footer-unusable columns (INT96 timestamps,
+    * FP NaN semantics — see [[FooterStats]]) or unprovable constraints
+    * fall back to one column-pruned scan. Returns the footer pass (its
+    * Spark schema is what the version records). */
   private def commitChecksAndStats(spark: SparkSession, root: String,
                                    version: Long, statsCols: Seq[String],
-                                   bloomCols: Seq[String]): Unit = {
+                                   bloomCols: Seq[String])
+      : Seq[FooterStats.FileStat] = {
     // constraints read + proofs parsed ONCE per commit (the footer
     // pass and the validation share them)
     val cs = constraints(root)
@@ -2509,21 +2544,38 @@ object SnapshotTable {
     if (autoNdv.nonEmpty && footer.nonEmpty)
       writeSidecar(root, version, Ndv,
         Ndv.frame(spark, root, version, autoNdv))
+    footer
   }
 
-  /** One sidecar kind: its `v=N/` directory, the columns a recorded
-    * sidecar covers, its frame builder over storage version `sv`'s
-    * files (None: nothing to record), and the memo caches a backfill
-    * of it invalidates. */
+  /** One sidecar kind: its `v=N/` name, its storage (`load` the
+    * sidecar at a path, `store` a frame to one — parquet unless the
+    * kind says otherwise), the columns a recorded sidecar covers, its
+    * frame builder over storage version `sv`'s files (None: nothing to
+    * record), and the memo caches a backfill of it invalidates. */
   private sealed abstract class Sidecar(val dir: String) {
     def covered(sidecar: DataFrame): Seq[String]
     def frame(spark: SparkSession, root: String, sv: Long,
               cols: Seq[String]): Option[DataFrame]
+    def load(spark: SparkSession, path: String): DataFrame =
+      spark.read.parquet(path)
+    def store(f: DataFrame, out: String): Unit =
+      f.coalesce(1).write.mode("overwrite").parquet(out)
     def clearCaches(): Unit = ()
   }
 
   /** `__rows` plus typed `c__min`/`c__max` per column, footer-lifted
-    * ([[completeStats]]): manifest data skipping and metadata counts. */
+    * ([[completeStats]]): manifest data skipping and metadata counts.
+    *
+    * Stored as TEXT in the commit record's line grammar: one
+    * `!column name<TAB>type-json` record per frame column, then one
+    * line per data file with its values TAB-separated. Values are
+    * Catalyst INTERNAL values — date days, timestamp micros, decimal
+    * `unscaled:scale`, base64 binary, Java float/double text (NaN,
+    * ±Infinity and -0.0 included), escaped strings (`\\`, `\t`,
+    * `\n`, `\r`) — so no session time zone touches a bound and every
+    * bound round-trips exactly; `\N` is null. A column of any other
+    * type records no bounds (uncovered: pruning keeps its files,
+    * metadata answers decline). */
   private case object Stats extends Sidecar("_stats") {
     def covered(st: DataFrame): Seq[String] = suffixed(st, "__min")
     def frame(spark: SparkSession, root: String, sv: Long,
@@ -2534,6 +2586,114 @@ object SnapshotTable {
       fastBoundsCache.clear()
       fastRangesCache.clear()
     }
+
+    override def load(spark: SparkSession, path: String): DataFrame =
+      loadAll(spark, Seq(path))
+
+    /** The stats files at `paths` as ONE local frame (it collects on
+      * the driver, no job), columns unioned by name, absent ones null —
+      * what a `unionByName` of their frames answers, without the job a
+      * union plan collects with. A column typed differently across
+      * files falls back to that union (its type widening). */
+    def loadAll(spark: SparkSession, paths: Seq[String]): DataFrame = {
+      val parsed = paths.map(p => parse(MetaIO.readString(p)))
+      val fields = parsed.flatMap(_._1.fields).distinct
+      if (fields.map(_.name).distinct.size < fields.size)
+        parsed.map { case (sc, rows) => spark.createDataFrame(rows.asJava, sc) }
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+      else spark.createDataFrame(parsed.flatMap { case (sc, rows) =>
+        rows.map(r => org.apache.spark.sql.Row.fromSeq(fields.map { f =>
+          val i = sc.fieldNames.indexOf(f.name)
+          if (i < 0) null else r.get(i)
+        }))
+      }.asJava, types.StructType(fields))
+    }
+
+    // the frames stored here are local (footer-lifted) unless a
+    // fallback scan built them
+    override def store(f: DataFrame, out: String): Unit = {
+      val keep = f.schema.fields.toSeq.zipWithIndex
+        .filter { case (fl, _) => encodable(fl.dataType) }
+      val rows = f.collect().toSeq
+      MetaIO.writeString(out, (keep.map { case (fl, _) =>
+        s"!column ${escape(fl.name)}\t${escape(fl.dataType.json)}" } ++
+        rows.map(r => keep.map { case (fl, i) =>
+          encode(r.get(i)) }.mkString("\t"))).mkString("\n"))
+    }
+
+    private def parse(text: String)
+        : (types.StructType, Seq[org.apache.spark.sql.Row]) = {
+      val (heads, body) = text.split("\n").toSeq.filter(_.nonEmpty)
+        .partition(_.startsWith("!"))
+      val schema = types.StructType(heads.map { l =>
+        require(l.startsWith("!column "), s"unknown stats record line '$l'")
+        val Array(n, t) = l.stripPrefix("!column ").split("\t", -1)
+        types.StructField(unescape(n), types.DataType.fromJson(unescape(t)))
+      })
+      (schema, body.map(l => org.apache.spark.sql.Row.fromSeq(
+        l.split("\t", -1).toSeq.zip(schema.fields)
+          .map { case (v, fl) => decode(v, fl.dataType) })))
+    }
+
+    private def encodable(dt: types.DataType): Boolean = dt match {
+      case types.ByteType | types.ShortType | types.IntegerType |
+           types.LongType | types.FloatType | types.DoubleType |
+           types.BooleanType | types.StringType | types.BinaryType |
+           types.DateType | types.TimestampType |
+           types.TimestampNTZType | _: types.DecimalType => true
+      case _ => false
+    }
+
+    private def encode(v: Any): String = v match {
+      case null => "\\N"
+      case d: java.math.BigDecimal => s"${d.unscaledValue}:${d.scale}"
+      case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
+      // dates → days, timestamps → micros, strings → their text
+      case _ => escape(CatalystTypeConverters.convertToCatalyst(v).toString)
+    }
+
+    // java.time values: the local frame's converters take them exactly,
+    // with no calendar rebase or session zone in between
+    private def decode(s: String, dt: types.DataType): Any =
+      if (s == "\\N") null
+      else dt match {
+        case types.ByteType => s.toByte
+        case types.ShortType => s.toShort
+        case types.IntegerType => s.toInt
+        case types.LongType => s.toLong
+        case types.FloatType => s.toFloat
+        case types.DoubleType => s.toDouble
+        case types.BooleanType => s.toBoolean
+        case types.StringType => unescape(s)
+        case types.BinaryType => java.util.Base64.getDecoder.decode(s)
+        case types.DateType => java.time.LocalDate.ofEpochDay(s.toLong)
+        case types.TimestampType => DateTimeUtils.microsToInstant(s.toLong)
+        case types.TimestampNTZType =>
+          DateTimeUtils.microsToLocalDateTime(s.toLong)
+        case _: types.DecimalType =>
+          val i = s.indexOf(':')
+          new java.math.BigDecimal(new java.math.BigInteger(s.substring(0, i)),
+            s.substring(i + 1).toInt)
+        case other => throw new IllegalStateException(
+          s"unexpected stats column type $other")
+      }
+
+    private def escape(s: String): String = s.flatMap {
+      case '\\' => "\\\\"
+      case '\t' => "\\t"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case c => c.toString
+    }
+
+    private def unescape(s: String): String =
+      "(?s)\\\\(.)".r.replaceAllIn(s, m => scala.util.matching.Regex
+        .quoteReplacement(m.group(1) match {
+          case "t" => "\t"
+          case "n" => "\n"
+          case "r" => "\r"
+          case c => c
+        }))
   }
 
   /** (`_file`, `column`, `bits`) rows — point-lookup skipping
@@ -2576,13 +2736,12 @@ object SnapshotTable {
   /** Storage version `sv`'s `kind` sidecar (None when it has none). */
   private def readSidecar(spark: SparkSession, root: String, sv: Long,
                           kind: Sidecar): Option[DataFrame] =
-    if (MetaIO.exists(sidecarPath(root, sv, kind)))
-      Some(spark.read.parquet(sidecarPath(root, sv, kind)))
-    else None
+    Option.when(MetaIO.exists(sidecarPath(root, sv, kind)))(
+      kind.load(spark, sidecarPath(root, sv, kind)))
 
   /** Write `frame`, if any, as `sv`'s `kind` sidecar; true when written.
     * A commit writes straight into its unpublished `v=N`. With `swap`
-    * (a backfill of a published version) the frame goes to a tmp dir,
+    * (a backfill of a published version) the frame goes to a tmp name,
     * the old sidecar is dropped, then the exclusive move lands the new
     * one (on object stores an arbiter-decided copy + delete: racing
     * recomputes lose loudly instead of interleaving files); a reader
@@ -2594,7 +2753,7 @@ object SnapshotTable {
       val target = sidecarPath(root, sv, kind)
       val out = if (!swap) target else MetaIO.join(root, s"v=$sv",
         s".${kind.dir.stripPrefix("_")}.new-${java.util.UUID.randomUUID()}")
-      f.coalesce(1).write.mode("overwrite").parquet(out)
+      kind.store(f, out)
       if (swap) {
         MetaIO.delete(target, recursive = true)
         MetaIO.moveTree(out, target)
@@ -2738,10 +2897,20 @@ object SnapshotTable {
   }
 
   /** The recorded per-file bounds of a storage version (empty frame
-    * columns differ by table; None when the version carries none). */
+    * columns differ by table; None when the version carries none) — a
+    * local frame: it collects without a job. */
   def fileStats(spark: SparkSession, root: String,
                 version: Long): Option[DataFrame] =
     readSidecar(spark, root, version, Stats)
+
+  /** The stats of storage versions `svs` as ONE local frame (what a
+    * `unionByName` of their [[fileStats]] answers, collected without
+    * a job); None when none of them carries stats. */
+  private[graft] def fileStatsOf(spark: SparkSession, root: String,
+                                 svs: Seq[Long]): Option[DataFrame] = {
+    val paths = svs.map(sidecarPath(root, _, Stats)).filter(MetaIO.exists)
+    Option.when(paths.nonEmpty)(Stats.loadAll(spark, paths))
+  }
 
   /** Columns with recorded min/max bounds in ANY storage version
     * `version` references — the `stats.columns` inspection property.
@@ -3392,8 +3561,7 @@ object SnapshotTable {
     val candidates = liveFiles(root, v)
     val statVersions = storageVersions(root, v)
     val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
-    val stats = statVersions.flatMap(fileStats(spark, root, _))
-      .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
+    val stats = fileStatsOf(spark, root, statVersions)
     val boundsRefuted: Set[String] = stats match {
       case None => Set.empty
       case Some(st) =>
@@ -3954,7 +4122,6 @@ object SnapshotTable {
       else kept.groupBy(f => Option(svOf(f).toString))
         .toSeq.sortBy(_._1.getOrElse(""))
     val scans = keptGroups.map { case (key, fs) =>
-      val reader = recSchema.map(spark.read.schema(_)).getOrElse(spark.read)
       val bp = if (!vCollision) root else s"$root/v=${key.get}"
       // hidden partitioning: drop this group's derived directory fields
       val spec = if (!vCollision) key
@@ -3962,7 +4129,7 @@ object SnapshotTable {
       val hidden = spec.toSeq.flatMap(parseSpecs)
         .filterNot(_.isIdentity).map(_.field)
       def hide(df: DataFrame): DataFrame = hidden.foldLeft(df)(_.drop(_))
-      val base = reader.option("basePath", bp)
+      val base = reader(spark, c).option("basePath", bp)
         .parquet(fs.map(f => s"$root/$f"): _*)
       val b2 = if (c.hasDeletes) base.select(col("*") +: posCols: _*) else base
       hide(if (!vCollision) b2.drop("v") else b2)

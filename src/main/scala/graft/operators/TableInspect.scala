@@ -73,9 +73,7 @@ object TableInspect {
       "size_bytes")
     // stats sidecars are keyed by the same root-relative path
     val statVersions = rows.map(_._3).distinct.sorted
-    val stats = statVersions
-      .flatMap(SnapshotTable.fileStats(spark, root, _))
-      .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
+    val stats = SnapshotTable.fileStatsOf(spark, root, statVersions)
     val withStats = stats match {
       case None => base
       case Some(st) =>

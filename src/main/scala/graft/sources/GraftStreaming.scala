@@ -122,7 +122,7 @@ private[sources] class GraftSource(root: String, metadataPath: String,
         if (cur.isEmpty) Seq(s"$root/v=$v") // flat snapshot
         else (cur.toSet -- prev).toSeq.sorted
           .map { case (leaf, sv) => s"$root/v=$sv/$leaf" }
-      val files = dirs.flatMap(GraftStreaming.dataFiles)
+      val files = dirs.flatMap(graft.operators.FooterStats.dataFiles)
       (files.size.toLong, files.map(graft.operators.MetaIO.size).sum)
     })
 
@@ -394,7 +394,7 @@ private[sources] class GraftGovernedSource(cat: String, table: String,
           if (cur.isEmpty) Seq(s"$tr/v=$toV")
           else (cur.toSet -- prev).toSeq.sorted
             .map { case (leaf, sv) => s"$tr/v=$sv/$leaf" }
-        val files = dirs.flatMap(GraftStreaming.dataFiles)
+        val files = dirs.flatMap(graft.operators.FooterStats.dataFiles)
         (files.size.toLong, files.map(graft.operators.MetaIO.size).sum)
       }
     })
@@ -536,21 +536,6 @@ private[sources] class GraftGovernedSink(cat: String, table: String,
 }
 
 private[sources] object GraftStreaming {
-
-  /** Every DATA file under an entry/version dir, descending into
-    * partition subdirectories (a partitioned flat snapshot keeps its
-    * parquet under `part=.../`), skipping `_`/`.`-prefixed sidecars
-    * and hidden names at every level — the file/byte inventory the
-    * admission caps (maxFilesPerTrigger/maxBytesPerTrigger) count. */
-  private[sources] def dataFiles(d: String): Seq[String] =
-    graft.operators.MetaIO.list(d)
-      .filterNot { p =>
-        val n = graft.operators.MetaIO.name(p)
-        n.startsWith("_") || n.startsWith(".")
-      }
-      .flatMap { p =>
-        if (graft.operators.MetaIO.isDir(p)) dataFiles(p) else Seq(p)
-      }
 
   private[sources] def cdcSchema(base: StructType): StructType =
     base.add("_change_type", org.apache.spark.sql.types.StringType,

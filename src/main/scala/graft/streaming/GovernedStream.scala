@@ -37,12 +37,39 @@ object GovernedStream {
 
   /** The highest batch id committed for `sourceId`, or -1. */
   def lastBatchId(spark: SparkSession, catalogRoot: String,
-                  sourceId: String, commit: Long = -1L): Long = {
-    val vs = Catalog.tableVersions(catalogRoot, commit)
-    if (!vs.contains(StateTable)) return -1L
-    Catalog.read(spark, catalogRoot, StateTable, commit)
-      .filter(col("source_id") === sourceId)
-      .select("batch_id").collect().headOption.map(_.getLong(0)).getOrElse(-1L)
+                  sourceId: String, commit: Long = -1L): Long =
+    batchOf(streamState(spark, catalogRoot, commit,
+      Catalog.tableVersions(catalogRoot, commit)), sourceId)
+
+  /** Every source's (source_id, batch_id) row at catalog commit
+    * `commit`, whose table versions are `tables` — ONE collect per
+    * commit attempt. INVARIANT: `_stream_state` stays O(‖sources‖)
+    * forever — exactly one row per source_id (each commit rewrites the
+    * whole tiny table via coalesce(1)), so this driver-side collect is
+    * bounded by the source count, never by batches or data. */
+  private def streamState(spark: SparkSession, catalogRoot: String,
+                          commit: Long, tables: Map[String, Long])
+      : Seq[(String, Long)] =
+    if (!tables.contains(StateTable)) Seq.empty
+    else Catalog.read(spark, catalogRoot, StateTable, commit)
+      .select("source_id", "batch_id").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  private def batchOf(state: Seq[(String, Long)], sourceId: String): Long =
+    state.collectFirst { case (`sourceId`, b) => b }.getOrElse(-1L)
+
+  /** Stage `_stream_state` with `sourceId` advanced to `batchId`;
+    * other sources' rows carry over. */
+  private def stageState(spark: SparkSession, catalogRoot: String,
+                         tables: Map[String, Long],
+                         state: Seq[(String, Long)], sourceId: String,
+                         batchId: Long): Long = {
+    import spark.implicits._
+    SnapshotTable.stageVersion(
+      (state.filterNot(_._1 == sourceId) :+ (sourceId -> batchId))
+        .toDF("source_id", "batch_id").coalesce(1),
+      Catalog.tableRoot(catalogRoot, StateTable),
+      tables.getOrElse(StateTable, -1L))
   }
 
   /** Transactionally commit one micro-batch: append `bronzeBatch` to
@@ -62,7 +89,8 @@ object GovernedStream {
     while (true) {
       val base = Catalog.latestCommit(catalogRoot)
       val prev = Catalog.tableVersions(catalogRoot, base)
-      if (lastBatchId(spark, catalogRoot, sourceId, base) >= batchId)
+      val state = streamState(spark, catalogRoot, base, prev)
+      if (batchOf(state, sourceId) >= batchId)
         return None // replayed batch: its data is already published
       if (bronzeBatch.isEmpty) return None
 
@@ -75,22 +103,8 @@ object GovernedStream {
         val vB = SnapshotTable.stageAppend(bronzeBatch,
           Catalog.tableRoot(catalogRoot, table), partitionCol,
           prev.getOrElse(table, -1L))
-        // other sources' rows carry over; this source's row advances.
-        // INVARIANT: _stream_state stays O(‖sources‖) forever — exactly
-        // one row per source_id (each commit rewrites the whole tiny
-        // table via coalesce(1)), so this per-batch driver-side collect
-        // is bounded by the source count, never by batches or data
-        val others =
-          if (!prev.contains(StateTable)) Seq.empty
-          else Catalog.read(spark, catalogRoot, StateTable, base)
-            .filter(col("source_id") =!= sourceId)
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        import spark.implicits._
-        val state = (others :+ (sourceId, batchId))
-          .toDF("source_id", "batch_id").coalesce(1)
-        val vS = SnapshotTable.stageVersion(state,
-          Catalog.tableRoot(catalogRoot, StateTable),
-          prev.getOrElse(StateTable, -1L))
+        val vS = stageState(spark, catalogRoot, prev, state, sourceId,
+          batchId)
         return Some(Catalog.commitStaged(catalogRoot,
           Map(table -> vB, StateTable -> vS), base))
       } catch {
@@ -132,24 +146,16 @@ object GovernedStream {
     while (true) {
       val base = Catalog.latestCommit(catalogRoot)
       val prev = Catalog.tableVersions(catalogRoot, base)
-      if (lastBatchId(spark, catalogRoot, sourceId, base) >= batchId)
+      val state = streamState(spark, catalogRoot, base, prev)
+      if (batchOf(state, sourceId) >= batchId)
         return None
       if (batch.isEmpty) return None
       try {
         val vT = SnapshotTable.stageUpsertMor(batch,
           Catalog.tableRoot(catalogRoot, table), partitionCol, keyCols,
           prev.getOrElse(table, -1L))
-        val others =
-          if (!prev.contains(StateTable)) Seq.empty
-          else Catalog.read(spark, catalogRoot, StateTable, base)
-            .filter(col("source_id") =!= sourceId)
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        import spark.implicits._
-        val state = (others :+ (sourceId, batchId))
-          .toDF("source_id", "batch_id").coalesce(1)
-        val vS = SnapshotTable.stageVersion(state,
-          Catalog.tableRoot(catalogRoot, StateTable),
-          prev.getOrElse(StateTable, -1L))
+        val vS = stageState(spark, catalogRoot, prev, state, sourceId,
+          batchId)
         val c = Catalog.commitStaged(catalogRoot,
           Map(table -> vT, StateTable -> vS), base)
         foldIfOverdue(spark, catalogRoot, table, foldThreshold)
@@ -206,7 +212,8 @@ object GovernedStream {
     while (true) {
       val base = Catalog.latestCommit(catalogRoot)
       val prev = Catalog.tableVersions(catalogRoot, base)
-      if (lastBatchId(spark, catalogRoot, sourceId, base) >= batchId)
+      val state = streamState(spark, catalogRoot, base, prev)
+      if (batchOf(state, sourceId) >= batchId)
         return None
       val hasUp = !upserts.isEmpty
       val hasDel = !deleteKeys.isEmpty
@@ -220,17 +227,8 @@ object GovernedStream {
         if (hasDel)
           v = SnapshotTable.stageEqualityDelete(spark, tr,
             deleteKeys.select(keyCols.map(col): _*), v)
-        val others =
-          if (!prev.contains(StateTable)) Seq.empty
-          else Catalog.read(spark, catalogRoot, StateTable, base)
-            .filter(col("source_id") =!= sourceId)
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        import spark.implicits._
-        val state = (others :+ (sourceId, batchId))
-          .toDF("source_id", "batch_id").coalesce(1)
-        val vS = SnapshotTable.stageVersion(state,
-          Catalog.tableRoot(catalogRoot, StateTable),
-          prev.getOrElse(StateTable, -1L))
+        val vS = stageState(spark, catalogRoot, prev, state, sourceId,
+          batchId)
         val c = Catalog.commitStaged(catalogRoot,
           Map(table -> v, StateTable -> vS), base)
         foldIfOverdue(spark, catalogRoot, table, foldThreshold)

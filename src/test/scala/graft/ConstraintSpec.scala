@@ -43,6 +43,28 @@ class ConstraintSpec extends GraftSuite {
     assert(SnapshotTable.read(spark, root).count() === 3)
   }
 
+  test("an `_`-prefixed partition column is data: stats, counts and CHECKs apply") {
+    // Spark's hidden-path rule skips `_x` names unless they hold a `=`,
+    // so `_d=...` directories are partitions, not sidecars
+    val root = tmp("graft-con-underscore")
+    SnapshotTable.commitAppend(
+      Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "price", "_d"),
+      root, "_d", statsCols = Seq("price"))
+    assert(SnapshotTable.fastCountMeta(spark, root) === Some(2L))
+    assert(SnapshotTable.statsCoverage(root) === Seq("price"))
+    SnapshotTable.addConstraint(spark, root, "price_pos", "price > 0")
+    val v0 = SnapshotTable.latestVersion(root)
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.commitAppend(
+        Seq((3L, -5.0, "a")).toDF("id", "price", "_d"), root, "_d")
+    }
+    assert(e.getMessage.contains("price_pos"))
+    assert(SnapshotTable.latestVersion(root) === v0)
+    SnapshotTable.commitAppend(
+      Seq((3L, 5.0, "a")).toDF("id", "price", "_d"), root, "_d")
+    assert(SnapshotTable.fastCountMeta(spark, root) === Some(3L))
+  }
+
   test("full-snapshot commit path enforces too") {
     val root = tmp("graft-con-commit")
     SnapshotTable.commit(Seq((1L, 1.0)).toDF("id", "price"), root)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotTable
@@ -99,10 +97,9 @@ class FastCountSpec extends GraftSuite {
     val root = Files.createTempDirectory("graft-fc-old").toString
     SnapshotTable.commitDelta(rows(0 until 40), root, "g")
     // simulate a pre-counts era: drop version 0's stats sidecar
-    val statsDir = java.nio.file.Paths.get(root, "v=0", "_stats")
-    assert(Files.exists(statsDir), "commit must have recorded counts")
-    Files.walk(statsDir).iterator().asScala.toSeq.reverse
-      .foreach(Files.delete)
+    val stats = java.nio.file.Paths.get(root, "v=0", "_stats")
+    assert(Files.exists(stats), "commit must have recorded counts")
+    Files.delete(stats)
     SnapshotTable.commitAppend(rows(100 until 120), root, "g")
     assert(SnapshotTable.fastCount(spark, root) === 60)
   }

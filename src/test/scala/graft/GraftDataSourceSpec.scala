@@ -74,7 +74,7 @@ class GraftDataSourceSpec extends GraftSuite {
     // corrupt the file holding the HIGHEST l_orderkey range: any read
     // that opens it fails, so success under a low-range predicate is
     // behavioral proof the pushed filter pruned it at the manifest
-    val stats = spark.read.parquet(s"$root/v=0/_stats")
+    val stats = SnapshotTable.fileStats(spark, root, 0L).get
     val lowMax = stats.agg(min("l_orderkey__max")).first().getLong(0)
     val corrupt = stats.orderBy(desc("l_orderkey__max"))
       .select("_file").first().getString(0)
@@ -382,7 +382,7 @@ class GraftDataSourceSpec extends GraftSuite {
     // corrupt every file EXCEPT the largest: a bare LIMIT within the
     // largest file's recorded rows must open ONLY that file — success
     // is the behavioral proof of the metadata-driven pruning
-    val stats = spark.read.parquet(s"$root/v=0/_stats")
+    val stats = SnapshotTable.fileStats(spark, root, 0L).get
       .select("_file", "__rows").collect()
       .sortBy(r => (-r.getLong(1), r.getString(0)))
     val keepRows = stats.head.getLong(1)

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Metrics, Retrieval, SnapshotTable}
@@ -29,21 +32,8 @@ class MaintenanceJobCountSpec extends GraftSuite {
   }
 
   private def countJobs[A](body: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    val r =
-      try body
-      finally {
-        Metrics.drainBus(spark)
-        sc.removeSparkListener(l)
-      }
-    (r, n.get)
+    val (r, jobs) = MaintenanceJobCountSpec.jobsOf(spark)(body)
+    (r, jobs.size)
   }
 
   test("indexCorpusDelta job counts: append-overlap and upsert paths") {
@@ -77,5 +67,30 @@ class MaintenanceJobCountSpec extends GraftSuite {
     // tombstone-aggregate probes cost 8 extra jobs per upsert delta)
     assert(fastJobs <= 8, s"fast-path delta grew to $fastJobs jobs")
     assert(tombJobs <= 21, s"tombstone delta grew to $tombJobs jobs")
+  }
+}
+
+object MaintenanceJobCountSpec {
+
+  /** Run `body`, returning its result and the Spark jobs it started —
+    * each by its first stage's name, the call site that submitted it
+    * (`parquet at SnapshotTable.scala:137`), so a failing pin says
+    * WHICH jobs it counted. */
+  def jobsOf[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        names.add(e.stageInfos.headOption.map(_.name).getOrElse("?")); ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    val r =
+      try body
+      finally {
+        Metrics.drainBus(spark)
+        sc.removeSparkListener(l)
+      }
+    (r, names.asScala.toSeq)
   }
 }

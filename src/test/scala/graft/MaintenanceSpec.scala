@@ -33,7 +33,7 @@ class MaintenanceSpec extends GraftSuite {
     // a `_stats` sidecar and the tmp record, but no record
     SnapshotTable.claimVersion(root, 3L)
     Files.writeString(Paths.get(root, "v=3", "part-0.parquet"), "junk")
-    Files.createDirectories(Paths.get(root, "v=3", "_stats"))
+    Files.writeString(Paths.get(root, "v=3", "_stats"), "!column _file\t\"string\"")
     Files.writeString(Paths.get(root, "v=3", "._commit.tmp-crashed"),
       "!parent 1\n!manifested\npart=x 3")
     assert(!SnapshotTable.isCommitted(root, 3L))

@@ -1,0 +1,173 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.MaintenanceJobCountSpec.jobsOf
+import graft.operators.SnapshotTable
+import graft.streaming.GovernedStream
+
+/** Table metadata costs no Spark job: every commit records its schema,
+  * so a read plans without a footer-inference job, and the `_stats`
+  * sidecar is text written and parsed on the driver, so a commit runs
+  * only its data write and metadata answers collect a local frame. A
+  * failing pin prints the call sites of the jobs it counted. The stats
+  * text round-trips every type it records exactly. */
+class MetadataJobCountSpec extends GraftSuite {
+  import spark.implicits._
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString + "/t"
+
+  /** `body`'s result, asserting it ran at most `limit` jobs. */
+  private def pin[A](limit: Int, what: String)(body: => A): A = {
+    val (r, jobs) = jobsOf(spark)(body)
+    assert(jobs.size <= limit,
+      s"$what ran ${jobs.size} jobs, pinned at $limit: ${jobs.mkString("; ")}")
+    r
+  }
+
+  test("plain commit and commitAppend run one job each; reads plan with none") {
+    val rows = Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("id", "price", "p")
+    val stats = Seq("price")
+    val plain = tmp("graft-jobs-plain")
+    pin(1, "first commit")(SnapshotTable.commit(rows, plain, stats))
+    pin(1, "commit")(SnapshotTable.commit(rows, plain, stats))
+    val appended = tmp("graft-jobs-append")
+    pin(1, "first commitAppend")(
+      SnapshotTable.commitAppend(rows, appended, "p", stats))
+    pin(1, "commitAppend")(SnapshotTable.commitAppend(rows, appended, "p", stats))
+    Seq(plain -> 2L, appended -> 4L).foreach { case (root, n) =>
+      val df = pin(0, s"read of $root")(SnapshotTable.read(spark, root))
+      assert(df.schema.fieldNames.toSet === Set("id", "price", "p"))
+      pin(0, s"metadata answers of $root") {
+        assert(SnapshotTable.fastCountMeta(spark, root) === Some(n))
+        assert(SnapshotTable.fastBounds(spark, root, "price") ===
+          Some((10.0, 20.0)))
+        assert(SnapshotTable.statsCoverage(root) === stats)
+      }
+    }
+  }
+
+  test("a steady-state governed stream commit runs at most three jobs") {
+    val cat = Files.createTempDirectory("graft-jobs-stream").toString
+    def batch(i: Long): DataFrame = Seq((i, s"e$i", "2024-01-01"))
+      .toDF("event_id", "name", "_ingestion_date")
+    // the first commit creates `_stream_state`; later ones read it
+    GovernedStream.commitBatch(spark, cat, "src", 0L, batch(0L))
+    GovernedStream.commitBatch(spark, cat, "src", 1L, batch(1L))
+    // one state read, the bronze append, the state write
+    assert(pin(3, "commitBatch")(
+      GovernedStream.commitBatch(spark, cat, "src", 2L, batch(2L))).isDefined)
+    assert(pin(1, "replayed commitBatch")(
+      GovernedStream.commitBatch(spark, cat, "src", 2L, batch(2L))).isEmpty)
+    assert(GovernedStream.lastBatchId(spark, cat, "src") === 2L)
+  }
+
+  /** Spark's own per-file min/max: the values the stats must hold. */
+  private def scanStats(root: String, cols: Seq[String]): DataFrame = {
+    val aggs = count(lit(1)).as("__rows") +: cols.flatMap(c =>
+      Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max")))
+    spark.read.parquet(s"$root/v=0")
+      .groupBy(input_file_name().as("_file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumn("_file", regexp_extract(col("_file"), "(v=\\d+/.*)$", 1))
+  }
+
+  /** Exact renderings: float bits (NaN, ±Infinity, -0.0 distinct),
+    * binary bytes. */
+  private def exact(v: Any): String = v match {
+    case null => "null"
+    case d: Double => s"d${java.lang.Double.doubleToLongBits(d)}"
+    case f: Float => s"f${java.lang.Float.floatToIntBits(f)}"
+    case b: Array[Byte] => b.map(x => f"$x%02x").mkString("x", "", "")
+    case o => s"${o.getClass.getSimpleName}:$o"
+  }
+
+  private def rendered(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(exact).mkString("|")).toSeq.sorted
+
+  test("stats text round-trips every recorded type exactly; bounds and skipping answer from it") {
+    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    def ntz(s: String) = java.time.LocalDateTime.parse(s)
+    def dt(s: String) = java.sql.Date.valueOf(s)
+    def dec(s: String) = BigDecimal(s)
+    val rows = Seq(
+      ("a", Some(Byte.MinValue), Some(Short.MaxValue), Some(Int.MinValue),
+        Some(Long.MaxValue), Some(-0.0f), Some(-0.0d),
+        Some(dec("-12345678901234567890.1234567890")), Some("tab\there"),
+        Some(Array[Byte](0, -1, 9)), Some(true), Some(dt("1900-01-01")),
+        Some(ts("1969-12-31T23:59:59.999999Z")),
+        Some(ntz("2262-04-12T00:00:00.000001"))),
+      ("a", Some(0.toByte), Some(0.toShort), Some(0), Some(Long.MinValue),
+        Some(Float.NaN), Some(Double.NaN), Some(dec("0.0000000001")),
+        Some("back\\slash \\N"), Some(Array.emptyByteArray), Some(false),
+        Some(dt("9999-12-31")), Some(ts("2024-02-29T12:00:00.123456Z")),
+        Some(ntz("1969-12-31T23:59:59.999999"))),
+      ("b", Some(Byte.MaxValue), Some(Short.MinValue), Some(Int.MaxValue),
+        Some(0L), Some(Float.NegativeInfinity), Some(Double.NegativeInfinity),
+        Some(dec("99999999999999999999.9999999999")), Some("line\nbreak\r"),
+        Some(Array[Byte](127)), Some(true), Some(dt("1969-12-31")),
+        Some(ts("2262-04-12T00:00:00Z")), Some(ntz("1900-01-01T00:00:00"))),
+      ("b", Some(1.toByte), Some(1.toShort), Some(1), Some(1L),
+        Some(Float.MinPositiveValue), Some(Double.PositiveInfinity),
+        Some(dec("1")), Some("\ud835\udd18 supplementary"),
+        Some(Array[Byte](-128, 0)), Some(false), Some(dt("2024-01-01")),
+        Some(ts("1900-01-01T00:00:00Z")), Some(ntz("2024-01-01T00:00:00"))),
+      ("b", None, None, None, None, Some(Float.MaxValue),
+        Some(Double.MinPositiveValue), None, Some(""), None, None, None, None,
+        None),
+      ("b", None, None, None, None, None, None, None, Some("\ufb01 bmp"),
+        None, None, None, None, None),
+      ("c", None, None, None, None, None, None, None, None, None, None, None,
+        None, None),
+      ("d", None, None, None, None, Some(1.0f / 3), Some(math.Pi), None, None,
+        None, None, None, None, None),
+      ("d", None, None, None, None, Some(2.7182817f), Some(1.0 / 3), None,
+        None, None, None, None, None, None))
+    val cols = Seq("b", "sh", "i", "l", "f", "d", "dec", "s", "bin", "bool",
+      "dt", "ts", "ntz")
+    val df = rows.toDF("part" +: cols: _*)
+      .withColumn("dec", col("dec").cast("decimal(30,10)"))
+    val root = tmp("graft-stats-rt")
+    SnapshotTable.commitAppend(df, root, "part", statsCols = cols)
+
+    val stats = pin(0, "stats load and collect")(
+      SnapshotTable.fileStats(spark, root, 0L).get.collect())
+    assert(stats.nonEmpty)
+    val lifted = SnapshotTable.fileStats(spark, root, 0L).get
+    val truth = scanStats(root, cols)
+      .select(lifted.columns.map(col).toIndexedSeq: _*)
+    assert(lifted.schema.map(f => f.name -> f.dataType) ===
+      truth.schema.map(f => f.name -> f.dataType))
+    assert(rendered(lifted) === rendered(truth))
+    assert(SnapshotTable.statsCoverage(root) === cols.sorted)
+
+    // whole-table bounds fold the recorded ones (binary has no driver
+    // ordering, so it is left to skipping)
+    val table = SnapshotTable.read(spark, root)
+    cols.filterNot(_ == "bin").foreach { c =>
+      val want = table.agg(min(c), max(c)).head()
+      val got = pin(0, s"fastBounds($c)")(
+        SnapshotTable.fastBounds(spark, root, c)).get
+      assert(Seq(got._1, got._2).map(exact) ===
+        Seq(want.get(0), want.get(1)).map(exact), c)
+    }
+    assert(SnapshotTable.fastCountMeta(spark, root) === Some(rows.size.toLong))
+
+    // skipping answers as a full scan does, and prunes from the stats
+    val all = SnapshotTable.liveFiles(root, 0L).size
+    Seq("i > 0", "l = 0", "s = 'line\\nbreak\\r'", "s > 'tab'", "d < 0",
+      "f > 1", "dec > 0", "bin = X'7F'", "dt >= date'9999-01-01'",
+      "ts < timestamp'1900-01-02 00:00:00'",
+      "ntz < timestamp_ntz'1970-01-01 00:00:00'", "bool = true",
+      "b = 127", "sh < 0").foreach { p =>
+      assert(rendered(SnapshotTable.readSkipping(spark, root, p)) ===
+        rendered(table.filter(expr(p))), p)
+    }
+    assert(SnapshotTable.skippingKept(spark, root, "dt >= date'9999-01-01'")
+      .size < all)
+  }
+}

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Catalog, GovernedPipeline, MetricsHistory,
-  PipelineRun, Serving}
+  PipelineRun, Serving, SnapshotTable}
 import graft.sources.Tables
 
 /** Persisted pipeline-health time series: history accumulation across
@@ -93,6 +93,24 @@ class MetricsHistorySpec extends GraftSuite {
     val sIncr = hist.filter(col("run_id") === 1 && col("stage") === "silver")
       .head().getAs[Long]("rows")
     assert(sIncr < sFull)
+    // and exact: each stage's rows are the rows of the files its staged
+    // version wrote (a table the run left alone wrote none) — no
+    // sidecar or other bookkeeping writes mixed in
+    Seq(0L, 1L).foreach { c =>
+      val vs = Catalog.tableVersions(cat, c)
+      val before =
+        if (c == 0L) Map.empty[String, Long] else Catalog.tableVersions(cat, c - 1)
+      val recorded = hist.filter(col("run_id") === c).select("stage", "rows")
+        .collect().map(r => r.getString(0) -> r.getLong(1))
+      assert(recorded.map(_._1).toSet === vs.keySet - "pipeline_metrics")
+      recorded.foreach { case (t, n) =>
+        val written =
+          if (before.get(t).contains(vs(t))) 0L
+          else SnapshotTable.fileStats(spark, Catalog.tableRoot(cat, t), vs(t))
+            .map(_.agg(sum("__rows")).head().getLong(0)).getOrElse(0L)
+        assert(n === written, s"run $c stage $t")
+      }
+    }
 
     // the health view pinned at the latest commit
     val view = Serving.registerCatalogHealth(spark, cat, prefix = "t2_")

@@ -44,7 +44,7 @@ class TopNPushdownSpec extends GraftSuite {
 
     // corrupt every file except the one holding the HIGHEST ts range:
     // success under the TopN is behavioral proof only that file opened
-    val stats = spark.read.parquet(s"$root/v=0/_stats")
+    val stats = SnapshotTable.fileStats(spark, root, 0L).get
       .select("_file", "ts__max").collect()
       .sortBy(r => -r.getLong(1))
     stats.tail.foreach { r =>
@@ -168,7 +168,7 @@ class TopNPushdownSpec extends GraftSuite {
 
     // behavioral proof: every file OUTSIDE the kept set is corrupt,
     // and the composed query still answers — those files never open
-    val all = spark.read.parquet(s"$root/v=0/_stats")
+    val all = SnapshotTable.fileStats(spark, root, 0L).get
       .select("_file").collect().map(_.getString(0))
     all.filterNot(kept.contains).foreach { rel =>
       Files.write(Paths.get(root, rel.substring(rel.indexOf("v=0/"))),
