@@ -32,9 +32,20 @@ import org.apache.spark.sql.functions.col
   * Concurrency is optimistic, like Nessie's CAS on a branch head: the
   * publish section runs under an exclusive-create lock directory (the
   * same primitive as [[SnapshotTable]] branch commits) and re-checks
-  * that main still sits at the committer's base — of two committers
-  * starting from the same base exactly one publishes; the loser gets
-  * `ConcurrentModificationException` and retries on the new base.
+  * that every table the commit touches still sits where the
+  * committer's base had it — of two committers staging the same table
+  * from the same base exactly one publishes; the loser gets
+  * `ConcurrentModificationException`. [[publish]] is the one catalog
+  * commit protocol every governed writer goes through: it reads the
+  * base, runs the writer's stage against the base's table map, and
+  * commits. A lost race is retried in one loop — at most
+  * [[PublishAttempts]] attempts, sleeping 50 ms × attempt between
+  * them, the last loss thrown with the earlier ones attached as
+  * suppressed exceptions: a busy commit lock re-commits the versions
+  * already staged, a version-claim collision stages again, and a moved
+  * touched table re-stages on the new base — except for a stage over
+  * frames built before the call ([[transact]], [[transactDelta]]),
+  * where that loss is thrown at once.
   * Commit ids are allocated max(existing)+1, NOT base+1, so manifests
   * left behind by [[rollback]] (legitimate roll-forward targets) never
   * block new commits — the same rule as `SnapshotTable.stageVersion`.
@@ -104,6 +115,11 @@ object Catalog {
   private def publishedStamp(root: String, commit: Long): String =
     MetaIO.join(commitsDir(root), s".published.c=$commit")
 
+  private def deleteManifest(root: String, commit: Long): Unit = {
+    MetaIO.delete(manifestPath(root, commit))
+    MetaIO.delete(publishedStamp(root, commit))
+  }
+
   /** True iff `commit`'s manifest completed publication (vs a crashed
     * committer's leftover). Published manifests newer than the current
     * marker are rollback's roll-forward targets and survive GC. */
@@ -134,52 +150,57 @@ object Catalog {
     * `staged`. Under the commit lock: verify the commit still applies —
     * with the Nessie-style RECONCILIATION rule rather than a whole-
     * catalog CAS: a moved main is fine as long as every table this
-    * commit TOUCHES (staged or dropped) is unchanged between `base`
-    * and the current commit, because the staged versions' parent
-    * lineage (and any manifest entries a delta/append stage inherited
-    * from the base) is then still exactly the live state. Independent
-    * writers to disjoint tables therefore serialize only on the tiny
-    * lock section, never on re-staging; a committer whose touched
-    * tables DID move gets `ConcurrentModificationException` and must
-    * re-stage — the same one-loser contract as before, now scoped to
-    * real conflicts. Then allocate the next id past EVERY manifest on
-    * disk (so rollback leftovers never block — max+1, NOT base+1),
-    * publish the manifest, stamp it, move the marker. */
+    * commit CHANGES (staged at a version other than its base one, or
+    * dropped) is unchanged between `base` and the current commit,
+    * because the staged versions' parent lineage (and any manifest
+    * entries a delta/append stage inherited from the base) is then
+    * still exactly the live state. An entry staged at the table's base
+    * version is no change when the table's current version descends
+    * from it through the recorded parents: it neither conflicts nor
+    * replaces the current mapping (a refresh that re-derives silver
+    * from an unchanged bronze keeps a concurrently appended bronze). A
+    * current version that does not descend from it — a rollback, a
+    * dropped table — conflicts like any change. Independent writers to
+    * disjoint tables therefore serialize only on the tiny lock section,
+    * never on re-staging; a committer whose tables DID move gets
+    * [[TablesMoved]] and must re-stage ([[publish]] does where the
+    * stage re-reads what it derives from). Then allocate the next id
+    * past EVERY manifest on disk (so rollback leftovers never block —
+    * max+1, NOT base+1), publish the manifest, stamp it, move the
+    * marker. */
   private[graft] def commitStaged(root: String, staged: Map[String, Long],
                                   base: Long,
                                   drop: Set[String] = Set.empty): Long =
       withCommitLock(root) {
     val current = latestCommit(root)
     val curVs = tableVersions(root, current)
-    if (current != base) {
-      // tableVersions(-1) means "latest"; a pre-first-commit base is
-      // the EMPTY mapping. A base whose manifest GC already collected
-      // (a very stale committer) cannot prove anything unchanged —
-      // full conflict, UNCONDITIONALLY: a synthesized "shifted"
-      // mapping would still compare equal (None == None) for touched
-      // tables absent from the CURRENT manifest, letting a stale
-      // committer resurrect a concurrently-dropped table against
-      // GC-deleted lineage.
-      val baseVs: Option[Map[String, Long]] =
-        if (base < 0) Some(Map.empty[String, Long])
-        else scala.util.Try(tableVersions(root, base)).toOption
-      if (baseVs.isEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"catalog at $root moved from $base to $current and the base " +
-            "manifest was garbage-collected — the staged lineage cannot " +
-            "be proven current; re-stage against the current base and retry")
-      val touched = staged.keySet ++ drop
-      val conflicted = touched.filter(t => baseVs.get.get(t) != curVs.get(t))
-        .toSeq.sorted
-      if (conflicted.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"catalog at $root moved from $base to $current and touched " +
-            s"table(s) ${conflicted.mkString(", ")} changed underneath " +
-            "(a concurrent committer won the race on them); re-stage " +
-            "against the current base and retry")
-    }
+    def lost(why: String) = new TablesMoved(
+      s"catalog at $root moved from $base to $current and $why; re-stage " +
+        "against the current base and retry")
+    // tableVersions(-1) means "latest"; a pre-first-commit base is the
+    // EMPTY mapping. A base whose manifest GC already collected (a very
+    // stale committer) cannot prove anything unchanged — full conflict,
+    // UNCONDITIONALLY: a synthesized "shifted" mapping would still
+    // compare equal (None == None) for touched tables absent from the
+    // CURRENT manifest, letting a stale committer resurrect a
+    // concurrently-dropped table against GC-deleted lineage.
+    val baseVs =
+      if (current == base) curVs
+      else if (base < 0) Map.empty[String, Long]
+      else scala.util.Try(tableVersions(root, base)).getOrElse(throw lost(
+        "the base manifest was garbage-collected — the staged lineage " +
+          "cannot be proven current"))
+    val changed = staged.filter { case (t, v) => !baseVs.get(t).contains(v) }
+    val carriedOff = staged.keySet.filterNot(t => changed.contains(t) ||
+      SnapshotTable.isAncestor(tableRoot(root, t), staged(t),
+        curVs.getOrElse(t, -1L)))
+    val conflicted = (changed.keySet ++ drop ++ carriedOff)
+      .filter(t => baseVs.get(t) != curVs.get(t)).toSeq.sorted
+    if (conflicted.nonEmpty) throw lost(
+      s"touched table(s) ${conflicted.mkString(", ")} changed underneath " +
+        "(a concurrent committer won the race on them)")
     val next = (commits(root) :+ math.max(base, current)).max + 1
-    val manifest = (curVs -- drop) ++ staged
+    val manifest = (curVs -- drop) ++ changed
     MetaIO.mkdirs(commitsDir(root))
     MetaIO.publishString(manifestPath(root, next),
       manifest.toSeq.sortBy(_._1).map { case (n, v) => s"$n $v" }.mkString("\n"))
@@ -193,6 +214,77 @@ object Catalog {
     moveMarker(root, next)
     next
   }
+
+  /** What a [[publish]] stage staged: manifest key (table or view) →
+    * its new version, and the keys the commit removes. */
+  private[graft] final case class Staged(versions: Map[String, Long],
+                                         drop: Set[String] = Set.empty)
+
+  /** [[commitStaged]]'s refusal: a table the commit touches moved
+    * since its base — the staged versions no longer extend the live
+    * state. A busy commit lock is a plain
+    * `ConcurrentModificationException`. */
+  private[graft] final class TablesMoved(msg: String)
+      extends java.util.ConcurrentModificationException(msg)
+
+  /** Attempts [[publish]] makes before a lost race is the caller's. */
+  private[graft] val PublishAttempts = 6
+
+  /** Publish one catalog commit — the catalog twin of
+    * `SnapshotTable.publish`: read the base commit and its table →
+    * version map, run `stage(base, tables)`, and hand what it staged
+    * to [[commitStaged]]. Returns `Right(new commit)`, or `Left(base)`
+    * when the stage staged nothing (None). A lost attempt sleeps
+    * 50 ms × attempt and tries again, at most [[PublishAttempts]]
+    * times; the last loss is thrown with the earlier ones suppressed:
+    *  - a busy commit lock re-commits what is already staged;
+    *  - a version-claim collision while staging stages again;
+    *  - [[TablesMoved]] re-reads the base and stages again when
+    *    `restage`. A stage over frames its caller built before the
+    *    call (which may have read the moved table) passes
+    *    `restage = false`: it never re-reads the base, and a moved
+    *    table is thrown at once rather than lost.
+    * The lost attempts' staged versions are unreferenced leftovers for
+    * [[expireCommits]]. */
+  private[graft] def publish(root: String, restage: Boolean = true)
+                            (stage: (Long, Map[String, Long]) => Option[Staged])
+      : Either[Long, Long] = {
+    var lost = List.empty[Throwable]
+    var base = latestCommit(root)
+    var staged = Option.empty[Staged] // against `base`, not yet committed
+    while (true) {
+      try {
+        staged = staged.orElse(stage(base, tableVersions(root, base)))
+        return staged.toRight(base).map(s =>
+          commitStaged(root, s.versions, base, s.drop))
+      } catch {
+        case e: java.util.ConcurrentModificationException
+            if lost.size + 1 < PublishAttempts &&
+              (restage || !e.isInstanceOf[TablesMoved]) =>
+          lost ::= e
+          if (e.isInstanceOf[TablesMoved]) staged = None
+          if (restage && staged.isEmpty) base = latestCommit(root)
+          Thread.sleep(50L * lost.size)
+        case e: java.util.ConcurrentModificationException =>
+          lost.reverse.foreach(e.addSuppressed)
+          throw e
+      }
+    }
+    Left(base) // unreachable
+  }
+
+  /** [[publish]] for a writer staging one table: `stage` gets the
+    * table's version at the base (-1 when the base has no such table)
+    * and returns the staged version — -1 or the base version itself
+    * means nothing was staged, as in `SnapshotTable.publish`, and the
+    * base commit is returned. */
+  private[graft] def publishTable(root: String, table: String)
+                                 (stage: Long => Long): Long =
+    publish(root) { (_, tables) =>
+      val prev = tables.getOrElse(table, -1L)
+      val v = stage(prev)
+      Option.when(v >= 0 && v != prev)(Staged(Map(table -> v)))
+    }.merge
 
   /** Publish wall time of a commit (epoch millis) — the stamp content,
     * falling back to the manifest mtime for pre-stamp catalogs. */
@@ -229,13 +321,12 @@ object Catalog {
   def transact(root: String, updates: Seq[(String, DataFrame)]): Long = {
     require(updates.map(_._1).distinct.size == updates.size,
       "a transaction updates each table at most once")
-    val base = latestCommit(root)
-    val prev = tableVersions(root, base)
-    val staged = updates.map { case (name, df) =>
-      name -> SnapshotTable.stageVersion(df, tableRoot(root, name),
-        prev.getOrElse(name, -1L))
-    }.toMap
-    commitStaged(root, staged, base)
+    publish(root, restage = false) { (_, prev) =>
+      Some(Staged(updates.map { case (name, df) =>
+        name -> SnapshotTable.stageVersion(df, tableRoot(root, name),
+          prev.getOrElse(name, -1L))
+      }.toMap))
+    }.merge
   }
 
   /** [[transact]]'s incremental sibling — the 100 TB write path:
@@ -253,13 +344,12 @@ object Catalog {
                     updates: Seq[(String, DataFrame, String)]): Long = {
     require(updates.map(_._1).distinct.size == updates.size,
       "a transaction updates each table at most once")
-    val base = latestCommit(root)
-    val prev = tableVersions(root, base)
-    val staged = updates.map { case (name, slice, partitionCol) =>
-      name -> SnapshotTable.stageDelta(slice, tableRoot(root, name),
-        partitionCol, prev.getOrElse(name, -1L))
-    }.toMap
-    commitStaged(root, staged, base)
+    publish(root, restage = false) { (_, prev) =>
+      Some(Staged(updates.map { case (name, slice, partitionCol) =>
+        name -> SnapshotTable.stageDelta(slice, tableRoot(root, name),
+          partitionCol, prev.getOrElse(name, -1L))
+      }.toMap))
+    }.merge
   }
 
   /** Row-level MERGE-ON-READ deletes across tables as ONE atomic
@@ -278,16 +368,16 @@ object Catalog {
                         deletes: Seq[(String, Column)]): Long = {
     require(deletes.map(_._1).distinct.size == deletes.size,
       "a transaction deletes from each table at most once")
-    val base = latestCommit(root)
-    val prev = tableVersions(root, base)
-    val staged = deletes.flatMap { case (name, pred) =>
-      require(prev.contains(name),
-        s"table '$name' not in catalog at $root")
-      val v = SnapshotTable.stageMorDelete(spark, tableRoot(root, name),
-        pred, prev(name))
-      if (v < 0) None else Some(name -> v)
-    }.toMap
-    if (staged.isEmpty) base else commitStaged(root, staged, base)
+    publish(root) { (_, prev) =>
+      val staged = deletes.flatMap { case (name, pred) =>
+        require(prev.contains(name),
+          s"table '$name' not in catalog at $root")
+        val v = SnapshotTable.stageMorDelete(spark, tableRoot(root, name),
+          pred, prev(name))
+        Option.when(v >= 0)(name -> v)
+      }.toMap
+      Option.when(staged.nonEmpty)(Staged(staged))
+    }.merge
   }
 
   /** Read `table` at a catalog `commit` (default: latest) — every
@@ -312,26 +402,28 @@ object Catalog {
     * appends ([[graft.streaming.GovernedStream]]). */
   def compactTable(spark: SparkSession, root: String, table: String,
                    partitionCol: String, minEntries: Int = 4): Long = {
-    val base = latestCommit(root)
-    val prev = tableVersions(root, base)
-    require(prev.contains(table), s"table '$table' not in catalog at $root")
     val tr = tableRoot(root, table)
-    val fragmented = SnapshotTable.manifestEntries(tr, prev(table))
-      .groupBy(_._1).filter(_._2.size >= minEntries).keys.toSeq.sorted
-    if (fragmented.isEmpty) return base
-    val values = fragmented.map(_.substring(partitionCol.length + 1))
-    val slice = SnapshotTable.read(spark, tr, prev(table))
-      .filter(col(partitionCol).cast("string").isin(values: _*))
-      .repartition(col(partitionCol))
-    // analyze coverage survives the rewrite (the compactSnapshot
-    // contract): covered stats/bloom columns re-record through the
-    // staged commit's footer pass, NDV re-sketches the new version
-    val cov = SnapshotTable.coverage(tr, prev(table))
-    val staged = SnapshotTable.stageDelta(slice, tr, partitionCol,
-      prev(table), statsCols = cov.stats, bloomCols = cov.blooms)
-    val c = commitStaged(root, Map(table -> staged), base)
-    cov.resketch(spark, tr, staged)
-    c
+    publishTable(root, table) { prev =>
+      require(prev >= 0, s"table '$table' not in catalog at $root")
+      val fragmented = SnapshotTable.manifestEntries(tr, prev)
+        .groupBy(_._1).filter(_._2.size >= minEntries).keys.toSeq.sorted
+      if (fragmented.isEmpty) prev
+      else {
+        val values = fragmented.map(_.substring(partitionCol.length + 1))
+        val slice = SnapshotTable.read(spark, tr, prev)
+          .filter(col(partitionCol).cast("string").isin(values: _*))
+          .repartition(col(partitionCol))
+        // analyze coverage survives the rewrite (the compactSnapshot
+        // contract): covered stats/bloom columns re-record through the
+        // staged commit's footer pass, NDV re-sketches the staged
+        // version before it publishes
+        val cov = SnapshotTable.coverage(tr, prev)
+        val staged = SnapshotTable.stageDelta(slice, tr, partitionCol,
+          prev, statsCols = cov.stats, bloomCols = cov.blooms)
+        cov.resketch(spark, tr, staged)
+        staged
+      }
+    }
   }
 
   /** Fold a governed table's accumulated merge-on-read sidecars back
@@ -342,15 +434,11 @@ object Catalog {
     * streaming sinks call this when [[SnapshotTable.morDebt]] crosses
     * their fold threshold. Returns the new commit (or the current one
     * when there is nothing to fold). */
-  def foldTable(spark: SparkSession, root: String, table: String): Long = {
-    val base = latestCommit(root)
-    val prev = tableVersions(root, base)
-    require(prev.contains(table), s"table '$table' not in catalog at $root")
-    val staged = SnapshotTable.stageApplyDeletes(spark,
-      tableRoot(root, table), prev(table))
-    if (staged == prev(table)) base
-    else commitStaged(root, Map(table -> staged), base)
-  }
+  def foldTable(spark: SparkSession, root: String, table: String): Long =
+    publishTable(root, table) { prev =>
+      require(prev >= 0, s"table '$table' not in catalog at $root")
+      SnapshotTable.stageApplyDeletes(spark, tableRoot(root, table), prev)
+    }
 
   /** Re-point the catalog at an older published commit (atomic) —
     * rolls EVERY table back together, which is the point. The
@@ -380,10 +468,7 @@ object Catalog {
     require(blocked.isEmpty,
       s"commits ${blocked.mkString(",")} are pinned by a branch/tag; " +
         "drop the ref before abandoning")
-    drop.foreach { c =>
-      MetaIO.delete(manifestPath(root, c))
-      MetaIO.delete(publishedStamp(root, c))
-    }
+    drop.foreach(deleteManifest(root, _))
     drop
   }
 
@@ -411,10 +496,7 @@ object Catalog {
   def putView(root: String, name: String, body: String,
               replace: Boolean = false): Long = {
     require(name.matches("[A-Za-z0-9._-]+"), s"invalid view name '$name'")
-    var attempt = 0
-    while (true) {
-      val base = latestCommit(root)
-      val cur = tableVersions(root, base)
+    publish(root) { (_, cur) =>
       require(!cur.contains(name), s"'$name' already exists as a TABLE")
       if (cur.contains(ViewKey + name) && !replace)
         throw new IllegalArgumentException(s"view '$name' already exists")
@@ -426,36 +508,17 @@ object Catalog {
       // lands the next number (an orphan def file from a lost commit
       // CAS is invisible — only the manifest pin publishes)
       MetaIO.createExclusive(viewDefPath(root, name, dv), body)
-      try return commitStaged(root, Map(ViewKey + name -> dv), base)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          Thread.sleep(50L * attempt)
-      }
-    }
-    -1L // unreachable
+      Some(Staged(Map(ViewKey + name -> dv)))
+    }.merge
   }
 
   /** DROP a persisted view as one atomic catalog commit; false when
     * no such view exists (nothing committed). */
-  def dropView(root: String, name: String): Boolean = {
-    var attempt = 0
-    while (true) {
-      val base = latestCommit(root)
-      if (!tableVersions(root, base).contains(ViewKey + name)) return false
-      try {
-        commitStaged(root, Map.empty, base, drop = Set(ViewKey + name))
-        return true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          Thread.sleep(50L * attempt)
-      }
-    }
-    false // unreachable
-  }
+  def dropView(root: String, name: String): Boolean =
+    publish(root) { (_, cur) =>
+      Option.when(cur.contains(ViewKey + name))(
+        Staged(Map.empty, drop = Set(ViewKey + name)))
+    }.isRight
 
   /** The stored definition body of view `name` at `commit` (default
     * latest); None when the commit carries no such view. */
@@ -526,10 +589,6 @@ object Catalog {
     (f.toLong, h.toLong)
   }
 
-  private def moveRef(root: String, kind: String, name: String,
-                      content: String): Unit =
-    MetaIO.publishString(refPath(root, kind, name), content)
-
   /** The branch head's table → version mapping. */
   def branchVersions(root: String, name: String): Map[String, Long] = {
     val (fork, head) = branchState(root, name)
@@ -574,7 +633,7 @@ object Catalog {
           s"branch '$name' commit $next already exists (concurrent " +
             "committer); re-stage against the new head and retry")
     }
-    moveRef(root, "branch", name, s"$fork $next")
+    MetaIO.publishString(refPath(root, "branch", name), s"$fork $next")
     next
   }
 
@@ -609,24 +668,22 @@ object Catalog {
     val branchVs = branchVersions(root, name)
     val forkVs = tableVersions(root, fork)
     val updated = branchVs.filter { case (t, v) => forkVs.get(t) != Some(v) }
-    if (updated.isEmpty) return latestCommit(root)
     val missing = updated.keySet.filterNot(keys.contains)
     require(missing.isEmpty,
       s"no merge key given for branch-updated tables: ${missing.mkString(", ")}")
-    val base = latestCommit(root)
-    val mainVs = tableVersions(root, base)
-    val staged = updated.map { case (t, v) =>
-      val branchContent = SnapshotTable.read(spark, tableRoot(root, t), v)
-      val merged = mainVs.get(t) match {
-        case Some(mv) => MergeUpsert.merge(
-          SnapshotTable.read(spark, tableRoot(root, t), mv),
-          branchContent, keys(t))
-        case None => branchContent
-      }
-      t -> SnapshotTable.stageVersion(merged, tableRoot(root, t),
-        mainVs.getOrElse(t, -1L))
-    }
-    commitStaged(root, staged, base)
+    publish(root) { (_, mainVs) =>
+      Option.when(updated.nonEmpty)(Staged(updated.map { case (t, v) =>
+        val branchContent = SnapshotTable.read(spark, tableRoot(root, t), v)
+        val merged = mainVs.get(t) match {
+          case Some(mv) => MergeUpsert.merge(
+            SnapshotTable.read(spark, tableRoot(root, t), mv),
+            branchContent, keys(t))
+          case None => branchContent
+        }
+        t -> SnapshotTable.stageVersion(merged, tableRoot(root, t),
+          mainVs.getOrElse(t, -1L))
+      }))
+    }.merge
   }
 
   /** Drop a branch ref and its manifest namespace (staged table
@@ -659,14 +716,10 @@ object Catalog {
   def refs(root: String): (Map[String, (Long, Long)], Map[String, Long]) = {
     val d = refsDir(root)
     val names = MetaIO.listNames(d).filterNot(_.startsWith("."))
-    (names.filter(_.startsWith("branch.")).map { n =>
-      val name = n.stripPrefix("branch.")
-      name -> branchState(root, name)
-    }.toMap,
-      names.filter(_.startsWith("tag.")).map { n =>
-        val name = n.stripPrefix("tag.")
-        name -> tagCommit(root, name)
-      }.toMap)
+    def named(kind: String) =
+      names.filter(_.startsWith(s"$kind.")).map(_.stripPrefix(s"$kind."))
+    (named("branch").map(n => n -> branchState(root, n)).toMap,
+      named("tag").map(n => n -> tagCommit(root, n)).toMap)
   }
 
   /** Catalog-level GC: drop old manifests beyond `retainLast` (the
@@ -696,10 +749,7 @@ object Catalog {
       !pinned(c) && !isPublished(root, c) &&
       now - MetaIO.mtimeMillis(manifestPath(root, c)) > graceMs)
     val drop = (dropOld ++ dropCrashed).distinct.sorted
-    drop.foreach { c =>
-      MetaIO.delete(manifestPath(root, c))
-      MetaIO.delete(publishedStamp(root, c))
-    }
+    drop.foreach(deleteManifest(root, _))
     // a crashed committer's commit lock blocks all publishes — sweep it
     // with the same grace discipline as the table-level locks
     SnapshotTable.sweepStaleLocks(root, graceMs)

@@ -40,9 +40,12 @@ object CurationRun {
 
   /** Batch ids already published in the corpus table (driver-side
     * partition metadata, bounded by batches-per-history). */
-  def committedBatchIds(catalogRoot: String): Set[Long] = {
-    val vs = Catalog.tableVersions(catalogRoot)
-    vs.get("corpus") match {
+  def committedBatchIds(catalogRoot: String): Set[Long] =
+    batchIdsAt(catalogRoot, Catalog.tableVersions(catalogRoot))
+
+  private def batchIdsAt(catalogRoot: String,
+                         tables: Map[String, Long]): Set[Long] =
+    tables.get("corpus") match {
       case None => Set.empty
       case Some(v) =>
         SnapshotTable
@@ -50,7 +53,6 @@ object CurationRun {
           .map(_._1).filter(_.startsWith("batch_id="))
           .map(_.stripPrefix("batch_id=").toLong).toSet
     }
-  }
 
   /** Ingest one document batch (`doc_id`, `text`): stage the curated
     * corpus slice and the signature-store append, gate on the staged
@@ -70,97 +72,97 @@ object CurationRun {
                batchId: Long, threshold: Double = 0.8,
                minKeepRate: Double = 0.2,
                substringWindow: Option[Int] = None): Long = {
-    val base = Catalog.latestCommit(catalogRoot)
-    if (committedBatchIds(catalogRoot).contains(batchId))
-      return base // replay of a published batch: exactly-once skip
-    val prev = Catalog.tableVersions(catalogRoot, base)
     def tr(t: String) = Catalog.tableRoot(catalogRoot, t)
-
-    val storeContent =
-      if (prev.contains("dedup_signatures"))
-        Catalog.read(spark, catalogRoot, "dedup_signatures", base)
-          .select("doc_id", "mh")
-      else {
-        import spark.implicits._
-        Seq.empty[(Long, Array[Long])].toDF("doc_id", "mh")
-      }
-    val (verdicts, newSigs, dedupCaches) =
-      IncrementalDedup.planCached(batch, storeContent, threshold)
-    val substr = substringWindow.map { w =>
-      val store =
-        if (prev.contains("substring_store"))
-          Catalog.read(spark, catalogRoot, "substring_store", base)
-            .groupBy("wh").agg(min(col("canon_key")).as("canon_key"))
-        else {
-          import spark.implicits._
-          Seq.empty[(String, Long)].toDF("wh", "canon_key")
+    Catalog.publish(catalogRoot) { (base, prev) =>
+      // a replay of a published batch publishes nothing: exactly-once skip
+      Option.unless(batchIdsAt(catalogRoot, prev).contains(batchId)) {
+        val storeContent =
+          if (prev.contains("dedup_signatures"))
+            Catalog.read(spark, catalogRoot, "dedup_signatures", base)
+              .select("doc_id", "mh")
+          else {
+            import spark.implicits._
+            Seq.empty[(Long, Array[Long])].toDF("doc_id", "mh")
+          }
+        val (verdicts, newSigs, dedupCaches) =
+          IncrementalDedup.planCached(batch, storeContent, threshold)
+        val substr = substringWindow.map { w =>
+          val store =
+            if (prev.contains("substring_store"))
+              Catalog.read(spark, catalogRoot, "substring_store", base)
+                .groupBy("wh").agg(min(col("canon_key")).as("canon_key"))
+            else {
+              import spark.implicits._
+              Seq.empty[(String, Long)].toDF("wh", "canon_key")
+            }
+          Dedup.exactSubstringStage(batch, store, w)
         }
-      Dedup.exactSubstringStage(batch, store, w)
-    }
-    try {
+        try {
 
-    // per-doc curation row: shuffle-free signal projections joined to
-    // the dedup verdict on one doc_id co-partitioning
-    val corpus0 = TextAnalysis.clean(batch)
-      .join(TextAnalysis.quality(batch)
-        .select("doc_id", "n_words", "distinct_ratio", "quality_pass"),
-        "doc_id")
-      .join(TextAnalysis.repetition(batch)
-        .select("doc_id", "top_word_frac", "repetition_pass"), "doc_id")
-      .join(verdicts, "doc_id")
-      .withColumn("keep",
-        col("quality_pass") && col("repetition_pass") && !col("is_dup"))
-      .withColumn("batch_id", lit(batchId))
-    val corpus = substr match {
-      case None => corpus0
-      case Some((spans, _, _)) =>
-        corpus0
-          .join(spans.groupBy("doc_id")
-            .agg(sum(col("span_end") - col("span_start"))
-              .as("substr_removed")),
-            Seq("doc_id"), "left")
-          .withColumn("substr_removed",
-            coalesce(col("substr_removed"), lit(0L)))
-    }
+        // per-doc curation row: shuffle-free signal projections joined to
+        // the dedup verdict on one doc_id co-partitioning
+        val corpus0 = TextAnalysis.clean(batch)
+          .join(TextAnalysis.quality(batch)
+            .select("doc_id", "n_words", "distinct_ratio", "quality_pass"),
+            "doc_id")
+          .join(TextAnalysis.repetition(batch)
+            .select("doc_id", "top_word_frac", "repetition_pass"), "doc_id")
+          .join(verdicts, "doc_id")
+          .withColumn("keep",
+            col("quality_pass") && col("repetition_pass") && !col("is_dup"))
+          .withColumn("batch_id", lit(batchId))
+        val corpus = substr match {
+          case None => corpus0
+          case Some((spans, _, _)) =>
+            corpus0
+              .join(spans.groupBy("doc_id")
+                .agg(sum(col("span_end") - col("span_start"))
+                  .as("substr_removed")),
+                Seq("doc_id"), "left")
+              .withColumn("substr_removed",
+                coalesce(col("substr_removed"), lit(0L)))
+        }
 
-    val vCorpus = SnapshotTable.stageAppend(corpus, tr("corpus"),
-      "batch_id", prev.getOrElse("corpus", -1L))
-    val staged = Map("corpus" -> vCorpus) ++
-      (if (newSigs.isEmpty) Map.empty[String, Long]
-       else Map("dedup_signatures" -> SnapshotTable.stageAppend(newSigs,
-         tr("dedup_signatures"), "sig_bucket",
-         prev.getOrElse("dedup_signatures", -1L)))) ++
-      (substr match {
-        case Some((_, newCanon, _)) if !newCanon.isEmpty =>
-          Map("substring_store" -> SnapshotTable.stageAppend(newCanon,
-            tr("substring_store"), "wh_bucket",
-            prev.getOrElse("substring_store", -1L)))
-        case _ => Map.empty[String, Long]
-      })
+        val vCorpus = SnapshotTable.stageAppend(corpus, tr("corpus"),
+          "batch_id", prev.getOrElse("corpus", -1L))
+        val staged = Map("corpus" -> vCorpus) ++
+          (if (newSigs.isEmpty) Map.empty[String, Long]
+           else Map("dedup_signatures" -> SnapshotTable.stageAppend(newSigs,
+             tr("dedup_signatures"), "sig_bucket",
+             prev.getOrElse("dedup_signatures", -1L)))) ++
+          (substr match {
+            case Some((_, newCanon, _)) if !newCanon.isEmpty =>
+              Map("substring_store" -> SnapshotTable.stageAppend(newCanon,
+                tr("substring_store"), "wh_bucket",
+                prev.getOrElse("substring_store", -1L)))
+            case _ => Map.empty[String, Long]
+          })
 
-    // gate over the STAGED batch slice: a poisoned shard publishes
-    // nothing (neither corpus rows nor its dedup signatures)
-    val slice = SnapshotTable.read(spark, tr("corpus"), vCorpus)
-      .filter(col("batch_id") === batchId)
-    val (n, kept) = {
-      val r = slice.agg(count(lit(1)),
-        sum(when(col("keep"), 1L).otherwise(0L))).head()
-      // SUM over zero rows is NULL — an empty batch must not NPE here
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    if (n > 0 && kept.toDouble / n < minKeepRate)
-      throw new IllegalStateException(
-        f"curation gate failed for batch $batchId: keep rate " +
-          f"${kept.toDouble / n}%.2f < $minKeepRate%.2f — nothing " +
-          s"published; staged slice at ${tr("corpus")}/v=$vCorpus")
+        // gate over the STAGED batch slice: a poisoned shard publishes
+        // nothing (neither corpus rows nor its dedup signatures)
+        val slice = SnapshotTable.read(spark, tr("corpus"), vCorpus)
+          .filter(col("batch_id") === batchId)
+        val (n, kept) = {
+          val r = slice.agg(count(lit(1)),
+            sum(when(col("keep"), 1L).otherwise(0L))).head()
+          // SUM over zero rows is NULL — an empty batch must not NPE here
+          (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+        }
+        if (n > 0 && kept.toDouble / n < minKeepRate)
+          throw new IllegalStateException(
+            f"curation gate failed for batch $batchId: keep rate " +
+              f"${kept.toDouble / n}%.2f < $minKeepRate%.2f — nothing " +
+              s"published; staged slice at ${tr("corpus")}/v=$vCorpus")
 
-    Catalog.commitStaged(catalogRoot, staged, base)
-    } finally {
-      // staging wrote every row the caches fed — release them so a
-      // long-lived ingestion driver doesn't accumulate cached blocks
-      dedupCaches.foreach(_.unpersist())
-      substr.foreach(_._3.unpersist())
-    }
+        Catalog.Staged(staged)
+        } finally {
+          // staging wrote every row the caches fed — release them so a
+          // long-lived ingestion driver doesn't accumulate cached blocks
+          dedupCaches.foreach(_.unpersist())
+          substr.foreach(_._3.unpersist())
+        }
+      }
+    }.merge
   }
 
   /** BOOTSTRAP composition — the [[GovernedPipeline.runFull]] analog

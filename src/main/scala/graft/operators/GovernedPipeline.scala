@@ -115,6 +115,10 @@ object GovernedPipeline {
     SnapshotTable.stageAppend(report, tr, "run_id", mPrev)
   }
 
+  private def requireBootstrapped(catalogRoot: String, base: Long): Unit =
+    require(base >= 0, s"no published catalog commit at $catalogRoot — " +
+      "bootstrap with GovernedPipeline.runFull first")
+
   /** Bootstrap: full rebuild of every table, staged, gated, then
     * published as catalog commit 0 (or the next commit on re-run).
     * Returns the commit id. */
@@ -122,55 +126,55 @@ object GovernedPipeline {
               failOnViolations: Boolean = true,
               eventsOverride: Option[DataFrame] = None,
               retries: Int = 2, retryBackoffMs: Long = 1000L): Long = {
-    val base = Catalog.latestCommit(catalogRoot)
-    val prev = Catalog.tableVersions(catalogRoot, base)
-    def tr(t: String) = Catalog.tableRoot(catalogRoot, t)
-    // transient write failures re-stage (Airflow default_args retries);
-    // each attempt claims a fresh version dir, so retries never clobber
-    // a partial write — abandoned claims are expireCommits/sweep fodder
-    val rec = new Recorder(spark, retries, retryBackoffMs)
-    def delta(t: String, df: DataFrame, pcol: String): Long =
-      rec.timed(t)(
-        SnapshotTable.stageDelta(df, tr(t), pcol, prev.getOrElse(t, -1L)))
-    def full(t: String, df: DataFrame): Long =
-      rec.timed(t)(
-        SnapshotTable.stageVersion(df, tr(t), prev.getOrElse(t, -1L)))
-
     val events = eventsOverride.getOrElse(Tables.events(spark, sfDir))
-    val vB = delta("bronze",
-      Bronze.withRedeliveries(Bronze.ingest(events)), "_ingestion_date")
-    val bronze = SnapshotTable.read(spark, tr("bronze"), vB)
-    val vS = delta("silver", BronzeToSilver.transform(bronze), "_trade_date")
-    val silver = SnapshotTable.read(spark, tr("silver"), vS)
-    val stg = Staging.stgTrades(silver)
-    val vM1 = delta("ohlcv_1m",
-      Ohlcv.ohlcv1m(stg).repartition(col("_partition_date")), "_partition_date")
-    val m1 = SnapshotTable.read(spark, tr("ohlcv_1m"), vM1)
-    val vH1 = delta("ohlcv_1h",
-      Ohlcv.ohlcv1h(m1).repartition(col("_partition_date")), "_partition_date")
-    val h1 = SnapshotTable.read(spark, tr("ohlcv_1h"), vH1)
-    val vDM = delta("daily_metrics",
-      DailyMetrics.daily(h1).repartition(col("date")), "date")
-    val dm = SnapshotTable.read(spark, tr("daily_metrics"), vDM)
+    Catalog.publish(catalogRoot) { (_, prev) =>
+      def tr(t: String) = Catalog.tableRoot(catalogRoot, t)
+      // transient write failures re-stage (Airflow default_args retries);
+      // each attempt claims a fresh version dir, so retries never clobber
+      // a partial write — abandoned claims are expireCommits/sweep fodder.
+      // One recorder per staging: a re-staged attempt records only its own.
+      val rec = new Recorder(spark, retries, retryBackoffMs)
+      def delta(t: String, df: DataFrame, pcol: String): Long =
+        rec.timed(t)(
+          SnapshotTable.stageDelta(df, tr(t), pcol, prev.getOrElse(t, -1L)))
+      def full(t: String, df: DataFrame): Long =
+        rec.timed(t)(
+          SnapshotTable.stageVersion(df, tr(t), prev.getOrElse(t, -1L)))
 
-    val vLT = full("latest_trade", PriceLatest.latestTradeOf(stg))
-    val lt = SnapshotTable.read(spark, tr("latest_trade"), vLT)
-    val vPL = full("price_latest", PriceLatest.serve(lt, m1, h1, dm))
-    val pl = SnapshotTable.read(spark, tr("price_latest"), vPL)
-    val vQ = full("quality_report",
-      DataQuality.fullReport(bronze, silver, m1, h1, dm, pl))
-    val quality = SnapshotTable.read(spark, tr("quality_report"), vQ)
-    if (failOnViolations) gate(quality, s"${tr("quality_report")}/v=$vQ")
+      val vB = delta("bronze",
+        Bronze.withRedeliveries(Bronze.ingest(events)), "_ingestion_date")
+      val bronze = SnapshotTable.read(spark, tr("bronze"), vB)
+      val vS = delta("silver", BronzeToSilver.transform(bronze), "_trade_date")
+      val silver = SnapshotTable.read(spark, tr("silver"), vS)
+      val stg = Staging.stgTrades(silver)
+      val vM1 = delta("ohlcv_1m",
+        Ohlcv.ohlcv1m(stg).repartition(col("_partition_date")), "_partition_date")
+      val m1 = SnapshotTable.read(spark, tr("ohlcv_1m"), vM1)
+      val vH1 = delta("ohlcv_1h",
+        Ohlcv.ohlcv1h(m1).repartition(col("_partition_date")), "_partition_date")
+      val h1 = SnapshotTable.read(spark, tr("ohlcv_1h"), vH1)
+      val vDM = delta("daily_metrics",
+        DailyMetrics.daily(h1).repartition(col("date")), "date")
+      val dm = SnapshotTable.read(spark, tr("daily_metrics"), vDM)
 
-    val wm = bronze.agg(max("ingested_at")).head().getAs[LocalDateTime](0)
-    val vW = full("watermark", wmDf(spark, wm))
-    val vMet = stageMetrics(spark, catalogRoot, prev, rec, "full", wm)
+      val vLT = full("latest_trade", PriceLatest.latestTradeOf(stg))
+      val lt = SnapshotTable.read(spark, tr("latest_trade"), vLT)
+      val vPL = full("price_latest", PriceLatest.serve(lt, m1, h1, dm))
+      val pl = SnapshotTable.read(spark, tr("price_latest"), vPL)
+      val vQ = full("quality_report",
+        DataQuality.fullReport(bronze, silver, m1, h1, dm, pl))
+      val quality = SnapshotTable.read(spark, tr("quality_report"), vQ)
+      if (failOnViolations) gate(quality, s"${tr("quality_report")}/v=$vQ")
 
-    Catalog.commitStaged(catalogRoot, Map(
-      "bronze" -> vB, "silver" -> vS, "ohlcv_1m" -> vM1, "ohlcv_1h" -> vH1,
-      "daily_metrics" -> vDM, "latest_trade" -> vLT, "price_latest" -> vPL,
-      "quality_report" -> vQ, "watermark" -> vW,
-      "pipeline_metrics" -> vMet), base)
+      val wm = bronze.agg(max("ingested_at")).head().getAs[LocalDateTime](0)
+      val vW = full("watermark", wmDf(spark, wm))
+      val vMet = stageMetrics(spark, catalogRoot, prev, rec, "full", wm)
+      Some(Catalog.Staged(Map(
+        "bronze" -> vB, "silver" -> vS, "ohlcv_1m" -> vM1, "ohlcv_1h" -> vH1,
+        "daily_metrics" -> vDM, "latest_trade" -> vLT, "price_latest" -> vPL,
+        "quality_report" -> vQ, "watermark" -> vW,
+        "pipeline_metrics" -> vMet)))
+    }.merge
   }
 
   /** The scheduled incremental mode, governed: process only the new
@@ -182,32 +186,25 @@ object GovernedPipeline {
                      newEvents: DataFrame, lookbackHours: Int = 2,
                      failOnViolations: Boolean = true,
                      retries: Int = 2, retryBackoffMs: Long = 1000L): Long = {
-    val base = Catalog.latestCommit(catalogRoot)
-    require(base >= 0, s"no published catalog commit at $catalogRoot — " +
-      "bootstrap with GovernedPipeline.runFull first")
-    val prev = Catalog.tableVersions(catalogRoot, base)
-    val rec = new Recorder(spark, retries, retryBackoffMs)
-    def delta(t: String, df: DataFrame, pcol: String): Long =
-      rec.timed(t)(
-        SnapshotTable.stageDelta(df, Catalog.tableRoot(catalogRoot, t), pcol,
-          prev(t)))
-    def readAt(t: String): DataFrame =
-      Catalog.read(spark, catalogRoot, t, base)
-
     // bronze: copy-on-write append — touched ingestion-date partitions
     // are rewritten as old ∪ batch, the rest inherited by reference
     val batch = Bronze.withRedeliveries(Bronze.ingest(newEvents)).persist()
-    val touchedIngest = batch.select("_ingestion_date").distinct()
-      .collect().map(_.getDate(0)).toSeq
-    val vB =
-      if (touchedIngest.isEmpty) prev("bronze")
-      else delta("bronze",
-        readAt("bronze").filter(col("_ingestion_date")
-          .isin(touchedIngest.map(lit(_)): _*)).unionByName(batch),
-        "_ingestion_date")
-    try derive(spark, catalogRoot, base, prev, vB, lookbackHours,
-      failOnViolations, publishBronzeOnEmpty = true, retries, retryBackoffMs,
-      rec)
+    try Catalog.publish(catalogRoot) { (base, prev) =>
+      requireBootstrapped(catalogRoot, base)
+      val rec = new Recorder(spark, retries, retryBackoffMs)
+      val touchedIngest = batch.select("_ingestion_date").distinct()
+        .collect().map(_.getDate(0)).toSeq
+      val vB =
+        if (touchedIngest.isEmpty) prev("bronze")
+        else rec.timed("bronze")(SnapshotTable.stageDelta(
+          Catalog.read(spark, catalogRoot, "bronze", base)
+            .filter(col("_ingestion_date")
+              .isin(touchedIngest.map(lit(_)): _*)).unionByName(batch),
+          Catalog.tableRoot(catalogRoot, "bronze"), "_ingestion_date",
+          prev("bronze")))
+      derive(spark, catalogRoot, base, prev, vB, lookbackHours,
+        failOnViolations, publishBronzeOnEmpty = true, rec)
+    }.merge
     finally batch.unpersist()
   }
 
@@ -222,24 +219,22 @@ object GovernedPipeline {
   def refreshFromBronze(spark: SparkSession, catalogRoot: String,
                         lookbackHours: Int = 2,
                         failOnViolations: Boolean = true,
-                        retries: Int = 2, retryBackoffMs: Long = 1000L): Long = {
-    val base = Catalog.latestCommit(catalogRoot)
-    require(base >= 0, s"no published catalog commit at $catalogRoot — " +
-      "bootstrap with GovernedPipeline.runFull first")
-    val prev = Catalog.tableVersions(catalogRoot, base)
-    derive(spark, catalogRoot, base, prev, prev("bronze"), lookbackHours,
-      failOnViolations, publishBronzeOnEmpty = false, retries, retryBackoffMs,
-      new Recorder(spark, retries, retryBackoffMs))
-  }
+                        retries: Int = 2, retryBackoffMs: Long = 1000L): Long =
+    Catalog.publish(catalogRoot) { (base, prev) =>
+      requireBootstrapped(catalogRoot, base)
+      derive(spark, catalogRoot, base, prev, prev("bronze"), lookbackHours,
+        failOnViolations, publishBronzeOnEmpty = false,
+        new Recorder(spark, retries, retryBackoffMs))
+    }.merge
 
   /** Shared derivation half of the incremental modes: from a (possibly
     * just-staged) bronze version, rebuild the watermark-window slice of
-    * every downstream table, gate, and publish one catalog commit. */
+    * every downstream table, gate, and stage one catalog commit (None:
+    * nothing to publish). */
   private def derive(spark: SparkSession, catalogRoot: String, base: Long,
                      prev: Map[String, Long], vB: Long, lookbackHours: Int,
                      failOnViolations: Boolean, publishBronzeOnEmpty: Boolean,
-                     retries: Int, retryBackoffMs: Long,
-                     rec: Recorder): Long = {
+                     rec: Recorder): Option[Catalog.Staged] = {
     def tr(t: String) = Catalog.tableRoot(catalogRoot, t)
     def delta(t: String, df: DataFrame, pcol: String): Long =
       rec.timed(t)(
@@ -261,83 +256,80 @@ object GovernedPipeline {
     val newWmRow = bronzeWindow.agg(max("ingested_at"))
       .head().getAs[LocalDateTime](0)
     val batchSilver = BronzeToSilver.transform(bronzeWindow).persist()
-    // a watermark that did not advance means bronze holds nothing new —
-    // the lookback tail alone is all-reprocessed rows, not a batch
-    val affectedDates =
-      if (newWmRow == null || !newWmRow.isAfter(prevWm)) Seq.empty
-      else batchSilver.select("_trade_date").distinct()
-        .collect().map(_.getDate(0)).sortBy(_.toString).toSeq
+    try {
+      // a watermark that did not advance means bronze holds nothing new —
+      // the lookback tail alone is all-reprocessed rows, not a batch
+      val affectedDates =
+        if (newWmRow == null || !newWmRow.isAfter(prevWm)) Seq.empty
+        else batchSilver.select("_trade_date").distinct()
+          .collect().map(_.getDate(0)).sortBy(_.toString).toSeq
 
-    if (affectedDates.isEmpty) {
-      batchSilver.unpersist()
       // nothing new to merge: publish just the bronze change (if any)
-      return if (publishBronzeOnEmpty)
-        Catalog.commitStaged(catalogRoot, Map("bronze" -> vB), base)
-      else base
-    }
-    val dateLits = affectedDates.map(lit(_))
+      if (affectedDates.isEmpty)
+        return Option.when(publishBronzeOnEmpty)(
+          Catalog.Staged(Map("bronze" -> vB)))
+      val dateLits = affectedDates.map(lit(_))
 
-    // silver: keep-earliest merge of the touched slice — reading the
-    // OLD version and staging a NEW one, so no self-overwrite barrier
-    // is needed (copy-on-write gives it structurally)
-    val vS = delta("silver", MergeUpsert.mergeKeepFirst(
-      readAt("silver").filter(col("_trade_date").isin(dateLits: _*)),
-      batchSilver.select(readAt("silver").columns.map(col(_)).toSeq: _*),
-      "trade_id", Seq(col("ingested_at"))), "_trade_date")
-    val silverSlice = SnapshotTable.read(spark, tr("silver"), vS)
-      .filter(col("_trade_date").isin(dateLits: _*))
-    val stgSlice = Staging.stgTrades(silverSlice)
+      // silver: keep-earliest merge of the touched slice — reading the
+      // OLD version and staging a NEW one, so no self-overwrite barrier
+      // is needed (copy-on-write gives it structurally)
+      val vS = delta("silver", MergeUpsert.mergeKeepFirst(
+        readAt("silver").filter(col("_trade_date").isin(dateLits: _*)),
+        batchSilver.select(readAt("silver").columns.map(col(_)).toSeq: _*),
+        "trade_id", Seq(col("ingested_at"))), "_trade_date")
+      val silverSlice = SnapshotTable.read(spark, tr("silver"), vS)
+        .filter(col("_trade_date").isin(dateLits: _*))
+      val stgSlice = Staging.stgTrades(silverSlice)
 
-    val vM1 = delta("ohlcv_1m", Ohlcv.ohlcv1m(stgSlice)
-      .repartition(col("_partition_date")), "_partition_date")
-    val m1Slice = SnapshotTable.read(spark, tr("ohlcv_1m"), vM1)
-      .filter(col("_partition_date").isin(dateLits: _*))
-    val vH1 = delta("ohlcv_1h", Ohlcv.ohlcv1h(m1Slice)
-      .repartition(col("_partition_date")), "_partition_date")
-    val h1Slice = SnapshotTable.read(spark, tr("ohlcv_1h"), vH1)
-      .filter(col("_partition_date").isin(dateLits: _*))
-    val vDM = delta("daily_metrics", DailyMetrics.daily(h1Slice)
-      .repartition(col("date")), "date")
-    val dmSlice = SnapshotTable.read(spark, tr("daily_metrics"), vDM)
-      .filter(col("date").isin(dateLits: _*))
+      val vM1 = delta("ohlcv_1m", Ohlcv.ohlcv1m(stgSlice)
+        .repartition(col("_partition_date")), "_partition_date")
+      val m1Slice = SnapshotTable.read(spark, tr("ohlcv_1m"), vM1)
+        .filter(col("_partition_date").isin(dateLits: _*))
+      val vH1 = delta("ohlcv_1h", Ohlcv.ohlcv1h(m1Slice)
+        .repartition(col("_partition_date")), "_partition_date")
+      val h1Slice = SnapshotTable.read(spark, tr("ohlcv_1h"), vH1)
+        .filter(col("_partition_date").isin(dateLits: _*))
+      val vDM = delta("daily_metrics", DailyMetrics.daily(h1Slice)
+        .repartition(col("date")), "date")
+      val dmSlice = SnapshotTable.read(spark, tr("daily_metrics"), vDM)
+        .filter(col("date").isin(dateLits: _*))
 
-    // serving state + table from horizon-pruned staged slices; the
-    // serve horizon's as-of scalar rides the staging write's job as an
-    // observed metric instead of a separate aggregate job
-    val asOfObs = new org.apache.spark.sql.Observation()
-    val vLT = full("latest_trade", MergeUpsert.mergeKeepFirst(
-      readAt("latest_trade"),
-      PriceLatest.latestTradeOf(Staging.stgTrades(batchSilver)),
-      "product_id", Seq(col("updated_at").desc, col("trade_id").desc))
-      .observe(asOfObs, max(col("updated_at")).as("as_of")))
-    val lt = SnapshotTable.read(spark, tr("latest_trade"), vLT)
-    val asOf = Metrics.observedOr[LocalDateTime](spark, asOfObs, "as_of")(
-      lt.agg(max("updated_at")).head().getAs[LocalDateTime](0))
-    val horizonLb = lit(java.sql.Date.valueOf(asOf.toLocalDate.minusDays(1)))
-    val vPL = full("price_latest", PriceLatest.serve(lt,
-      SnapshotTable.read(spark, tr("ohlcv_1m"), vM1)
-        .filter(col("_partition_date") >= horizonLb),
-      SnapshotTable.read(spark, tr("ohlcv_1h"), vH1)
-        .filter(col("_partition_date") >= horizonLb),
-      SnapshotTable.read(spark, tr("daily_metrics"), vDM)
-        .filter(col("date") >= horizonLb)))
-    val pl = SnapshotTable.read(spark, tr("price_latest"), vPL)
+      // serving state + table from horizon-pruned staged slices; the
+      // serve horizon's as-of scalar rides the staging write's job as an
+      // observed metric instead of a separate aggregate job
+      val asOfObs = new org.apache.spark.sql.Observation()
+      val vLT = full("latest_trade", MergeUpsert.mergeKeepFirst(
+        readAt("latest_trade"),
+        PriceLatest.latestTradeOf(Staging.stgTrades(batchSilver)),
+        "product_id", Seq(col("updated_at").desc, col("trade_id").desc))
+        .observe(asOfObs, max(col("updated_at")).as("as_of")))
+      val lt = SnapshotTable.read(spark, tr("latest_trade"), vLT)
+      val asOf = Metrics.observedOr[LocalDateTime](spark, asOfObs, "as_of")(
+        lt.agg(max("updated_at")).head().getAs[LocalDateTime](0))
+      val horizonLb = lit(java.sql.Date.valueOf(asOf.toLocalDate.minusDays(1)))
+      val vPL = full("price_latest", PriceLatest.serve(lt,
+        SnapshotTable.read(spark, tr("ohlcv_1m"), vM1)
+          .filter(col("_partition_date") >= horizonLb),
+        SnapshotTable.read(spark, tr("ohlcv_1h"), vH1)
+          .filter(col("_partition_date") >= horizonLb),
+        SnapshotTable.read(spark, tr("daily_metrics"), vDM)
+          .filter(col("date") >= horizonLb)))
+      val pl = SnapshotTable.read(spark, tr("price_latest"), vPL)
 
-    // quality over THIS run's slices, gated BEFORE publication
-    val vQ = full("quality_report", DataQuality.fullReport(
-      bronzeWindow, silverSlice, m1Slice, h1Slice, dmSlice, pl))
-    val quality = SnapshotTable.read(spark, tr("quality_report"), vQ)
-    if (failOnViolations) gate(quality, s"${tr("quality_report")}/v=$vQ")
+      // quality over THIS run's slices, gated BEFORE publication
+      val vQ = full("quality_report", DataQuality.fullReport(
+        bronzeWindow, silverSlice, m1Slice, h1Slice, dmSlice, pl))
+      val quality = SnapshotTable.read(spark, tr("quality_report"), vQ)
+      if (failOnViolations) gate(quality, s"${tr("quality_report")}/v=$vQ")
 
-    val vW = full("watermark", wmDf(spark, newWmRow))
-    batchSilver.unpersist()
-    val vMet = stageMetrics(spark, catalogRoot, prev, rec, "incremental",
-      newWmRow)
-
-    Catalog.commitStaged(catalogRoot, Map(
-      "bronze" -> vB, "silver" -> vS, "ohlcv_1m" -> vM1, "ohlcv_1h" -> vH1,
-      "daily_metrics" -> vDM, "latest_trade" -> vLT, "price_latest" -> vPL,
-      "quality_report" -> vQ, "watermark" -> vW,
-      "pipeline_metrics" -> vMet), base)
+      val vW = full("watermark", wmDf(spark, newWmRow))
+      val vMet = stageMetrics(spark, catalogRoot, prev, rec, "incremental",
+        newWmRow)
+      Some(Catalog.Staged(Map(
+        "bronze" -> vB, "silver" -> vS, "ohlcv_1m" -> vM1, "ohlcv_1h" -> vH1,
+        "daily_metrics" -> vDM, "latest_trade" -> vLT, "price_latest" -> vPL,
+        "quality_report" -> vQ, "watermark" -> vW,
+        "pipeline_metrics" -> vMet)))
+    } finally batchSilver.unpersist()
   }
 }

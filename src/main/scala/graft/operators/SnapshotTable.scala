@@ -268,7 +268,7 @@ object SnapshotTable {
 
   /** `version`'s record, or None when it has none (a live or crashed
     * claim, an expired version, or a negative version). */
-  private def record(root: String, version: Long): Option[Commit] = {
+  private[graft] def record(root: String, version: Long): Option[Commit] = {
     val p = commitPath(root, version)
     if (version < 0 || !MetaIO.exists(p)) None
     else Some(parseCommit(MetaIO.readString(p)))
@@ -1092,10 +1092,11 @@ object SnapshotTable {
 
   /** Is `anc` an ancestor of (or equal to) `desc` by the recorded
     * parent chain? The walk stops at the first version with no
-    * recorded parent. */
+    * recorded parent, or below `anc` (a parent is always an older
+    * version: versions are claimed max + 1). */
   def isAncestor(root: String, anc: Long, desc: Long): Boolean = {
     var v = desc
-    while (v >= 0) {
+    while (v >= math.max(anc, 0L)) {
       if (v == anc) return true
       v = parentVersion(root, v)
     }

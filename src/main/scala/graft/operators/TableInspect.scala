@@ -24,28 +24,27 @@ object TableInspect {
     * unapplied merge-on-read delete references). The `kind` column
     * classifies how the version stores data: `snapshot` (full
     * rewrite), `manifested` (delta/append/evolution — inherits files
-    * by reference), or `delete-only` (a MoR delete commit that landed
-    * only a `_deletes` sidecar). */
+    * by reference; an emptied table is manifested with no entries), or
+    * `delete-only` (a MoR delete commit that landed only a `_deletes`
+    * sidecar). Each version's commit record is read once. */
   def snapshots(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val current = SnapshotTable.latestVersion(root)
     val refsByV = SnapshotTable.refs(root).groupBy(_._2)
       .view.mapValues(_.keys.toSeq.sorted.mkString(",")).toMap
     val rows = SnapshotTable.versions(root).map { v =>
-      val entries = SnapshotTable.manifestEntries(root, v)
-      val dels = SnapshotTable.deleteEntries(root, v)
-      val eqs = SnapshotTable.eqDeleteEntries(root, v)
+      val rec = SnapshotTable.record(root, v)
+      val c = rec.getOrElse(SnapshotTable.Commit())
       // a manifested version owns data iff an entry names its own dir
-      val ownsData = entries.exists(_._2 == v)
+      val ownsData = c.entries.exists(_._2 == v)
       val kind =
-        if (entries.isEmpty) "snapshot"
-        else if (!ownsData && (dels.lastOption.contains(v) ||
-          eqs.lastOption.exists(_._1 == v))) "delete-only"
+        if (!c.manifested) "snapshot"
+        else if (!ownsData && (c.deletes.lastOption.contains(v) ||
+          c.eqDeletes.lastOption.exists(_._1 == v))) "delete-only"
         else "manifested"
-      (v, SnapshotTable.parentVersion(root, v),
-        SnapshotTable.isCommitted(root, v), v == current,
+      (v, c.parent, rec.isDefined, v == current,
         refsByV.getOrElse(v, ""), kind,
-        entries.size.toLong, (dels.size + eqs.size).toLong,
+        c.entries.size.toLong, (c.deletes.size + c.eqDeletes.size).toLong,
         SnapshotTable.partitionSpecAt(root, v).getOrElse(""))
     }
     rows.toDF("version", "parent", "is_committed", "is_current",

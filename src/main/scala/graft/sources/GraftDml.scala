@@ -125,19 +125,19 @@ object GraftDml {
             } finally anti.unpersist()
           }
       case g: Governed =>
-        casCommit(g) { prev =>
+        Catalog.publishTable(g.catalogRoot, g.table) { prev =>
           if (!syncDelete)
-            Some(SnapshotTable.stageUpsertMor(aligned, g.tableRoot,
-              partitionCol, keyCols, prev))
+            SnapshotTable.stageUpsertMor(aligned, g.tableRoot,
+              partitionCol, keyCols, prev)
           else {
             // NULL-key refusal fires BEFORE anything stages
             val anti = antiKeys(prev)
             try {
               val d1 = SnapshotTable.stageUpsertMor(aligned, g.tableRoot,
                 partitionCol, keyCols, prev)
-              if (anti.isEmpty) Some(d1)
-              else Some(SnapshotTable.stageEqualityDelete(spark,
-                g.tableRoot, anti, d1))
+              if (anti.isEmpty) d1
+              else SnapshotTable.stageEqualityDelete(spark,
+                g.tableRoot, anti, d1)
             } finally anti.unpersist()
           }
         }
@@ -281,10 +281,10 @@ object GraftDml {
           SnapshotTable.stageMergeBatch(app, root, partitionCol, del, base)
         }
       case g: Governed =>
-        casCommit(g) { prev =>
+        Catalog.publishTable(g.catalogRoot, g.table) { prev =>
           val (app, del) = derive(prev)
-          Some(SnapshotTable.stageMergeBatch(app, g.tableRoot,
-            partitionCol, del, prev))
+          SnapshotTable.stageMergeBatch(app, g.tableRoot, partitionCol, del,
+            prev)
         }
     }
   }
@@ -334,15 +334,13 @@ object GraftDml {
           SnapshotTable.updateWhereMor(spark, root, partitionCol,
             predicate, sets, predicateRefs)
       case g: Governed =>
-        casCommit(g) { prev =>
-          val v =
-            if (cow || !manifested(g.tableRoot, prev))
-              SnapshotTable.stageUpdateWhere(spark, g.tableRoot,
-                partitionCol, predicate, sets, prev)
-            else
-              SnapshotTable.stageUpdateMor(spark, g.tableRoot,
-                partitionCol, predicate, sets, prev, predicateRefs)
-          if (v < 0) None else Some(v)
+        Catalog.publishTable(g.catalogRoot, g.table) { prev =>
+          if (cow || !manifested(g.tableRoot, prev))
+            SnapshotTable.stageUpdateWhere(spark, g.tableRoot,
+              partitionCol, predicate, sets, prev)
+          else
+            SnapshotTable.stageUpdateMor(spark, g.tableRoot,
+              partitionCol, predicate, sets, prev, predicateRefs)
         }
     }
   }
@@ -363,10 +361,8 @@ object GraftDml {
       case Warehouse(root) =>
         SnapshotTable.deleteEqualityMor(spark, root, aligned)
       case g: Governed =>
-        casCommit(g) { prev =>
-          Some(SnapshotTable.stageEqualityDelete(spark, g.tableRoot,
-            aligned, prev))
-        }
+        Catalog.publishTable(g.catalogRoot, g.table)(
+          SnapshotTable.stageEqualityDelete(spark, g.tableRoot, aligned, _))
     }
   }
 
@@ -394,36 +390,6 @@ object GraftDml {
     case g: Governed =>
       Catalog.transactMorDelete(spark, g.catalogRoot,
         Seq(g.table -> predicate))
-  }
-
-  /** Optimistic catalog-commit loop: `stage(tableBaseVersion)` stages
-    * the table's next version (None = no-op), the commit CAS
-    * publishes; a racing committer re-stages against the new base,
-    * bounded retries. */
-  private def casCommit(g: Governed)(stage: Long => Option[Long]): Long = {
-    var attempt = 0
-    while (true) {
-      val base = Catalog.latestCommit(g.catalogRoot)
-      val prev = Catalog.tableVersions(g.catalogRoot, base)
-      // the retry must cover STAGING too: two racing committers can
-      // compute the same next storage version and collide on the
-      // claim (ConcurrentModificationException from claimVersion)
-      // before either reaches the catalog CAS — a claim loser
-      // re-stages against the new state exactly like a CAS loser
-      try {
-        stage(prev.getOrElse(g.table, -1L)) match {
-          case None => return base
-          case Some(v) => return Catalog.commitStaged(g.catalogRoot,
-            Map(g.table -> v), base)
-        }
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          Thread.sleep(50L * attempt)
-      }
-    }
-    -1L // unreachable
   }
 }
 

@@ -206,28 +206,13 @@ class GraftGovernedCatalog extends TableCatalog with SupportsNamespaces
   private def evolveCas(table: String, op: String, name: String,
                         to: Option[String],
                         addType: Option[org.apache.spark.sql.types.DataType],
-                        default: Option[String] = None,
-                        maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      val base = Catalog.latestCommit(root)
-      val prev = Catalog.tableVersions(root, base)
-      val prevV = prev.getOrElse(table,
-        throw new NoSuchTableException(
-          Identifier.of(Array.empty[String], table)))
-      try {
-        val v = SnapshotTable.stageMetadataEvolution(SparkSession.active,
-          Catalog.tableRoot(root, table), op, name, to, addType, prevV,
-          default)
-        return Catalog.commitStaged(root, Map(table -> v), base)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= maxAttempts) throw e
-      }
+                        default: Option[String] = None): Long =
+    Catalog.publishTable(root, table) { prev =>
+      if (prev < 0) throw new NoSuchTableException(
+        Identifier.of(Array.empty[String], table))
+      SnapshotTable.stageMetadataEvolution(SparkSession.active,
+        Catalog.tableRoot(root, table), op, name, to, addType, prev, default)
     }
-    -1L // unreachable
-  }
 
   /** Governed history is append-only — tables retire through
     * [[Catalog.rollback]]/expiry, never an in-place drop. Returns
@@ -429,43 +414,17 @@ private[graft] class GraftGovernedTable(
               // createTable's empty snapshot replaces it
               if (overwrite || legacy || version < 0 || firstInsertReplaces)
                 Catalog.transact(catalogRoot, Seq(table -> data))
-              else GraftGovernedTable.appendCas(catalogRoot, table, data)
+              else Catalog.publishTable(catalogRoot, table) { prev =>
+                // INSERT INTO is the O(batch) partition fast-append
+                val spec = SnapshotTable.partitionSpecAt(tableRoot,
+                  math.max(prev, 0L)).getOrElse(throw new IllegalArgumentException(
+                    s"INSERT INTO governed table '$table' is the partition " +
+                      "fast-append and needs a partitioned layout; use " +
+                      "INSERT OVERWRITE (full transact) on flat tables"))
+                SnapshotTable.stageAppend(data, tableRoot, spec, prev)
+              }
             }
           }
       }
     }
-}
-
-private[sources] object GraftGovernedTable {
-
-  /** Atomic governed fast-append with CAS retry — the
-    * [[graft.streaming.GovernedStream.commitBatch]] protocol minus the
-    * streaming batch id: stage an O(batch) partition append against
-    * the table's version at the current commit, publish, and re-stage
-    * on the new base if a concurrent committer won the race. */
-  private[sources] def appendCas(catalogRoot: String, table: String,
-                                 data: DataFrame,
-                                 maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (true) {
-      val base = Catalog.latestCommit(catalogRoot)
-      val prev = Catalog.tableVersions(catalogRoot, base)
-      val tr = Catalog.tableRoot(catalogRoot, table)
-      val prevV = prev.getOrElse(table, -1L)
-      val spec = SnapshotTable.partitionSpecAt(tr, math.max(prevV, 0L))
-        .getOrElse(throw new IllegalArgumentException(
-          s"INSERT INTO governed table '$table' is the partition " +
-            "fast-append and needs a partitioned layout; use INSERT " +
-            "OVERWRITE (full transact) on flat tables"))
-      try {
-        val v = SnapshotTable.stageAppend(data, tr, spec, prevV)
-        return Catalog.commitStaged(catalogRoot, Map(table -> v), base)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= maxAttempts) throw e
-      }
-    }
-    -1L // unreachable
-  }
 }

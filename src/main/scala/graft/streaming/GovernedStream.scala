@@ -72,50 +72,38 @@ object GovernedStream {
       tables.getOrElse(StateTable, -1L))
   }
 
+  /** The one body of every governed stream sink, as ONE
+    * [[Catalog.publish]]: read `_stream_state` at the base, skip a
+    * replay (`batchId` at or below the recorded id), stage `table`'s
+    * change against its base version (`stage` returns None for an
+    * empty batch), then stage `_stream_state` with `sourceId` advanced
+    * to `batchId`. A moved table re-runs all of it on the new base.
+    * Returns the new catalog commit, or None when nothing published. */
+  private def commitStreamed(spark: SparkSession, catalogRoot: String,
+                             table: String, sourceId: String, batchId: Long)
+                            (stage: Long => Option[Long]): Option[Long] =
+    Catalog.publish(catalogRoot) { (base, tables) =>
+      val state = streamState(spark, catalogRoot, base, tables)
+      if (batchOf(state, sourceId) >= batchId) None
+      else stage(tables.getOrElse(table, -1L)).map(v => Catalog.Staged(
+        Map(table -> v, StateTable -> stageState(spark, catalogRoot,
+          tables, state, sourceId, batchId))))
+    }.toOption
+
   /** Transactionally commit one micro-batch: append `bronzeBatch` to
     * the catalog's `bronze` table and advance `sourceId`'s recorded
     * batch id, as ONE atomic catalog commit. Returns the new catalog
     * commit, or None when `batchId` was already committed (a replay —
     * skipped, which is the exactly-once guarantee) or the batch is
-    * empty. Safe from a fresh catalog (bootstraps commit 0). Loses a
-    * CAS race gracefully: re-reads the new base and re-stages (the
-    * losing attempt's staged versions are [[Catalog.expireCommits]]
-    * fodder). */
+    * empty. Safe from a fresh catalog (bootstraps commit 0). */
   def commitBatch(spark: SparkSession, catalogRoot: String, sourceId: String,
                   batchId: Long, bronzeBatch: DataFrame,
                   table: String = "bronze",
-                  partitionCol: String = "_ingestion_date"): Option[Long] = {
-    var attempt = 0
-    while (true) {
-      val base = Catalog.latestCommit(catalogRoot)
-      val prev = Catalog.tableVersions(catalogRoot, base)
-      val state = streamState(spark, catalogRoot, base, prev)
-      if (batchOf(state, sourceId) >= batchId)
-        return None // replayed batch: its data is already published
-      if (bronzeBatch.isEmpty) return None
-
-      // the whole stage-and-publish attempt retries on ANY CAS loss:
-      // the version-dir claim (another committer staging into the same
-      // table) and the manifest create (another committer publishing
-      // first) both throw ConcurrentModificationException; the loser's
-      // abandoned staged versions are expireCommits fodder
-      try {
-        val vB = SnapshotTable.stageAppend(bronzeBatch,
-          Catalog.tableRoot(catalogRoot, table), partitionCol,
-          prev.getOrElse(table, -1L))
-        val vS = stageState(spark, catalogRoot, prev, state, sourceId,
-          batchId)
-        return Some(Catalog.commitStaged(catalogRoot,
-          Map(table -> vB, StateTable -> vS), base))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          Thread.sleep(50L * attempt)
-      }
+                  partitionCol: String = "_ingestion_date"): Option[Long] =
+    commitStreamed(spark, catalogRoot, table, sourceId, batchId) { prev =>
+      Option.when(!bronzeBatch.isEmpty)(SnapshotTable.stageAppend(bronzeBatch,
+        Catalog.tableRoot(catalogRoot, table), partitionCol, prev))
     }
-    None // unreachable
-  }
 
   /** Transactionally UPSERT one micro-batch into a governed
     * current-state table — the streaming CDC sink the table formats
@@ -142,32 +130,13 @@ object GovernedStream {
                         batchId: Long, batch: DataFrame,
                         foldThreshold: Int = DefaultFoldThreshold)
       : Option[Long] = {
-    var attempt = 0
-    while (true) {
-      val base = Catalog.latestCommit(catalogRoot)
-      val prev = Catalog.tableVersions(catalogRoot, base)
-      val state = streamState(spark, catalogRoot, base, prev)
-      if (batchOf(state, sourceId) >= batchId)
-        return None
-      if (batch.isEmpty) return None
-      try {
-        val vT = SnapshotTable.stageUpsertMor(batch,
-          Catalog.tableRoot(catalogRoot, table), partitionCol, keyCols,
-          prev.getOrElse(table, -1L))
-        val vS = stageState(spark, catalogRoot, prev, state, sourceId,
-          batchId)
-        val c = Catalog.commitStaged(catalogRoot,
-          Map(table -> vT, StateTable -> vS), base)
-        foldIfOverdue(spark, catalogRoot, table, foldThreshold)
-        return Some(c)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          Thread.sleep(50L * attempt)
-      }
+    val c = commitStreamed(spark, catalogRoot, table, sourceId, batchId) {
+      prev =>
+        Option.when(!batch.isEmpty)(SnapshotTable.stageUpsertMor(batch,
+          Catalog.tableRoot(catalogRoot, table), partitionCol, keyCols, prev))
     }
-    None // unreachable
+    if (c.isDefined) foldIfOverdue(spark, catalogRoot, table, foldThreshold)
+    c
   }
 
   /** Default [[SnapshotTable.morDebt]] fold trigger for the streaming
@@ -208,48 +177,22 @@ object GovernedStream {
                      deleteKeys: DataFrame,
                      foldThreshold: Int = DefaultFoldThreshold)
       : Option[Long] = {
-    var attempt = 0
-    while (true) {
-      val base = Catalog.latestCommit(catalogRoot)
-      val prev = Catalog.tableVersions(catalogRoot, base)
-      val state = streamState(spark, catalogRoot, base, prev)
-      if (batchOf(state, sourceId) >= batchId)
-        return None
-      val hasUp = !upserts.isEmpty
-      val hasDel = !deleteKeys.isEmpty
-      if (!hasUp && !hasDel) return None
-      try {
-        val tr = Catalog.tableRoot(catalogRoot, table)
-        var v = prev.getOrElse(table, -1L)
-        if (hasUp)
-          v = SnapshotTable.stageUpsertMor(upserts, tr, partitionCol,
-            keyCols, v)
-        if (hasDel)
-          v = SnapshotTable.stageEqualityDelete(spark, tr,
+    val c = commitStreamed(spark, catalogRoot, table, sourceId, batchId) {
+      prev =>
+        val hasUp = !upserts.isEmpty
+        val hasDel = !deleteKeys.isEmpty
+        Option.when(hasUp || hasDel) {
+          val tr = Catalog.tableRoot(catalogRoot, table)
+          val v = if (!hasUp) prev else SnapshotTable.stageUpsertMor(upserts,
+            tr, partitionCol, keyCols, prev)
+          if (!hasDel) v else SnapshotTable.stageEqualityDelete(spark, tr,
             deleteKeys.select(keyCols.map(col): _*), v)
-        val vS = stageState(spark, catalogRoot, prev, state, sourceId,
-          batchId)
-        val c = Catalog.commitStaged(catalogRoot,
-          Map(table -> v, StateTable -> vS), base)
-        foldIfOverdue(spark, catalogRoot, table, foldThreshold)
-        return Some(c)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > 5) throw e
-          Thread.sleep(50L * attempt)
-      }
+        }
     }
-    None // unreachable
+    if (c.isDefined) foldIfOverdue(spark, catalogRoot, table, foldThreshold)
+    c
   }
 
-  /** Checkpointed trade stream → per-batch latest-row reduction →
-    * governed CDC upsert of a `latest_trades` current-state table:
-    * each micro-batch keeps its newest row per product (tie-broken by
-    * trade_id like the batch `price_latest`) and upserts it keyed by
-    * product_id — the streaming twin of the serving table, maintained
-    * at O(batch per trigger) without ever reading or rewriting the
-    * table. Exactly-once via the same committed-batch-id protocol. */
   /** The shared scaffold of every governed stream: `srcDir` as a
     * checkpointed file stream (schema from a one-off batch read, `ts`
     * normalized from either physical type — nanos LONG or native
@@ -288,6 +231,13 @@ object GovernedStream {
     .withColumn("trade_time", col("trade_time").cast("timestamp_ntz"))
     .withColumn("ingested_at", col("ingested_at").cast("timestamp_ntz"))
 
+  /** Checkpointed trade stream → per-batch latest-row reduction →
+    * governed CDC upsert of a `latest_trades` current-state table:
+    * each micro-batch keeps its newest row per product (tie-broken by
+    * trade_id like the batch `price_latest`) and upserts it keyed by
+    * product_id — the streaming twin of the serving table, maintained
+    * at O(batch per trigger) without ever reading or rewriting the
+    * table. Exactly-once via the same committed-batch-id protocol. */
   def writeLatestGoverned(spark: SparkSession, srcDir: String,
                           catalogRoot: String, checkpointDir: String,
                           sourceId: String = "latest_upsert"): Unit = {

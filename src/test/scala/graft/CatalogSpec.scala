@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Catalog, SnapshotTable}
+import graft.streaming.GovernedStream
 
 /** Multi-table atomic catalog commits (the Nessie analog). */
 class CatalogSpec extends GraftSuite {
@@ -82,6 +83,61 @@ class CatalogSpec extends GraftSuite {
     // the leftover is collected once past grace; the published history stays
     val (dropped, _) = Catalog.expireCommits(root, retainLast = 5, graceMs = 0L)
     assert(dropped === Seq(1L))
+  }
+
+  test("an entry staged at its base version is no change: a refresh survives a stream commit") {
+    val root = Files.createTempDirectory("graft-cat-unchanged").toString
+    def batch(i: Long) =
+      Seq((i, "2024-01-01")).toDF("event_id", "_ingestion_date")
+    GovernedStream.commitBatch(spark, root, "src", 0L, batch(0L))
+    Catalog.transact(root, Seq("silver" -> df("s0", 2)))
+    // 1. a refresh stages silver from base B, carrying bronze at B's version
+    val base = Catalog.latestCommit(root)
+    val prev = Catalog.tableVersions(root, base)
+    val silverRoot = Catalog.tableRoot(root, "silver")
+    val vS = SnapshotTable.stageVersion(df("s1", 3), silverRoot, prev("silver"))
+    // 2. a stream micro-batch lands meanwhile
+    val streamed = GovernedStream.commitBatch(spark, root, "src", 1L,
+      batch(1L)).get
+    val afterStream = Catalog.tableVersions(root, streamed)
+    assert(afterStream("bronze") !== prev("bronze"))
+    // 3. the refresh publishes on B; bronze keeps the stream's version
+    val c = Catalog.commitStaged(root,
+      Map("bronze" -> prev("bronze"), "silver" -> vS), base)
+    assert(c === streamed + 1)
+    assert(Catalog.tableVersions(root, c) === afterStream + ("silver" -> vS))
+    assert(Catalog.read(spark, root, "bronze").count() === 2)
+    assert(Catalog.read(spark, root, "silver").count() === 3)
+    // a CHANGED entry still conflicts: silver moved since B
+    val vS2 = SnapshotTable.stageVersion(df("s2", 4), silverRoot, prev("silver"))
+    intercept[java.util.ConcurrentModificationException] {
+      Catalog.commitStaged(root, Map("silver" -> vS2), base)
+    }
+    assert(Catalog.latestCommit(root) === c)
+  }
+
+  test("an entry staged at its base version conflicts once the table no longer descends from it") {
+    val root = Files.createTempDirectory("graft-cat-rolledback").toString
+    def batch(i: Long) =
+      Seq((i, "2024-01-01")).toDF("event_id", "_ingestion_date")
+    GovernedStream.commitBatch(spark, root, "src", 0L, batch(0L))
+    val beforeBatch = Catalog.transact(root, Seq("silver" -> df("s0", 2)))
+    GovernedStream.commitBatch(spark, root, "src", 1L, batch(1L))
+    // a refresh stages silver from base B, carrying bronze at B's version
+    val base = Catalog.latestCommit(root)
+    val prev = Catalog.tableVersions(root, base)
+    val vS = SnapshotTable.stageVersion(df("s1", 3),
+      Catalog.tableRoot(root, "silver"), prev("silver"))
+    // the stream batch is rolled back meanwhile: silver is unchanged,
+    // bronze now sits at an ancestor of B's version
+    Catalog.rollback(root, beforeBatch)
+    assert(Catalog.tableVersions(root)("silver") === prev("silver"))
+    intercept[java.util.ConcurrentModificationException] {
+      Catalog.commitStaged(root,
+        Map("bronze" -> prev("bronze"), "silver" -> vS), base)
+    }
+    assert(Catalog.latestCommit(root) === beforeBatch)
+    assert(Catalog.read(spark, root, "bronze").count() === 1)
   }
 
   test("commits keep working after rollback: roll-forward targets never deadlock the catalog") {

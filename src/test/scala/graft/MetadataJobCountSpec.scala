@@ -6,13 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.MaintenanceJobCountSpec.jobsOf
-import graft.operators.SnapshotTable
+import graft.operators.{Catalog, SnapshotTable}
 import graft.streaming.GovernedStream
 
 /** Table metadata costs no Spark job: every commit records its schema,
   * so a read plans without a footer-inference job, and the `_stats`
   * sidecar is text written and parsed on the driver, so a commit runs
-  * only its data write and metadata answers collect a local frame. A
+  * only its data write and metadata answers collect a local frame; a
+  * catalog commit's publish step is driver-only metadata too. A
   * failing pin prints the call sites of the jobs it counted. The stats
   * text round-trips every type it records exactly. */
 class MetadataJobCountSpec extends GraftSuite {
@@ -64,6 +65,21 @@ class MetadataJobCountSpec extends GraftSuite {
     assert(pin(1, "replayed commitBatch")(
       GovernedStream.commitBatch(spark, cat, "src", 2L, batch(2L))).isEmpty)
     assert(GovernedStream.lastBatchId(spark, cat, "src") === 2L)
+  }
+
+  test("the catalog publish path adds no job") {
+    val cat = Files.createTempDirectory("graft-jobs-publish").toString
+    pin(1, "one-table transact")(
+      Catalog.transact(cat, Seq("t" -> Seq(1L, 2L).toDF("id"))))
+    pin(0, "putView")(Catalog.putView(cat, "v", "SELECT * FROM t"))
+    assert(pin(0, "dropView")(Catalog.dropView(cat, "v")))
+    val appended = (0L until 3L).map(i => (i, s"p$i")).toDF("id", "p")
+    Catalog.transactDelta(cat, Seq(("d", appended, "p")))
+    val c = Catalog.latestCommit(cat)
+    assert(pin(0, "foldTable with nothing to fold")(
+      Catalog.foldTable(spark, cat, "d")) === c)
+    assert(pin(0, "compactTable with nothing fragmented")(
+      Catalog.compactTable(spark, cat, "d", "p")) === c)
   }
 
   /** Spark's own per-file min/max: the values the stats must hold. */

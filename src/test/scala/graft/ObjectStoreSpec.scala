@@ -113,9 +113,9 @@ class ObjectStoreSpec extends GraftSuite with BeforeAndAfterAll {
           try { Catalog.commitStaged(root, staged, attemptBase); done = true }
           catch {
             case _: java.util.ConcurrentModificationException =>
-              // the loser's protocol (the CAS-retry loops in
-              // GovernedStream/appendCas): re-read the base and retry —
-              // the winner may still hold the lock, so loop
+              // the loser retries, as the loop in Catalog.publish
+              // does: re-read the base and retry — the winner may
+              // still hold the lock, so loop
               lost = true; Thread.sleep(20)
               attemptBase = Catalog.latestCommit(root)
           }

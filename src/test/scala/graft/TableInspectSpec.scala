@@ -127,4 +127,19 @@ class TableInspectSpec extends GraftSuite {
     // history spans the compaction commit; snapshots sees both versions
     assert(TableInspect.snapshots(spark, root).count() >= 2)
   }
+
+  test("snapshots classifies a version emptied by a delete as manifested") {
+    val root = Files.createTempDirectory("graft-inspect-empty").toString
+    val df = (0L until 10L).map(i => (i, s"g${i % 2}")).toDF("id", "g")
+    SnapshotTable.commitDelta(df, root, "g")                             // v0
+    val v1 = SnapshotTable.deleteWhere(spark, root, "g", lit(true))      // v1
+    assert(SnapshotTable.read(spark, root).isEmpty)
+    val snaps = TableInspect.snapshots(spark, root).orderBy("version")
+      .select("version", "parent", "is_committed", "is_current", "kind",
+        "data_entries", "delete_refs")
+      .as[(Long, Long, Boolean, Boolean, String, Long, Long)].collect().toSeq
+    assert(snaps === Seq(
+      (0L, -1L, true, false, "manifested", 2L, 0L),
+      (v1, 0L, true, true, "manifested", 0L, 0L)))
+  }
 }
