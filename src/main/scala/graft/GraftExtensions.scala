@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-import graft.functions.{BloomContains, DotProduct, SimhashFingerprint}
+import graft.functions.GraftFunction
 
 /** Spark session extensions for the graft engine.
   *
@@ -11,20 +11,16 @@ import graft.functions.{BloomContains, DotProduct, SimhashFingerprint}
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` to get
   * the engine's native expressions in SQL and the DataFrame API:
   * `graft_dot(a, b)` (codegen'd float-array dot product),
+  * `graft_nearest_k(e, nrm, centroids, k)` (codegen'd k nearest
+  * centroids by cosine over a centroid literal),
   * `graft_simhash(hs)` (codegen'd 60-bit SimHash fingerprint), and
   * `graft_bloom_contains(filter, s)` (codegen'd bloom membership
   * probe over a serialized sketch literal).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier(DotProduct.name), DotProduct.info, DotProduct.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(SimhashFingerprint.name), SimhashFingerprint.info,
-        SimhashFingerprint.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(BloomContains.name), BloomContains.info,
-        BloomContains.builder))
+    GraftFunction.all.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
     // SQL MERGE INTO / UPDATE over snapshot tables: Spark's own
     // row-level rewrite only fires for SupportsRowLevelOperations
     // tables, so the analyzed nodes survive to this post-hoc rule,

@@ -71,39 +71,17 @@ case class BloomContains(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object BloomContains {
-
-  import java.io.ByteArrayOutputStream
-
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  val name = "graft_bloom_contains"
-
-  val info = new ExpressionInfo(classOf[BloomContains].getName, name)
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"$name expects 2 arguments")
-    BloomContains(args.head, args(1))
-  }
-
-  /** Imperative registration for sessions not built with
-    * [[graft.GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
+object BloomContains extends GraftFunction("graft_bloom_contains",
+    classOf[BloomContains], 2)(a => new BloomContains(a(0), a(1))) {
 
   /** One-call serialization of a built filter into the literal the
     * expression expects. */
   def serialize(bf: BloomFilter): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
+    val out = new java.io.ByteArrayOutputStream()
     bf.writeTo(out)
     out.toByteArray
   }
 
-  /** Column API: membership of `s` in the serialized filter `bytes`
-    * (requires registration). */
-  def contains(bytes: Column, s: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, bytes, s)
+  /** Column API: membership of `s` in the serialized filter `bytes`. */
+  def contains(bytes: Column, s: Column): Column = call(bytes, s)
 }

@@ -81,28 +81,9 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object DotProduct {
+object DotProduct extends GraftFunction("graft_dot", classOf[DotProduct], 2)(
+    a => new DotProduct(a(0), a(1))) {
 
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  val name = "graft_dot"
-
-  val info = new ExpressionInfo(classOf[DotProduct].getName, name)
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, s"$name expects 2 arguments")
-    DotProduct(args.head, args(1))
-  }
-
-  /** Imperative registration for sessions not built with
-    * [[graft.GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-
-  /** Column API: dot(a, b) in double (requires registration). */
-  def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, a, b)
+  /** Column API: dot(a, b) in double. */
+  def dot(a: Column, b: Column): Column = call(a, b)
 }

@@ -79,23 +79,8 @@ case class SimhashFingerprint(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object SimhashFingerprint {
+object SimhashFingerprint extends GraftFunction("graft_simhash",
+    classOf[SimhashFingerprint], 1)(a => new SimhashFingerprint(a(0))) {
 
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  val name = "graft_simhash"
-  val info = new ExpressionInfo(classOf[SimhashFingerprint].getName, name)
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, s"$name expects 1 argument")
-    SimhashFingerprint(args.head)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
-
-  def fingerprint(hs: Column): Column =
-    org.apache.spark.sql.functions.call_function(name, hs)
+  def fingerprint(hs: Column): Column = call(hs)
 }

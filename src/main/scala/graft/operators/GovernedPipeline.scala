@@ -203,7 +203,7 @@ object GovernedPipeline {
           Catalog.tableRoot(catalogRoot, "bronze"), "_ingestion_date",
           prev("bronze")))
       derive(spark, catalogRoot, base, prev, vB, lookbackHours,
-        failOnViolations, publishBronzeOnEmpty = true, rec)
+        failOnViolations, rec)
     }.merge
     finally batch.unpersist()
   }
@@ -223,8 +223,7 @@ object GovernedPipeline {
     Catalog.publish(catalogRoot) { (base, prev) =>
       requireBootstrapped(catalogRoot, base)
       derive(spark, catalogRoot, base, prev, prev("bronze"), lookbackHours,
-        failOnViolations, publishBronzeOnEmpty = false,
-        new Recorder(spark, retries, retryBackoffMs))
+        failOnViolations, new Recorder(spark, retries, retryBackoffMs))
     }.merge
 
   /** Shared derivation half of the incremental modes: from a (possibly
@@ -233,7 +232,7 @@ object GovernedPipeline {
     * nothing to publish). */
   private def derive(spark: SparkSession, catalogRoot: String, base: Long,
                      prev: Map[String, Long], vB: Long, lookbackHours: Int,
-                     failOnViolations: Boolean, publishBronzeOnEmpty: Boolean,
+                     failOnViolations: Boolean,
                      rec: Recorder): Option[Catalog.Staged] = {
     def tr(t: String) = Catalog.tableRoot(catalogRoot, t)
     def delta(t: String, df: DataFrame, pcol: String): Long =
@@ -264,9 +263,9 @@ object GovernedPipeline {
         else batchSilver.select("_trade_date").distinct()
           .collect().map(_.getDate(0)).sortBy(_.toString).toSeq
 
-      // nothing new to merge: publish just the bronze change (if any)
+      // nothing new to merge: publish just the bronze change, if any
       if (affectedDates.isEmpty)
-        return Option.when(publishBronzeOnEmpty)(
+        return Option.when(vB != prev("bronze"))(
           Catalog.Staged(Map("bronze" -> vB)))
       val dateLits = affectedDates.map(lit(_))
 

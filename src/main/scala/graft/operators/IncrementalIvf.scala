@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.DotProduct
 
@@ -50,8 +53,7 @@ object IncrementalIvf {
                   nlist: Int = 16): Long = {
     val exists = SnapshotTable.latestVersion(centRoot(root)) >= 0
     val n = Similarity.withNorms(batch)
-      .select(col("vec_id"), col("embedding").as("v_embedding"),
-        col("nrm").as("v_nrm")).persist()
+      .select("vec_id", "embedding", "nrm").persist()
     if (exists && quantizer.nonEmpty)
       throw new IllegalArgumentException(
         "index already has a quantizer: appending with a new one would " +
@@ -59,11 +61,7 @@ object IncrementalIvf {
     val cent =
       if (exists) readCentroids(spark, root)
       else {
-        val q = quantizer.getOrElse(
-          n.filter(col("vec_id") < nlist)
-            .select(col("vec_id").as("centroid_id"),
-              col("v_embedding").as("ct_embedding"),
-              col("v_nrm").as("ct_nrm")))
+        val q = quantizer.getOrElse(Similarity.lowestIds(n, nlist))
         // an empty quantizer would brick the index permanently: every
         // later append assigns against zero centroids (indexing nothing)
         // and the exists-guard forbids ever supplying a real one
@@ -76,19 +74,10 @@ object IncrementalIvf {
         SnapshotTable.commit(q, centRoot(root))
         readCentroids(spark, root)
       }
-    // nearest-centroid assignment over the BATCH only (argmax window
-    // on narrow triples, same shape as ivfTopK's index build)
-    val asg = n.crossJoin(broadcast(cent))
-      .withColumn("ccos",
-        DotProduct.dot(col("v_embedding"), col("ct_embedding")) /
-          (col("v_nrm") * col("ct_nrm")))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crn") === 1)
-      .select(col("vec_id"), col("centroid_id"),
-        col("v_embedding").as("embedding"), col("v_nrm").as("nrm"))
-      .persist()
+    // nearest-centroid assignment over the BATCH only: one narrow
+    // projection against the collected quantizer (ivfTopK's index build)
+    val asg = Similarity.centroids(cent).assign(n, "embedding", "nrm")
+      .select("vec_id", "centroid_id", "embedding", "nrm").persist()
     // replay safety at BATCH cost: only the touched partitions are read
     val lroot = listsRoot(root)
     // planning metadata, ≤ nlist rows — the same bounded driver-side
@@ -163,40 +152,31 @@ object IncrementalIvf {
   /** Probe the stored index: for each query (`query_id`, `embedding`),
     * rank exactly within its `nprobe` nearest lists and return the
     * top-k — identical semantics to [[Similarity.ivfTopK]] over the
-    * union of every appended batch. The probed centroid ids are
-    * resolved first (‖queries‖×nprobe planning-time rows) and applied
-    * as a literal filter, so the lists scan PRUNES to the probed
-    * partitions — the per-query cost an IVF index exists to buy. */
+    * union of every appended batch. One projection scores each query
+    * against the collected quantizer and is collected with its
+    * `nprobe` nearest centroid ids (‖queries‖ planning-time rows; no
+    * job when `queries` is a local relation). Those rows are the
+    * broadcast probe side, and their ids a literal filter, so the
+    * lists scan PRUNES to the probed partitions — the per-query cost
+    * an IVF index exists to buy. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
              nprobe: Int = 4, k: Int = 10): DataFrame = {
-    val cent = readCentroids(spark, root)
+    val cent = Similarity.centroids(readCentroids(spark, root))
     val q = Similarity.withNorms(queries)
       .select(col("vec_id").as("query_id"),
         col("embedding").as("q_embedding"), col("nrm").as("q_nrm"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("qcos",
-        DotProduct.dot(col("q_embedding"), col("ct_embedding")) /
-          (col("q_nrm") * col("ct_nrm")))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("qcos").desc, col("centroid_id"))))
-      .filter(col("prn") <= nprobe)
-      .select("query_id", "centroid_id", "q_embedding", "q_nrm")
-      .persist()
-    // planning metadata, ≤ queries×nprobe rows: one collect consumes the
-    // cached probe plan, then the cache is released — the probe side is
-    // rebuilt from the collected pairs joined back to the query relation
-    // (no cached block outlives this call)
-    val pairs = probes.select(col("query_id"), col("centroid_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    probes.unpersist()
-    val probed = pairs.map(_._2).distinct
+    val probeRows = q
+      .select(col("*"),
+        cent.nearest(col("q_embedding"), col("q_nrm"), nprobe).as("probes"))
+      .collect().toSeq
+      .flatMap(r => r.getSeq[Row](3).map(p => Row(r(0), p(0), r(1), r(2))))
+    val probed = probeRows.map(_.get(1)).distinct
     val pruneTo =
       if (probed.isEmpty) lit(false)
-      else col("centroid_id").isin(probed.toIndexedSeq: _*)
-    import spark.implicits._
-    val probeSide = pairs.toSeq.toDF("query_id", "centroid_id")
-      .join(q, "query_id")
+      else col("centroid_id").isin(probed: _*)
+    val probeSide = spark.createDataFrame(probeRows.asJava,
+      StructType(q.schema.head +: StructField("centroid_id", LongType) +:
+        q.schema.tail))
     SnapshotTable.read(spark, listsRoot(root))
       .filter(pruneTo)
       .join(broadcast(probeSide), Seq("centroid_id"))

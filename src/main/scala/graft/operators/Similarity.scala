@@ -25,13 +25,14 @@ import graft.functions.Hashing
   */
 object Similarity {
 
-  import graft.functions.DotProduct
+  import graft.functions.{DotProduct, NearestCentroids}
 
   private def ensureRegistered(df: DataFrame): Unit = {
     val spark = df.sparkSession
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(DotProduct.name)))
-      DotProduct.register(spark)
+    Seq(DotProduct, NearestCentroids).filterNot(f =>
+      spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)))
+      .foreach(_.register(spark))
   }
 
   /** vec_id, embedding, nrm — norm via the native codegen'd dot
@@ -42,6 +43,47 @@ object Similarity {
     emb.withColumn("nrm",
       sqrt(DotProduct.dot(col("embedding"), col("embedding"))))
   }
+
+  /** A centroid frame's rows as `graft_nearest_k`'s array literal. */
+  private[graft] final case class Centroids(array: Column, size: Int) {
+
+    /** Each row's `k` nearest centroids, best first. */
+    def nearest(emb: Column, nrm: Column, k: Int): Column =
+      NearestCentroids.nearestK(emb, nrm, array, k)
+
+    /** `frame` plus `centroid_id`, the nearest centroid to its `emb` —
+      * one narrow projection. With no centroids no row is kept, as the
+      * empty cross product kept none. */
+    def assign(frame: DataFrame, emb: String, nrm: String): DataFrame =
+      if (size == 0) frame.withColumn("centroid_id", lit(null).cast("bigint"))
+        .filter(lit(false))
+      else frame.withColumn("centroid_id",
+        nearest(col(emb), col(nrm), 1)(0)("centroid_id"))
+  }
+
+  /** Collect `cent` (`centroid_id`, `ct_embedding`, `ct_nrm`; at most
+    * nlist rows) on the driver into the literal every nearest-centroid
+    * decision here scores against. */
+  private[graft] def centroids(cent: DataFrame): Centroids = {
+    ensureRegistered(cent)
+    val sel = cent.select(col("centroid_id").cast("bigint"),
+      col("ct_embedding"), col("ct_nrm"))
+    val rows = sel.collect().toSeq
+    Centroids(org.apache.spark.sql.graft.GraftV1Wrap.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(rows,
+        org.apache.spark.sql.types.ArrayType(sel.schema))), rows.size)
+  }
+
+  /** The `k` lowest-id vectors of a normed frame as centroids — the
+    * deterministic quantizer (and k-means seed) of every index here. */
+  private[operators] def lowestIds(n: DataFrame, k: Int): DataFrame =
+    n.filter(col("vec_id") < k).select(col("vec_id").as("centroid_id"),
+      col("embedding").as("ct_embedding"), col("nrm").as("ct_nrm"))
+
+  /** The fixed query set (vec_id < nQueries) of a normed frame. */
+  private def queriesOf(n: DataFrame, nQueries: Int): DataFrame =
+    n.filter(col("vec_id") < nQueries).select(col("vec_id").as("query_id"),
+      col("embedding").as("q_embedding"), col("nrm").as("q_nrm"))
 
   private def cosine(prefixA: String, prefixB: String): Column =
     DotProduct.dot(col(s"${prefixA}_embedding"), col(s"${prefixB}_embedding")) /
@@ -91,9 +133,7 @@ object Similarity {
     * queries broadcast — the exact-correctness path. */
   def annTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 10): DataFrame = {
     val n = withNorms(emb).persist()
-    val q = n.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("nrm").as("q_nrm"))
+    val q = queriesOf(n, nQueries)
     val c = n.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("c_embedding"), col("nrm").as("c_nrm"))
     c.crossJoin(broadcast(q))
@@ -114,37 +154,36 @@ object Similarity {
     * groupBy(centroid) shuffle of narrow partial sums — the standard
     * scalable k-means loop (k×dim doubles per partition combine). Empty
     * clusters keep their previous centroid. */
-  def trainCentroids(emb: DataFrame, k: Int = 16, iters: Int = 5): DataFrame = {
-    val n = withNorms(emb).persist()
-    var cent = n.filter(col("vec_id") < k)
-      .select(col("vec_id").as("centroid_id"),
-        col("embedding").as("ct_embedding"), col("nrm").as("ct_nrm"))
-      .localCheckpoint() // lineage barrier: plan doubles per iteration
-    for (_ <- 1 to iters) {
-      val assigned = n
-        .select(col("vec_id"), col("embedding").as("v_embedding"),
-          col("nrm").as("v_nrm"))
-        .crossJoin(broadcast(cent))
-        .withColumn("ccos",
-          DotProduct.dot(col("v_embedding"), col("ct_embedding")) /
-            (col("v_nrm") * col("ct_nrm")))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id")
-            .orderBy(col("ccos").desc, col("centroid_id"))))
-        .filter(col("crn") === 1)
+  def trainCentroids(emb: DataFrame, k: Int = 16, iters: Int = 5): DataFrame =
+    lloyd(emb, k, iters) { assigned =>
       // mean per cluster: aggregate(zip) of double arrays, then rescale
-      val dim = Hashing.EmbDim
-      val means = assigned
+      assigned
         .groupBy("centroid_id")
         .agg(count(lit(1)).as("cn"),
-          array((0 until dim).map(i =>
+          array((0 until Hashing.EmbDim).map(i =>
             sum(element_at(col("v_embedding"), i + 1).cast("double"))): _*)
             .as("sums"))
         .select(col("centroid_id"),
           expr("transform(sums, s -> cast(s / cn as float))").as("new_emb"))
+    }
+
+  /** The Lloyd loop both trainers share: seed with the `k` lowest-id
+    * vectors, then per iteration assign every vector
+    * (`vec_id`, `v_embedding`, `v_nrm`, `centroid_id`) and replace each
+    * centroid by its `means` row (`centroid_id`, `new_emb`); a cluster
+    * without one keeps its centroid. */
+  private def lloyd(emb: DataFrame, k: Int, iters: Int)
+                   (means: DataFrame => DataFrame): DataFrame = {
+    val n = withNorms(emb).persist()
+    // lineage barrier: the plan would double per iteration
+    var cent = lowestIds(n, k).localCheckpoint()
+    for (_ <- 1 to iters) {
+      val assigned = centroids(cent).assign(n
+        .select(col("vec_id"), col("embedding").as("v_embedding"),
+          col("nrm").as("v_nrm")), "v_embedding", "v_nrm")
       val updated = cent
         .select(col("centroid_id"), col("ct_embedding").as("old_emb"))
-        .join(means, Seq("centroid_id"), "left")
+        .join(means(assigned), Seq("centroid_id"), "left")
         .select(col("centroid_id"),
           coalesce(col("new_emb"), col("old_emb")).as("embedding"))
       cent = withNorms(updated)
@@ -169,49 +208,20 @@ object Similarity {
     * partial-sums path (same quantizer contract, no ordered-fold
     * guarantee). */
   def trainCentroidsOrdered(emb: DataFrame, k: Int = 16,
-                            iters: Int = 1): DataFrame = {
-    val dim = Hashing.EmbDim
-    val n = withNorms(emb).persist()
-    var cent = n.filter(col("vec_id") < k)
-      .select(col("vec_id").as("centroid_id"),
-        col("embedding").as("ct_embedding"), col("nrm").as("ct_nrm"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val assigned = n
-        .select(col("vec_id"), col("embedding").as("v_embedding"),
-          col("nrm").as("v_nrm"))
-        .crossJoin(broadcast(cent))
-        .withColumn("ccos",
-          DotProduct.dot(col("v_embedding"), col("ct_embedding")) /
-            (col("v_nrm") * col("ct_nrm")))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id")
-            .orderBy(col("ccos").desc, col("centroid_id"))))
-        .filter(col("crn") === 1)
-      val means = assigned
+                            iters: Int = 1): DataFrame =
+    lloyd(emb, k, iters) { assigned =>
+      assigned
         .groupBy("centroid_id")
         .agg(count(lit(1)).as("cn"),
           sort_array(collect_list(struct(col("vec_id"), col("v_embedding"))))
             .as("ms"))
         .select(col("centroid_id"), expr(
           s"""transform(
-             |  aggregate(ms, array_repeat(cast(0 as double), $dim),
+             |  aggregate(ms, array_repeat(cast(0 as double), ${Hashing.EmbDim}),
              |    (acc, m) -> zip_with(acc, m.v_embedding,
              |      (x, y) -> x + cast(y as double))),
              |  s -> cast(s / cn as float))""".stripMargin).as("new_emb"))
-      val updated = cent
-        .select(col("centroid_id"), col("ct_embedding").as("old_emb"))
-        .join(means, Seq("centroid_id"), "left")
-        .select(col("centroid_id"),
-          coalesce(col("new_emb"), col("old_emb")).as("embedding"))
-      cent = withNorms(updated)
-        .select(col("centroid_id"), col("embedding").as("ct_embedding"),
-          col("nrm").as("ct_nrm"))
-        .localCheckpoint()
     }
-    n.unpersist()
-    cent
-  }
 
   /** IVF (inverted-file) ANN: the second classic corpus-scale index
     * besides LSH. A coarse quantizer of `nlist` centroids partitions the
@@ -226,52 +236,27 @@ object Similarity {
     * centroids (iterative Spark jobs over a sample) and keep everything
     * else here unchanged.
     *
-    * Scale shape: the assignment window shuffles only narrow
-    * (vec_id, centroid_id, cos) triples — embeddings are joined back on
-    * the already-partitioned key, and the resulting list table is
-    * persisted: that is THE IVF index, and at warehouse scale it is
-    * written out partitioned/bucketed by `centroid_id`
-    * (Layout.writeBucketed), making the probe join co-located and the
-    * per-query scan |corpus| × nprobe/nlist. Probes are broadcast. */
+    * Scale shape: the centroids (at most nlist rows) are collected once
+    * into a `graft_nearest_k` literal, so the assignment and the probes
+    * are narrow projections — no shuffle, no cross product. The
+    * assigned list table is persisted: that is THE IVF index, and at
+    * warehouse scale it is written out partitioned/bucketed by
+    * `centroid_id` (Layout.writeBucketed), making the probe join
+    * co-located and the per-query scan |corpus| × nprobe/nlist. Probes
+    * are broadcast. */
   def ivfTopK(emb: DataFrame, nlist: Int = 16, nprobe: Int = 4,
               nQueries: Int = 10, k: Int = 10,
               centroids: Option[DataFrame] = None): DataFrame = {
     val n = withNorms(emb).persist()
-    val cent = centroids.getOrElse(
-      n.filter(col("vec_id") < nlist)
-        .select(col("vec_id").as("centroid_id"),
-          col("embedding").as("ct_embedding"), col("nrm").as("ct_nrm")))
-    // inverted lists: nearest centroid per vector (narrow rows through
-    // the argmax window, embeddings re-joined on the partitioned key)
-    val asg = n
+    val cent = Similarity.centroids(centroids.getOrElse(lowestIds(n, nlist)))
+    // inverted lists: nearest centroid per vector
+    val lists = cent.assign(n
       .select(col("vec_id"), col("embedding").as("v_embedding"),
-        col("nrm").as("v_nrm"))
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos",
-        DotProduct.dot(col("v_embedding"), col("ct_embedding")) /
-          (col("v_nrm") * col("ct_nrm")))
-      .select(col("vec_id"), col("centroid_id"), col("ccos"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crn") === 1)
-      .select("vec_id", "centroid_id")
-    val lists = asg.join(n, "vec_id")
-      .select(col("vec_id"), col("centroid_id"),
-        col("embedding").as("v_embedding"), col("nrm").as("v_nrm"))
+        col("nrm").as("v_nrm")), "v_embedding", "v_nrm")
       .persist()
     // query → nprobe nearest centroids
-    val q = n.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("nrm").as("q_nrm"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("qcos",
-        DotProduct.dot(col("q_embedding"), col("ct_embedding")) /
-          (col("q_nrm") * col("ct_nrm")))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("qcos").desc, col("centroid_id"))))
-      .filter(col("prn") <= nprobe)
+    val probes = queriesOf(n, nQueries).select(col("*"),
+        inline(cent.nearest(col("q_embedding"), col("q_nrm"), nprobe)))
       .select("query_id", "centroid_id", "q_embedding", "q_nrm")
     // exact rank within the probed lists only
     lists.join(broadcast(probes), Seq("centroid_id"))
@@ -403,6 +388,41 @@ object Similarity {
       |  cast(x as double) * cast(y as double)), 0D,
       |  (acc, v) -> acc + v)""".stripMargin)
 
+  /** The `m` subvectors of `embedding` as exploded
+    * `s: struct<m, <field>>` rows, subspace order. */
+  private def subvectors(m: Int, field: String): Column = {
+    val sub = Hashing.EmbDim / m
+    explode(expr(s"""transform(sequence(0, ${m - 1}), mm ->
+      |named_struct('m', mm,
+      |  '$field', slice(embedding, mm * $sub + 1, $sub)))""".stripMargin))
+      .as("s")
+  }
+
+  /** ADC lookup table (`query_id`, `m`, `code`, `term`): each query
+    * subvector's dot product with every codeword of its subspace. */
+  private def pqLut(emb: DataFrame, cb: DataFrame, nQueries: Int,
+                    m: Int): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), subvectors(m, "qv"))
+      .select(col("query_id"), col("s.m").as("m"), col("s.qv").as("qv"))
+      .join(broadcast(cb), Seq("m"))
+      .withColumn("term", subDot("qv", "cw"))
+      .select("query_id", "m", "code", "term")
+
+  /** Top-k per query of (`query_id`, `vec_id`, `m`, `term`) rows, each
+    * pair scored by the subspace-ORDERED fold of its LUT terms. */
+  private def adcTopK(terms: DataFrame, k: Int): DataFrame =
+    terms.groupBy("query_id", "vec_id")
+      .agg(collect_list(struct(col("m"), col("term"))).as("ts"))
+      .withColumn("pq_score", expr(
+        "aggregate(array_sort(ts), 0D, (acc, s) -> acc + s.term)"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id")
+          .orderBy(col("pq_score").desc, col("vec_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("pq_score"), col("rank"))
+
   /** PQ codebook: `nCodes` codewords per subspace, taken from the
     * `nCodes` lowest-id vectors' subvectors — the deterministic
     * quantizer stance of [[ivfTopK]] (swap per-subspace k-means in at
@@ -411,11 +431,7 @@ object Similarity {
     val sub = Hashing.EmbDim / m
     require(sub * m == Hashing.EmbDim, s"$m subspaces must divide the dim")
     emb.filter(col("vec_id") < nCodes)
-      .select(col("vec_id").cast("int").as("code"),
-        explode(expr(s"""transform(sequence(0, ${m - 1}), mm ->
-          |named_struct('m', mm,
-          |  'cw', slice(embedding, mm * $sub + 1, $sub)))""".stripMargin))
-          .as("s"))
+      .select(col("vec_id").cast("int").as("code"), subvectors(m, "cw"))
       .select(col("s.m").as("m"), col("code"), col("s.cw").as("cw"))
   }
 
@@ -427,12 +443,7 @@ object Similarity {
     * rows, code tie-break). The codes table IS the index; at corpus
     * scale it is what gets stored and scanned. */
   def pqCodes(emb: DataFrame, codebook: DataFrame, m: Int = 8): DataFrame = {
-    val sub = Hashing.EmbDim / m
-    val subv = emb.select(col("vec_id"),
-      explode(expr(s"""transform(sequence(0, ${m - 1}), mm ->
-        |named_struct('m', mm,
-        |  'sv', slice(embedding, mm * $sub + 1, $sub)))""".stripMargin))
-        .as("s"))
+    val subv = emb.select(col("vec_id"), subvectors(m, "sv"))
       .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
     subv.join(broadcast(codebook), Seq("m"))
       .withColumn("d", subSqDist("sv", "cw"))
@@ -454,31 +465,10 @@ object Similarity {
     * PQ trade (bound-tested). */
   def annTopKPq(emb: DataFrame, nQueries: Int = 10, k: Int = 10,
                 m: Int = 8, nCodes: Int = 16): DataFrame = {
-    val sub = Hashing.EmbDim / m
     val cb = pqCodebook(emb, m, nCodes).persist()
     val codes = pqCodes(emb, cb, m).persist()
-    val qsub = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        explode(expr(s"""transform(sequence(0, ${m - 1}), mm ->
-          |named_struct('m', mm,
-          |  'qv', slice(embedding, mm * $sub + 1, $sub)))""".stripMargin))
-          .as("s"))
-      .select(col("query_id"), col("s.m").as("m"), col("s.qv").as("qv"))
-    val lut = qsub.join(broadcast(cb), Seq("m"))
-      .withColumn("term", subDot("qv", "cw"))
-      .select("query_id", "m", "code", "term")
-    codes.join(broadcast(lut), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(collect_list(struct(col("m"), col("term"))).as("ts"))
-      .withColumn("pq_score", expr(
-        "aggregate(array_sort(ts), 0D, (acc, s) -> acc + s.term)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("pq_score").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("pq_score"), col("rank"))
+    adcTopK(codes.join(broadcast(pqLut(emb, cb, nQueries, m)), Seq("m", "code"))
+      .filter(col("vec_id") =!= col("query_id")), k)
   }
 
   /** IVF-PQ ANN (Jégou et al. 2011; the FAISS IVFPQ production
@@ -501,70 +491,25 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, nlist: Int = 16, nprobe: Int = 4,
                 nQueries: Int = 10, k: Int = 10,
                 m: Int = 8, nCodes: Int = 16): DataFrame = {
-    val sub = Hashing.EmbDim / m
     val n = withNorms(emb).persist()
-    val cent = n.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("centroid_id"),
-        col("embedding").as("ct_embedding"), col("nrm").as("ct_nrm"))
-    // coarse assignment — ivfTopK's inverted-list build, narrow rows
-    val asg = n
-      .select(col("vec_id"), col("embedding").as("v_embedding"),
-        col("nrm").as("v_nrm"))
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos",
-        DotProduct.dot(col("v_embedding"), col("ct_embedding")) /
-          (col("v_nrm") * col("ct_nrm")))
-      .select(col("vec_id"), col("centroid_id"), col("ccos"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crn") === 1)
+    val cent = centroids(lowestIds(n, nlist))
+    // coarse assignment — ivfTopK's inverted-list build
+    val asg = cent.assign(n, "embedding", "nrm")
       .select("vec_id", "centroid_id")
     val cb = pqCodebook(emb, m, nCodes).persist()
     val codes = pqCodes(emb, cb, m).persist()
     // queries → nprobe nearest lists (broadcast), then the candidate
     // (query, vector) pairs — each vector lives in exactly ONE list,
     // so a pair appears at most once, no dedup
-    val q = n.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("nrm").as("q_nrm"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("qcos",
-        DotProduct.dot(col("q_embedding"), col("ct_embedding")) /
-          (col("q_nrm") * col("ct_nrm")))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("qcos").desc, col("centroid_id"))))
-      .filter(col("prn") <= nprobe)
+    val probes = queriesOf(n, nQueries).select(col("query_id"),
+        inline(cent.nearest(col("q_embedding"), col("q_nrm"), nprobe)))
       .select("query_id", "centroid_id")
     val cand = asg.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
-    // ADC: per-query LUT of subspace dots against every codeword,
-    // candidates score as the subspace-ORDERED fold of their codes'
-    // LUT terms (annTopKPq verbatim, restricted to probed lists)
-    val qsub = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        explode(expr(s"""transform(sequence(0, ${m - 1}), mm ->
-          |named_struct('m', mm,
-          |  'qv', slice(embedding, mm * $sub + 1, $sub)))""".stripMargin))
-          .as("s"))
-      .select(col("query_id"), col("s.m").as("m"), col("s.qv").as("qv"))
-    val lut = qsub.join(broadcast(cb), Seq("m"))
-      .withColumn("term", subDot("qv", "cw"))
-      .select("query_id", "m", "code", "term")
-    codes.join(cand, Seq("vec_id"))
-      .join(broadcast(lut), Seq("query_id", "m", "code"))
-      .groupBy("query_id", "vec_id")
-      .agg(collect_list(struct(col("m"), col("term"))).as("ts"))
-      .withColumn("pq_score", expr(
-        "aggregate(array_sort(ts), 0D, (acc, s) -> acc + s.term)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("pq_score").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("pq_score"), col("rank"))
+    // ADC: annTopKPq's scoring, restricted to the probed lists
+    adcTopK(codes.join(cand, Seq("vec_id"))
+      .join(broadcast(pqLut(emb, cb, nQueries, m)), Seq("query_id", "m", "code")), k)
   }
 
   /** SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023,
@@ -586,20 +531,10 @@ object Similarity {
   def semanticDedup(emb: DataFrame, k: Int = 16, iters: Int = 1,
                     threshold: Double = 0.4): DataFrame = {
     val n = withNorms(emb).persist()
-    val cent = trainCentroidsOrdered(n.drop("nrm"), k, iters)
-    val asg = n
+    val cent = centroids(trainCentroidsOrdered(n.drop("nrm"), k, iters))
+    val asg = cent.assign(n
       .select(col("vec_id"), col("embedding").as("v_embedding"),
-        col("nrm").as("v_nrm"))
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos",
-        DotProduct.dot(col("v_embedding"), col("ct_embedding")) /
-          (col("v_nrm") * col("ct_nrm")))
-      .select(col("vec_id"), col("centroid_id"), col("ccos"),
-        col("v_embedding"), col("v_nrm"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("ccos").desc, col("centroid_id"))))
-      .filter(col("crn") === 1)
+        col("nrm").as("v_nrm")), "v_embedding", "v_nrm")
       .select(col("vec_id"), col("centroid_id").as("cluster_id"),
         col("v_embedding"), col("v_nrm"))
       .persist()

@@ -79,6 +79,10 @@ object GraftV1Wrap {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The error `Divide` raises on a zero divisor under ANSI. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }
 
 /** Pre-CBO rule (runs AFTER Early Scan Push-Down built the wrapper,

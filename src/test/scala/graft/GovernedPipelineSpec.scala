@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bronze, Catalog, GovernedPipeline, PipelineRun, SnapshotTable}
 import graft.sources.Tables
+import graft.streaming.GovernedStream
 
 /** Pipeline runs as governed catalog transactions: staged, gated,
   * atomically published, rollback-able together with their watermark. */
@@ -14,18 +16,21 @@ class GovernedPipelineSpec extends GraftSuite {
   private val DataTables = Seq("bronze", "silver", "ohlcv_1m", "ohlcv_1h",
     "daily_metrics", "price_latest")
 
-  test("governed incremental equals a plain full rebuild; gate and rollback govern everything") {
-    val events = Tables.events(spark, sf)
-    val outFull = Files.createTempDirectory("graft-gov-full").toString
-    val cat = Files.createTempDirectory("graft-gov-cat").toString
-
+  /** The events split at 70 % of arrivals: (earlier, later). */
+  private def split(events: DataFrame): (DataFrame, DataFrame) = {
     val ing = expr("timestampadd(SECOND, cast(event_id % 600 as int), ts)")
     val n = events.count()
     val cut = events.select(ing.as("_ing")).orderBy("_ing")
       .limit((n * 7 / 10).toInt).agg(max("_ing")).head()
       .getAs[java.time.LocalDateTime](0)
-    val e1 = events.filter(ing <= lit(cut))
-    val e2 = events.filter(ing > lit(cut))
+    (events.filter(ing <= lit(cut)), events.filter(ing > lit(cut)))
+  }
+
+  test("governed incremental equals a plain full rebuild; gate and rollback govern everything") {
+    val events = Tables.events(spark, sf)
+    val outFull = Files.createTempDirectory("graft-gov-full").toString
+    val cat = Files.createTempDirectory("graft-gov-cat").toString
+    val (e1, e2) = split(events)
 
     PipelineRun.run(spark, sf, outFull)
     assert(GovernedPipeline.runFull(spark, sf, cat, eventsOverride = Some(e1)) === 0L)
@@ -89,5 +94,27 @@ class GovernedPipelineSpec extends GraftSuite {
     assertMatchesFullRebuild()
     assert(Catalog.read(spark, cat, "watermark").head()
       .getAs[java.time.LocalDateTime](0) === wm1)
+  }
+
+  test("an empty incremental batch publishes nothing, unless streamed bronze awaits a refresh") {
+    val events = Tables.events(spark, sf)
+    val cat = Files.createTempDirectory("graft-gov-empty").toString
+    val (e1, e2) = split(events)
+    assert(GovernedPipeline.runFull(spark, sf, cat, eventsOverride = Some(e1)) === 0L)
+    assert(GovernedPipeline.runIncremental(spark, cat, events.limit(0)) === 0L)
+    assert(Catalog.commits(cat) === Seq(0L))
+
+    // a streamed micro-batch no refresh has processed yet: the empty run
+    // still derives silver and the marts from it, bronze as streamed
+    val c = GovernedStream.commitBatch(spark, cat, "src", 0L,
+      Bronze.ingest(e2)).get
+    val streamed = Catalog.tableVersions(cat, c)
+    val derived = GovernedPipeline.runIncremental(spark, cat, events.limit(0))
+    assert(derived === c + 1)
+    val published = Catalog.tableVersions(cat, derived)
+    assert(published("bronze") === streamed("bronze"))
+    (DataTables.filterNot(_ == "bronze") :+ "watermark").foreach { t =>
+      assert(published(t) !== streamed(t), s"$t must be derived")
+    }
   }
 }

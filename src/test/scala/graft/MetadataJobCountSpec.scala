@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.MaintenanceJobCountSpec.jobsOf
-import graft.operators.{Catalog, SnapshotTable}
+import graft.operators.{Catalog, IncrementalIvf, SnapshotTable}
 import graft.streaming.GovernedStream
 
 /** Table metadata costs no Spark job: every commit records its schema,
@@ -80,6 +80,31 @@ class MetadataJobCountSpec extends GraftSuite {
       Catalog.foldTable(spark, cat, "d")) === c)
     assert(pin(0, "compactTable with nothing fragmented")(
       Catalog.compactTable(spark, cat, "d", "p")) === c)
+  }
+
+  test("an IVF search of local queries and a steady-state append run few jobs") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding")
+    def local(from: Long, n: Int, idOffset: Long): DataFrame =
+      emb.filter(col("vec_id") >= from).orderBy("vec_id").limit(n).collect()
+        .map(r => (r.getLong(0) + idOffset, r.getSeq[Float](1)))
+        .toSeq.toDF("vec_id", "embedding")
+    val root = Files.createTempDirectory("graft-jobs-ivf").toString
+    IncrementalIvf.appendBatch(spark, root, emb.filter(col("vec_id") < 200))
+    IncrementalIvf.appendBatch(spark, root, local(200L, 50, 0L))
+    // the centroid and touched-list collects, then the adaptive stages
+    // of the replay probe and the lists append; the assignment is a
+    // projection inside them (the cross product + window measured 10)
+    val batch = local(250L, 50, 0L)
+    pin(8, "steady-state appendBatch")(
+      IncrementalIvf.appendBatch(spark, root, batch))
+    // the centroid collect, the lists listing (over 32 partition dirs)
+    // and the adaptive stages of the lists scan and rank window; the
+    // queries' probes fold over the local relation (the probe window
+    // and its join back onto the queries measured 9)
+    val queries = local(0L, 32, 1000000000L)
+    assert(pin(5, "search of 32 local queries")(
+      IncrementalIvf.search(spark, root, queries).collect()).length === 320)
   }
 
   /** Spark's own per-file min/max: the values the stats must hold. */
