@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * Spark-first: features are the EXISTING [[TextAnalysis.quality]] /
   * repetition signals (codegen'd projections), training is
   * `spark.ml`'s distributed L-BFGS logistic regression over the
-  * assembled vectors, scoring broadcasts the model. Iterative
-  * float optimization is NOT oracle-hashable (like
-  * [[Similarity.trainCentroids]]), so this is a library component:
+  * assembled vectors, scoring is one projection of the fitted
+  * coefficients. Iterative float optimization is NOT oracle-hashable
+  * (like [[Similarity.trainCentroids]]), so this is a library component:
   * the spec pins separability on planted junk, probability shape,
   * and the holdout flow through [[TextAnalysis.datasetSplit]]. */
 object QualityClassifier {
@@ -58,12 +58,19 @@ object QualityClassifier {
       .fit(assemble(labelled.getOrElse(features(docs))))
 
   /** Score the corpus: (doc_id, quality_prob, quality_keep) — one
-    * projection with the broadcast model, the 100 TB shape. */
+    * projection, the 100 TB shape. The model's probability
+    * `1 / (1 + exp(-(w·x + b)))` is built as a Column from its
+    * coefficients and intercept on the driver, so no model object (whose
+    * training summary holds the session) rides a task closure. */
   def score(docs: DataFrame, model: LogisticRegressionModel,
-            threshold: Double = 0.5): DataFrame =
-    model.transform(assemble(features(docs)))
+            threshold: Double = 0.5): DataFrame = {
+    val w = model.coefficients.toArray
+    val margin = FeatureCols.indices
+      .map(i => col(FeatureCols(i)).cast("double") * lit(w(i)))
+      .reduce(_ + _) + lit(model.intercept)
+    features(docs).na.fill(0.0, FeatureCols)
       .select(col("doc_id"),
-        element_at(org.apache.spark.ml.functions
-          .vector_to_array(col("probability")), 2).as("quality_prob"))
+        (lit(1.0) / (lit(1.0) + exp(-margin))).as("quality_prob"))
       .withColumn("quality_keep", col("quality_prob") >= threshold)
+  }
 }

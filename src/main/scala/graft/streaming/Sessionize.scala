@@ -129,127 +129,6 @@ object Sessionize {
     q.awaitTermination()
   }
 
-  /** The same per-user session state machine on Spark 4's
-    * `transformWithState` (the successor of `flatMapGroupsWithState`):
-    * the open session lives in a named [[org.apache.spark.sql
-    * .streaming.ValueState]], and session close rides an EVENT-TIME
-    * TIMER registered at `last_event + gap + 1` — re-arming deletes
-    * the previous timer first (timers are not named; a stale one
-    * would close a session that since grew). Semantics are
-    * spec-pinned identical to [[sessionizeGroup]]: the equivalence
-    * suite runs on both engines. */
-  private class SessionProcessor(gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, Session] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig}
-
-    @transient private var open: org.apache.spark.sql.streaming.ValueState[OpenSession] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode)
-        : Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession],
-        TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, events: Iterator[Event],
-                                 timerValues: TimerValues)
-        : Iterator[Session] = {
-      val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.value))
-      val init = if (open.exists()) Some(open.get()) else None
-      val (closed, stillOpen) = foldEvents(gapMs, init, userId, sorted)
-      stillOpen.foreach { s =>
-        open.update(s)
-        // one live timer per key: drop the stale arm before re-arming
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(s.last_ms + gapMs + 1)
-      }
-      closed.iterator
-    }
-
-    override def handleExpiredTimer(userId: Long,
-                                    timerValues: TimerValues,
-                                    expiredTimerInfo: ExpiredTimerInfo)
-        : Iterator[Session] = {
-      // watermark passed last_ms + gap: the session can never grow
-      if (!open.exists()) return Iterator.empty
-      val s = open.get()
-      open.clear()
-      Iterator.single(Session(userId, s.start_ms, s.last_ms, s.n, s.sum))
-    }
-  }
-
-  /** [[sessionsStream]] on the `transformWithState` engine — same
-    * checkpointed exactly-once contract; requires the RocksDB state
-    * store provider. The query runs on a DEDICATED `newSession()`
-    * (SQLConf is session-scoped): setting the provider on the
-    * caller's session and holding it through a blocking
-    * `awaitTermination` would silently re-provider any concurrent
-    * streaming query started on the same session in that window, and
-    * a crash between set and restore would leave the caller's
-    * session mutated for racing queries even though `finally`
-    * eventually restores it. */
-  def sessionsStreamTws(outer: SparkSession, srcDir: String, outDir: String,
-                        checkpointDir: String, gapMinutes: Int = 30,
-                        maxFilesPerTrigger: Int = 0): Unit = {
-    val spark = outer.newSession()
-    // inherit the caller's runtime conf (newSession starts from
-    // SparkContext defaults — silently dropping the caller's shuffle
-    // partitions / timezone / streaming tuning would be its own bug);
-    // static or read-only entries refuse to set, skip them
-    outer.conf.getAll.foreach { case (k, v) =>
-      try spark.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    locally {
-      val reader = spark.readStream.schema(srcSchema)
-      val withRate =
-        if (maxFilesPerTrigger > 0)
-          reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-        else reader
-      val evs = withRate.parquet(srcDir)
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[Event]
-      val q = evs.groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor(gapMinutes * 60000L),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF().writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-  }
-
-  /** [[sessions]] on the `transformWithState` engine (the equivalence
-    * suite's second leg). */
-  def sessionsTws(spark: SparkSession, dir: String,
-                  gapMinutes: Int = 30): DataFrame = {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-sessions-tws")
-    val (src, out, cp) = (s"$tmp/src", s"$tmp/out", s"$tmp/cp")
-    val evs = Tables.events(spark, dir)
-      .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-        col("value"))
-    evs.write.mode("overwrite").parquet(src)
-    sessionsStreamTws(spark, src, out, cp, gapMinutes)
-    val gapMs = gapMinutes * 60000L
-    val maxTs = evs.agg(max("ts")).head().getTimestamp(0)
-    val sentinelTs = new java.sql.Timestamp(maxTs.getTime + gapMs + 60000L)
-    Seq((SentinelUser, sentinelTs, 0.0)).toDF("user_id", "ts", "value")
-      .write.mode("append").parquet(src)
-    sessionsStreamTws(spark, src, out, cp, gapMinutes)
-    spark.read.parquet(out).filter(col("user_id") =!= SentinelUser)
-  }
-
   /** Finite-replay runner over the events table: streams all events
     * (multi-batch safe), then drains still-open sessions by appending a
     * far-future sentinel event and re-running the checkpointed query —

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.{Catalog, SnapshotTable}
 import graft.streaming.GovernedStream
@@ -21,10 +20,9 @@ class FoldCadenceSpec extends graft.GraftSuite {
   test("connector Update sink keeps live sidecars under the fold threshold") {
     val root =
       Files.createTempDirectory("graft-foldsink").toString + "/t"
-    val sink = new GraftSink(root, Seq("day"),
-      OutputMode.Update(), new CaseInsensitiveStringMap(java.util.Map.of(
-        "path", root, "txnAppId", "foldw", "mergeKeys", "k",
-        "foldThreshold", "3")))
+    val sink = GraftStreaming.sinkOf(Map(
+        "path" -> root, "txnAppId" -> "foldw", "mergeKeys" -> "k",
+        "foldThreshold" -> "3"), Seq("day"), OutputMode.Update())
     // 10 triggers, each upserting the same two keys with new values
     (0 until 10).foreach { b =>
       sink.addBatch(b.toLong,
@@ -46,6 +44,31 @@ class FoldCadenceSpec extends graft.GraftSuite {
       .queryExecution.executedPlan.toString
     val antiJoins = "LeftAnti".r.findAllIn(plan).size
     assert(antiJoins <= 3, s"plan carries $antiJoins anti-joins:\n$plan")
+  }
+
+  test("connector Update sink on a governed table honours foldThreshold") {
+    val cat = Files.createTempDirectory("graft-foldgovsink").toString + "/cat"
+    Catalog.transactDelta(cat, Seq(("t",
+      Seq(("a", -1L, "d1")).toDF("k", "n", "day"), "day")))
+    val sink = GraftStreaming.sinkOf(Map(
+        "path" -> "t", "catalog" -> cat, "txnAppId" -> "foldw",
+        "mergeKeys" -> "k", "foldThreshold" -> "3"),
+      Seq("day"), OutputMode.Update())
+    def debt = SnapshotTable.morDebt(Catalog.tableRoot(cat, "t"),
+      Catalog.tableVersions(cat)("t"))
+    (0 until 10).foreach { b =>
+      sink.addBatch(b.toLong,
+        Seq(("a", b.toLong, "d1"), ("b", b * 10L, "d2"))
+          .toDF("k", "n", "day"))
+      assert(debt <= 3, s"governed sink debt $debt after batch $b")
+    }
+    val rows = Catalog.read(spark, cat, "t").orderBy("k")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(rows === Seq(("a", 9L), ("b", 90L)))
+    // a replayed batch id is skipped through the fold commits
+    sink.addBatch(5L, Seq(("a", 555L, "d1")).toDF("k", "n", "day"))
+    assert(Catalog.read(spark, cat, "t").filter("k = 'a'")
+      .head.getLong(1) === 9L)
   }
 
   test("governed upsert stream folds as atomic catalog commits; debt stays bounded") {

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.SnapshotTable
+import graft.streaming.GovernedStream
 
 /** `format("graft")` as a Structured Streaming SOURCE and SINK: the
   * source streams a snapshot table by VERSION offsets (bootstrap +
@@ -19,26 +21,63 @@ class GraftStreamingSpec extends GraftSuite {
   private def tmp(): String =
     Files.createTempDirectory("graft-streamio").toString
 
+  private def seedRows: DataFrame =
+    Seq(("a", 1L, "d1"), ("b", 2L, "d1")).toDF("k", "n", "day")
+
   private def seeded(dir: String): String = {
     val root = s"$dir/t"
-    SnapshotTable.commitAppend(
-      Seq(("a", 1L, "d1"), ("b", 2L, "d1")).toDF("k", "n", "day"),
-      root, "day")
+    SnapshotTable.commitAppend(seedRows, root, "day")
     root
   }
+
+  /** A streamed table seeded with rows a and b: `load(path)` with
+    * `opts` reads it, and each writer commits one new offset. */
+  private case class Streamed(kind: String, opts: Map[String, String],
+                              path: String, append: DataFrame => Unit,
+                              upsert: DataFrame => Unit,
+                              delete: String => Unit)
+
+  private def plainTable(dir: String): Streamed = {
+    val root = seeded(dir)
+    Streamed("plain", Map.empty, root,
+      SnapshotTable.commitAppend(_, root, "day"),
+      SnapshotTable.upsertMor(spark, root, "day", _, Seq("k")),
+      k => SnapshotTable.deleteWhere(spark, root, "day", col("k") === k))
+  }
+
+  /** The same table governed: offsets are catalog commits, each writer
+    * publishes one through the streaming commit protocol. */
+  private def governedTable(dir: String): Streamed = {
+    val cat = s"$dir/cat"
+    val batchIds = Iterator.from(0).map(_.toLong)
+    def append(df: DataFrame): Unit = GovernedStream.commitBatch(spark, cat,
+      "w", batchIds.next(), df, table = "t", partitionCol = "day")
+    append(seedRows)
+    Streamed("governed", Map("catalog" -> cat), "t", append,
+      GovernedStream.commitUpsertBatch(spark, cat, "t", "day", Seq("k"), "w",
+        batchIds.next(), _),
+      k => GovernedStream.commitCdcBatch(spark, cat, "t", "day", Seq("k"),
+        "w", batchIds.next(), upserts = seedRows.limit(0),
+        deleteKeys = Seq(k).toDF("k")))
+  }
+
+  /** The source options run one code path on either kind of table; the
+    * plain case keeps the bare test name. */
+  private val kinds: Seq[(String, String => Streamed)] =
+    Seq("" -> plainTable, " (governed)" -> governedTable)
 
   /** Drain the graft source into a parquet FILE sink (recovery-capable,
     * unlike the memory sink, so restarts from the same checkpoint work). */
   private def drainToFiles(root: String, cp: String, out: String,
-                           extra: Map[String, String] = Map.empty): Unit = {
-    val reader = spark.readStream.format("graft")
-    extra.foreach { case (k, v) => reader.option(k, v) }
-    val q = reader.load(root)
+                           extra: Map[String, String] = Map.empty)
+      : StreamingQuery = {
+    val q = spark.readStream.format("graft").options(extra).load(root)
       .writeStream.format("parquet")
       .option("checkpointLocation", cp)
       .trigger(Trigger.AvailableNow())
       .start(out)
     q.awaitTermination()
+    q
   }
 
   test("source: bootstrap snapshot, then each restart delivers only what arrived") {
@@ -56,8 +95,11 @@ class GraftStreamingSpec extends GraftSuite {
       root, "day")
     SnapshotTable.commitAppend(Seq(("d", 4L, "d2")).toDF("k", "n", "day"),
       root, "day")
-    drainToFiles(root, cp, out)
+    val q = drainToFiles(root, cp, out)
     assert(spark.read.parquet(out).count() === 4)
+    // the two commits arrive as ONE batch of only the new rows
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+      === Seq(2L))
 
     // nothing new: a no-op run
     drainToFiles(root, cp, out)
@@ -66,45 +108,68 @@ class GraftStreamingSpec extends GraftSuite {
       === Array("a", "b", "c", "d"))
   }
 
-  test("source: startingVersion=latest skips existing data; a number starts mid-history") {
-    val dir = tmp(); val root = seeded(dir)
+  for ((suffix, table) <- kinds) {
+    test("source: startingVersion=latest skips existing data; a number starts mid-history" + suffix) {
+      val dir = tmp(); val t = table(dir)
 
-    // latest: the seed snapshot is skipped; only the later append flows
-    drainToFiles(root, s"$dir/cpL", s"$dir/outL",
-      Map("startingVersion" -> "latest"))
-    SnapshotTable.commitAppend(Seq(("c", 3L, "d2")).toDF("k", "n", "day"),
-      root, "day") // v1
-    drainToFiles(root, s"$dir/cpL", s"$dir/outL",
-      Map("startingVersion" -> "latest"))
-    assert(spark.read.parquet(s"$dir/outL").select("k").as[String]
-      .collect().toSeq === Seq("c"))
+      // latest: the seed snapshot is skipped; only the later append flows
+      val latest = t.opts + ("startingVersion" -> "latest")
+      drainToFiles(t.path, s"$dir/cpL", s"$dir/outL", latest)
+      t.append(Seq(("c", 3L, "d2")).toDF("k", "n", "day")) // offset 1
+      drainToFiles(t.path, s"$dir/cpL", s"$dir/outL", latest)
+      assert(spark.read.parquet(s"$dir/outL").select("k").as[String]
+        .collect().toSeq === Seq("c"))
 
-    // startingVersion=1 → version 1's appends onward, no snapshot
-    drainToFiles(root, s"$dir/cpN", s"$dir/outN",
-      Map("startingVersion" -> "1"))
-    assert(spark.read.parquet(s"$dir/outN").select("k").as[String]
-      .collect().toSeq === Seq("c"))
-  }
+      // startingVersion=1 → offset 1's appends onward, no snapshot
+      drainToFiles(t.path, s"$dir/cpN", s"$dir/outN",
+        t.opts + ("startingVersion" -> "1"))
+      assert(spark.read.parquet(s"$dir/outN").select("k").as[String]
+        .collect().toSeq === Seq("c"))
+    }
 
-  test("source: maxVersionsPerTrigger splits a backlog into rate-limited batches") {
-    val dir = tmp(); val root = seeded(dir); val cp = s"$dir/cp"
-    for (i <- 2 to 4)
-      SnapshotTable.commitAppend(
-        Seq((s"k$i", i.toLong, "d2")).toDF("k", "n", "day"), root, "day")
+    test("source: maxVersionsPerTrigger splits a backlog into rate-limited batches" + suffix) {
+      val dir = tmp(); val t = table(dir); val cp = s"$dir/cp"
+      for (i <- 2 to 4)
+        t.append(Seq((s"k$i", i.toLong, "d2")).toDF("k", "n", "day"))
 
-    val q = spark.readStream.format("graft")
-      .option("maxVersionsPerTrigger", "1")
-      .load(root)
-      .writeStream.format("memory").queryName("gs_rate")
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // every row arrives exactly once…
-    assert(spark.table("gs_rate").count() === 5)
-    // …across MULTIPLE rate-limited batches (bootstrap v0, then v1..v3)
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    assert(batches >= 3, s"expected a split backlog, got $batches batches")
+      val q = spark.readStream.format("graft").options(t.opts)
+        .option("maxVersionsPerTrigger", "1")
+        .load(t.path)
+        .writeStream.format("memory").queryName(s"gs_rate_${t.kind}")
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // every row arrives exactly once…
+      assert(spark.table(s"gs_rate_${t.kind}").count() === 5)
+      // …across MULTIPLE rate-limited batches (bootstrap 0, then 1..3)
+      val batches = q.recentProgress.count(_.numInputRows > 0)
+      assert(batches >= 3, s"expected a split backlog, got $batches batches")
+    }
+
+    test("CDC source: readChangeFeed streams keyed diffs across non-append commits" + suffix) {
+      val dir = tmp(); val t = table(dir)
+      val (cp, out) = (s"$dir/cp", s"$dir/out")
+      def drain(): Unit = drainToFiles(t.path, cp, out, t.opts ++ Map(
+        "readChangeFeed" -> "true", "changeKey" -> "k"))
+
+      drain()
+      val boot = spark.read.parquet(out)
+      assert(boot.count() === 2)
+      assert(boot.filter(col("_change_type") === "insert").count() === 2)
+
+      // an upsert (equality-delete commit) that also brings a new key,
+      // and a delete — histories the APPEND feed refuses — stream
+      // through as update/insert/delete images
+      t.upsert(Seq(("a", 10L, "d1"), ("e", 5L, "d2")).toDF("k", "n", "day"))
+      t.delete("b")
+      drain()
+      val feed = spark.read.parquet(out)
+        .filter(col("_commit_version") > 0)
+        .select("k", "_change_type").as[(String, String)].collect().sorted
+      assert(feed.toSeq === Seq(("a", "update_postimage"),
+        ("a", "update_preimage"), ("b", "delete"), ("e", "insert")))
+    }
   }
 
   test("source: maxBytes/maxFilesPerTrigger drain a backlog in bounded batches and resume across restarts") {
@@ -397,39 +462,6 @@ class GraftStreamingSpec extends GraftSuite {
     run()
     assert(Catalog.read(spark, cat, "trades").count() === 3)
     assert(Catalog.latestCommit(cat) === c1 + 1)
-  }
-
-  test("CDC source: readChangeFeed streams keyed diffs across non-append commits") {
-    val dir = tmp(); val root = seeded(dir)
-    val (cp, out) = (s"$dir/cp", s"$dir/out")
-
-    def drain(): Unit = {
-      val q = spark.readStream.format("graft")
-        .option("readChangeFeed", "true").option("changeKey", "k")
-        .load(root)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .start(out)
-      q.awaitTermination()
-    }
-
-    drain()
-    val boot = spark.read.parquet(out)
-    assert(boot.count() === 2)
-    assert(boot.filter(col("_change_type") === "insert").count() === 2)
-
-    // an upsert (equality-delete commit) and a CoW delete — histories
-    // the APPEND feed refuses — stream through as update/delete images
-    SnapshotTable.upsertMor(spark, root, "day",
-      Seq(("a", 10L, "d1")).toDF("k", "n", "day"), Seq("k"))
-    SnapshotTable.deleteWhere(spark, root, "day", col("k") === "b")
-    drain()
-    val feed = spark.read.parquet(out)
-      .filter(col("_commit_version") > 0)
-      .select("k", "_change_type").as[(String, String)].collect().sorted
-    assert(feed.toSeq === Seq(("a", "update_postimage"),
-      ("a", "update_preimage"), ("b", "delete")))
   }
 
   test("governed CDC sink: Debezium-shaped batches upsert and tombstone atomically") {

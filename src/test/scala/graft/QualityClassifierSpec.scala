@@ -21,7 +21,17 @@ class QualityClassifierSpec extends GraftSuite {
     }.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("junk")))
 
+  // a session that has run a Dataset.observe holds an initialised
+  // ObservationManager, which is not serializable: training and scoring
+  // must not ship anything that reaches the session to a task
+  private def observeFirst(): Unit = {
+    val obs = org.apache.spark.sql.Observation("qc")
+    assert(spark.range(3).observe(obs, count(lit(1)).as("n")).count() === 3)
+    assert(obs.get("n") === 3L)
+  }
+
   test("the model separates planted junk from corpus text") {
+    observeFirst()
     val model = QualityClassifier.train(corpus)
     val scored = QualityClassifier.score(corpus, model)
     assert(scored.count() === 160)
@@ -41,7 +51,28 @@ class QualityClassifierSpec extends GraftSuite {
     assert(junkKept <= 4, s"$junkKept junk docs kept")
   }
 
+  test("scoring reproduces the model's own probabilities") {
+    observeFirst()
+    val model = QualityClassifier.train(corpus)
+    // the model's probability per doc, computed on the driver
+    val own = new org.apache.spark.ml.feature.VectorAssembler()
+      .setInputCols(QualityClassifier.FeatureCols.toArray)
+      .setOutputCol("features").setHandleInvalid("keep")
+      .transform(QualityClassifier.features(corpus)
+        .na.fill(0.0, QualityClassifier.FeatureCols))
+      .select("doc_id", "features").collect()
+      .map(r => r.getLong(0) -> model.predictProbability(
+        r.getAs[org.apache.spark.ml.linalg.Vector](1))(1)).toMap
+    val scored = QualityClassifier.score(corpus, model)
+      .select("doc_id", "quality_prob").as[(Long, Double)].collect()
+    assert(scored.length === 160)
+    scored.foreach { case (id, p) =>
+      assert(math.abs(p - own(id)) < 1e-12, s"doc $id: $p vs ${own(id)}")
+    }
+  }
+
   test("holdout flow: train on the train split, score the test split") {
+    observeFirst()
     val split = TextAnalysis.datasetSplit(corpus)
     val train = corpus.join(split.filter(col("split") === "train")
       .select("doc_id"), "doc_id")

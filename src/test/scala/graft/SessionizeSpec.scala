@@ -89,63 +89,6 @@ class SessionizeSpec extends GraftSuite {
     assert(maxDiff < 1e-6)
   }
 
-  test("transformWithState sessions match the batch sessionization (same contract)") {
-    // VERDICT r13 #8: the Spark 4 successor of flatMapGroupsWithState,
-    // behind the SAME tested contract — ValueState + event-time timers
-    // on the RocksDB provider
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val providerBefore = spark.conf.getOption(providerKey)
-    val stream = Sessionize.sessionsTws(spark, sf, gapMinutes = 30)
-    // the RocksDB provider is set on a DEDICATED newSession — the
-    // caller's session conf must be untouched (a concurrent query on
-    // this session must not silently inherit the provider)
-    assert(spark.conf.getOption(providerKey) === providerBefore)
-    val batch = Sessionize.sessionsBatch(spark, sf, gapMinutes = 30)
-    assert(stream.count() > 0)
-    assert(stream.count() === batch.count())
-    val sKeys = stream.select("user_id", "session_start_ms",
-      "session_end_ms", "n_events")
-    val bKeys = batch.select("user_id", "session_start_ms",
-      "session_end_ms", "n_events")
-    assert(sKeys.exceptAll(bKeys).count() === 0)
-    assert(bKeys.exceptAll(sKeys).count() === 0)
-    val joined = stream.as("s").join(batch.as("b"),
-      Seq("user_id", "session_start_ms", "session_end_ms"))
-    val maxDiff = joined
-      .select(max(abs(col("s.total_value") - col("b.total_value"))))
-      .head().getDouble(0)
-    assert(maxDiff < 1e-6)
-  }
-
-  test("transformWithState survives a micro-batch split (state + timers checkpoint)") {
-    val tmp = Files.createTempDirectory("graft-sess-twsmb")
-    val src = Files.createDirectories(tmp.resolve("src"))
-    val (out, cp) = (tmp.resolve("out").toString, tmp.resolve("cp").toString)
-    val evs = Tables.events(spark, sf)
-      .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("value"))
-    val b = evs.selectExpr("min(ts) AS lo", "max(ts) AS hi").head()
-    val (lo, hi) = (b.getTimestamp(0).getTime, b.getTimestamp(1).getTime)
-    val cut = new java.sql.Timestamp(lo + (hi - lo) / 2)
-    addSliceFile(src, evs.filter(col("ts") <= lit(cut)), 0)
-    addSliceFile(src, evs.filter(col("ts") > lit(cut)), 1)
-    Sessionize.sessionsStreamTws(spark, src.toString, out, cp,
-      gapMinutes = 30, maxFilesPerTrigger = 1)
-    import spark.implicits._
-    val sentinelTs = new java.sql.Timestamp(hi + 30 * 60000L + 60000L)
-    addSliceFile(src,
-      Seq((Sessionize.SentinelUser, sentinelTs, 0.0)).toDF("user_id", "ts", "value"), 2)
-    Sessionize.sessionsStreamTws(spark, src.toString, out, cp,
-      gapMinutes = 30, maxFilesPerTrigger = 1)
-    val stream = spark.read.parquet(out)
-      .filter(col("user_id") =!= Sessionize.SentinelUser)
-    val batch = Sessionize.sessionsBatch(spark, sf, gapMinutes = 30)
-    assert(stream.count() === batch.count())
-    val sKeys = stream.select("user_id", "session_start_ms", "session_end_ms", "n_events")
-    val bKeys = batch.select("user_id", "session_start_ms", "session_end_ms", "n_events")
-    assert(sKeys.exceptAll(bKeys).count() === 0)
-    assert(bKeys.exceptAll(sKeys).count() === 0)
-  }
-
   test("sessionsExact (oracle contract) matches sessionsBatch boundaries with decimal sums") {
     val exact = Sessionize.sessionsExact(spark, sf, gapMinutes = 30)
     val batch = Sessionize.sessionsBatch(spark, sf, gapMinutes = 30)
