@@ -277,10 +277,11 @@ object Catalog {
     * table's version at the base (-1 when the base has no such table)
     * and returns the staged version — -1 or the base version itself
     * means nothing was staged, as in `SnapshotTable.publish`, and the
-    * base commit is returned. */
-  private[graft] def publishTable(root: String, table: String)
+    * base commit is returned. `restage` as in [[publish]]. */
+  private[graft] def publishTable(root: String, table: String,
+                                  restage: Boolean = true)
                                  (stage: Long => Long): Long =
-    publish(root) { (_, tables) =>
+    publish(root, restage) { (_, tables) =>
       val prev = tables.getOrElse(table, -1L)
       val v = stage(prev)
       Option.when(v >= 0 && v != prev)(Staged(Map(table -> v)))

@@ -25,8 +25,10 @@ import org.apache.spark.sql.types
   * ([[Commit]]: parent, manifest, schema, field ids, defaults — its
   * existence is the committed stamp); [[publish]] reads the base,
   * runs a staging half against it, writes the optional `_txn` stamp
-  * and moves `_latest`. Every `stage*` half is a [[stageNext]] body;
-  * every public commit is a [[publish]] over one.
+  * and moves `_latest` under main's branch lock while it still names
+  * the base (a writer that lost the race throws). Every `stage*` half
+  * is a [[stageNext]] body; every public commit is a [[publish]] over
+  * one.
   *
   * Scale: a snapshot write is one distributed parquet job; commit is a
   * single tiny marker rename. Time-travel reads are ordinary
@@ -59,8 +61,9 @@ object SnapshotTable {
     * POSIX atomic createDirectory locally, mkdirs + an exclusive
     * `.claim` file on generic filesystems): of two writers racing to
     * the same version number, exactly one wins — the loser fails fast
-    * here instead of silently clobbering the winner's files with
-    * `mode("overwrite")`. */
+    * here instead of silently clobbering the winner's files. Writers
+    * append into the claimed directory and never delete it, which
+    * would release the claim mid-write. */
   private[graft] def claimVersion(root: String, version: Long): Unit = {
     MetaIO.mkdirs(MetaIO.join(root))
     try MetaIO.claimDir(MetaIO.join(root, s"v=$version"))
@@ -94,8 +97,13 @@ object SnapshotTable {
   /** Publish one staged version: read the base (the `_latest` marker),
     * run `stage` against it, write the idempotent-writer stamp `txn`
     * (`(writerId, batchId)`, see [[lastTxnBatch]]) into the staged
-    * directory, and move the marker. A stage returning -1 or `base`
-    * staged nothing: the marker stays and `base` is returned. */
+    * directory, and move the marker — under main's branch lock, and
+    * only while the marker still names `base`. Of two writers staged
+    * from one base exactly one publishes; the other throws
+    * `ConcurrentModificationException` (as a losing branch commit
+    * does), and its staged version is a leftover for expiry. A stage
+    * returning -1 or `base` staged nothing: the marker stays and `base`
+    * is returned. */
   private[graft] def publish(root: String, txn: Option[(String, Long)] = None)
                             (stage: Long => Long): Long = {
     txn.foreach { case (w, _) =>
@@ -107,7 +115,14 @@ object SnapshotTable {
       txn.foreach { case (w, b) =>
         MetaIO.writeString(MetaIO.join(root, s"v=$next", "_txn"), s"$w\n$b")
       }
-      moveMarker(root, next)
+      withBranchLock(root, MainBranch) {
+        val current = latestVersion(root)
+        if (current != base)
+          throw new java.util.ConcurrentModificationException(
+            s"table at $root moved from v$base to v$current while v$next " +
+              "was staged; stage again against the current version")
+        moveMarker(root, next)
+      }
       next
     }
   }
@@ -136,7 +151,9 @@ object SnapshotTable {
                                   statsCols: Seq[String] = Seq.empty,
                                   bloomCols: Seq[String] = Seq.empty): Long =
     stageNext(root, parent) { next =>
-      df.write.mode("overwrite").parquet(s"$root/v=$next")
+      // append into the claimed directory: an overwrite would delete
+      // it first, and while it is gone another writer can claim it
+      df.write.mode("append").parquet(s"$root/v=$next")
       // the footer schema, made nullable, is what read-time inference
       // returns: recording it lets every read of this version plan
       // without a footer-sampling job
@@ -809,10 +826,10 @@ object SnapshotTable {
     commit(MergeUpsert.merge(read(spark, root), source, key), root)
 
   /** Roll back: re-point the marker at an existing older version
-    * (atomic, like commit). */
+    * (atomic, like commit, and under the same main branch lock). */
   def rollback(root: String, version: Long): Unit = {
     require(versions(root).contains(version), s"unknown version $version")
-    moveMarker(root, version)
+    withBranchLock(root, MainBranch)(moveMarker(root, version))
   }
 
   /** Change data feed between two committed versions — the Delta CDF /
@@ -1057,7 +1074,8 @@ object SnapshotTable {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new java.util.ConcurrentModificationException(
           s"branch '$name' at $root has a commit in flight (or a stale " +
-            s"lock at $lock after a crash — remove it to recover)")
+            s"lock at $lock after a crash, which fails every commit to " +
+            "the branch until it is removed by hand or by sweepStaleLocks)")
     }
     try body finally MetaIO.delete(lock, recursive = true)
   }
@@ -1882,9 +1900,10 @@ object SnapshotTable {
     publish(root)(stageDeleteWhere(spark, root, partitionCol, predicate, _))
 
   /** The staging half of [[deleteWhere]]; -1 when nothing matches. */
-  private def stageDeleteWhere(spark: SparkSession, root: String,
-                               partitionCol: String, predicate: Column,
-                               base: Long): Long = {
+  private[graft] def stageDeleteWhere(spark: SparkSession, root: String,
+                                      partitionCol: String,
+                                      predicate: Column,
+                                      base: Long): Long = {
     val cur0 = read(spark, root, base)
     val (cur, hit, dirc, touched) = cowMatch(cur0, predicate, partitionCol)
     if (touched.isEmpty) return -1L

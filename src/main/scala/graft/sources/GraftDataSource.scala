@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownF
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{Metadata, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.SnapshotTable
@@ -44,14 +44,16 @@ import graft.operators.SnapshotTable
   * nothing.
   *
   * Read options: `path` (table root), and at most one of `versionAsOf`
-  * / `tag` / `branch` (default: latest committed version). Write
+  * (a version, else a tag or branch name) / `tag` / `branch` (default:
+  * latest committed version). Write
   * options: `partitionBy` (fast-append partition column), `statsCols`
   * / `bloomCols` (comma-separated manifest-stats columns recorded at
   * commit), `ndvCols` (declares [[SnapshotTable.setNdvColumns]]
   * auto-NDV columns — this and every later write sketches them, so
   * CBO join reorder needs no ANALYZE).
   * `mode("append")` is the O(batch) partition fast-append
-  * and therefore REQUIRES `partitionBy` on an existing table;
+  * and therefore REQUIRES a partition spec on an existing table
+  * (`partitionBy`, or the one the table recorded);
   * `mode("overwrite")` commits a fresh full snapshot (time travel
   * keeps the old versions readable).
   */
@@ -94,20 +96,20 @@ class GraftDataSource extends TableProvider with DataSourceRegister
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val root = GraftDataSource.rootOf(options)
-    GraftDataSource.auxFrame(root, options) match {
+    val t = GraftDataSource.handleOf(options)
+    GraftDataSource.auxFrame(t, options) match {
       case Some(df) => df().schema // CDC / incremental-append read
       case None =>
-        val v = GraftDataSource.resolveVersion(root, options)
+        val v = GraftDataSource.resolveVersion(t, options)
         if (v < 0) new StructType() // not-yet-created table (write path)
-        else SnapshotTable.read(SparkSession.active, root, v).schema
+        else SnapshotTable.read(SparkSession.active, t.root, v).schema
     }
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    new GraftTable(GraftDataSource.rootOf(options), schema, options)
+    new GraftTable(GraftDataSource.handleOf(options), schema, options)
   }
 }
 
@@ -120,19 +122,38 @@ object GraftDataSource {
     p
   }
 
-  /** Resolve the version the options pin: explicit `versionAsOf`, a
-    * `tag`, a `branch`, or the latest committed version (-1 = none). */
-  private[sources] def resolveVersion(root: String,
+  /** The plain table at the connector's `path`. */
+  private[sources] def handleOf(options: CaseInsensitiveStringMap): TableHandle =
+    new TableHandle(None, rootOf(options))
+
+  /** Resolve the table version the options pin through `t`'s refs:
+    * `versionAsOf` ([[TableHandle.versionOf]]), a `tag`, a `branch`, or
+    * the current version (-1 = none). */
+  private[sources] def resolveVersion(t: TableHandle,
                                       options: CaseInsensitiveStringMap): Long = {
     val pins = Seq("versionasof", "tag", "branch").filter(options.containsKey)
     require(pins.size <= 1,
       s"at most one of versionAsOf/tag/branch may be set (got: $pins)")
-    if (options.containsKey("versionasof")) options.get("versionasof").toLong
-    else if (options.containsKey("tag"))
-      SnapshotTable.tagVersion(root, options.get("tag"))
-    else if (options.containsKey("branch"))
-      SnapshotTable.branchVersion(root, options.get("branch"))
-    else SnapshotTable.latestVersion(root)
+    if (options.containsKey("versionasof")) t.versionOf(options.get("versionasof"))
+    else if (options.containsKey("tag")) t.tagVersion(options.get("tag"))
+    else if (options.containsKey("branch")) t.branchVersion(options.get("branch"))
+    else t.version
+  }
+
+  /** `data`'s fields in DECLARED order — `declared`'s names that `data`
+    * has, then the rest (evolution-added or renamed fields) in storage
+    * order. Partitioned storage surfaces the partition column last,
+    * which would misalign positional INSERT and star expansion. A
+    * declared field's metadata rides along (column defaults must reach
+    * the loaded schema, or an INSERT omitting the column writes NULL);
+    * the storage schema wins on type. */
+  private[sources] def declaredOrder(data: StructType,
+                                     declared: StructType): StructType = {
+    val names = declared.fieldNames.filter(data.fieldNames.contains)
+    StructType((names ++ data.fieldNames.filterNot(names.contains)).map { n =>
+      declared.find(d => d.name == n && d.metadata != Metadata.empty)
+        .fold(data(n))(d => data(n).copy(metadata = d.metadata))
+    }.toSeq)
   }
 
   private[sources] def csv(options: CaseInsensitiveStringMap,
@@ -152,10 +173,12 @@ object GraftDataSource {
     *     only the rows that ARRIVED between the snapshots, from pure
     *     manifest arithmetic (append-only histories; O(new files)).
     *
-    * Returns None when the options request a plain data read. CDC
-    * options are mutually exclusive with version/tag/branch pins (the
-    * range IS the time travel). */
-  private[sources] def auxFrame(root: String,
+    * The range ends are offsets ([[TableHandle.versionAt]]: versions of
+    * a plain table, catalog commits of a governed one). Returns None
+    * when the options request a plain data read. CDC options are
+    * mutually exclusive with version/tag/branch pins (the range IS the
+    * time travel). */
+  private[sources] def auxFrame(t: TableHandle,
                                 options: CaseInsensitiveStringMap)
       : Option[() => DataFrame] = {
     val isChanges = options.containsKey("changesfrom")
@@ -167,19 +190,18 @@ object GraftDataSource {
     require(Seq("versionasof", "tag", "branch").forall(!options.containsKey(_)),
       "CDC/append-range reads carry their own versions; drop " +
         "versionAsOf/tag/branch")
+    def at(k: String): Option[Long] =
+      Option(options.get(k)).map(o => t.versionAt(o.toLong))
     if (isChanges) {
       val key = options.get("changekey")
       require(key != null && key.nonEmpty,
         "changesFrom needs .option(\"changeKey\", <key column>) — the " +
           "row identity the diff is keyed by")
-      Some(() => SnapshotTable.changes(SparkSession.active, root, key,
-        options.get("changesfrom").toLong,
-        Option(options.get("changesto")).map(_.toLong)
-          .getOrElse(SnapshotTable.latestVersion(root))))
+      Some(() => SnapshotTable.changes(SparkSession.active, t.root, key,
+        at("changesfrom").get, at("changesto").getOrElse(t.version)))
     } else {
-      Some(() => SnapshotTable.appendedBetween(SparkSession.active, root,
-        options.get("appendsfrom").toLong,
-        Option(options.get("appendsto")).map(_.toLong).getOrElse(-1L)))
+      Some(() => SnapshotTable.appendedBetween(SparkSession.active, t.root,
+        at("appendsfrom").get, at("appendsto").getOrElse(t.version)))
     }
   }
 
@@ -393,66 +415,86 @@ object GraftDataSource {
   }
 }
 
-/** One snapshot table at a pinned version, readable and writable.
-  * SQL `DELETE FROM ... WHERE ...` lands as a MERGE-ON-READ position
-  * delete ([[SnapshotTable.deleteWhereMor]]) — a sidecar commit, zero
-  * data bytes rewritten; predicates the strict translator cannot
-  * render exactly are REJECTED (deleting the wrong rows is not an
-  * optimization miss), as are non-manifested tables (the MoR sidecar
-  * rides the partition manifest). */
-class GraftTable(private[graft] val root: String, tableSchema: StructType,
-                 options: CaseInsensitiveStringMap)
+/** One graft table — plain or governed, behind a [[TableHandle]] — as
+  * a DSv2 table. The path connector and both SQL catalogs serve this
+  * one class, and nothing in it depends on the kind: reads resolve a
+  * version, every write stages against the base version
+  * [[TableHandle.publish]] hands it.
+  *
+  *   - A version/tag/branch pin (`versionAsOf`, `tag`, `branch`
+  *     options) is read-only time travel: INSERT, DELETE, TRUNCATE and
+  *     the SQL DML ([[GraftDml]]) refuse it ([[requireLive]]).
+  *   - INSERT OVERWRITE, `mode("overwrite")`, a first write with no
+  *     partition spec and the write following CREATE TABLE's empty
+  *     snapshot (`firstWrite`, a CTAS) stage a full version; any other
+  *     INSERT is the O(batch) partition fast-append
+  *     ([[SnapshotTable.stageAppend]]) under the declared
+  *     (`partitionBy`) or recorded spec — a table with neither refuses.
+  *   - `DELETE FROM ... WHERE ...` lands as a merge-on-read position
+  *     delete ([[SnapshotTable.stageMorDelete]]) — zero data bytes
+  *     rewritten; predicates the strict translator cannot render
+  *     exactly are REJECTED (deleting the wrong rows is not an
+  *     optimization miss), as are non-manifested tables (the sidecar
+  *     rides the partition manifest).
+  *   - `TRUNCATE TABLE` empties a partitioned table by dropping every
+  *     partition from the manifest (a metadata-sized commit) and
+  *     commits one empty version of a flat one; either is one commit,
+  *     time-travelable and rollback-able. */
+class GraftTable private[graft] (
+    private[graft] val handle: TableHandle,
+    tableSchema: StructType,
+    options: CaseInsensitiveStringMap,
+    private[sources] val firstWrite: Boolean = false)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
   import TableCapability._
 
-  /** A version/tag/branch pin — such a relation is read-only for the
-    * row-level DML rewrites (MERGE/UPDATE run against the live head). */
-  private[graft] def isPinned: Boolean =
-    Seq("versionAsOf", "tag", "branch").exists(options.containsKey)
+  private def root: String = handle.root
 
-  /** SQL `TRUNCATE TABLE`: a partitioned/manifested table empties via
-    * [[SnapshotTable.deleteWhere]] with an always-true predicate (every
-    * partition drops from the manifest — a metadata-sized commit, zero
-    * bytes rewritten; readers of the new version see an empty frame
-    * under the recorded schema), a flat snapshot commits one empty
-    * version under the same schema. Old versions stay time-travelable
-    * — truncation is a commit like any other, rollback-able. */
-  override def truncateTable(): Boolean = {
-    require(!isPinned,
-      "TRUNCATE against a version/tag/branch pin is read-only time " +
+  /** Refuse `stmt` on a version/tag/branch pin — time travel is
+    * read-only; writes run against the live table. */
+  private[graft] def requireLive(stmt: String): Unit =
+    require(!Seq("versionAsOf", "tag", "branch").exists(options.containsKey),
+      s"$stmt against a version/tag/branch pin is read-only time " +
         "travel; run it against the live table")
+
+  override def truncateTable(): Boolean = {
+    requireLive("TRUNCATE")
     val spark = SparkSession.active
     val part = SnapshotTable.partitionSpec(root)
       .orElse(Option(options.get("partitionBy")).filter(_.nonEmpty))
-    part match {
-      case Some(p) =>
-        SnapshotTable.deleteWhere(spark, root, p,
-          org.apache.spark.sql.functions.lit(true))
-      case None =>
-        val schema = SnapshotTable.read(spark, root).schema
-        SnapshotTable.commit(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema).repartition(1), root)
+    handle.publish { base =>
+      part match {
+        case Some(p) =>
+          SnapshotTable.stageDeleteWhere(spark, root, p,
+            org.apache.spark.sql.functions.lit(true), base)
+        case None =>
+          val schema = SnapshotTable.read(spark, root, base).schema
+          SnapshotTable.stageVersion(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[Row], schema).repartition(1), root,
+            base)
+      }
     }
     true
   }
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+  override def canDeleteWhere(filters: Array[Filter]): Boolean = {
+    requireLive("DELETE")
     GraftDataSource.strictPredicateSql(filters.toSeq).isDefined &&
-      SnapshotTable.manifestEntries(root,
-        SnapshotTable.latestVersion(root)).nonEmpty
+      SnapshotTable.manifestEntries(root, handle.version).nonEmpty
+  }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val sql = GraftDataSource.strictPredicateSql(filters.toSeq)
       .getOrElse(throw new UnsupportedOperationException(
         s"cannot translate delete predicate exactly: ${filters.mkString(", ")}"))
-    SnapshotTable.deleteWhereMor(SparkSession.active, root,
-      org.apache.spark.sql.functions.expr(sql))
+    handle.publish(SnapshotTable.stageMorDelete(SparkSession.active, root,
+      org.apache.spark.sql.functions.expr(sql), _))
   }
 
-  override def name(): String = s"graft.`$root`"
+  override def name(): String = handle.toString
 
   override def schema(): StructType = tableSchema
 
@@ -473,17 +515,20 @@ class GraftTable(private[graft] val root: String, tableSchema: StructType,
 
   override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder = {
     // scan options carry the read's own versionAsOf/tag/branch (or a
-    // CDC range); fall back to the table-level options, then latest
+    // CDC range); fall back to the table-level options, then latest.
+    // Both resolve through the handle's refs, so a reader option that
+    // Spark also turned into the catalog's time-travel load names the
+    // same version the loaded table pins
     val merged =
       if (Seq("versionasof", "tag", "branch", "changesfrom", "appendsfrom")
           .exists(scanOptions.containsKey))
         scanOptions
       else options
-    GraftDataSource.auxFrame(root, merged) match {
+    GraftDataSource.auxFrame(handle, merged) match {
       case Some(df) => GraftDataSource.frameScanBuilder(df)
       case None =>
-        val v = GraftDataSource.resolveVersion(root, merged)
-        require(v >= 0, s"no committed version at $root")
+        val v = GraftDataSource.resolveVersion(handle, merged)
+        require(v >= 0, s"no committed version of $handle")
         new GraftScanBuilder(root, v, tableSchema)
     }
   }
@@ -493,7 +538,7 @@ class GraftTable(private[graft] val root: String, tableSchema: StructType,
     // column) are write defaults; per-write options win
     val merged = new java.util.HashMap[String, String](options)
     merged.putAll(info.options())
-    new GraftWriteBuilder(root, new CaseInsensitiveStringMap(merged))
+    new GraftWriteBuilder(this, new CaseInsensitiveStringMap(merged))
   }
 }
 
@@ -1026,7 +1071,7 @@ private[sources] object GraftMetadataTable {
   }
 }
 
-private[sources] class GraftWriteBuilder(root: String,
+private[sources] class GraftWriteBuilder(table: GraftTable,
                                          options: CaseInsensitiveStringMap)
     extends WriteBuilder with SupportsTruncate {
 
@@ -1038,7 +1083,9 @@ private[sources] class GraftWriteBuilder(root: String,
     override def toInsertableRelation(): InsertableRelation =
       new InsertableRelation {
         override def insert(data0: DataFrame, legacyOverwrite: Boolean): Unit = {
-          val part = Option(options.get("partitionBy")).filter(_.nonEmpty)
+          table.requireLive("INSERT")
+          val root = table.handle.root
+          val declared = Option(options.get("partitionBy")).filter(_.nonEmpty)
           // cluster by the partition columns BEFORE the write: each
           // partition value lands in one task, so a fast-append writes
           // ONE file per touched partition instead of tasks ×
@@ -1048,11 +1095,11 @@ private[sources] class GraftWriteBuilder(root: String,
           // the V1 fallback write path — verified empirically).
           // .option("clusterWrites", "false") opts out for
           // pre-clustered inputs.
-          val cluster = part.isDefined &&
+          val cluster = declared.isDefined &&
             !"false".equalsIgnoreCase(options.get("clusterWrites"))
           val data =
             if (cluster)
-              data0.repartition(part.get.split(",").map(_.trim)
+              data0.repartition(declared.get.split(",").map(_.trim)
                 .filter(_.nonEmpty).map(col).toIndexedSeq: _*)
             else data0
           val stats = GraftDataSource.csv(options, "statsCols")
@@ -1062,18 +1109,23 @@ private[sources] class GraftWriteBuilder(root: String,
           // table with no ANALYZE call
           val ndvs = GraftDataSource.csv(options, "ndvCols")
           if (ndvs.nonEmpty) SnapshotTable.setNdvColumns(root, ndvs)
-          if (overwrite || legacyOverwrite)
-            // a fresh full snapshot; prior versions stay time-travelable
-            SnapshotTable.commit(data, root, stats, blooms)
-          else part match {
-            case Some(p) =>
-              SnapshotTable.commitAppend(data, root, p, stats, blooms)
-            case None if SnapshotTable.latestVersion(root) < 0 =>
-              SnapshotTable.commit(data, root, stats, blooms)
-            case None => throw new IllegalArgumentException(
-              "append to an existing graft table is the partition " +
-                "fast-append: set .option(\"partitionBy\", <col>)")
-          }
+          // a full version replaces the table: never re-stage `data`
+          // onto a table another writer moved (prior versions stay
+          // time-travelable)
+          val full = overwrite || legacyOverwrite || table.firstWrite
+          table.handle.publish({ base =>
+            val spec = declared.orElse(
+              SnapshotTable.partitionSpecAt(root, math.max(base, 0L)))
+            if (full || (spec.isEmpty && base < 0))
+              SnapshotTable.stageVersion(data, root, base, stats, blooms)
+            else SnapshotTable.stageAppend(data, root,
+              spec.getOrElse(throw new IllegalArgumentException(
+                "append to an existing graft table is the partition " +
+                  "fast-append and needs a partitioned layout: set " +
+                  ".option(\"partitionBy\", <col>), or overwrite " +
+                  "(INSERT OVERWRITE, mode(\"overwrite\"))")),
+              base, stats, blooms)
+          }, restage = !full)
         }
       }
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Catalog, SnapshotTable}
+import graft.operators.SnapshotTable
 
 /** SQL row-level DML over snapshot tables — `MERGE INTO` and
   * `UPDATE`, the two statements the connector's `SupportsDelete`
@@ -31,40 +31,28 @@ import graft.operators.{Catalog, SnapshotTable}
   *     images + same-version equality delete — O(matched rows), no
   *     partition rewrite).
   *
+  * Every writer is ONE [[TableHandle.publish]]: it stages against the
+  * base version the handle hands it, and the handle lands the version
+  * — a marker move on a plain table, one atomic catalog commit on a
+  * governed one. Nothing here depends on the kind; each writer returns
+  * what the handle's publish returns.
+  *
   * Shapes outside the contract REFUSE with the supported form in the
   * error (running the wrong rows is not an optimization miss).
   * Reference analog: `processing/spark_jobs/bronze_to_silver.py:156-188`
   * runs exactly this MERGE through Spark SQL on Iceberg. */
 object GraftDml {
 
-  /** Where a DML statement lands: a plain warehouse table (commits
-    * publish via the table marker) or a governed table (commits
-    * publish as atomic catalog commits). */
-  sealed trait Target { def tableRoot: String }
-  case class Warehouse(tableRoot: String) extends Target
-  case class Governed(catalogRoot: String, table: String) extends Target {
-    def tableRoot: String = Catalog.tableRoot(catalogRoot, table)
-  }
-
-  private[sources] def baseVersion(t: Target): Long = t match {
-    case Warehouse(r) => SnapshotTable.latestVersion(r)
-    case g: Governed => Catalog.tableVersions(g.catalogRoot)(g.table)
-  }
-
   /** MERGE upsert through the O(batch) MoR path. The SQL contract
     * (validated by the rule) guarantees the batch is the full
     * replacement/insert row set; the cardinality check here is the
     * runtime half of SQL MERGE's "a target row may match at most one
     * source row" rule — duplicate source keys would otherwise BOTH
-    * survive in the appended batch. Governed targets publish as ONE
-    * atomic catalog commit, CAS-retried against concurrent committers
-    * (the [[graft.streaming.GovernedStream]] protocol minus the batch
-    * id). Returns the new version (warehouse) / commit (governed). */
-  def runMerge(spark: SparkSession, target: Target, partitionCol: String,
+    * survive in the appended batch. */
+  def runMerge(spark: SparkSession, target: TableHandle, partitionCol: String,
                keyCols: Seq[String], batch: DataFrame,
                syncDelete: Boolean = false): Long = {
-    val schema = SnapshotTable.read(spark, target.tableRoot,
-      baseVersion(target)).schema
+    val schema = target.schema(spark)
     val aligned = batch.select(schema.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     val dups = aligned.groupBy(keyCols.map(col): _*).count()
@@ -87,7 +75,7 @@ object GraftDml {
     // the batch's keys by construction.
     def antiKeys(base: Long): DataFrame = {
       val keyIsNull = keyCols.map(col(_).isNull).reduce(_ || _)
-      val baseKeys = SnapshotTable.read(spark, target.tableRoot, base)
+      val baseKeys = SnapshotTable.read(spark, target.root, base)
         .select(keyCols.map(col): _*).distinct()
       // a NULL-key target row matches no source row (standard MERGE
       // equality), so NOT MATCHED BY SOURCE always deletes it
@@ -108,39 +96,17 @@ object GraftDml {
       }
       anti
     }
-    target match {
-      case Warehouse(root) =>
-        if (!syncDelete)
-          SnapshotTable.upsertMor(spark, root, partitionCol, aligned, keyCols)
-        else
-          // both halves stage unpublished, ONE marker move publishes —
-          // a reader never sees the upserts without the sync-deletes
-          SnapshotTable.publish(root) { base =>
-            val anti = antiKeys(base)
-            try {
-              val d1 = SnapshotTable.stageUpsertMor(aligned, root,
-                partitionCol, keyCols, base)
-              if (anti.isEmpty) d1
-              else SnapshotTable.stageEqualityDelete(spark, root, anti, d1)
-            } finally anti.unpersist()
-          }
-      case g: Governed =>
-        Catalog.publishTable(g.catalogRoot, g.table) { prev =>
-          if (!syncDelete)
-            SnapshotTable.stageUpsertMor(aligned, g.tableRoot,
-              partitionCol, keyCols, prev)
-          else {
-            // NULL-key refusal fires BEFORE anything stages
-            val anti = antiKeys(prev)
-            try {
-              val d1 = SnapshotTable.stageUpsertMor(aligned, g.tableRoot,
-                partitionCol, keyCols, prev)
-              if (anti.isEmpty) d1
-              else SnapshotTable.stageEqualityDelete(spark,
-                g.tableRoot, anti, d1)
-            } finally anti.unpersist()
-          }
-        }
+    // both halves stage unpublished, ONE publish lands them — a reader
+    // never sees the upserts without the sync-deletes; the NULL-key
+    // refusal fires BEFORE anything stages
+    target.publish { base =>
+      val anti = Option.when(syncDelete)(antiKeys(base))
+      try {
+        val d1 = SnapshotTable.stageUpsertMor(aligned, target.root,
+          partitionCol, keyCols, base)
+        anti.filterNot(_.isEmpty).fold(d1)(
+          SnapshotTable.stageEqualityDelete(spark, target.root, _, d1))
+      } finally anti.foreach(_.unpersist())
     }
   }
 
@@ -168,7 +134,7 @@ object GraftDml {
     * target row matching more than one source row refuses
     * (cardinality). Compare [[runMerge]], the zero-read fast path the
     * rule still uses for the unconditional full-row upsert shape. */
-  def runMergeClauses(spark: SparkSession, target: Target,
+  def runMergeClauses(spark: SparkSession, target: TableHandle,
                       partitionCol: String, keyCols: Seq[String],
                       source: DataFrame, srcKeyExprs: Seq[Column],
                       matched: Seq[MatchedClause],
@@ -178,10 +144,10 @@ object GraftDml {
       col(c).as(s"_s_$c")): _*)
 
     /** (appended images, tombstoned keys) derived against `base` —
-      * re-derived per CAS attempt for governed targets (the matched
+      * re-derived when a governed publish stages again (the matched
       * rows depend on the base the commit lands on). */
     def derive(base: Long): (DataFrame, DataFrame) = {
-      val tgt = SnapshotTable.read(spark, target.tableRoot, base)
+      val tgt = SnapshotTable.read(spark, target.root, base)
       val tSchema = tgt.schema
       val tgtP = tgt.select(tgt.columns.toSeq.map(c =>
         col(c).as(s"_t_$c")) :+ lit(true).as("_gft_matched"): _*)
@@ -274,18 +240,9 @@ object GraftDml {
       } finally j.unpersist()
     }
 
-    target match {
-      case Warehouse(root) =>
-        SnapshotTable.publish(root) { base =>
-          val (app, del) = derive(base)
-          SnapshotTable.stageMergeBatch(app, root, partitionCol, del, base)
-        }
-      case g: Governed =>
-        Catalog.publishTable(g.catalogRoot, g.table) { prev =>
-          val (app, del) = derive(prev)
-          SnapshotTable.stageMergeBatch(app, g.tableRoot, partitionCol, del,
-            prev)
-        }
+    target.publish { base =>
+      val (app, del) = derive(base)
+      SnapshotTable.stageMergeBatch(app, target.root, partitionCol, del, base)
     }
   }
 
@@ -312,36 +269,24 @@ object GraftDml {
     * CoW rewrites rows in place (`when(pred, set).otherwise(keep)`),
     * so multiplicity is preserved whatever the predicate draws.
     *
-    * Unmanifested (plain-partitioned) tables always take CoW — the
-    * equality sidecar rides the partition manifest. Governed targets
-    * publish either staging as one atomic catalog commit. */
-  def runUpdate(spark: SparkSession, target: Target, partitionCol: String,
+    * Unmanifested (plain-partitioned) base versions always take CoW —
+    * the equality sidecar rides the partition manifest. The choice is
+    * made against the base the update stages on. */
+  def runUpdate(spark: SparkSession, target: TableHandle, partitionCol: String,
                 predicate: Column, sets: Seq[(String, Column)],
                 predicateRefs: Set[String],
                 deterministicPredicate: Boolean = true): Long = {
     val layout = SnapshotTable.parseSpecs(partitionCol).map(_.source).toSet
     val cow = predicateRefs.forall(layout.contains) ||
       !deterministicPredicate
-    def manifested(root: String, base: Long) =
-      base >= 0 && SnapshotTable.manifestEntries(root, base).nonEmpty
-    target match {
-      case Warehouse(root) =>
-        if (cow ||
-            !manifested(root, SnapshotTable.latestVersion(root)))
-          SnapshotTable.updateWhere(spark, root, partitionCol, predicate,
-            sets)
-        else
-          SnapshotTable.updateWhereMor(spark, root, partitionCol,
-            predicate, sets, predicateRefs)
-      case g: Governed =>
-        Catalog.publishTable(g.catalogRoot, g.table) { prev =>
-          if (cow || !manifested(g.tableRoot, prev))
-            SnapshotTable.stageUpdateWhere(spark, g.tableRoot,
-              partitionCol, predicate, sets, prev)
-          else
-            SnapshotTable.stageUpdateMor(spark, g.tableRoot,
-              partitionCol, predicate, sets, prev, predicateRefs)
-        }
+    target.publish { base =>
+      if (cow || base < 0 ||
+          SnapshotTable.manifestEntries(target.root, base).isEmpty)
+        SnapshotTable.stageUpdateWhere(spark, target.root, partitionCol,
+          predicate, sets, base)
+      else
+        SnapshotTable.stageUpdateMor(spark, target.root, partitionCol,
+          predicate, sets, base, predicateRefs)
     }
   }
 
@@ -351,19 +296,13 @@ object GraftDml {
     * Iceberg v2 equality-delete flavor CDC writers use for
     * tombstones). Keys cast to the target's column types so sidecar
     * resolution matches exactly. */
-  def runMergeDelete(spark: SparkSession, target: Target,
+  def runMergeDelete(spark: SparkSession, target: TableHandle,
                      keys: DataFrame): Long = {
-    val schema = SnapshotTable.read(spark, target.tableRoot,
-      baseVersion(target)).schema
+    val schema = target.schema(spark)
     val aligned = keys.select(keys.columns.toSeq.map(c =>
       col(c).cast(schema(c).dataType).as(c)): _*)
-    target match {
-      case Warehouse(root) =>
-        SnapshotTable.deleteEqualityMor(spark, root, aligned)
-      case g: Governed =>
-        Catalog.publishTable(g.catalogRoot, g.table)(
-          SnapshotTable.stageEqualityDelete(spark, g.tableRoot, aligned, _))
-    }
+    target.publish(
+      SnapshotTable.stageEqualityDelete(spark, target.root, aligned, _))
   }
 
   /** DELETE as a merge-on-read sidecar commit, with the EXACT
@@ -371,8 +310,7 @@ object GraftDml {
     * `SupportsDelete` path, which can only carry predicates the strict
     * V1-filter translator renders (a `LIKE '%a%'` used to refuse;
     * the Catalyst expression IS the predicate, so nothing is lost in
-    * translation). Governed targets land as one atomic catalog
-    * commit ([[Catalog.transactMorDelete]]).
+    * translation).
     *
     * Unlike MoR UPDATE (see [[runUpdate]]'s nondeterministic routing),
     * no determinism guard is needed here: the predicate resolves to a
@@ -383,14 +321,10 @@ object GraftDml {
     * which is the only meaning a `DELETE WHERE rand() < 0.5` can
     * have; identical twin rows resolve by position, so the
     * equality-masking twin-loss class cannot occur. */
-  def runDelete(spark: SparkSession, target: Target,
-                predicate: Column): Long = target match {
-    case Warehouse(root) =>
-      SnapshotTable.deleteWhereMor(spark, root, predicate)
-    case g: Governed =>
-      Catalog.transactMorDelete(spark, g.catalogRoot,
-        Seq(g.table -> predicate))
-  }
+  def runDelete(spark: SparkSession, target: TableHandle,
+                predicate: Column): Long =
+    target.publish(SnapshotTable.stageMorDelete(spark, target.root,
+      predicate, _))
 }
 
 /** The post-hoc resolution rule wiring SQL MERGE/UPDATE to
@@ -406,19 +340,12 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
     * Pinned (version/tag/branch) relations refuse — time travel is
     * read-only; DML runs against the live head. */
   private def graftTarget(plan: LogicalPlan, stmt: String)
-      : Option[(GraftDml.Target, DataSourceV2Relation)] = plan match {
+      : Option[(TableHandle, DataSourceV2Relation)] = plan match {
     case SubqueryAlias(_, child) => graftTarget(child, stmt)
     case r: DataSourceV2Relation => r.table match {
       case t: GraftTable =>
-        require(!t.isPinned,
-          s"$stmt against a version/tag/branch pin is read-only time " +
-            "travel; run it against the live table")
-        Some((GraftDml.Warehouse(t.root), r))
-      case t: GraftGovernedTable =>
-        require(t.writable,
-          s"$stmt against a pinned/branch governed read is read-only; " +
-            "run it against the latest catalog commit")
-        Some((GraftDml.Governed(t.catalogRoot, t.table), r))
+        t.requireLive(stmt)
+        Some((t.handle, r))
       case _ => None
     }
     case _ => None
@@ -443,12 +370,11 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
     * the predicate refuse: a DELETE whose row set depends on another
     * query needs MERGE semantics. */
   private def rewriteDelete(d: DeleteFromTable,
-                            t: GraftDml.Target): LogicalPlan = {
+                            t: TableHandle): LogicalPlan = {
     require(!d.condition.exists(_.isInstanceOf[SubqueryExpression]),
       "DELETE with a subquery predicate is not supported; materialize " +
         "the key set and MERGE, or use the library API")
-    require(SnapshotTable.manifestEntries(t.tableRoot,
-      GraftDml.baseVersion(t)).nonEmpty,
+    require(SnapshotTable.manifestEntries(t.root, t.version).nonEmpty,
       "DELETE needs a manifested table (the MoR sidecar rides the " +
         "partition manifest)")
     GraftDeleteCommand(t, d.condition)
@@ -466,8 +392,8 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
     case other => other
   }
 
-  private def tableRequirements(t: GraftDml.Target, stmt: String): String =
-    SnapshotTable.partitionSpec(t.tableRoot).getOrElse(
+  private def tableRequirements(t: TableHandle, stmt: String): String =
+    SnapshotTable.partitionSpec(t.root).getOrElse(
       throw new UnsupportedOperationException(
         s"$stmt needs a partitioned, manifested graft table (the " +
           "write lands as a partition-level commit); this table has " +
@@ -510,7 +436,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
     pairs
   }
 
-  private def rewriteMerge(m: MergeIntoTable, t: GraftDml.Target,
+  private def rewriteMerge(m: MergeIntoTable, t: TableHandle,
                            rel: DataSourceV2Relation): LogicalPlan = {
     val partitionCol = tableRequirements(t, "MERGE INTO")
     // WITH SCHEMA EVOLUTION: Spark's own ResolveMergeIntoSchemaEvolution
@@ -555,7 +481,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
     * full-row UPDATE + one unconditional full-row INSERT assigning
     * identical values, keys assigned the ON source expressions; NMBS
     * absent or one unconditional DELETE (the full-sync form). */
-  private def fastUpsert(m: MergeIntoTable, t: GraftDml.Target,
+  private def fastUpsert(m: MergeIntoTable, t: TableHandle,
                          rel: DataSourceV2Relation, partitionCol: String,
                          keyPairs: Seq[(String, Expression)],
                          targetIds: Set[org.apache.spark.sql.catalyst.expressions.ExprId])
@@ -599,7 +525,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
   /** The general clause shape → [[GraftMergeClausesCommand]]
     * (conditional clauses, partial SET, multiple ordered clauses,
     * conditional NMBS delete). */
-  private def generalMerge(m: MergeIntoTable, t: GraftDml.Target,
+  private def generalMerge(m: MergeIntoTable, t: TableHandle,
                            partitionCol: String,
                            keyPairs: Seq[(String, Expression)],
                            targetIds: Set[org.apache.spark.sql.catalyst.expressions.ExprId])
@@ -624,7 +550,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan]
       matchedClauses, insertClauses, nmbs, targetIds)
   }
 
-  private def rewriteUpdate(u: UpdateTable, t: GraftDml.Target,
+  private def rewriteUpdate(u: UpdateTable, t: TableHandle,
                             rel: DataSourceV2Relation): LogicalPlan = {
     val partitionCol = tableRequirements(t, "UPDATE")
     val targetIds = rel.outputSet.map(_.exprId).toSet

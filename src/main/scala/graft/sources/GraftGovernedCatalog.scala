@@ -2,13 +2,10 @@ package graft.sources
 
 import java.util.{Collections, Map => JMap}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
-import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -33,12 +30,12 @@ import graft.operators.{Catalog, SnapshotTable}
   *   a branch head — so two tables read at the same pin are mutually
   *   consistent, the [[Catalog]] isolation guarantee surfaced to SQL.
   * - `TIMESTAMP AS OF` resolves through [[Catalog.resolveAsOf]].
-  * - `INSERT INTO` a partitioned table lands as ONE atomic catalog
-  *   commit of an O(batch) partition fast-append, CAS-retried against
-  *   concurrent committers (the [[graft.streaming.GovernedStream]]
-  *   protocol without the streaming batch id); `INSERT OVERWRITE` is a
-  *   full-replace [[Catalog.transact]]. CTAS transacts the query
-  *   result as a new governed table.
+  * - Tables are the one [[GraftTable]] over a governed
+  *   [[TableHandle]]: `INSERT INTO` (the O(batch) partition
+  *   fast-append), `INSERT OVERWRITE`, CTAS, `DELETE`, `TRUNCATE`,
+  *   `MERGE` and `UPDATE` each land as ONE atomic catalog commit,
+  *   retried against concurrent committers — a full replace never
+  *   re-stages onto a table another writer moved.
   * - `CREATE TABLE` commits an empty first snapshot (durable, CTAS's
   *   write replaces it); DDL that would bypass catalog history refuses
   *   (`ALTER`/`RENAME` throw; `DROP` is a documented no-op so a failed
@@ -88,59 +85,40 @@ class GraftGovernedCatalog extends TableCatalog with SupportsNamespaces
           return new GraftMetadataTable(s"$tbl.${ident.name()}", mk)
         }
     }
-    loadAtCommit(ident, Catalog.latestCommit(root))
+    governedTable(ident, None)
   }
 
   /** `VERSION AS OF x`: a catalog COMMIT number, else a catalog tag,
-    * else a branch head. Only the TAG RESOLUTION itself may fall
-    * through to the branch lookup — a table genuinely absent at a
-    * valid tag's commit must surface as NoSuchTable, not a misleading
-    * branch-not-found. */
-  override def loadTable(ident: Identifier, version: String): Table =
-    version.toLongOption match {
-      case Some(c) => loadAtCommit(ident, c)
-      case None =>
-        scala.util.Try(Catalog.tagCommit(root, version)).toOption match {
-          case Some(c) => loadAtCommit(ident, c)
-          case None => loadBranch(ident, version)
-        }
-    }
-
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
-    loadAtCommit(ident, Catalog.resolveAsOf(root, timestampMicros / 1000L))
-
-  private def loadBranch(ident: Identifier, branch: String): Table = {
-    val vs = Catalog.branchVersions(root, branch)
-    val v = vs.getOrElse(ident.name(),
-      throw new NoSuchTableException(ident))
-    governedTable(ident.name(), v, writable = false)
+    * else a branch head ([[TableHandle.versionOf]]). */
+  override def loadTable(ident: Identifier, version: String): Table = {
+    val commit = version.toLongOption
+      .orElse(scala.util.Try(Catalog.tagCommit(root, version)).toOption)
+    governedTable(ident,
+      Some(version).filterNot(_ => commit.contains(Catalog.latestCommit(root))))
   }
 
-  private def loadAtCommit(ident: Identifier, commit: Long): Table = {
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
+    val c = Catalog.resolveAsOf(root, timestampMicros / 1000L)
+    governedTable(ident,
+      Some(c.toString).filterNot(_ => c == Catalog.latestCommit(root)))
+  }
+
+  /** Table `ident` live (`pin` = None) or at `pin`, a `versionAsOf` pin
+    * (read-only time travel). The table keeps the pin as given, so it
+    * resolves through the handle's catalog refs exactly as a reader's
+    * own `versionAsOf` option does; a pin at the latest commit is
+    * live. */
+  private def governedTable(ident: Identifier, pin: Option[String]): Table = {
     requireTop(ident.namespace())
-    val vs = Catalog.tableVersions(root, commit)
-    val v = vs.getOrElse(ident.name(),
-      throw new NoSuchTableException(ident))
-    governedTable(ident.name(), v,
-      writable = commit == Catalog.latestCommit(root))
-  }
-
-  private def governedTable(table: String, version: Long,
-                            writable: Boolean): Table = {
-    val tr = Catalog.tableRoot(root, table)
-    val data = SnapshotTable.read(SparkSession.active, tr, version).schema
-    // keep the DECLARED column order (the recorded schema follows
-    // evolution: added columns append at the end) — storage surfaces
-    // the partition column last, which would misalign positional
-    // star expansion in MERGE/INSERT after an ADD COLUMN
-    val schema = SnapshotTable.recordedSchema(tr, version) match {
-      case Some(rec) =>
-        val declared = rec.fieldNames.filter(data.fieldNames.contains)
-        val rest = data.fieldNames.filterNot(declared.contains)
-        StructType((declared ++ rest).map(n => data(n)).toSeq)
-      case None => data
-    }
-    new GraftGovernedTable(root, table, tr, version, schema, writable)
+    val t = new TableHandle(Some(root), ident.name())
+    val version = pin.fold(t.version)(t.versionOf)
+    if (version < 0) throw new NoSuchTableException(ident)
+    val data = SnapshotTable.read(SparkSession.active, t.root, version).schema
+    val schema = SnapshotTable.recordedSchema(t.root, version)
+      .fold(data)(GraftDataSource.declaredOrder(data, _))
+    val opts = pin.fold(Collections.emptyMap[String, String]())(
+      Collections.singletonMap("versionAsOf", _))
+    new GraftTable(t, schema, new CaseInsensitiveStringMap(opts))
   }
 
   /** CREATE TABLE commits the table's EMPTY first snapshot through a
@@ -163,10 +141,8 @@ class GraftGovernedCatalog extends TableCatalog with SupportsNamespaces
     val empty = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     Catalog.transact(root, Seq(ident.name() -> empty))
-    new GraftGovernedTable(root, ident.name(),
-      Catalog.tableRoot(root, ident.name()),
-      Catalog.tableVersions(root)(ident.name()), schema,
-      writable = true, firstInsertReplaces = true)
+    new GraftTable(new TableHandle(Some(root), ident.name()), schema,
+      CaseInsensitiveStringMap.empty(), firstWrite = true)
   }
 
   /** Column evolution on a governed table — `ALTER TABLE gov.t
@@ -342,89 +318,4 @@ class GraftGovernedCatalog extends TableCatalog with SupportsNamespaces
   override def dropNamespace(namespace: Array[String],
                              cascade: Boolean): Boolean =
     throw new UnsupportedOperationException("the governed catalog is flat")
-}
-
-/** One governed table pinned at a snapshot version. Reads share the
-  * connector's pushed-filter skipping scan; writes publish through
-  * atomic catalog commits (CAS-retried). Time-travel pins are
-  * read-only — only a table loaded at the LATEST commit writes. */
-private[graft] class GraftGovernedTable(
-    private[graft] val catalogRoot: String,
-    private[graft] val table: String,
-    private[graft] val tableRoot: String,
-    version: Long,
-    tableSchema: StructType,
-    private[graft] val writable: Boolean,
-    firstInsertReplaces: Boolean = false)
-    extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
-
-  import TableCapability._
-
-  /** SQL `DELETE FROM gov.t WHERE ...` = ONE atomic catalog commit of
-    * a merge-on-read position-delete sidecar
-    * ([[Catalog.transactMorDelete]]) — governed row erasure from SQL,
-    * rollback-able like any commit. Exact-translation-or-reject, and
-    * only at the latest commit. */
-  override def canDeleteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    writable &&
-      GraftDataSource.strictPredicateSql(filters.toSeq).isDefined &&
-      SnapshotTable.manifestEntries(tableRoot, version).nonEmpty
-
-  override def deleteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val sql = GraftDataSource.strictPredicateSql(filters.toSeq)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"cannot translate delete predicate exactly: ${filters.mkString(", ")}"))
-    Catalog.transactMorDelete(SparkSession.active, catalogRoot,
-      Seq(table -> org.apache.spark.sql.functions.expr(sql)))
-  }
-
-  override def name(): String = s"governed.`$catalogRoot`.$table"
-
-  override def schema(): StructType = tableSchema
-
-  override def capabilities(): java.util.Set[TableCapability] =
-    if (tableSchema.isEmpty)
-      java.util.EnumSet.of(BATCH_READ, BATCH_WRITE, V1_BATCH_WRITE,
-        TRUNCATE, ACCEPT_ANY_SCHEMA)
-    else
-      // MERGE WITH SCHEMA EVOLUTION: the analyzer publishes the
-      // widening as this catalog's atomic ALTER commit first
-      java.util.EnumSet.of(BATCH_READ, BATCH_WRITE, V1_BATCH_WRITE,
-        TRUNCATE, AUTOMATIC_SCHEMA_EVOLUTION)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    require(version >= 0, s"table '$table' has no committed content yet")
-    new GraftScanBuilder(tableRoot, version, tableSchema)
-  }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      private var overwrite = false
-      override def truncate(): WriteBuilder = { overwrite = true; this }
-      override def build(): Write = new V1Write {
-        override def toInsertableRelation(): InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: DataFrame, legacy: Boolean): Unit = {
-              require(writable,
-                "time-travel pins are read-only; write at the latest commit")
-              // firstInsertReplaces: the CTAS write following
-              // createTable's empty snapshot replaces it
-              if (overwrite || legacy || version < 0 || firstInsertReplaces)
-                Catalog.transact(catalogRoot, Seq(table -> data))
-              else Catalog.publishTable(catalogRoot, table) { prev =>
-                // INSERT INTO is the O(batch) partition fast-append
-                val spec = SnapshotTable.partitionSpecAt(tableRoot,
-                  math.max(prev, 0L)).getOrElse(throw new IllegalArgumentException(
-                    s"INSERT INTO governed table '$table' is the partition " +
-                      "fast-append and needs a partitioned layout; use " +
-                      "INSERT OVERWRITE (full transact) on flat tables"))
-                SnapshotTable.stageAppend(data, tableRoot, spec, prev)
-              }
-            }
-          }
-      }
-    }
 }

@@ -121,17 +121,10 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     loadAt(ident, GraftSqlCatalog.Latest)
   }
 
-  /** `VERSION AS OF x` — a version number, else a tag, else a branch. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val root = requireTable(ident)
-    val v = version.toLongOption.getOrElse {
-      try SnapshotTable.tagVersion(root, version)
-      catch {
-        case _: Exception => SnapshotTable.branchVersion(root, version)
-      }
-    }
-    loadAt(ident, v)
-  }
+  /** `VERSION AS OF x` — a version number, else a tag, else a branch
+    * ([[TableHandle.versionOf]]). */
+  override def loadTable(ident: Identifier, version: String): Table =
+    loadAt(ident, new TableHandle(None, requireTable(ident)).versionOf(version))
 
   /** `TIMESTAMP AS OF t` (microseconds): the newest version committed
     * at or before the instant. */
@@ -163,39 +156,20 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     val root = requireTable(ident)
     val meta = readSidecar(root)
     val dataV =
-      if (version == GraftSqlCatalog.Latest)
-        SnapshotTable.latestVersion(root.toString)
+      if (version == GraftSqlCatalog.Latest) SnapshotTable.latestVersion(root)
       else version
     val schema =
       if (dataV >= 0) {
-        // partitioned storage surfaces the partition column LAST; a
-        // catalog table keeps its DECLARED order (evolution-added or
-        // renamed fields follow, in storage order)
-        val data = SnapshotTable.read(spark, root.toString, dataV).schema
-        meta match {
-          case Some(m) =>
-            val declared = m.schema.fieldNames.filter(data.fieldNames.contains)
-            val rest = data.fieldNames.filterNot(declared.contains)
-            // sidecar field METADATA rides along (column defaults:
-            // CURRENT_DEFAULT must reach the loaded schema or INSERTs
-            // omitting the column write NULL) — the storage schema
-            // wins on type, the sidecar on declared metadata
-            new StructType((declared ++ rest).map { n =>
-              val f = data(n)
-              m.schema.fields.find(sf => sf.name == n &&
-                  sf.metadata != org.apache.spark.sql.types.Metadata.empty)
-                .map(sf => f.copy(metadata = sf.metadata))
-                .getOrElse(f)
-            })
-          case None => data
-        }
+        val data = SnapshotTable.read(spark, root, dataV).schema
+        meta.fold(data)(m => GraftDataSource.declaredOrder(data, m.schema))
       } else meta.map(_.schema).getOrElse(new StructType())
     val opts = new java.util.HashMap[String, String]()
-    opts.put("path", root.toString)
+    opts.put("path", root)
     if (version != GraftSqlCatalog.Latest)
       opts.put("versionAsOf", version.toString)
     meta.foreach(_.writeOptions.foreach { case (k, v) => opts.put(k, v) })
-    new GraftTable(root.toString, schema, new CaseInsensitiveStringMap(opts))
+    new GraftTable(new TableHandle(None, root), schema,
+      new CaseInsensitiveStringMap(opts))
   }
 
   override def createTable(ident: Identifier, schema: StructType,

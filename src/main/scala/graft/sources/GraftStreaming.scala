@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.{Catalog, FooterStats, MetaIO, SnapshotTable}
+import graft.operators.{FooterStats, MetaIO, SnapshotTable}
 import graft.streaming.GovernedStream
 
 /** `spark.readStream.format("graft")` / `df.writeStream.format("graft")`
@@ -26,7 +26,7 @@ import graft.streaming.GovernedStream
   * would mean owning an executor-side parquet reader).
   *
   * SOURCE. The offset is a TABLE VERSION of a plain table, or a CATALOG
-  * COMMIT id of a governed one — [[StreamTarget.versionAt]] maps either
+  * COMMIT id of a governed one — [[TableHandle.versionAt]] maps either
   * to the streamed table's version, and everything else is one code
   * path. Each micro-batch is the manifest-arithmetic incremental append
   * scan between the versions at its two offsets
@@ -77,36 +77,10 @@ import graft.streaming.GovernedStream
   * honour is refused when the sink is built. */
 private[sources] object GraftStreaming {
 
-  /** The one fork between a plain and a governed table: which offsets
-    * exist, and which table version an offset names. */
-  private final case class StreamTarget(catalog: Option[String],
-                                        name: String) {
-    /** The streamed table's root. */
-    val root: String = catalog.fold(name)(Catalog.tableRoot(_, name))
-
-    /** The newest offset (-1 = none). */
-    def latest: Long =
-      catalog.fold(SnapshotTable.latestVersion(root))(Catalog.latestCommit)
-
-    /** The table version offset `p` names (-1 = the table did not exist). */
-    def versionAt(p: Long): Long = catalog match {
-      case _ if p < 0 => -1L
-      case None => p
-      case Some(cat) => Catalog.tableVersions(cat, p).getOrElse(name, -1L)
-    }
-
-    def schema(spark: SparkSession): StructType = {
-      val v = versionAt(latest)
-      require(v >= 0, s"streaming read needs a committed table at $root")
-      SnapshotTable.read(spark, root, v).schema
-    }
-
-    override def toString: String =
-      catalog.fold(root)(cat => s"$cat/$name")
-  }
-
-  private def targetOf(options: CaseInsensitiveStringMap): StreamTarget =
-    StreamTarget(Option(options.get("catalog")).filter(_.nonEmpty),
+  /** A plain table at `path`, or table `path` of the governed catalog
+    * at `catalog`. */
+  private def handleOf(options: CaseInsensitiveStringMap): TableHandle =
+    new TableHandle(Option(options.get("catalog")).filter(_.nonEmpty),
       GraftDataSource.rootOf(options))
 
   private def changeKeyOf(options: CaseInsensitiveStringMap): Option[String] = {
@@ -157,7 +131,7 @@ private[sources] object GraftStreaming {
     }
   }
 
-  private class GraftSource(t: StreamTarget, metadataPath: String,
+  private class GraftSource(t: TableHandle, metadataPath: String,
                             options: CaseInsensitiveStringMap)
       extends Source with SupportsTriggerAvailableNow {
 
@@ -269,7 +243,7 @@ private[sources] object GraftStreaming {
     override def stop(): Unit = ()
   }
 
-  private class GraftSink(t: StreamTarget, partitionCols: Seq[String],
+  private class GraftSink(t: TableHandle, partitionCols: Seq[String],
                           mode: OutputMode, options: CaseInsensitiveStringMap)
       extends Sink {
 
@@ -402,18 +376,18 @@ private[sources] object GraftStreaming {
 
   def sourceOf(parameters: Map[String, String], metadataPath: String): Source = {
     val options = new CaseInsensitiveStringMap(parameters.asJava)
-    new GraftSource(targetOf(options), metadataPath, options)
+    new GraftSource(handleOf(options), metadataPath, options)
   }
 
   def sinkOf(parameters: Map[String, String], partitionCols: Seq[String],
              mode: OutputMode): Sink = {
     val options = new CaseInsensitiveStringMap(parameters.asJava)
-    new GraftSink(targetOf(options), partitionCols, mode, options)
+    new GraftSink(handleOf(options), partitionCols, mode, options)
   }
 
   def sourceSchema(parameters: Map[String, String]): StructType = {
     val options = new CaseInsensitiveStringMap(parameters.asJava)
-    val base = targetOf(options).schema(SparkSession.active)
+    val base = handleOf(options).schema(SparkSession.active)
     if (changeKeyOf(options).isEmpty) base else cdcSchema(base)
   }
 }

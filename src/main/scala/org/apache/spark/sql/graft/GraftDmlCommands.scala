@@ -37,9 +37,10 @@ private[graft] object GraftDmlExec {
 
 /** `MERGE INTO <graft table> USING <source> ON <keys> WHEN MATCHED
   * UPDATE SET * WHEN NOT MATCHED INSERT *` → one O(batch)
-  * append + equality-delete commit (one atomic catalog commit for
-  * governed targets). Returns the new version/commit. */
-case class GraftMergeCommand(target: graft.sources.GraftDml.Target,
+  * append + equality-delete commit. Every command returns what the
+  * target's publish returns: the new version of a plain table, the
+  * new catalog commit of a governed one. */
+case class GraftMergeCommand(target: graft.sources.TableHandle,
                              partitionCol: String,
                              keyCols: Seq[String], source: LogicalPlan,
                              projection: Seq[(String, Expression)],
@@ -62,9 +63,8 @@ case class GraftMergeCommand(target: graft.sources.GraftDml.Target,
 
 /** `MERGE INTO <graft table> USING <source> ON <keys> WHEN MATCHED
   * THEN DELETE` (alone) → one equality-delete sidecar commit of the
-  * source's key set: O(batch), zero table reads. Returns the new
-  * version/commit. */
-case class GraftMergeDeleteCommand(target: graft.sources.GraftDml.Target,
+  * source's key set: O(batch), zero table reads. */
+case class GraftMergeDeleteCommand(target: graft.sources.TableHandle,
                                    source: LogicalPlan,
                                    keyExprs: Seq[(String, Expression)])
     extends LeafRunnableCommand {
@@ -91,7 +91,7 @@ case class GraftMergeDeleteCommand(target: graft.sources.GraftDml.Target,
   * prefixed name (`_t_*` target / `_s_*` source) the join frame in
   * `GraftDml.runMergeClauses` exposes. */
 case class GraftMergeClausesCommand(
-    target: graft.sources.GraftDml.Target,
+    target: graft.sources.TableHandle,
     partitionCol: String,
     keyPairs: Seq[(String, Expression)],
     source: LogicalPlan,
@@ -131,10 +131,8 @@ case class GraftMergeClausesCommand(
 }
 
 /** `DELETE FROM <graft table> WHERE <any subquery-free predicate>` →
-  * a merge-on-read sidecar commit with the EXACT analyzed predicate
-  * (one atomic catalog commit for governed targets). Returns the new
-  * version/commit. */
-case class GraftDeleteCommand(target: graft.sources.GraftDml.Target,
+  * a merge-on-read sidecar commit with the EXACT analyzed predicate. */
+case class GraftDeleteCommand(target: graft.sources.TableHandle,
                               condition: Expression)
     extends LeafRunnableCommand {
 
@@ -147,9 +145,9 @@ case class GraftDeleteCommand(target: graft.sources.GraftDml.Target,
 }
 
 /** `UPDATE <graft table> SET ... [WHERE ...]` → a partition-pruned
-  * copy-on-write delta commit (one atomic catalog commit for governed
-  * targets). Returns the new version/commit. */
-case class GraftUpdateCommand(target: graft.sources.GraftDml.Target,
+  * copy-on-write delta or a merge-on-read commit, routed by predicate
+  * shape (`GraftDml.runUpdate`). */
+case class GraftUpdateCommand(target: graft.sources.TableHandle,
                               partitionCol: String,
                               condition: Option[Expression],
                               sets: Seq[(String, Expression)])

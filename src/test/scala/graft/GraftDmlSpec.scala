@@ -598,7 +598,7 @@ class GraftDmlSpec extends GraftSuite {
     val before = SnapshotTable.latestVersion(root)
     val sidecarsBefore = SnapshotTable.eqDeleteEntries(root, before).size
     graft.sources.GraftDml.runUpdate(spark,
-      graft.sources.GraftDml.Warehouse(root), "p",
+      new graft.sources.TableHandle(None, root), "p",
       col("n") === 5 && rand() < 0.5,
       Seq("n" -> (col("n") + 100)), Set("n"),
       deterministicPredicate = false)

@@ -13,7 +13,8 @@ import graft.streaming.GovernedStream
   * so a read plans without a footer-inference job, and the `_stats`
   * sidecar is text written and parsed on the driver, so a commit runs
   * only its data write and metadata answers collect a local frame; a
-  * catalog commit's publish step is driver-only metadata too. A
+  * catalog commit's publish step is driver-only metadata too, and SQL
+  * statements keep their measured jobs on both table kinds. A
   * failing pin prints the call sites of the jobs it counted. The stats
   * text round-trips every type it records exactly. */
 class MetadataJobCountSpec extends GraftSuite {
@@ -80,6 +81,40 @@ class MetadataJobCountSpec extends GraftSuite {
       Catalog.foldTable(spark, cat, "d")) === c)
     assert(pin(0, "compactTable with nothing fragmented")(
       Catalog.compactTable(spark, cat, "d", "p")) === c)
+  }
+
+  test("SQL INSERT INTO, DELETE and MERGE upsert run pinned jobs on both kinds") {
+    val wh = Files.createTempDirectory("graft-jobs-sql-wh").toString
+    spark.conf.set("spark.sql.catalog.jobs_plain",
+      "graft.sources.GraftSqlCatalog")
+    spark.conf.set("spark.sql.catalog.jobs_plain.warehouse", wh)
+    spark.sql("CREATE TABLE jobs_plain.db.t (k STRING, n BIGINT, p STRING) " +
+      "PARTITIONED BY (p)")
+    spark.sql("INSERT INTO jobs_plain.db.t VALUES ('a', 1, 'x'), ('b', 2, 'y')")
+    val cat = Files.createTempDirectory("graft-jobs-sql-gov").toString
+    spark.conf.set("spark.sql.catalog.jobs_gov",
+      "graft.sources.GraftGovernedCatalog")
+    spark.conf.set("spark.sql.catalog.jobs_gov.root", cat)
+    Catalog.transactDelta(cat, Seq(("t",
+      Seq(("a", 1L, "x"), ("b", 2L, "y")).toDF("k", "n", "p"), "p")))
+    Seq(("b", 20L, "y"), ("c", 3L, "x")).toDF("k", "n", "p")
+      .createOrReplaceTempView("jobs_sql_src")
+    // (INSERT INTO, DELETE, MERGE upsert) jobs, as measured before the
+    // two table kinds shared one table class; the plain INSERT's extra
+    // job is the shuffle clustering it by its declared partition column
+    Seq("jobs_plain.db.t" -> (2, 3, 8), "jobs_gov.t" -> (1, 2, 8))
+      .foreach { case (t, (insert, delete, merge)) =>
+        pin(insert, s"INSERT INTO $t")(
+          spark.sql(s"INSERT INTO $t VALUES ('d', 4, 'x')"))
+        pin(delete, s"DELETE FROM $t")(
+          spark.sql(s"DELETE FROM $t WHERE k = 'a'"))
+        pin(merge, s"MERGE upsert into $t")(
+          spark.sql(s"MERGE INTO $t AS t USING jobs_sql_src AS s " +
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * " +
+            "WHEN NOT MATCHED THEN INSERT *"))
+        assert(spark.table(t).select("k", "n").as[(String, Long)].collect()
+          .toSeq.sortBy(_._1) === Seq(("b", 20L), ("c", 3L), ("d", 4L)))
+      }
   }
 
   test("an IVF search of local queries and a steady-state append run few jobs") {

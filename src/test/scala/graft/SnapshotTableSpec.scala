@@ -190,6 +190,68 @@ class SnapshotTableSpec extends GraftSuite {
     assert(SnapshotTable.branchVersion(root, "dev") === after)
   }
 
+  test("concurrent publishes from one base: exactly one lands, the other throws") {
+    val root = Files.createTempDirectory("graft-snap-pubrace").toString
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("id", "p"), root, "p")
+    val base = SnapshotTable.latestVersion(root)
+    // both writers read the same base and stage an append (one at a
+    // time, so their version claims differ); the barrier holds each
+    // inside its stage until both have staged, then both publish
+    val staged = new java.util.concurrent.CyclicBarrier(2)
+    val claims = new Object
+    val results =
+      new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, (Long, Long)]]()
+    val threads = Seq(2L, 3L).map { id =>
+      new Thread(() => {
+        try results.add(Right(id -> SnapshotTable.publish(root) { b =>
+          val v = claims.synchronized {
+            SnapshotTable.stageAppend(Seq((id, "a")).toDF("id", "p"), root,
+              "p", b)
+          }
+          staged.await(120, java.util.concurrent.TimeUnit.SECONDS)
+          v
+        }))
+        catch { case e: Throwable => results.add(Left(e)) }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val wins = results.asScala.collect { case Right(w) => w }.toSeq
+    val losses = results.asScala.collect { case Left(e) => e }.toSeq
+    assert(wins.size === 1 && losses.size === 1, results.asScala.toSeq)
+    assert(losses.head.isInstanceOf[java.util.ConcurrentModificationException],
+      losses.head)
+    val (winner, won) = wins.head
+    assert(SnapshotTable.latestVersion(root) === won)
+    assert(SnapshotTable.parentVersion(root, won) === base)
+    assert(SnapshotTable.read(spark, root).select("id").as[Long].collect()
+      .toSet === Set(1L, winner))
+    // the lock is released: the next commit lands on the winner
+    val next = SnapshotTable.commitAppend(Seq((9L, "a")).toDF("id", "p"),
+      root, "p")
+    assert(SnapshotTable.parentVersion(root, next) === won)
+  }
+
+  test("a full-version commit never deletes its claimed version directory") {
+    import java.nio.file.{Paths, StandardWatchEventKinds}
+    val root = Files.createTempDirectory("graft-snap-claim").toString
+    SnapshotTable.commit(Seq((1L, "a")).toDF("id", "v"), root)
+    // the claim IS the directory: deleting it mid-write (as a Spark
+    // overwrite of an existing path does) lets a racing writer claim
+    // the same version number and clobber this one's files
+    val watch = Paths.get(root).getFileSystem.newWatchService()
+    try {
+      Paths.get(root).register(watch, StandardWatchEventKinds.ENTRY_DELETE)
+      val v = SnapshotTable.commit(Seq((2L, "b")).toDF("id", "v"), root)
+      val deleted = Iterator.continually(
+          watch.poll(1, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(_ != null)
+        .flatMap { k => val es = k.pollEvents().asScala; k.reset(); es }
+        .map(_.context().toString).toSeq
+      assert(!deleted.contains(s"v=$v"), deleted)
+    } finally watch.close()
+    assert(SnapshotTable.read(spark, root).count() === 1)
+  }
+
   test("delta commits share untouched partitions and read as one pruned scan") {
     val root = Files.createTempDirectory("graft-delta").toString
     def rows(tag: String, dates: Seq[String]) =
