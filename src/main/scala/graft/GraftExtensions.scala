@@ -16,6 +16,15 @@ import graft.functions.GraftFunction
   * `graft_simhash(hs)` (codegen'd 60-bit SimHash fingerprint), and
   * `graft_bloom_contains(filter, s)` (codegen'd bloom membership
   * probe over a serialized sketch literal).
+  *
+  * It also adds late optimizer rules to the session's
+  * `extraOptimizations`: the scan-statistics swap, CBO join reorder
+  * and runtime filtering over connector scans, and
+  * [[GraftSmallSortRule]], which sorts a global `ORDER BY` in one task
+  * (no range-sample job, no shuffle) when AQE is on, the plan is not
+  * streaming, and the input's size estimate fits in what AQE coalesces
+  * into one partition anyway (`coalescePartitions.minPartitionSize`
+  * under `parallelismFirst`, else `advisoryPartitionSizeInBytes`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -75,6 +84,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         session.experimental.extraOptimizations =
           session.experimental.extraOptimizations :+
             graft.sources.GraftRuntimeFilterRule(session)
+      // last, so its size gate reads the runtime-narrowed scans
+      if (!session.experimental.extraOptimizations.contains(GraftSmallSortRule))
+        session.experimental.extraOptimizations =
+          session.experimental.extraOptimizations :+ GraftSmallSortRule
       rule
     }
   }

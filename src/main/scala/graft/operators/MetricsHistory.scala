@@ -84,12 +84,15 @@ object MetricsHistory {
     * regression signal), retry pressure, throughput, latency trend,
     * and watermark freshness. Deterministic columns first (row counts,
     * run counts, retries — oracle-checkable), wall-clock-derived ones
-    * after. One tiny shuffle on the stage key. */
+    * after. One tiny shuffle on the stage key: the run count is the
+    * size of the stage's run-id set, not `countDistinct`, which plans
+    * a second aggregation shuffle on (stage, run_id). Both skip nulls
+    * and give a bigint. */
   def health(history: DataFrame): DataFrame =
     history
       .groupBy("stage")
       .agg(
-        countDistinct(col("run_id")).as("n_runs"),
+        size(collect_set(col("run_id"))).cast("long").as("n_runs"),
         sum("rows").as("total_rows"),
         max_by(col("rows"), col("run_id")).as("last_rows"),
         sum(greatest(col("attempts") - 1, lit(0))).as("total_retries"),

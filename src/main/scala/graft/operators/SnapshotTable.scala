@@ -2020,7 +2020,7 @@ object SnapshotTable {
     // MERGE path's discipline) and the table read must not re-run
     val matched = cur.filter(coalesce(predicate, lit(false)))
       .localCheckpoint(eager = true)
-    if (matched.head(1).isEmpty) return -1L
+    if (!hasRows(matched)) return -1L
     val setMap = sets.toMap
     val post = matched.select(cur.schema.fields.toSeq.map { f =>
       setMap.get(f.name).map(_.cast(f.dataType).as(f.name))
@@ -2033,6 +2033,15 @@ object SnapshotTable {
       else matched
     stageMergeBatch(post, root, partitionCol, delKeys, base)
   }
+
+  /** Whether a persisted or checkpointed frame holds a row, in ONE job
+    * whose tasks each pull at most one row (on a persisted frame that
+    * pull also fills the partition's cache block). `head(1)` reads the
+    * first partition alone and runs a second job over the rest when that
+    * one is empty. */
+  private def hasRows(df: DataFrame): Boolean =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator(it.hasNext))
+      .collect().contains(true)
 
   /** Published [[stageUpdateMor]]: MoR UPDATE against the latest
     * version. Returns the new version (the current one when nothing
@@ -2079,7 +2088,7 @@ object SnapshotTable {
     val matches = live.filter(predicate)
       .select(col(FileCol), col(PosCol)).persist()
     try {
-      if (matches.head(1).isEmpty) return -1L
+      if (!hasRows(matches)) return -1L
       val carried = carryMeta(spark, root, base, b)
       stageNext(root, base) { next =>
         // one sidecar file: the delete set is small by the operation's

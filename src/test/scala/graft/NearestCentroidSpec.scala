@@ -8,8 +8,6 @@ import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
@@ -92,16 +90,6 @@ class NearestCentroidSpec extends GraftSuite {
         Left(Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
           .map(e => String.valueOf(e.getMessage)).mkString(" | "))
     }
-
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val saved = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
-    kv.foreach { case (key, value) => spark.conf.set(key, value) }
-    try body
-    finally saved.foreach {
-      case (key, Some(value)) => spark.conf.set(key, value)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
 
   private def assertSame(v: DataFrame, cent: DataFrame, ks: Seq[Int]): Unit =
     ks.foreach { k =>
@@ -196,14 +184,6 @@ class NearestCentroidSpec extends GraftSuite {
         |  2) AS nk""".stripMargin)
       .head().getSeq[Row](0).map(p => (p.getLong(0), p.getDouble(1)))
     assert(r === Seq((3L, 1.0), (5L, 1.0)))
-  }
-
-  /** Every physical node of `p`, through adaptive stages and caches. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => q +: nodes(q.plan)
-    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-    case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
   }
 
   /** The executed plans of every action `body` ran. */

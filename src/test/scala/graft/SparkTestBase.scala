@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
@@ -30,6 +33,25 @@ abstract class GraftSuite extends AnyFunSuite {
     s
   }
   def sf: String = SparkTestBase.Sf
+
+  /** Every physical node of `p`, through adaptive stages and caches. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+  }
+
+  /** `body` with the session confs `kv` set, each restored after. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val saved = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
+    kv.foreach { case (key, value) => spark.conf.set(key, value) }
+    try body
+    finally saved.foreach {
+      case (key, Some(value)) => spark.conf.set(key, value)
+      case (key, None) => spark.conf.unset(key)
+    }
+  }
 
   /** Sidecar-swap tmp dirs (`.stats.new-*`, `.blooms.new-*`,
     * `.ndv.new-*`) left under any `v=N` of `root` — a finished
