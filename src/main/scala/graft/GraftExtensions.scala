@@ -20,11 +20,15 @@ import graft.functions.GraftFunction
   * It also adds late optimizer rules to the session's
   * `extraOptimizations`: the scan-statistics swap, CBO join reorder
   * and runtime filtering over connector scans, and
-  * [[GraftSmallSortRule]], which sorts a global `ORDER BY` in one task
-  * (no range-sample job, no shuffle) when AQE is on, the plan is not
-  * streaming, and the input's size estimate fits in what AQE coalesces
-  * into one partition anyway (`coalescePartitions.minPartitionSize`
-  * under `parallelismFirst`, else `advisoryPartitionSizeInBytes`).
+  * [[GraftSmallPlanRule]], which runs each deterministic batch subtree
+  * whose inputs fit in what AQE coalesces into one partition anyway
+  * (`coalescePartitions.minPartitionSize` under `parallelismFirst`,
+  * else `advisoryPartitionSizeInBytes`) in one task — inputs and
+  * unions coalesced to one partition, layout-only repartitions made
+  * coalesces, joins hinted shuffle-hash — so it plans no exchange and
+  * no broadcast; a global `ORDER BY` whose input estimate fits sorts in
+  * one task with no range-sample job. AQE off or a streaming plan
+  * leaves every plan as it is.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -85,9 +89,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           session.experimental.extraOptimizations :+
             graft.sources.GraftRuntimeFilterRule(session)
       // last, so its size gate reads the runtime-narrowed scans
-      if (!session.experimental.extraOptimizations.contains(GraftSmallSortRule))
+      if (!session.experimental.extraOptimizations.contains(GraftSmallPlanRule))
         session.experimental.extraOptimizations =
-          session.experimental.extraOptimizations :+ GraftSmallSortRule
+          session.experimental.extraOptimizations :+ GraftSmallPlanRule
       rule
     }
   }

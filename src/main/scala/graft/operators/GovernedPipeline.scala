@@ -49,8 +49,9 @@ object GovernedPipeline {
     * published. Warn-severity checks report without aborting, as in
     * [[PipelineRun]]. */
   private def gate(quality: DataFrame, where: String): Unit = {
-    val red = quality.filter(col("violations") > 0)
-      .select("table_name", "check_name").collect()
+    val red = Metrics.described(quality.sparkSession, "quality gate")(
+      quality.filter(col("violations") > 0)
+        .select("table_name", "check_name").collect())
       .map(r => (r.getString(0), r.getString(1)))
       .filterNot(DataQuality.warnChecks)
     if (red.nonEmpty)
@@ -112,7 +113,8 @@ object GovernedPipeline {
       .withRunColumns(rec.reportDF, runKind, Option(wm))
       .withColumn("run_id", lit(runId))
       .coalesce(1)
-    SnapshotTable.stageAppend(report, tr, "run_id", mPrev)
+    Metrics.described(spark, "pipeline_metrics")(
+      SnapshotTable.stageAppend(report, tr, "run_id", mPrev))
   }
 
   private def requireBootstrapped(catalogRoot: String, base: Long): Unit =
@@ -166,7 +168,8 @@ object GovernedPipeline {
       val quality = SnapshotTable.read(spark, tr("quality_report"), vQ)
       if (failOnViolations) gate(quality, s"${tr("quality_report")}/v=$vQ")
 
-      val wm = bronze.agg(max("ingested_at")).head().getAs[LocalDateTime](0)
+      val wm = Metrics.described(spark, "new watermark")(
+        bronze.agg(max("ingested_at")).head().getAs[LocalDateTime](0))
       val vW = full("watermark", wmDf(spark, wm))
       val vMet = stageMetrics(spark, catalogRoot, prev, rec, "full", wm)
       Some(Catalog.Staged(Map(
@@ -244,7 +247,8 @@ object GovernedPipeline {
     def readAt(t: String): DataFrame =
       Catalog.read(spark, catalogRoot, t, base)
 
-    val prevWm = readAt("watermark").head().getAs[LocalDateTime](0)
+    val prevWm = Metrics.described(spark, "watermark read")(
+      readAt("watermark").head().getAs[LocalDateTime](0))
     val cutoff = prevWm.minusHours(lookbackHours.toLong)
     val bronzeAll = SnapshotTable.read(spark, tr("bronze"), vB)
 
@@ -252,16 +256,17 @@ object GovernedPipeline {
     val bronzeWindow = bronzeAll.filter(
       col("_ingestion_date") >= lit(java.sql.Date.valueOf(cutoff.toLocalDate))
         && col("ingested_at") > lit(cutoff))
-    val newWmRow = bronzeWindow.agg(max("ingested_at"))
-      .head().getAs[LocalDateTime](0)
+    val newWmRow = Metrics.described(spark, "new watermark")(
+      bronzeWindow.agg(max("ingested_at")).head().getAs[LocalDateTime](0))
     val batchSilver = BronzeToSilver.transform(bronzeWindow).persist()
     try {
       // a watermark that did not advance means bronze holds nothing new —
       // the lookback tail alone is all-reprocessed rows, not a batch
       val affectedDates =
         if (newWmRow == null || !newWmRow.isAfter(prevWm)) Seq.empty
-        else batchSilver.select("_trade_date").distinct()
-          .collect().map(_.getDate(0)).sortBy(_.toString).toSeq
+        else Metrics.described(spark, "touched dates")(
+          batchSilver.select("_trade_date").distinct().collect())
+          .map(_.getDate(0)).sortBy(_.toString).toSeq
 
       // nothing new to merge: publish just the bronze change, if any
       if (affectedDates.isEmpty)

@@ -40,6 +40,10 @@ object Metrics {
     * (listener-fed counts taken after a fallback may be short). */
   val drainFallbacks = new java.util.concurrent.atomic.AtomicLong
 
+  /** How many [[observedOr]] calls took their fallback — each one an
+    * extra aggregate job that the observed metric should have saved. */
+  val observedFallbacks = new java.util.concurrent.atomic.AtomicLong
+
   /** `SparkContext.listenerBus` and `LiveListenerBus.waitUntilEmpty()`,
     * resolved once. Both are private[spark] (what Spark's own UI tests
     * call), hence reflection. */
@@ -148,17 +152,25 @@ object Metrics {
       : (A, Seq[JobMetrics]) = {
     val c = new Collector(label, onlyLabelled = true)
     val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
     sc.addSparkListener(c)
-    sc.setJobDescription(label)
     val result =
-      try body
+      try described(spark, label)(body)
       finally {
-        sc.setJobDescription(prevDesc)
         drainBus(spark)
         sc.removeSparkListener(c)
       }
     (result, c.jobs.asScala.toSeq)
+  }
+
+  /** `body` with the calling thread's Spark job description set to
+    * `label` (what the UI and a listener's job-start event show),
+    * restored after. */
+  def described[A](spark: SparkSession, label: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body
+    finally sc.setJobDescription(prev)
   }
 
   /** [[collectJobs]] with the metrics as a one-row-per-job DataFrame —
@@ -177,7 +189,8 @@ object Metrics {
     * instead of a separate aggregate action removes one
     * job-submission+scan floor per pipeline run. The listener bus is
     * drained first so an already-finished write's async metric
-    * delivery is never mistaken for absence. */
+    * delivery is never mistaken for absence; a fallback is counted in
+    * [[observedFallbacks]]. */
   def observedOr[T](spark: SparkSession,
                     obs: org.apache.spark.sql.Observation,
                     key: String)(fallback: => T): T = {
@@ -187,7 +200,9 @@ object Metrics {
     // take the fallback, not hang)
     obs.future.value match {
       case Some(scala.util.Success(row)) => row.getAs[T](key)
-      case _ => fallback
+      case _ =>
+        observedFallbacks.incrementAndGet()
+        fallback
     }
   }
 }

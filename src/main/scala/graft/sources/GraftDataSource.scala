@@ -1085,23 +1085,31 @@ private[sources] class GraftWriteBuilder(table: GraftTable,
         override def insert(data0: DataFrame, legacyOverwrite: Boolean): Unit = {
           table.requireLive("INSERT")
           val root = table.handle.root
-          val declared = Option(options.get("partitionBy")).filter(_.nonEmpty)
-          // cluster by the partition columns BEFORE the write: each
-          // partition value lands in one task, so a fast-append writes
-          // ONE file per touched partition instead of tasks ×
-          // partitions — the small-files guard at any parallelism
-          // (Iceberg's write.distribution-mode=hash; done here because
-          // Spark's RequiresDistributionAndOrdering is not honored on
-          // the V1 fallback write path — verified empirically).
+          // a full version replaces the table: never re-stage `data`
+          // onto a table another writer moved (prior versions stay
+          // time-travelable)
+          val full = overwrite || legacyOverwrite || table.firstWrite
+          // the layout an append stages under: the declared spec, else
+          // the table's recorded one — resolved once, so the clustering
+          // below and the staged append agree
+          val spec = Option(options.get("partitionBy")).filter(_.nonEmpty)
+            .orElse(SnapshotTable.partitionSpecAt(root, math.max(table.handle.version, 0L)))
+          // cluster an append by its partition values BEFORE the write:
+          // each value lands in one task, so a fast-append writes ONE
+          // file per touched partition instead of tasks × partitions —
+          // the small-files guard at any parallelism (Iceberg's
+          // write.distribution-mode=hash; done here because Spark's
+          // RequiresDistributionAndOrdering is not honored on the V1
+          // fallback write path — verified empirically).
           // .option("clusterWrites", "false") opts out for
           // pre-clustered inputs.
-          val cluster = declared.isDefined &&
-            !"false".equalsIgnoreCase(options.get("clusterWrites"))
-          val data =
-            if (cluster)
-              data0.repartition(declared.get.split(",").map(_.trim)
-                .filter(_.nonEmpty).map(col).toIndexedSeq: _*)
-            else data0
+          val data = spec match {
+            case Some(sp) if !full &&
+                !"false".equalsIgnoreCase(options.get("clusterWrites")) =>
+              data0.repartition(SnapshotTable.parseSpecs(sp).map(ps =>
+                ps.valueExpr(data0.schema(ps.source).dataType)): _*)
+            case _ => data0
+          }
           val stats = GraftDataSource.csv(options, "statsCols")
           val blooms = GraftDataSource.csv(options, "bloomCols")
           // declare BEFORE the commit so this very write's footer-lift
@@ -1109,13 +1117,7 @@ private[sources] class GraftWriteBuilder(table: GraftTable,
           // table with no ANALYZE call
           val ndvs = GraftDataSource.csv(options, "ndvCols")
           if (ndvs.nonEmpty) SnapshotTable.setNdvColumns(root, ndvs)
-          // a full version replaces the table: never re-stage `data`
-          // onto a table another writer moved (prior versions stay
-          // time-travelable)
-          val full = overwrite || legacyOverwrite || table.firstWrite
           table.handle.publish({ base =>
-            val spec = declared.orElse(
-              SnapshotTable.partitionSpecAt(root, math.max(base, 0L)))
             if (full || (spec.isEmpty && base < 0))
               SnapshotTable.stageVersion(data, root, base, stats, blooms)
             else SnapshotTable.stageAppend(data, root,

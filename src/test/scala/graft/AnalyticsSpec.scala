@@ -238,16 +238,27 @@ class AnalyticsSpec extends GraftSuite {
         |                    AND o_orderpriority = '1-URGENT')
         |GROUP BY 1""".stripMargin)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val df = Analytics.q22GlobalSalesOpp(Tables.customer(spark, sf),
+    def q22 = Analytics.q22GlobalSalesOpp(Tables.customer(spark, sf),
       Tables.nation(spark, sf), Tables.orders(spark, sf))
-    val rows = df.collect()
-    assert(rows.map(r => r.getString(0) -> r.getLong(1)).toMap === expect)
-    assert(rows.nonEmpty)
-    // the anti join must be a real anti join, not a post-join filter,
-    // and orders is scanned once (never re-aggregated per row)
-    assert(joinTypes(df).exists(_.contains("ANTI")), joinTypes(df))
-    assert(logicalScans(df, "orders") === 1)
-    assert(!formattedPlan(df).contains("CartesianProduct"))
+    // sf0.001's tables fit in one AQE-coalesced partition, and the
+    // small-plan rule would join the broadcast scalar as a one-task
+    // cartesian product: it is off here
+    withConf(SmallPlanSpec.NoGate) {
+      val df = q22
+      val rows = df.collect()
+      assert(rows.map(r => r.getString(0) -> r.getLong(1)).toMap === expect)
+      assert(rows.nonEmpty)
+      // the anti join must be a real anti join, not a post-join filter,
+      // and orders is scanned once (never re-aggregated per row)
+      assert(joinTypes(df).exists(_.contains("ANTI")), joinTypes(df))
+      assert(logicalScans(df, "orders") === 1)
+      assert(!formattedPlan(df).contains("CartesianProduct"))
+    }
+    // with the rule on, the same answer from one job
+    val df = q22
+    val (one, jobs) = MaintenanceJobCountSpec.jobsOf(spark)(df.collect())
+    assert(one.map(r => r.getString(0) -> r.getLong(1)).toMap === expect)
+    assert(jobs.size === 1, jobs.mkString("; "))
   }
 
   test("q16: anti-join NOT-IN equals the textbook subquery SQL") {

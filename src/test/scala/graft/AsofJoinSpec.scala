@@ -100,16 +100,27 @@ class AsofJoinSpec extends GraftSuite {
           "timestamp_ntz'2024-01-01 00:00:30')").as("rts"),
         (col("id") * 10).cast("double").as("p"))
     val plain = AsofJoin.asof(hotLeft, hotRight, Seq("k"), "lts", "rts", Seq("p"))
-    val bucketed = AsofJoin.asofBucketed(hotLeft, hotRight, Seq("k"),
+    def bucketedOf = AsofJoin.asofBucketed(hotLeft, hotRight, Seq("k"),
       "lts", "rts", Seq("p"), bucketSeconds = 600L)
-    assert(plain.exceptAll(bucketed.select(plain.columns.map(col): _*))
-      .count() === 0)
-    assert(bucketed.count() === 20000L)
-    // the pass-1 shuffle key includes the bucket: hot-key parallelism
-    val plan = bucketed.queryExecution.executedPlan.toString
-    assert(plan.contains("_asof_bkt"))
-    assert(plan.split("hashpartitioning").exists(s =>
-      s.startsWith("(k") && s.contains("_asof_bkt")))
+    // the ~160 KB of range rows fit in one AQE-coalesced partition, so
+    // the small-plan rule would run both joins in one task with no
+    // shuffle key to assert on: it is off here
+    withConf(SmallPlanSpec.NoGate) {
+      val bucketed = bucketedOf
+      assert(plain.exceptAll(bucketed.select(plain.columns.map(col): _*))
+        .count() === 0)
+      assert(bucketed.count() === 20000L)
+      // the pass-1 shuffle key includes the bucket: hot-key parallelism
+      val plan = bucketed.queryExecution.executedPlan.toString
+      assert(plan.contains("_asof_bkt"))
+      assert(plan.split("hashpartitioning").exists(s =>
+        s.startsWith("(k") && s.contains("_asof_bkt")))
+    }
+    // with the rule on, the bucketed join runs in one task to the same answer
+    val one = bucketedOf
+    assert(one.collect().length === 20000)
+    assert(!one.queryExecution.executedPlan.toString.contains("hashpartitioning"))
+    assert(plain.exceptAll(one.select(plain.columns.map(col): _*)).count() === 0)
   }
 
   test("tradeVsPrevHour: first-hour trades NULL, later trades see prior candle") {

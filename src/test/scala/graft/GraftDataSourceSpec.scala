@@ -204,13 +204,22 @@ class GraftDataSourceSpec extends GraftSuite {
       .select("l_returnflag").distinct() // 3 rows
     dim.write.format("graft").mode("overwrite").save(root)
     val fact = Tables.lineitem(spark, sf)
-    val joined = fact.join(spark.read.format("graft").load(root),
+    def join = fact.join(spark.read.format("graft").load(root),
       Seq("l_returnflag"))
-    val plan = joined.queryExecution.executedPlan.toString
-    // a V1 relation's DEFAULT size is the never-broadcast placeholder;
-    // reporting live data bytes makes Catalyst pick the broadcast join
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(joined.count() === fact.count())
+    // sf0.001's lineitem fits in one AQE-coalesced partition, and the
+    // small-plan rule would hint the join shuffle-hash: it is off here
+    withConf(SmallPlanSpec.NoGate) {
+      val joined = join
+      val plan = joined.queryExecution.executedPlan.toString
+      // a V1 relation's DEFAULT size is the never-broadcast placeholder;
+      // reporting live data bytes makes Catalyst pick the broadcast join
+      assert(plan.contains("BroadcastHashJoin"), plan)
+      assert(joined.count() === fact.count())
+    }
+    // with the rule on, the same join in one task, with no broadcast
+    val one = join
+    assert(one.collect().length === fact.count())
+    assert(!one.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
   test("post-pruning statistics: a selective scan of a big table broadcasts") {
@@ -227,7 +236,9 @@ class GraftDataSourceSpec extends GraftSuite {
     val maxKey = li.agg(max("l_orderkey")).first().getLong(0)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
-    try {
+    // sf0.001's lineitem fits in one AQE-coalesced partition, and the
+    // small-plan rule would hint both joins shuffle-hash: it is off here
+    try withConf(SmallPlanSpec.NoGate) {
       val fact = Tables.lineitem(spark, sf)
       // negative control: unfiltered, the connector reports the full
       // size (over threshold) — no static broadcast
@@ -247,6 +258,12 @@ class GraftDataSourceSpec extends GraftSuite {
         fact.join(li.filter(col("l_orderkey") <= maxKey / 8),
           Seq("l_orderkey")).count())
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // with the rule on, the selective join runs in one task, unshuffled
+    val one = Tables.lineitem(spark, sf).join(spark.read.format("graft").load(root)
+      .filter(col("l_orderkey") <= maxKey / 8), Seq("l_orderkey"))
+    assert(one.collect().length ===
+      li.join(li.filter(col("l_orderkey") <= maxKey / 8), Seq("l_orderkey")).count())
+    assert(!one.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
   test("CDC read options: changesFrom diff feed and appendsFrom incremental scan") {
@@ -399,16 +416,27 @@ class GraftDataSourceSpec extends GraftSuite {
     assert(df.limit(n).count() === n)
     assert(df.limit(n).select("l_orderkey").count() === n)
 
-    // a limit the counted coverage cannot guarantee falls back to the
-    // full read — which must hit a corrupt file (soundness: pruning
-    // never drops files the limit might need)
+    // sf0.001's lineitem fits in one AQE-coalesced partition, and the
+    // small-plan rule would read a full scan's files one after another
+    // in one task, a limit stopping it before a corrupt file: it is off
+    // here, where every file opens in its own task
+    withConf(SmallPlanSpec.NoGate) {
+      // a limit the counted coverage cannot guarantee falls back to the
+      // full read — which must hit a corrupt file (soundness: pruning
+      // never drops files the limit might need)
+      intercept[Exception] {
+        df.limit((li.count() + 10).toInt).agg(sum("l_quantity")).first()
+      }
+      // and a filtered limit declines the push entirely (post-filter
+      // counts are unknowable from metadata): full scan → corrupt file
+      intercept[Exception] {
+        df.filter(col("l_quantity") >= 0).limit(n).agg(count(lit(1))).first()
+      }
+    }
+    // with the rule on, a limit the coverage cannot guarantee still
+    // reads every file, so it still hits a corrupt one
     intercept[Exception] {
       df.limit((li.count() + 10).toInt).agg(sum("l_quantity")).first()
-    }
-    // and a filtered limit declines the push entirely (post-filter
-    // counts are unknowable from metadata): full scan → corrupt file
-    intercept[Exception] {
-      df.filter(col("l_quantity") >= 0).limit(n).agg(count(lit(1))).first()
     }
   }
 }

@@ -219,4 +219,30 @@ class GraftGovernedCatalogSpec extends GraftSuite {
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("fast-append")), e.getMessage)
   }
+
+  test("a multi-task governed INSERT writes one file per partition directory") {
+    val r = Files.createTempDirectory("graft-gov-cluster").toString + "/cat"
+    spark.conf.set("spark.sql.catalog.govc", "graft.sources.GraftGovernedCatalog")
+    spark.conf.set("spark.sql.catalog.govc.root", r)
+    Catalog.transactDelta(r, Seq(("t", Seq(("a", 0L, "d0")).toDF("k", "n", "day"), "day")))
+    // four tasks, each holding rows of all three days
+    spark.range(0, 120, 1, 4)
+      .select(concat(lit("k"), col("id")).as("k"), col("id").as("n"),
+        concat(lit("d"), (col("id") % 3).cast("string")).as("day"))
+      .createOrReplaceTempView("govc_src")
+    val tr = Catalog.tableRoot(r, "t")
+    def filesPerDir(): Map[String, Int] = {
+      val v = Catalog.tableVersions(r)("t")
+      new java.io.File(s"$tr/v=$v").listFiles().filter(_.getName.startsWith("day="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    }
+    val days = Map("day=d0" -> 1, "day=d1" -> 1, "day=d2" -> 1)
+    // clustered by the recorded spec through a shuffle (the small-plan
+    // rule off), then by the rule's one-partition coalesce
+    withConf(SmallPlanSpec.NoGate)(spark.sql("INSERT INTO govc.t SELECT * FROM govc_src"))
+    assert(filesPerDir() === days)
+    spark.sql("INSERT INTO govc.t SELECT * FROM govc_src")
+    assert(filesPerDir() === days)
+    assert(spark.table("govc.t").count() === 241L)
+  }
 }

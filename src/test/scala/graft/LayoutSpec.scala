@@ -20,12 +20,21 @@ class LayoutSpec extends GraftSuite {
     // join takes, where neither side broadcasts
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Layout.bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"bucketed join should not shuffle:\n$plan")
-      assert(joined.count() === li.count())
+      // sf0.001's tables fit in one AQE-coalesced partition, so the
+      // small-plan rule would join them in one task: it is off here
+      withConf(SmallPlanSpec.NoGate) {
+        val joined = Layout.bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
+        assert(!plan.contains("Exchange"),
+          s"bucketed join should not shuffle:\n$plan")
+        assert(joined.count() === li.count())
+      }
+      // with the rule on, the same join runs in one task, unshuffled
+      val one = Layout.bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
+      assert(one.collect().length === li.count())
+      val plan = one.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"one-task join should not shuffle:\n$plan")
     } finally
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

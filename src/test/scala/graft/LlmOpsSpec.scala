@@ -152,19 +152,31 @@ class LlmOpsSpec extends GraftSuite {
       (2L, "totally unrelated content right here", "src1"),
       (3L, "beta gamma delta tail", "src2"))
       .toDF("doc_id", "text", "source")
-    val base = TextAnalysis.decontaminate(d).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val unhinted = TextAnalysis.decontaminate(d, maxBroadcastShingles = 0L)
-    val got = unhinted.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    assert(got.sameElements(base))
-    // above the threshold the shingle join carries no broadcast HINT
-    // (AQE stays free to choose; nothing forces the eval set onto the
-    // driver), below it the hint is present
-    val hinted = TextAnalysis.decontaminate(d)
-    assert(hinted.queryExecution.optimizedPlan.toString
-      .toLowerCase.contains("broadcast"))
-    assert(!unhinted.queryExecution.optimizedPlan.toString
-      .toLowerCase.contains("broadcast"))
+    // four documents fit in one AQE-coalesced partition, and the
+    // small-plan rule would hint the shingle join shuffle-hash over the
+    // broadcast hint: it is off here
+    val base = withConf(SmallPlanSpec.NoGate) {
+      val base = TextAnalysis.decontaminate(d).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      val unhinted = TextAnalysis.decontaminate(d, maxBroadcastShingles = 0L)
+      val got = unhinted.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      assert(got.sameElements(base))
+      // above the threshold the shingle join carries no broadcast HINT
+      // (AQE stays free to choose; nothing forces the eval set onto the
+      // driver), below it the hint is present
+      val hinted = TextAnalysis.decontaminate(d)
+      assert(hinted.queryExecution.optimizedPlan.toString
+        .toLowerCase.contains("broadcast"))
+      assert(!unhinted.queryExecution.optimizedPlan.toString
+        .toLowerCase.contains("broadcast"))
+      base
+    }
+    // with the rule on, the join over the cached eval set runs as one
+    // job to the same answer
+    val one = TextAnalysis.decontaminate(d)
+    val (rows, jobs) = MaintenanceJobCountSpec.jobsOf(spark)(one.collect())
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).sameElements(base))
+    assert(jobs.size === 1, jobs.mkString("; "))
   }
 
   test("ann recall: exact vs itself is 1.0, approximate paths in (0, 1]") {

@@ -61,12 +61,14 @@ class MaintenanceJobCountSpec extends GraftSuite {
     assert(Retrieval.fullBuilds.get === fb, "fell back to full rebuild")
     info(s"tombstone-path (upsert delta) jobs: $tombJobs")
 
-    // pinned upper bounds — measured on the fused code (this exact
-    // setup: fast 8, tombstone 21; the pre-fusion shape measured 10
-    // and 29 — the separate batch-scalars, refusal-emptiness, and
-    // tombstone-aggregate probes cost 8 extra jobs per upsert delta)
-    assert(fastJobs <= 8, s"fast-path delta grew to $fastJobs jobs")
-    assert(tombJobs <= 21, s"tombstone delta grew to $tombJobs jobs")
+    // pinned upper bounds — measured on the fused code with the
+    // small-plan rule running each small aggregate in one job (this
+    // exact setup: fast 4, tombstone 10; 8 and 21 with a job per
+    // shuffle stage; the pre-fusion shape measured 10 and 29 — the
+    // separate batch-scalars, refusal-emptiness, and tombstone-aggregate
+    // probes cost 8 extra jobs per upsert delta)
+    assert(fastJobs <= 4, s"fast-path delta grew to $fastJobs jobs")
+    assert(tombJobs <= 10, s"tombstone delta grew to $tombJobs jobs")
   }
 }
 
@@ -74,13 +76,17 @@ object MaintenanceJobCountSpec {
 
   /** Run `body`, returning its result and the Spark jobs it started —
     * each by its first stage's name, the call site that submitted it
-    * (`parquet at SnapshotTable.scala:137`), so a failing pin says
-    * WHICH jobs it counted. */
+    * (`parquet at SnapshotTable.scala:137`), and its job description in
+    * brackets when it has one, so a failing pin says WHICH jobs it
+    * counted. */
   def jobsOf[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
     val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        names.add(e.stageInfos.headOption.map(_.name).getOrElse("?")); ()
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        names.add(e.stageInfos.headOption.map(_.name).getOrElse("?") +
+          desc.fold("")(d => s" [$d]")); ()
       }
     }
     val sc = spark.sparkContext

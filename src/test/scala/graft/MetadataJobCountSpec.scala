@@ -99,12 +99,11 @@ class MetadataJobCountSpec extends GraftSuite {
       Seq(("a", 1L, "x"), ("b", 2L, "y")).toDF("k", "n", "p"), "p")))
     Seq(("b", 20L, "y"), ("c", 3L, "x")).toDF("k", "n", "p")
       .createOrReplaceTempView("jobs_sql_src")
-    // (INSERT INTO, DELETE, MERGE upsert) jobs, as measured before the
-    // two table kinds shared one table class; the plain INSERT's extra
-    // job is the shuffle clustering it by its declared partition column.
-    // A DELETE is its match probe (one job, however many partitions are
-    // empty) and the sidecar write
-    Seq("jobs_plain.db.t" -> (2, 2, 8), "jobs_gov.t" -> (1, 2, 8))
+    // (INSERT INTO, DELETE, MERGE upsert) jobs. Both INSERTs cluster by
+    // the partition spec, which for a small frame is a one-partition
+    // coalesce, not a shuffle job. A DELETE is its match probe (one job,
+    // however many partitions are empty) and the sidecar write
+    Seq("jobs_plain.db.t" -> (1, 2, 8), "jobs_gov.t" -> (1, 2, 8))
       .foreach { case (t, (insert, delete, merge)) =>
         pin(insert, s"INSERT INTO $t")(
           spark.sql(s"INSERT INTO $t VALUES ('d', 4, 'x')"))

@@ -9,10 +9,13 @@ class MetricsSpec extends GraftSuite {
   import spark.implicits._
 
   test("collect captures job counts, records, and shuffle volume") {
-    val (result, metrics) = Metrics.collect(spark, "ohlcv_smoke") {
-      val df = graft.sources.Tables.events(spark, sf)
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-      df.collect().length
+    val events = graft.sources.Tables.events(spark, sf)
+    def q = events.groupBy("event_type").agg(count(lit(1)).as("n"))
+    // sf0.001's events fit in one AQE-coalesced partition, so the
+    // small-plan rule would aggregate them in one task with no shuffle
+    // to measure: it is off here
+    val (result, metrics) = withConf(SmallPlanSpec.NoGate) {
+      Metrics.collect(spark, "ohlcv_smoke")(q.collect().length)
     }
     assert(result > 0)
     val rows = metrics.collect()
@@ -24,6 +27,11 @@ class MetricsSpec extends GraftSuite {
     assert(rows.map(_.getAs[Long]("inputRecords")).sum > 0)
     assert(rows.map(_.getAs[Long]("shuffleWriteBytes")).sum > 0)
     assert(rows.forall(_.getAs[Long]("durationMs") >= 0))
+    // with the rule on, the same groups come from one job of one task
+    // that shuffles nothing
+    val (oneResult, one) = Metrics.collectJobs(spark, "ohlcv_one")(q.collect().length)
+    assert(oneResult === result)
+    assert(one.map(j => (j.numTasks, j.shuffleWriteBytes)) === Seq((1, 0L)))
   }
 
   test("collection is scoped: jobs outside the block are not captured") {

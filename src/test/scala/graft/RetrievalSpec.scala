@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.Retrieval
@@ -79,18 +80,28 @@ class RetrievalSpec extends GraftSuite {
 
   test("plans: df/stats broadcast, top-k stays bounded, no cartesian blowup") {
     val d = spark.read.parquet(s"$sf/documents.parquet")
-    // tf_idf: vocab-sized df side broadcasts; the per-doc top-k is a
-    // WindowGroupLimit (partial heap below the exchange), not a sort+filter
-    val tp = Retrieval.tfIdf(d).queryExecution.executedPlan.toString
-    assert(tp.contains("BroadcastHashJoin"))
-    assert(tp.contains("WindowGroupLimit"))
-    // bm25: query-term df and the 1-row stats broadcast; the global
-    // top-k is TakeOrderedAndProject, never a full sort. The doc-length
-    // join is deliberately NOT hinted (n_docs rows — must be free to
-    // fall back to a co-partitioned join at scale).
-    val bp = Retrieval.bm25Search(d).queryExecution.executedPlan.toString
-    assert(bp.contains("BroadcastHashJoin"))
-    assert(bp.contains("TakeOrderedAndProject"))
+    // sf0.001's documents fit in one AQE-coalesced partition, so the
+    // small-plan rule would run both plans in one task: it is off here
+    val answers = withConf(SmallPlanSpec.NoGate) {
+      // tf_idf: vocab-sized df side broadcasts; the per-doc top-k is a
+      // WindowGroupLimit (partial heap below the exchange), not a sort+filter
+      val tp = Retrieval.tfIdf(d).queryExecution.executedPlan.toString
+      assert(tp.contains("BroadcastHashJoin"))
+      assert(tp.contains("WindowGroupLimit"))
+      // bm25: query-term df and the 1-row stats broadcast; the global
+      // top-k is TakeOrderedAndProject, never a full sort. The doc-length
+      // join is deliberately NOT hinted (n_docs rows — must be free to
+      // fall back to a co-partitioned join at scale).
+      val bp = Retrieval.bm25Search(d).queryExecution.executedPlan.toString
+      assert(bp.contains("BroadcastHashJoin"))
+      assert(bp.contains("TakeOrderedAndProject"))
+      (Retrieval.tfIdf(d).collect().toSet, Retrieval.bm25Search(d).collect().toSeq)
+    }
+    // with the rule on, both answer the same, and tf_idf runs with no
+    // broadcast (bm25's ORDER BY … LIMIT keeps its plan)
+    val tf = Retrieval.tfIdf(d)
+    assert((tf.collect().toSet, Retrieval.bm25Search(d).collect().toSeq) === answers)
+    assert(!nodes(tf.queryExecution.executedPlan).exists(_.isInstanceOf[BroadcastExchangeExec]))
   }
 
   test("degenerate inputs: empty corpus and no-hit query") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.operators.BronzeToSilver
@@ -35,18 +36,29 @@ class SkewSpec extends GraftSuite {
         expr("timestamp_millis(ingested_at_ms)").cast("timestamp_ntz"))
       .drop("ingested_at_ms")
 
-    val deduped = BronzeToSilver.dedup(skewed)
-    // correctness under skew: exactly one survivor per key, and the
-    // hot key keeps its earliest redelivery
-    assert(deduped.count() === 1001)
-    assert(deduped.filter(col("trade_id") === 7L)
-      .head().getAs[Long]("seq") === 0L)
-    // the mitigation is in the plan: a PARTIAL WindowGroupLimit runs
-    // before the exchange (map-side top-1 per key), so the hot key
-    // ships |mappers| rows, not 50k
-    val plan = deduped.queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"))
-    assert(plan.contains("Partial"), "expected a map-side partial limit")
+    // the ~400 KB of range rows fit in one AQE-coalesced partition, so
+    // the small-plan rule would run the dedup in one task with no
+    // exchange for a partial limit to bound: it is off here
+    withConf(SmallPlanSpec.NoGate) {
+      val deduped = BronzeToSilver.dedup(skewed)
+      // correctness under skew: exactly one survivor per key, and the
+      // hot key keeps its earliest redelivery
+      assert(deduped.count() === 1001)
+      assert(deduped.filter(col("trade_id") === 7L)
+        .head().getAs[Long]("seq") === 0L)
+      // the mitigation is in the plan: a PARTIAL WindowGroupLimit runs
+      // before the exchange (map-side top-1 per key), so the hot key
+      // ships |mappers| rows, not 50k
+      val plan = deduped.queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"))
+      assert(plan.contains("Partial"), "expected a map-side partial limit")
+    }
+    // with the rule on, the same dedup runs in one task to the same answer
+    val one = BronzeToSilver.dedup(skewed)
+    val rows = one.collect()
+    assert(rows.length === 1001)
+    assert(rows.find(_.getAs[Long]("trade_id") == 7L).get.getAs[Long]("seq") === 0L)
+    assert(!nodes(one.queryExecution.executedPlan).exists(_.isInstanceOf[Exchange]))
   }
 
   test("hot-key equi-join: AQE splits the skewed partition at runtime") {

@@ -15,9 +15,9 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.MaintenanceJobCountSpec.jobsOf
 import graft.operators.{GovernedPipeline, Serving}
 
-/** [[GraftSmallSortRule]]: a global sort whose input fits in one
-  * AQE-coalesced partition runs as one task and one job, with no range
-  * exchange. The dashboard query shapes over a governed catalog's
+/** [[GraftSmallPlanRule]]'s sort case: a global sort whose input fits
+  * in one AQE-coalesced partition runs as one task and one job, with no
+  * range exchange. The dashboard query shapes over a governed catalog's
   * serving views run pinned jobs; the sorts the rule must leave alone
   * keep their plans; and sorted answers equal the range-partitioned
   * plan's. */
@@ -68,7 +68,7 @@ class SmallSortSpec extends GraftSuite {
 
   test("dashboard reads run pinned jobs; a small sort plans no range exchange") {
     val pinned = Map("latest" -> 1, "candles_1m" -> 1, "candles_1h" -> 1,
-      "daily" -> 1, "health" -> 2)
+      "daily" -> 1, "health" -> 1)
     dashboard.foreach { case (kind, q) =>
       val df = spark.sql(q)
       val (rows, jobs) = jobsOf(spark)(df.collect())
@@ -95,7 +95,7 @@ class SmallSortSpec extends GraftSuite {
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = spark.sql(q)
       val plan = df.queryExecution.optimizedPlan
-      assert(GraftSmallSortRule(plan) eq plan)
+      assert(GraftSmallPlanRule(plan) eq plan)
       assert(!plan.exists(_.isInstanceOf[Repartition]))
       df.collect()
       assert(rangeExchanges(df) === 1 && !coalesced(df))
@@ -106,7 +106,7 @@ class SmallSortSpec extends GraftSuite {
     served
     val df = spark.sql("SELECT * FROM ss_ohlcv_1m ORDER BY window_start DESC LIMIT 5")
     val plan = df.queryExecution.optimizedPlan
-    assert(GraftSmallSortRule(plan) eq plan)
+    assert(GraftSmallPlanRule(plan) eq plan)
     assert(df.collect().length === 5)
     val ns = nodes(df.queryExecution.executedPlan)
     assert(ns.exists(_.isInstanceOf[TakeOrderedAndProjectExec]))
@@ -134,7 +134,7 @@ class SmallSortSpec extends GraftSuite {
     val batch = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
       .optimizedPlan
     assert(batch.isStreaming && !batch.exists(_.isInstanceOf[Repartition]))
-    assert(GraftSmallSortRule(batch) eq batch)
+    assert(GraftSmallPlanRule(batch) eq batch)
     assert(spark.table("ss_stream_totals").as[(String, Long)].collect().toSeq ===
       Seq(("b", 5L), ("c", 4L), ("a", 3L)))
   }

@@ -12,7 +12,10 @@ import graft.sources.Tables
   * from. */
 class TrainingExportSpec extends GraftSuite {
 
-  private lazy val docs = Tables.documents(spark, sf).cache()
+  // cached as read, in several partitions: a cache planned under the
+  // small-plan rule would hand every plan over it one partition
+  private lazy val docs =
+    withConf(SmallPlanSpec.NoGate)(Tables.documents(spark, sf).cache())
 
   test("plan is a deterministic permutation: stable across runs, shards balanced, packs fill") {
     val p1 = TrainingExport.plan(docs, shards = 8, contextTokens = 512)
@@ -124,12 +127,22 @@ class TrainingExportSpec extends GraftSuite {
   }
 
   test("the one exchange: shuffle, pack and manifest share a single shard partitioning") {
-    val p = TrainingExport.plan(docs, shards = 8, contextTokens = 512)
-    val plan = p.queryExecution.executedPlan.toString
-    // exactly one real exchange (the shard hash partitioning); the
-    // pack window rides it
-    val exchanges = "Exchange hashpartitioning".r
-      .findAllIn(plan).size
-    assert(exchanges === 1, plan)
+    // the fixture fits in one AQE-coalesced partition, so the
+    // small-plan rule would plan no exchange at all: it is off here
+    val many = withConf(SmallPlanSpec.NoGate) {
+      val p = TrainingExport.plan(docs, shards = 8, contextTokens = 512)
+      val plan = p.queryExecution.executedPlan.toString
+      // exactly one real exchange (the shard hash partitioning); the
+      // pack window rides it
+      val exchanges = "Exchange hashpartitioning".r
+        .findAllIn(plan).size
+      assert(exchanges === 1, plan)
+      p.collect().toSet
+    }
+    // with the rule on, the same plan rows from one job, no exchange
+    val one = TrainingExport.plan(docs, shards = 8, contextTokens = 512)
+    val (rows, jobs) = MaintenanceJobCountSpec.jobsOf(spark)(one.collect().toSet)
+    assert(rows === many)
+    assert(jobs.size === 1, jobs.mkString("; "))
   }
 }
