@@ -6,7 +6,7 @@ import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -78,17 +78,24 @@ private[graft] object FooterStats {
     * not. */
   def dataFiles(dir: String): Seq[String] = {
     if (!MetaIO.isDir(dir)) return Seq.empty
-    def walk(d: String): Seq[String] =
-      MetaIO.list(d).flatMap { p =>
-        val n = MetaIO.name(p)
-        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
-          Seq.empty
-        else if (MetaIO.isDir(p)) walk(p)
-        else if (n.endsWith(".parquet")) Seq(p)
-        else Seq.empty
-      }
-    walk(dir)
+    val p = new HPath(dir)
+    val fs = p.getFileSystem(MetaIO.conf)
+    val qualified = fs.makeQualified(p).toString
+    dataStatuses(fs, p).map(s =>
+      dir.stripSuffix("/") + s.getPath.toString.stripPrefix(qualified))
   }
+
+  /** The one data-file walk, [[dataFiles]]' rule through the Hadoop
+    * FileSystem a scan reads with, as statuses (a file index needs
+    * each file's length); a data file `path` lists as itself. A
+    * missing `path` throws. */
+  def dataStatuses(fs: FileSystem, path: HPath): Seq[FileStatus] =
+    fs.listStatus(path).toSeq.filterNot(s => hiddenName(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) dataStatuses(fs, s.getPath)
+        else Seq(s).filter(_.getPath.getName.endsWith(".parquet")))
+
+  private def hiddenName(n: String): Boolean =
+    n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
 
   /** Footer-read every data file under `versionDir` and report rows +
     * bounds for `cols`; `tableRoot` anchors the stored root-relative

@@ -158,7 +158,9 @@ object IncrementalIvf {
     * job when `queries` is a local relation). Those rows are the
     * broadcast probe side, and their ids a literal filter, so the
     * lists scan PRUNES to the probed partitions — the per-query cost
-    * an IVF index exists to buy. */
+    * an IVF index exists to buy. The lists scan plans from the
+    * manifest on the driver ([[SnapshotTable.read]]), so no listing
+    * job runs however many list directories the appends have made. */
   def search(spark: SparkSession, root: String, queries: DataFrame,
              nprobe: Int = 4, k: Int = 10): DataFrame = {
     val cent = Similarity.centroids(readCentroids(spark, root))

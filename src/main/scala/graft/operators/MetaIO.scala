@@ -84,7 +84,7 @@ private[graft] object MetaIO {
   private def viaHadoop(p: String): Boolean =
     forceHadoop || SchemePrefix.findPrefixOf(p).isDefined
 
-  private def conf: Configuration =
+  private[graft] def conf: Configuration =
     try org.apache.spark.sql.SparkSession.active
       .sparkContext.hadoopConfiguration
     catch { case _: Throwable => new Configuration() }

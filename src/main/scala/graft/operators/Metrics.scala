@@ -44,6 +44,11 @@ object Metrics {
     * extra aggregate job that the observed metric should have saved. */
   val observedFallbacks = new java.util.concurrent.atomic.AtomicLong
 
+  /** How many table scans inferred their schema from parquet footers
+    * in a job — a version without a recorded schema (an adopted
+    * `v=N`); every recorded version plans with none. */
+  val schemaInferences = new java.util.concurrent.atomic.AtomicLong
+
   /** `SparkContext.listenerBus` and `LiveListenerBus.waitUntilEmpty()`,
     * resolved once. Both are private[spark] (what Spark's own UI tests
     * call), hence reflection. */

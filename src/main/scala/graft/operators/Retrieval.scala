@@ -185,6 +185,23 @@ object Retrieval {
         min(col("df")).as("df")) // constant within a term
   }
 
+  /** The fixed schemas of the index sidecars — posting segments, their
+    * doc-length files and tombstone deltas — as [[chunkedPostings]],
+    * [[docLens]] and the tombstone pricing write them (doc ids are
+    * BIGINT, as every result frame here types them). Reads declare
+    * them, so a keyword call runs no footer-inference job. */
+  private val SegmentSchema = "term STRING, chunk BIGINT, postings ARRAY<" +
+    "STRUCT<doc_id: BIGINT, tf: BIGINT, dl: BIGINT, ps: ARRAY<INT>>>, df BIGINT"
+  private val DoclensSchema = "doc_id BIGINT, dl BIGINT"
+  private val TombSchema = "_seg STRING, doc_id BIGINT, dl BIGINT"
+
+  /** The posting segments `segs` unioned, each row tagged `_seg`. */
+  private def readSegments(spark: org.apache.spark.sql.SparkSession,
+                           root: String, segs: Seq[String]): DataFrame =
+    segs.map(sp => spark.read.schema(SegmentSchema)
+      .parquet(MetaIO.join(root, sp)).withColumn("_seg", lit(sp)))
+      .reduce(_ unionByName _)
+
   /** Write one posting segment: tmp dir first, atomic tree swap into
     * `v=$version/_bm25/$name`. Returns the root-relative segment
     * path. */
@@ -348,7 +365,7 @@ object Retrieval {
                             tombs: Seq[String]): Option[DataFrame] =
     if (tombs.isEmpty) None
     else Some(tombs.map(tp =>
-      spark.read.parquet(MetaIO.join(root, tp).toString))
+      spark.read.schema(TombSchema).parquet(MetaIO.join(root, tp)))
       .reduce(_ unionByName _))
 
   /** The unioned live `(_seg, doc_id, dl)` doc inventory of a coverage
@@ -366,7 +383,7 @@ object Retrieval {
       if (paths.isEmpty) Seq.empty[(String, Long, Long)]
         .toDF("_seg", "doc_id", "dl")
       else paths.map { case (sp, p) =>
-        spark.read.parquet(p.toString)
+        spark.read.schema(DoclensSchema).parquet(p)
           .select(lit(sp).as("_seg"), col("doc_id"), col("dl"))
       }.reduce(_ unionByName _)
     Some(readTombFrame(spark, root, meta.tombs) match {
@@ -653,10 +670,7 @@ object Retrieval {
         s"no index coverage at $root v=$v — run indexCorpus first"))
     if (meta.segs.size <= 1 && meta.tombs.isEmpty)
       return meta.segs.size // idempotent
-    val post = meta.segs.map(sp =>
-      spark.read.parquet(MetaIO.join(root, sp).toString)
-        .withColumn("_seg", lit(sp)))
-      .reduce(_ unionByName _)
+    val post = readSegments(spark, root, meta.segs)
     val exploded = post
       .select(col("_seg"), col("term"), explode(col("postings")).as("p"))
     val live = (readTombFrame(spark, root, meta.tombs) match {
@@ -734,10 +748,7 @@ object Retrieval {
         import spark.implicits._
         Seq.empty[(Long, Int)].toDF("doc_id", "n_occurrences")
       case Some(m) =>
-        val post0 = m.segs.map(sp =>
-          spark.read.parquet(MetaIO.join(root, sp).toString)
-            .withColumn("_seg", lit(sp)))
-          .reduce(_ unionByName _)
+        val post0 = readSegments(spark, root, m.segs)
           .filter(col("term").isin(phrase.distinct: _*))
           .select(col("_seg"), col("term"),
             explode(col("postings")).as("p"))
@@ -828,10 +839,7 @@ object Retrieval {
                            root: String, m: IndexMeta,
                            qTerms: Seq[String])
       : (DataFrame, DataFrame) = {
-    val post = m.segs.map(sp =>
-      spark.read.parquet(MetaIO.join(root, sp).toString)
-        .withColumn("_seg", lit(sp)))
-      .reduce(_ unionByName _)
+    val post = readSegments(spark, root, m.segs)
       .filter(col("term").isin(qTerms: _*))
     val exploded = post
       .select(col("_seg"), col("term"), explode(col("postings")).as("p"))

@@ -1,11 +1,14 @@
 package graft.operators
 
+import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListedParquet
 import org.apache.spark.sql.types
 
 /** Versioned parquet table: snapshots, time travel, rollback, expiry.
@@ -159,21 +162,8 @@ object SnapshotTable {
       // without a footer-sampling job
       commitChecksAndStats(df.sparkSession, root, next, statsCols, bloomCols)
         .map(_.schema).find(_.nonEmpty)
-        .fold(Commit())(sc => Commit().withSchema(asNullable(sc)))
+        .fold(Commit())(sc => Commit().withSchema(ListedParquet.nullable(sc)))
     }
-
-  /** `st` with every field, array element and map value nullable —
-    * the shape Spark's file sources give a data schema on read. */
-  private def asNullable(st: types.StructType): types.StructType = {
-    def of(dt: types.DataType): types.DataType = dt match {
-      case s: types.StructType => asNullable(s)
-      case a: types.ArrayType => types.ArrayType(of(a.elementType), true)
-      case m: types.MapType => types.MapType(of(m.keyType), of(m.valueType), true)
-      case other => other
-    }
-    types.StructType(st.fields.map(f =>
-      f.copy(dataType = of(f.dataType), nullable = true)))
-  }
 
   // ──────────────── the commit record (`v=N/_commit`) ────────────────
   //
@@ -309,11 +299,13 @@ object SnapshotTable {
   /** Read the current snapshot (or a specific `version` — time
     * travel). Manifest-aware: a delta-committed version
     * ([[commitDelta]]) resolves through its partition manifest to ONE
-    * unified scan over every referenced `v=M/part=...` directory
-    * (basePath = table root, the storage-version layer inferred away),
-    * so partition pruning and pushdown behave exactly as on a plain
-    * partitioned table. Every read path (branches, [[Catalog]],
-    * Serving) goes through here, so delta tables compose everywhere. */
+    * unified scan over every referenced `v=M/part=...` directory, so
+    * partition pruning and pushdown behave exactly as on a plain
+    * partitioned table. Planning reads the commit record and lists the
+    * directories it names on the driver ([[scanLeaves]]): no listing
+    * job and no schema-inference job at any directory count. Every
+    * read path (branches, [[Catalog]], Serving) goes through here, so
+    * delta tables compose everywhere. */
   def read(spark: SparkSession, root: String, version: Long = -1L): DataFrame = {
     val v = if (version >= 0) version else latestVersion(root)
     require(v >= 0, s"no committed version at $root")
@@ -332,100 +324,59 @@ object SnapshotTable {
       .as(FileCol),
     col("_metadata.row_index").as(PosCol))
 
+  private def withPosCols(df: DataFrame, withPos: Boolean): DataFrame =
+    if (withPos) df.select(col("*") +: posCols: _*) else df
+
   /** The physical scan of a version — plain, manifested, or
     * era-projected — optionally carrying each row's (file, position)
     * identity from the parquet reader's `_metadata` column (needed to
     * resolve merge-on-read position deletes). */
   private def scan(spark: SparkSession, root: String, v: Long, c: Commit,
-                   withPos: Boolean): DataFrame = {
-    if (c.entries.isEmpty) {
-      // a MANIFESTED version with zero live entries — everything was
-      // deleted (deleteWhere emptying every partition) or truncated:
-      // an empty frame under the version's recorded schema, NOT a
-      // doomed schema-inference over an empty directory
-      if (c.manifested) {
-        val schema = c.schema.getOrElse(
-          throw new IllegalStateException(
-            s"version $v at $root has an empty manifest and no " +
-              "recorded schema"))
-        val base = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        return if (!withPos) base
-        else base.select(col("*") +:
-          Seq(lit(null).cast("string").as(FileCol),
-            lit(null).cast("long").as(PosCol)): _*)
-      }
-      val base = reader(spark, c).parquet(s"$root/v=$v")
-      if (withPos) base.select(col("*") +: posCols: _*) else base
-    } else scanEntries(spark, root, c, c.entries, withPos)
-  }
+                   withPos: Boolean): DataFrame =
+    if (c.manifested || c.entries.nonEmpty)
+      scanEntries(spark, root, c, c.entries, withPos)
+    else withPosCols(scanLeaves(spark, root, Seq(s"v=$v"), c.schema), withPos)
 
-  /** A parquet reader under record `c`'s schema — version METADATA,
-    * not file-footer sampling (the Iceberg rule: planning reads no
-    * footer and runs no inference job); a version without a recorded
-    * schema infers. */
-  private def reader(spark: SparkSession, c: Commit) =
-    c.schema.fold(spark.read)(spark.read.schema(_))
+  /** The one physical parquet scan: `leaves` (root-relative `v=N/...`
+    * data directories or files) planned from the manifest on the
+    * driver. Each leaf is listed by [[FooterStats.dataStatuses]]
+    * through the FileSystem the scan reads with, driver-parallel, and
+    * the listing becomes Spark's own file index ([[ListedParquet]]),
+    * so planning runs no listing job at any directory count. Each
+    * storage-version directory `root/v=N` is a partition base path:
+    * `col=value` levels below it are partition columns, the `v=N`
+    * level never is, so a data column named `v` needs no special
+    * case. The schema is the record's (`schema`, version METADATA —
+    * the Iceberg rule: planning reads no footer); a version without
+    * one (an adopted `v=N`) infers it in a job, counted by
+    * [[Metrics.schemaInferences]]. */
+  private def scanLeaves(spark: SparkSession, root: String,
+                         leaves: Seq[String],
+                         schema: Option[types.StructType]): DataFrame = {
+    val listed = leaves.toVector.par.map { rel =>
+      val p = new HPath(s"$root/$rel")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.makeQualified(new HPath(s"$root/v=${svOf(rel)}")) ->
+        FooterStats.dataStatuses(fs, p)
+    }.seq
+    if (schema.isEmpty) Metrics.schemaInferences.incrementAndGet()
+    ListedParquet.frame(spark, listed, schema)
+  }
 
   /** The manifested scan of the version recorded by `c`, RESTRICTED
     * to `m` — the entry-set parameterization [[scan]] and
-    * [[appendedBetween]] share (era projection, per-spec grouping,
-    * v-collision fallback all apply to whatever subset is passed). */
+    * [[appendedBetween]] share. A manifested version with zero live
+    * entries — everything was deleted (deleteWhere emptying every
+    * partition) or truncated — is an empty scan under the version's
+    * recorded schema, NOT a doomed schema inference. */
   private def scanEntries(spark: SparkSession, root: String, c: Commit,
                           m: Seq[(String, Long)],
-                          withPos: Boolean): DataFrame = {
-    {
-      // field-id resolution (the Iceberg evolution rule): when version
-      // metadata carries a field-id table, every referenced storage
-      // era's PHYSICAL column names resolve to the current names by id
-      // — a renamed column reads correctly from files written under its
-      // old name, a dropped-then-readded name never resurrects old data
-      val eras = eraProjections(spark, root, c,
-        m.map { case (part, sv) => (s"v=$sv/$part", sv) }, withPos)
-      if (eras.isDefined) return eras.get
-      // one scan per partition-spec ERA (usually one): directories
-      // written under different specs cannot share a partition
-      //-discovery pass (their dir layouts disagree), but each era's
-      // scan keeps its own partition pruning, and a predicate on the
-      // other era's column pushes down as a data filter there
-      val specGroups = m.sorted
-        .groupBy { case (_, sv) => partitionSpecAt(root, sv) }
-        .toSeq.sortBy(_._1.getOrElse(""))
-      // schema from version METADATA, not file-footer sampling (the
-      // Iceberg rule): a union scan over storage versions written
-      // before a column existed must still surface it (null-filled),
-      // and planning must not read every footer at 100 TB file counts
-      val recSchema = c.schema
-      // a DATA column literally named "v" collides with the storage
-      // layer's `v=N` partition inference under a table-root basePath
-      // (drop("v") would silently erase user data) — such tables scan
-      // per storage version with basePath v=N, so the storage layer
-      // never becomes a column at all
-      val vCollision = recSchema.exists(_.fieldNames.contains("v"))
-      val scans = specGroups.flatMap { case (specOpt, entries) =>
-        // hidden partitioning: a transform era's DERIVED directory
-        // fields are layout, not data — partition discovery surfaces
-        // them, readers never do
-        val hidden = specOpt.toSeq.flatMap(parseSpecs)
-          .filterNot(_.isIdentity).map(_.field)
-        def hide(df: DataFrame): DataFrame = hidden.foldLeft(df)(_.drop(_))
-        if (!vCollision) {
-          val dirs = entries.map { case (part, sv) => s"$root/v=$sv/$part" }
-          val base = reader(spark, c).option("basePath", root).parquet(dirs: _*)
-          val b2 =
-            if (withPos) base.select(col("*") +: posCols: _*) else base
-          Seq(hide(b2.drop("v")))
-        } else entries.groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (sv, es) =>
-            val dirs = es.map { case (part, _) => s"$root/v=$sv/$part" }
-            val base = reader(spark, c).option("basePath", s"$root/v=$sv")
-              .parquet(dirs: _*)
-            hide(if (withPos) base.select(col("*") +: posCols: _*) else base)
-          }
-      }
-      scans.reduce(_.unionByName(_))
-    }
-  }
+                          withPos: Boolean): DataFrame =
+    if (m.isEmpty) withPosCols(scanLeaves(spark, root, Seq.empty,
+      Some(c.schema.getOrElse(throw new IllegalStateException(
+        s"$root has an empty manifest and no recorded schema")))), withPos)
+    else scanSpecEras(spark, root, c,
+      m.sorted.map { case (part, sv) => s"v=$sv/$part" }, withPos)
 
   /** Resolve BOTH merge-on-read delete flavors over a
     * position-carrying frame — position sidecars first (exact (file,
@@ -740,82 +691,88 @@ object SnapshotTable {
         foldedDefault.map(lastId -> _)))
   }
 
-  /** Id-resolved manifested read: None when the reading version has no
-    * field-id table or every referenced era already matches the current
-    * names (the fast path — ONE union relation, no per-era projection).
-    * Otherwise each group of storage eras sharing a physical naming is
-    * scanned under its PHYSICAL read schema (pushdown and partition
-    * pruning intact per group) and projected onto the current names by
-    * field id; added-later columns null-fill, dropped ids are not
-    * selected.
+  /** `leaves` (root-relative `v=N/part=...` partition DIRECTORIES on
+    * the [[scan]] path, individual FILES on the [[readSkipping]] path)
+    * under record `c`'s schema, one scan per group of storage versions
+    * sharing a partition-spec ERA and a physical naming. Directories
+    * written under different specs cannot share a partition-discovery
+    * pass (their dir layouts disagree), but each era's scan keeps its
+    * own partition pruning, and a predicate on the other era's column
+    * pushes down as a data filter there. The schema comes from version
+    * METADATA, so a union over storage versions written before a
+    * column existed still surfaces it (null-filled).
     *
-    * `m` entries are (root-relative leaf, storage version) — the leaf
-    * is a `v=N/part=...` partition DIRECTORY on the [[scan]] path, or
-    * an individual FILE on the [[readSkipping]] path (file pruning must
-    * keep per-era name resolution, or a renamed column silently
-    * null-fills from old-era files). */
-  private def eraProjections(spark: SparkSession, root: String, c: Commit,
-                             m: Seq[(String, Long)],
-                             withPos: Boolean = false): Option[DataFrame] = {
-    val curFields = c.fields.getOrElse(return None)
-    val curSchema = c.schema.getOrElse(return None)
-    val nameToId = curFields.map(t => t._2 -> t._1).toMap
-    // physical name of each current field in era `sv` (None = absent)
-    def projOf(sv: Long): Seq[Option[String]] = {
-      val era = commitOf(root, sv)
-      val eraIds = era.fields.map(_.toMap)
-      val eraNames = era.schema.map(_.fieldNames.toSet)
-      curSchema.fields.toSeq.map { f =>
-        eraIds match {
-          case Some(ids) => nameToId.get(f.name).flatMap(ids.get)
-            .filter(p => eraNames.forall(_.contains(p)))
-          case None => Some(f.name) // pre-field-id era: name identity
-        }
-      }
+    * Field-id resolution (the Iceberg evolution rule): when version
+    * metadata carries a field-id table, an era whose PHYSICAL column
+    * names differ from the current ones is scanned under its physical
+    * read schema (pushdown and partition pruning intact) and projected
+    * onto the current names by field id; added-later columns
+    * null-fill, dropped ids are not selected. File pruning keeps this
+    * per-era resolution, or a renamed column would silently null-fill
+    * from old-era files. */
+  private def scanSpecEras(spark: SparkSession, root: String, c: Commit,
+                           leaves: Seq[String],
+                           withPos: Boolean): DataFrame = {
+    val cur = for (f <- c.fields; s <- c.schema) yield (f, s)
+    val nameToId = cur.toSeq.flatMap(_._1.map(t => t._2 -> t._1)).toMap
+    // physical name of each current field in era `sv` (None = absent);
+    // None for the whole era when it reads under the current names
+    def projOf(sv: Long): Option[Seq[Option[String]]] = cur.flatMap {
+      case (_, curSchema) =>
+        val era = commitOf(root, sv)
+        val eraIds = era.fields.map(_.toMap)
+        val eraNames = era.schema.map(_.fieldNames.toSet)
+        Some(curSchema.fields.toSeq.map { f =>
+          eraIds match {
+            case Some(ids) => nameToId.get(f.name).flatMap(ids.get)
+              .filter(p => eraNames.forall(_.contains(p)))
+            case None => Some(f.name) // pre-field-id era: name identity
+          }
+        }).filterNot(_ == curSchema.fieldNames.toSeq.map(Option(_)))
     }
-    val identity = curSchema.fieldNames.toSeq.map(Option(_))
-    val bySv = m.map(_._2).distinct.map(sv => sv -> projOf(sv)).toMap
-    if (bySv.values.forall(_ == identity)) return None // fast path
-    // mirror the fast path's column order: data columns in schema
-    // order, the partition column appended last (Spark's layout for
-    // basePath partition-discovery reads)
-    val partCol = partitionSpec(root)
-    def orderKey(f: types.StructField): Int =
-      if (partCol.contains(f.name)) 1 else 0
-    // group by (projection, spec era): dirs under different partition
-    // specs cannot share one partition-discovery pass
-    val groups = m.sorted
-      .groupBy(e => (bySv(e._2), partitionSpecAt(root, e._2)))
-    val parts = groups.toSeq.sortBy(_._2.head)
-      .map { case ((proj, _), entries) =>
-      val dirs = entries.map { case (rel, _) => s"$root/$rel" }
-      val readSchema = types.StructType(
-        curSchema.fields.toSeq.zip(proj).collect {
-          case (f, Some(p)) => types.StructField(p, f.dataType, nullable = true)
-        })
-      // a column absent from the era fills its INITIAL DEFAULT when
-      // one was declared at add time (pre-add files read the default;
-      // eras that HAVE the column read real values, NULLs included),
-      // null otherwise
-      val defs = c.defaults.toMap
-      val projected = curSchema.fields.toSeq.zip(proj)
-        .sortBy { case (f, _) => orderKey(f) }
-        .map {
-          case (f, Some(p)) => col(s"`$p`").as(f.name)
-          case (f, None) =>
-            nameToId.get(f.name).flatMap(defs.get) match {
-              case Some(d) => expr(d).cast(f.dataType).as(f.name)
-              case None => lit(null).cast(f.dataType).as(f.name)
+    val bySv = leaves.map(svOf).distinct.map(sv => sv -> projOf(sv)).toMap
+    val renamed = bySv.values.exists(_.isDefined)
+    leaves.groupBy(l => (bySv(svOf(l)), partitionSpecAt(root, svOf(l))))
+      .toSeq.sortBy { case ((_, spec), ls) =>
+        if (renamed) ls.min else spec.getOrElse("") }.map {
+        case ((None, spec), ls) =>
+          // hidden partitioning: a transform era's DERIVED directory
+          // fields are layout, not data — partition discovery surfaces
+          // them, readers never do
+          val hidden = spec.toSeq.flatMap(parseSpecs)
+            .filterNot(_.isIdentity).map(_.field)
+          hidden.foldLeft(
+            withPosCols(scanLeaves(spark, root, ls, c.schema), withPos))(
+            _.drop(_))
+        case ((Some(proj), _), ls) =>
+          val curSchema = cur.get._2
+          val readSchema = types.StructType(
+            curSchema.fields.toSeq.zip(proj).collect {
+              case (f, Some(p)) => types.StructField(p, f.dataType, nullable = true)
+            })
+          // mirror the current-name scan's column order: data columns
+          // in schema order, the partition column appended last
+          // (Spark's layout for partition-discovery reads). A column
+          // absent from the era fills its INITIAL DEFAULT when one was
+          // declared at add time (pre-add files read the default; eras
+          // that HAVE the column read real values, NULLs included),
+          // null otherwise
+          val partCol = partitionSpec(root)
+          val defs = c.defaults.toMap
+          val projected = curSchema.fields.toSeq.zip(proj)
+            .sortBy { case (f, _) => if (partCol.contains(f.name)) 1 else 0 }
+            .map {
+              case (f, Some(p)) => col(s"`$p`").as(f.name)
+              case (f, None) =>
+                nameToId.get(f.name).flatMap(defs.get) match {
+                  case Some(d) => expr(d).cast(f.dataType).as(f.name)
+                  case None => lit(null).cast(f.dataType).as(f.name)
+                }
             }
-        }
-      // no drop("v") needed: the select projects exactly the current
-      // schema (plus pos columns), and `_metadata` resolves directly
-      // against the scan relation
-      spark.read.schema(readSchema).option("basePath", root)
-        .parquet(dirs: _*)
-        .select(projected ++ (if (withPos) posCols else Seq.empty): _*)
-    }
-    Some(parts.reduce(_.unionByName(_)))
+          // `_metadata` resolves directly against the scan relation
+          scanLeaves(spark, root, ls, Some(readSchema))
+            .select(projected ++ (if (withPos) posCols else Seq.empty): _*)
+      }.reduce(_.unionByName(_))
   }
 
   /** MERGE-upsert `source` into the table on `key` and commit the
@@ -913,11 +870,7 @@ object SnapshotTable {
         "removed) — incremental consumers must read below the " +
         "compaction watermark")
     val newEntries = (toEntries.toSet -- fromEntries.toSet).toSeq.sorted
-    if (newEntries.isEmpty) {
-      val schema = read(spark, root, to).schema
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    if (newEntries.isEmpty) return read(spark, root, to).limit(0)
     resolveDeletes(spark, root, toC,
       scanEntries(spark, root, toC, newEntries, toC.hasDeletes))
   }
@@ -1183,9 +1136,11 @@ object SnapshotTable {
   //   v=1/_commit   p=2024-01-01 -> v=0, p=2024-01-02 -> v=1   (delta)
   //
   // Reading v=1 scans v=0/p=2024-01-01 ∪ v=1/p=2024-01-02 as ONE
-  // parquet relation (basePath = table root; the `v` layer is inferred
-  // as a partition column and dropped), so predicate pushdown and
-  // partition pruning work exactly as on a plain partitioned table.
+  // parquet relation whose file index is listed from these entries on
+  // the driver, each `v=N` directory a partition base path (so `p` is
+  // a partition column and the `v` layer is not a column at all):
+  // predicate pushdown and partition pruning work exactly as on a
+  // plain partitioned table, and planning runs no listing job.
 
   private def specPath(root: String) = MetaIO.join(root, "_partition_spec")
 
@@ -4123,47 +4078,14 @@ object SnapshotTable {
                             kept: Seq[String],
                             rowFilter: Option[Column]): DataFrame = {
     def filtered(df: DataFrame): DataFrame = rowFilter.fold(df)(df.filter)
-    if (kept.isEmpty) {
-      val schema = read(spark, root, v).schema
-      return filtered(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    }
-    // mirror read()'s manifested path: schema from version metadata,
-    // basePath-rooted union so partition columns resolve; the storage
-    // `v` layer is inferred as a partition and dropped — and unapplied
-    // MoR delete files mask their rows here exactly as in [[read]]
+    if (kept.isEmpty) return filtered(read(spark, root, v).limit(0))
+    // read()'s manifested path over FILES: schema from version
+    // metadata, field-id era projection, one scan per spec era — and
+    // unapplied MoR delete files mask their rows here exactly as in
+    // [[read]]
     val c = commitOf(root, v)
-    // one scan per spec era (see [[scan]]): mixed dir layouts cannot
-    // share a partition-discovery pass; a data column named "v"
-    // collides with the storage layer and scans per storage version
-    val recSchema = c.schema
-    val vCollision = recSchema.exists(_.fieldNames.contains("v"))
-    // field-id evolution: old-era files must resolve physical names by
-    // id (a renamed column read under the current name null-fills) —
-    // the same era projection [[scan]] applies, over kept FILES
-    val eras = eraProjections(spark, root, c,
-      kept.map(f => (f, svOf(f))), withPos = c.hasDeletes)
-    if (eras.isDefined) return filtered(resolveDeletes(spark, root, c, eras.get))
-    val keptGroups: Seq[(Option[String], Seq[String])] =
-      if (!vCollision)
-        kept.groupBy(f => partitionSpecAt(root, svOf(f)))
-          .toSeq.sortBy(_._1.getOrElse(""))
-      else kept.groupBy(f => Option(svOf(f).toString))
-        .toSeq.sortBy(_._1.getOrElse(""))
-    val scans = keptGroups.map { case (key, fs) =>
-      val bp = if (!vCollision) root else s"$root/v=${key.get}"
-      // hidden partitioning: drop this group's derived directory fields
-      val spec = if (!vCollision) key
-        else partitionSpecAt(root, key.get.toLong)
-      val hidden = spec.toSeq.flatMap(parseSpecs)
-        .filterNot(_.isIdentity).map(_.field)
-      def hide(df: DataFrame): DataFrame = hidden.foldLeft(df)(_.drop(_))
-      val base = reader(spark, c).option("basePath", bp)
-        .parquet(fs.map(f => s"$root/$f"): _*)
-      val b2 = if (c.hasDeletes) base.select(col("*") +: posCols: _*) else base
-      hide(if (!vCollision) b2.drop("v") else b2)
-    }
-    filtered(resolveDeletes(spark, root, c, scans.reduce(_.unionByName(_))))
+    filtered(resolveDeletes(spark, root, c,
+      scanSpecEras(spark, root, c, kept, c.hasDeletes)))
   }
 
   private def ndvColsPath(root: String) = MetaIO.join(root, "_ndvcols")

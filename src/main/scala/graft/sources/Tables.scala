@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListedParquet
 import org.apache.spark.sql.types.LongType
 
 /** Typed readers for the driver-provided parquet tables.
@@ -18,8 +19,13 @@ import org.apache.spark.sql.types.LongType
   */
 object Tables {
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One input file under the schema its footer declares, read on the
+    * driver ([[ListedParquet.footerSchema]]), so building an input
+    * runs no schema-inference job. */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = s"$dir/$name.parquet"
+    spark.read.schema(ListedParquet.footerSchema(spark, file)).parquet(file)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "nation")
@@ -33,10 +39,8 @@ object Tables {
 
   /** Raw event stream with `ts` normalized to TIMESTAMP_NTZ micros. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // Defensive: a caller-provided session (e.g. the driver's smoke
-    // check) may lack the nanos config; it is runtime-settable.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = read(spark, dir, "events")
+    val raw = spark.read.schema(eventsRawSchema(spark, dir))
+      .parquet(s"$dir/events.parquet")
     val tsCol =
       if (raw.schema("ts").dataType == LongType)
         // nanos long -> micros -> ntz (session tz is UTC, so the LTZ->NTZ
@@ -48,7 +52,9 @@ object Tables {
 
   /** Schema of the raw (unnormalized) events parquet, for streaming reads. */
   def eventsRawSchema(spark: SparkSession, dir: String) = {
+    // Defensive: a caller-provided session (e.g. the driver's smoke
+    // check) may lack the nanos config; it is runtime-settable.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema
+    ListedParquet.footerSchema(spark, s"$dir/events.parquet")
   }
 }

@@ -222,6 +222,26 @@ class AnalyticsSpec extends GraftSuite {
     assert(!formattedPlan(df).contains("CartesianProduct"))
   }
 
+  test("Tables readers declare the footer schema: q22's inputs build with no job") {
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "region" -> Tables.region, "nation" -> Tables.nation,
+      "customer" -> Tables.customer, "supplier" -> Tables.supplier,
+      "part" -> Tables.part, "orders" -> Tables.orders,
+      "lineitem" -> Tables.lineitem, "documents" -> Tables.documents,
+      "embeddings" -> Tables.embeddings).foreach { case (name, read) =>
+      assert(read(spark, sf).schema ===
+        spark.read.parquet(s"$sf/$name.parquet").schema, name)
+    }
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    assert(Tables.eventsRawSchema(spark, sf) === raw.schema)
+    assert(Tables.events(spark, sf).count() === raw.count())
+    val (_, jobs) = MaintenanceJobCountSpec.jobsOf(spark)(Seq(
+      Tables.customer(spark, sf), Tables.nation(spark, sf),
+      Tables.orders(spark, sf)))
+    assert(jobs.isEmpty, jobs.mkString("; "))
+  }
+
   test("q22: broadcast scalar + anti-join equals the textbook correlated SQL") {
     Tables.customer(spark, sf).createOrReplaceTempView("q22_customer")
     Tables.nation(spark, sf).createOrReplaceTempView("q22_nation")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Catalog, SnapshotTable}
@@ -48,6 +49,15 @@ class HadoopIoSpec extends GraftSuite {
       SnapshotTable.commitAppend(
         Seq(("z", -5L, "d3")).toDF("k", "n", "day"), root, "day")
     }
+  }
+
+  test("manifested and kept-file reads over file:// return the plain-path rows") {
+    val plain = HadoopIoSpec.scanRows(spark,
+      Files.createTempDirectory("graft-hio-nio").toString + "/t")
+    assert(plain._2 === Seq("[c,30,d2]", "[d,4,d2]"))
+    assert(plain._1.size === 6)
+    assert(HadoopIoSpec.scanRows(spark, uriRoot("graft-hio-scan") + "/t")
+      === plain)
   }
 
   test("version claims stay exclusive through the Hadoop branch") {
@@ -104,5 +114,29 @@ class HadoopIoSpec extends GraftSuite {
         .first.getLong(0) === 2L)
       assert(spark.sql("SHOW TABLES IN ghio.db").count() === 1)
     } finally spark.conf.unset("spark.sql.catalog.ghio")
+  }
+}
+
+object HadoopIoSpec {
+
+  /** A manifested table built at `root` by a delta commit, an append
+    * and a merge-on-read upsert (so scans resolve a position delete):
+    * every live row, and the rows of its `day=d2` files read alone by
+    * `readFiles`, each sorted. */
+  def scanRows(spark: SparkSession, root: String): (Seq[String], Seq[String]) = {
+    import spark.implicits._
+    SnapshotTable.commitDelta(Seq(("a", 1L, "d1"), ("b", 2L, "d1"),
+      ("c", 3L, "d2")).toDF("k", "n", "day"), root, "day",
+      statsCols = Seq("n"))
+    SnapshotTable.commitAppend(
+      Seq(("d", 4L, "d2"), ("e", 5L, "d3")).toDF("k", "n", "day"), root, "day")
+    SnapshotTable.upsertMor(spark, root, "day",
+      Seq(("c", 30L, "d2"), ("f", 6L, "d1")).toDF("k", "n", "day"), Seq("k"))
+    val v = SnapshotTable.latestVersion(root)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    (rows(SnapshotTable.read(spark, root)),
+      rows(SnapshotTable.readFiles(spark, root, v,
+        SnapshotTable.liveFiles(root, v).filter(_.contains("day=d2")))))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.MaintenanceJobCountSpec.jobsOf
-import graft.operators.{Catalog, IncrementalIvf, SnapshotTable}
+import graft.operators.{Catalog, IncrementalIvf, Metrics, Retrieval, SnapshotTable}
 import graft.streaming.GovernedStream
 
 /** Table metadata costs no Spark job: every commit records its schema,
@@ -51,6 +51,56 @@ class MetadataJobCountSpec extends GraftSuite {
         assert(SnapshotTable.statsCoverage(root) === stats)
       }
     }
+  }
+
+  /** `body`'s jobs that list files: Spark's parallel partition
+    * discovery, which a read planned from the manifest never runs. */
+  private def listingJobs[A](body: => A): Seq[String] =
+    jobsOf(spark)(body)._2.filter(_.contains("[Listing leaf files"))
+
+  private val wide = (0 until 200)
+    .map(i => (i.toLong, i * 0.5, f"p${i % 40}%02d")).toDF("id", "price", "p")
+
+  test("reads of 40 manifest directories plan from the manifest, with no listing job") {
+    val root = tmp("graft-jobs-wide")
+    SnapshotTable.commitAppend(wide, root, "p")
+    assert(SnapshotTable.manifestEntries(root, 0L).size === 40)
+    assert(listingJobs {
+      val df = pin(0, "read of 40 directories")(SnapshotTable.read(spark, root))
+      assert(df.count() === 200L)
+      assert(df.filter(col("p") === "p07" && col("price") > 10.0).count() === 4L)
+      assert(SnapshotTable.readFiles(spark, root, 0L,
+        SnapshotTable.liveFiles(root, 0L)).count() === 200L)
+    }.isEmpty)
+  }
+
+  test("a plain version partitioned into 40 directories reads with no listing job") {
+    val root = tmp("graft-jobs-wide-plain")
+    wide.write.partitionBy("p").parquet(s"$root/v=0")
+    val recorded = SnapshotTable.Commit()
+      .withSchema(spark.read.parquet(s"$root/v=0").schema)
+    SnapshotTable.writeCommit(root, 0L, recorded)
+    SnapshotTable.moveMarker(root, 0L)
+    assert(listingJobs {
+      val df = pin(0, "read of a 40-directory version")(
+        SnapshotTable.read(spark, root))
+      assert(df.count() === 200L)
+      assert(df.filter(col("p") === "p07" && col("price") > 10.0).count() === 4L)
+    }.isEmpty)
+  }
+
+  test("a version without a recorded schema infers it in one counted job") {
+    val root = tmp("graft-jobs-adopted")
+    wide.write.partitionBy("p").parquet(s"$root/v=0")
+    SnapshotTable.writeCommit(root, 0L)
+    SnapshotTable.moveMarker(root, 0L)
+    val before = Metrics.schemaInferences.get
+    val (df, jobs) = jobsOf(spark)(SnapshotTable.read(spark, root))
+    assert(Metrics.schemaInferences.get - before === 1L)
+    assert(jobs.size === 1 && !jobs.exists(_.contains("[Listing leaf files")),
+      jobs.mkString("; "))
+    assert(df.schema.fieldNames.toSeq === Seq("id", "price", "p"))
+    assert(df.count() === 200L)
   }
 
   test("a steady-state governed stream commit runs at most three jobs") {
@@ -134,13 +184,34 @@ class MetadataJobCountSpec extends GraftSuite {
     val batch = local(250L, 50, 0L)
     pin(8, "steady-state appendBatch")(
       IncrementalIvf.appendBatch(spark, root, batch))
-    // the centroid collect, the lists listing (over 32 partition dirs)
-    // and the adaptive stages of the lists scan and rank window; the
+    // the centroid collect and the lists scan with its rank window,
+    // planned from the manifest (no listing job at any list count); the
     // queries' probes fold over the local relation (the probe window
     // and its join back onto the queries measured 9)
     val queries = local(0L, 32, 1000000000L)
-    assert(pin(5, "search of 32 local queries")(
+    assert(pin(2, "search of 32 local queries")(
       IncrementalIvf.search(spark, root, queries).collect()).length === 320)
+  }
+
+  test("a stored keyword batch reads its index sidecars with no inference job") {
+    val root = tmp("graft-jobs-bm25")
+    val docs = Seq((1L, "spark merge window", "a"), (2L, "the window", "b"),
+      (3L, "merge the spark", "a")).toDF("doc_id", "text", "source")
+    SnapshotTable.commitAppend(docs, root, "source")
+    Retrieval.indexCorpus(spark, root)
+    SnapshotTable.upsertMor(spark, root, "source",
+      Seq((2L, "merge merge", "b")).toDF("doc_id", "text", "source"),
+      Seq("doc_id"))
+    Retrieval.indexCorpusDelta(spark, root)
+    assert(Retrieval.indexSegments(root).size === 2)
+    assert(Retrieval.indexTombs(root).size === 1)
+    val qs = Seq("qa" -> Seq("merge", "spark"), "qb" -> Seq("window"))
+    val (rows, jobs) = jobsOf(spark)(
+      Retrieval.bm25SearchStoredBatch(spark, root, qs, k = 3).collect())
+    assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq ===
+      Seq(("qa", 1L), ("qa", 3L), ("qa", 2L), ("qb", 1L)))
+    assert(!jobs.exists(_.startsWith("parquet at Retrieval")), jobs)
+    assert(jobs.size <= 7, jobs.mkString("; "))
   }
 
   /** Spark's own per-file min/max: the values the stats must hold. */

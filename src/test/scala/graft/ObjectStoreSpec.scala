@@ -70,6 +70,16 @@ class ObjectStoreSpec extends GraftSuite with BeforeAndAfterAll {
     assert(SnapshotTable.read(spark, proot).count() === 2)
   }
 
+  test("manifested and kept-file reads return the filesystem-mode rows") {
+    val arb = MetaIO.arbiter
+    MetaIO.arbiter = None
+    val fsRows =
+      try HadoopIoSpec.scanRows(spark, tmp("graft-s3-fs") + "/t")
+      finally MetaIO.arbiter = arb
+    assert(HadoopIoSpec.scanRows(spark, tmp("graft-s3-scan") + "/t")
+      === fsRows)
+  }
+
   test("catalog transactions, views, rollback — all arbiter-decided") {
     val root = tmp("graft-s3-cat") + "/cat"
     val c0 = Catalog.transact(root, Seq(
