@@ -339,10 +339,12 @@ object SnapshotTable {
 
   /** The one physical parquet scan: `leaves` (root-relative `v=N/...`
     * data directories or files) planned from the manifest on the
-    * driver. Each leaf is listed by [[FooterStats.dataStatuses]]
-    * through the FileSystem the scan reads with, driver-parallel, and
-    * the listing becomes Spark's own file index ([[ListedParquet]]),
-    * so planning runs no listing job at any directory count. Each
+    * driver. Each directory leaf is listed by
+    * [[FooterStats.dataStatuses]] through the FileSystem the scan
+    * reads with, driver-parallel; file leaves list through their
+    * directory, one call per directory rather than per file. The
+    * listing becomes Spark's own file index ([[ListedParquet]]), so
+    * planning runs no listing job at any directory count. Each
     * storage-version directory `root/v=N` is a partition base path:
     * `col=value` levels below it are partition columns, the `v=N`
     * level never is, so a data column named `v` needs no special
@@ -353,12 +355,16 @@ object SnapshotTable {
   private def scanLeaves(spark: SparkSession, root: String,
                          leaves: Seq[String],
                          schema: Option[types.StructType]): DataFrame = {
-    val listed = leaves.toVector.par.map { rel =>
-      val p = new HPath(s"$root/$rel")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.makeQualified(new HPath(s"$root/v=${svOf(rel)}")) ->
-        FooterStats.dataStatuses(fs, p)
-    }.seq
+    val listed = leaves.groupBy(l =>
+        if (l.endsWith(".parquet")) l.take(l.lastIndexOf('/')) else l)
+      .toVector.sortBy(_._1).par.map { case (rel, ls) =>
+        val p = new HPath(s"$root/$rel")
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        lazy val named = fs.listStatus(p).map(s => s"$rel/${s.getPath.getName}" -> s).toMap
+        fs.makeQualified(new HPath(s"$root/v=${svOf(rel)}")) ->
+          (if (ls.head == rel) FooterStats.dataStatuses(fs, p) else ls.map(k =>
+            named.getOrElse(k, throw new java.io.FileNotFoundException(s"$root/$k"))))
+      }.seq
     if (schema.isEmpty) Metrics.schemaInferences.incrementAndGet()
     ListedParquet.frame(spark, listed, schema)
   }
@@ -731,10 +737,8 @@ object SnapshotTable {
         }).filterNot(_ == curSchema.fieldNames.toSeq.map(Option(_)))
     }
     val bySv = leaves.map(svOf).distinct.map(sv => sv -> projOf(sv)).toMap
-    val renamed = bySv.values.exists(_.isDefined)
     leaves.groupBy(l => (bySv(svOf(l)), partitionSpecAt(root, svOf(l))))
-      .toSeq.sortBy { case ((_, spec), ls) =>
-        if (renamed) ls.min else spec.getOrElse("") }.map {
+      .toSeq.sortBy(_._2.min).map {
         case ((None, spec), ls) =>
           // hidden partitioning: a transform era's DERIVED directory
           // fields are layout, not data — partition discovery surfaces

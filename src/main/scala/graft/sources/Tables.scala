@@ -19,12 +19,13 @@ import org.apache.spark.sql.types.LongType
   */
 object Tables {
 
-  /** One input file under the schema its footer declares, read on the
-    * driver ([[ListedParquet.footerSchema]]), so building an input
-    * runs no schema-inference job. */
+  /** One input (a file, or a directory as `graft.ScaleData` writes)
+    * under the schema its footer declares, read on the driver
+    * ([[ListedParquet.footerSchema]]), so building an input runs no
+    * schema-inference job. */
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val file = s"$dir/$name.parquet"
-    spark.read.schema(ListedParquet.footerSchema(spark, file)).parquet(file)
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ListedParquet.footerSchema(spark, path)).parquet(path)
   }
 
   def region(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "region")

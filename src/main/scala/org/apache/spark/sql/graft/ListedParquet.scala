@@ -40,16 +40,21 @@ object ListedParquet {
       data.asNullable, None, format, Map.empty)(spark))
   }
 
-  /** The Spark schema of one parquet file, read from its footer on the
-    * driver under the session's parquet settings (`nanosAsLong`
-    * included): what `spark.read.parquet(file).schema` infers, without
-    * its job. */
-  def footerSchema(spark: SparkSession, file: String): StructType = {
-    val path = new Path(file)
+  /** The Spark schema of parquet input `path`, read from a footer on
+    * the driver under the session's parquet settings (`nanosAsLong`
+    * included): what `spark.read.parquet(path).schema` infers, without
+    * its job. `path` is one file or a Spark output directory; Spark's
+    * own index lists it on the driver (one path is under its
+    * parallel-listing threshold), and its first data file's footer is
+    * the one Spark's inference reads when `mergeSchema` is off. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val file = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .allFiles().headOption
+      .getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(path, spark.sparkContext.hadoopConfiguration))
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
     val meta = try reader.getFooter finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(path, meta),
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
       new ParquetToSparkSchemaConverter(sqlConf(spark))).asNullable
   }
 

@@ -242,6 +242,22 @@ class AnalyticsSpec extends GraftSuite {
     assert(jobs.isEmpty, jobs.mkString("; "))
   }
 
+  test("Tables readers take a Spark output directory (the graft.ScaleData layout)") {
+    val out = Files.createTempDirectory("graft-tables-dir").toString
+    Seq("nation", "orders", "events").foreach { name =>
+      spark.read.parquet(s"$sf/$name.parquet").repartition(3)
+        .write.parquet(s"$out/$name.parquet")
+    }
+    assert(Tables.nation(spark, out).schema ===
+      spark.read.parquet(s"$out/nation.parquet").schema)
+    assert(Tables.orders(spark, out).schema ===
+      spark.read.parquet(s"$out/orders.parquet").schema)
+    assert(Tables.orders(spark, out).count() === Tables.orders(spark, sf).count())
+    val raw = spark.read.parquet(s"$out/events.parquet")
+    assert(Tables.eventsRawSchema(spark, out) === raw.schema)
+    assert(Tables.events(spark, out).count() === raw.count())
+  }
+
   test("q22: broadcast scalar + anti-join equals the textbook correlated SQL") {
     Tables.customer(spark, sf).createOrReplaceTempView("q22_customer")
     Tables.nation(spark, sf).createOrReplaceTempView("q22_nation")
