@@ -351,17 +351,20 @@ object SnapshotTable {
     * case. The schema is the record's (`schema`, version METADATA —
     * the Iceberg rule: planning reads no footer); a version without
     * one (an adopted `v=N`) infers it in a job, counted by
-    * [[Metrics.schemaInferences]]. */
+    * [[Metrics.schemaInferences]]. `base` names a leaf's base path; a
+    * delete sidecar directory is its own base. */
   private def scanLeaves(spark: SparkSession, root: String,
                          leaves: Seq[String],
-                         schema: Option[types.StructType]): DataFrame = {
+                         schema: Option[types.StructType],
+                         base: String => String = l => s"v=${svOf(l)}")
+      : DataFrame = {
     val listed = leaves.groupBy(l =>
         if (l.endsWith(".parquet")) l.take(l.lastIndexOf('/')) else l)
       .toVector.sortBy(_._1).par.map { case (rel, ls) =>
         val p = new HPath(s"$root/$rel")
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         lazy val named = fs.listStatus(p).map(s => s"$rel/${s.getPath.getName}" -> s).toMap
-        fs.makeQualified(new HPath(s"$root/v=${svOf(rel)}")) ->
+        fs.makeQualified(new HPath(s"$root/${base(rel)}")) ->
           (if (ls.head == rel) FooterStats.dataStatuses(fs, p) else ls.map(k =>
             named.getOrElse(k, throw new java.io.FileNotFoundException(s"$root/$k"))))
       }.seq
@@ -447,13 +450,16 @@ object SnapshotTable {
       regexp_extract(col(FileCol), "^v=(\\d+)/", 1).cast("long"))
 
   /** Equality-delete sidecars grouped by key-column set (a stable
-    * order), each group one (keys…, [[EqVerCol]]) frame. */
+    * order), each group one (keys…, [[EqVerCol]]) frame. A sidecar
+    * reads under its key columns' types in the deleting version's
+    * recorded schema, so planning reads no footer. */
   private def eqDeleteGroups(spark: SparkSession, root: String,
                              eqs: Seq[(Long, Seq[String])])
       : Seq[(Seq[String], DataFrame)] =
     eqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(",")).map {
       case (keyCols, group) => keyCols -> group.map { case (d, _) =>
-        spark.read.parquet(s"$root/v=$d/_eqdeletes")
+        val keys = commitOf(root, d).schema.map(s => types.StructType(keyCols.map(s(_))))
+        scanLeaves(spark, root, Seq(s"v=$d/_eqdeletes"), keys, identity)
           .select(keyCols.map(col): _*)
           .withColumn(EqVerCol, lit(d))
       }.reduce(_.unionByName(_))
@@ -466,9 +472,13 @@ object SnapshotTable {
     keyCols.map(k => cur(k) <=> delDf(k)).reduce(_ && _) &&
       cur(SeqCol) < delDf(EqVerCol)
 
+  /** The position-delete sidecars of versions `dels`, under their
+    * fixed schema. */
   private def readDeleteFiles(spark: SparkSession, root: String,
                               dels: Seq[Long]): DataFrame =
-    spark.read.parquet(dels.map(d => s"$root/v=$d/_deletes"): _*)
+    scanLeaves(spark, root, dels.map(d => s"v=$d/_deletes"),
+      Some(types.StructType(Seq(types.StructField(FileCol, types.StringType),
+        types.StructField(PosCol, types.LongType)))), identity)
 
   /** The schema recorded when `version` was staged (every commit kind
     * records one; None for a version adopted without a record). */

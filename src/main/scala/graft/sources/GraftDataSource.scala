@@ -416,7 +416,7 @@ object GraftDataSource {
 }
 
 /** One graft table — plain or governed, behind a [[TableHandle]] — as
-  * a DSv2 table. The path connector and both SQL catalogs serve this
+  * a DSv2 table. The path connector and the SQL catalog (both kinds) serve this
   * one class, and nothing in it depends on the kind: reads resolve a
   * version, every write stages against the base version
   * [[TableHandle.publish]] hands it.
@@ -1022,7 +1022,7 @@ private[sources] class GraftRelation(ctx: SQLContext, root: String,
 
 /** A read-only DSv2 table over a deferred DataFrame — serves the
   * metadata inspection tables (`db.t.files` / `.snapshots` / `.refs` /
-  * `.history`, Iceberg's `t$files` family) through the SQL catalogs. */
+  * `.history`, Iceberg's `t$files` family) through the SQL catalog. */
 private[sources] class GraftMetadataTable(tableName: String,
                                           df: () => DataFrame)
     extends Table with SupportsRead {
@@ -1037,18 +1037,7 @@ private[sources] class GraftMetadataTable(tableName: String,
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = frame.schema
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T =
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = frame.schema
-            override def buildScan(): RDD[Row] = frame.rdd
-          }.asInstanceOf[T]
-      }
-    }
+    GraftDataSource.frameScanBuilder(() => frame)
 }
 
 private[sources] object GraftMetadataTable {

@@ -39,9 +39,11 @@ object GraftViews {
     * by CONFIG — instantiating catalogs while parsing would be both
     * costly and order-sensitive. */
   def isGraftCatalog(session: SparkSession, name: String): Boolean =
-    session.conf.getOption(s"spark.sql.catalog.$name").exists(c =>
-      c == classOf[GraftSqlCatalog].getName ||
-        c == classOf[GraftGovernedCatalog].getName)
+    session.conf.getOption(s"spark.sql.catalog.$name").exists(classNames)
+
+  /** The catalog class and its governed subclass, by name. */
+  private val classNames =
+    Set(classOf[GraftSqlCatalog].getName, classOf[GraftGovernedCatalog].getName)
 }
 
 class GraftViewParser(session: SparkSession, delegate: ParserInterface)
@@ -174,16 +176,11 @@ case class GraftViewResolutionRule(session: SparkSession)
   private def substituteAsOf(u: UnresolvedRelation,
                              version: String): Option[LogicalPlan] = {
     val parts = qualify(u.multipartIdentifier).getOrElse(return None)
-    val gc = session.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftGovernedCatalog => g
+    val ident = Identifier.of(parts.tail.init.toArray, parts.last)
+    val (view, commit) = session.sessionState.catalogManager.catalog(parts.head) match {
+      case c: GraftSqlCatalog => c.viewAsOf(ident, version).getOrElse(return None)
       case _ => return None
     }
-    val rootConf = session.conf.get(s"spark.sql.catalog.${parts.head}.root")
-    val commit: Long = version.toLongOption.getOrElse(
-      scala.util.Try(graft.operators.Catalog.tagCommit(rootConf, version))
-        .getOrElse(return None))
-    val ident = Identifier.of(parts.tail.init.toArray, parts.last)
-    val view = gc.loadViewAt(ident, commit).getOrElse(return None)
     val expanded = expand(view, parts.last)
     // pin the definition's same-catalog references at the commit
     val pinned = expanded.transformWithSubqueries {

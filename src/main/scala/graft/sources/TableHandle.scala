@@ -62,6 +62,21 @@ final class TableHandle private[graft] (
     }
   }
 
+  /** The newest offset committed at or before `ms` (epoch millis):
+    * `TIMESTAMP AS OF`. A plain table walks its PUBLISHED chain (the
+    * marker's version, then its recorded parents): rollback only moves
+    * the marker, so rolled-back and never-published versions are off
+    * it, and commit times grow along it. A governed table resolves
+    * through [[Catalog.resolveAsOf]]. */
+  private[graft] def offsetAsOf(ms: Long): Long = catalog match {
+    case None =>
+      val v = SnapshotTable.publishedChain(root)
+        .find(SnapshotTable.commitTime(root, _).exists(_ <= ms))
+      require(v.nonEmpty, s"no version of $this committed at or before epoch-ms $ms")
+      v.get
+    case Some(cat) => Catalog.resolveAsOf(cat, ms)
+  }
+
   /** The current table version (-1 = none). */
   private[graft] def version: Long = versionAt(latest)
 

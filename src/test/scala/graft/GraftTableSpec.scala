@@ -17,8 +17,9 @@ import graft.sources.{GraftDmlRule, GraftTable}
   * `GraftGovernedCatalog` table with the same row assertions. Every
   * statement lands exactly one commit of the table's history — a
   * version of the plain table, a catalog commit of the governed one —
-  * TRUNCATE included, and the rollback procedure undoes a TRUNCATE. A
-  * `VERSION AS OF` pin is read-only on both kinds. */
+  * TRUNCATE and column ALTERs included, and the rollback procedure
+  * undoes a TRUNCATE. A `VERSION AS OF` pin is read-only on both kinds
+  * and reads the columns of its version. */
 class GraftTableSpec extends GraftSuite {
   import spark.implicits._
 
@@ -139,6 +140,23 @@ class GraftTableSpec extends GraftSuite {
           org.apache.spark.sql.sources.EqualTo("k", "a"))))
       assert(k.commits() === before)
       assert(rows(k).size === 4)
+    }
+
+    test(s"ALTER TABLE ADD, RENAME and DROP COLUMN: one commit each; a pin reads the old columns ($kind)") {
+      val k = table(kind, s"${kind}_alter")
+      val t = k.name
+      val pin = k.head()
+      oneCommit(k, s"ALTER TABLE $t ADD COLUMN c STRING")
+      oneCommit(k, s"ALTER TABLE $t RENAME COLUMN k TO key")
+      oneCommit(k, s"ALTER TABLE $t DROP COLUMN n")
+      assert(spark.table(t).columns.toSeq === Seq("key", "p", "c"))
+      assert(spark.table(t).select("key", "p").as[(String, String)].collect()
+        .toSeq.sorted === seed.map(r => (r._1, r._3)))
+      assert(spark.table(t).filter("c IS NULL").count() === 3)
+      val old = spark.sql(s"SELECT * FROM $t VERSION AS OF $pin")
+      assert(old.columns.toSet === Set("k", "n", "p"))
+      assert(old.select("k", "n", "p").as[(String, Long, String)].collect()
+        .toSeq.sortBy(_._1) === seed)
     }
   }
 

@@ -103,6 +103,18 @@ class MetadataJobCountSpec extends GraftSuite {
     assert(df.count() === 200L)
   }
 
+  test("a read over position and equality deletes plans its delete sidecars with no job") {
+    val root = tmp("graft-jobs-mor")
+    SnapshotTable.commitDelta(Seq(("a", 1L, "x"), ("b", 2L, "x"), ("c", 3L, "y"))
+      .toDF("k", "n", "p"), root, "p")
+    SnapshotTable.upsertMor(spark, root, "p", Seq(("b", 20L, "x")).toDF("k", "n", "p"),
+      Seq("k"))
+    SnapshotTable.deleteWhereMor(spark, root, col("k") === "c")
+    val df = pin(0, "building a read with delete sidecars")(SnapshotTable.read(spark, root))
+    assert(df.select("k", "n").as[(String, Long)].collect().toSeq.sortBy(_._1) ===
+      Seq(("a", 1L), ("b", 20L)))
+  }
+
   test("a steady-state governed stream commit runs at most three jobs") {
     val cat = Files.createTempDirectory("graft-jobs-stream").toString
     def batch(i: Long): DataFrame = Seq((i, s"e$i", "2024-01-01"))
