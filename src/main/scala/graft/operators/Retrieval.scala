@@ -573,14 +573,10 @@ object Retrieval {
       : Option[Long] = {
     import spark.implicits._
     val live0 = liveDoclens(spark, root, meta).getOrElse(return None)
-    val eqKeys =
-      if (newEq.isEmpty)
-        Seq.empty[Long].toDF("doc_id")
-      else newEq.map { case (dv, _) =>
-        spark.read.parquet(
-          MetaIO.join(root, s"v=$dv", "_eqdeletes").toString)
-          .select(col("doc_id"))
-      }.reduce(_ unionByName _).distinct()
+    val eqKeys = SnapshotTable.eqDeleteGroups(spark, root, newEq)
+      .map(_._2.select(col("doc_id")))
+      .reduceOption(_ unionByName _)
+      .getOrElse(Seq.empty[Long].toDF("doc_id")).distinct()
     val live = live0.persist()
     try {
       // batch rows flagged _b=true, live inventory rows _b=false, the

@@ -25,13 +25,12 @@ import org.apache.spark.sql.types
   * Every commit runs ONE protocol, owned by two helpers: [[stageNext]]
   * claims `v=N` (N = max on-disk version + 1), runs the entry point's
   * write and publishes the version's one commit record `v=N/_commit`
-  * ([[Commit]]: parent, manifest, schema, field ids, defaults — its
-  * existence is the committed stamp); [[publish]] reads the base,
-  * runs a staging half against it, writes the optional `_txn` stamp
-  * and moves `_latest` under main's branch lock while it still names
-  * the base (a writer that lost the race throws). Every `stage*` half
-  * is a [[stageNext]] body; every public commit is a [[publish]] over
-  * one.
+  * ([[Commit]]: parent, manifest, schema, field ids, defaults and
+  * idempotent-writer stamps — its existence is the committed stamp);
+  * [[publish]] reads the base, runs a staging half against it and
+  * moves `_latest` under main's branch lock while it still names the
+  * base (a writer that lost the race throws). Every `stage*` half is a
+  * [[stageNext]] body; every public commit is a [[publish]] over one.
   *
   * Scale: a snapshot write is one distributed parquet job; commit is a
   * single tiny marker rename. Time-travel reads are ordinary
@@ -86,11 +85,16 @@ object SnapshotTable {
     * that record with `parent` = `base` (ancestry for fast-forward
     * checks) as the LAST step. Nothing is published to readers.
     * Validation that must not leave an orphan claim runs BEFORE this
-    * call. */
-  private def stageNext(root: String, base: Long)(write: Long => Commit): Long = {
+    * call. The record carries `base`'s writer stamps forward, with
+    * `txn` replacing its writer's (see [[Txn]]): no commit kind can
+    * lose a writer's last batch. */
+  private def stageNext(root: String, base: Long, txn: Option[Txn] = None)
+                       (write: Long => Commit): Long = {
     val next = nextVersion(root)
     claimVersion(root, next)
-    writeCommit(root, next, write(next).copy(parent = base))
+    val stamps = commitOf(root, base).txns
+      .filterNot(t => txn.exists(_.writer == t.writer)) ++ txn
+    writeCommit(root, next, write(next).copy(parent = base, txns = stamps))
     next
   }
 
@@ -98,26 +102,18 @@ object SnapshotTable {
     versions(root).lastOption.getOrElse(-1L) + 1
 
   /** Publish one staged version: read the base (the `_latest` marker),
-    * run `stage` against it, write the idempotent-writer stamp `txn`
-    * (`(writerId, batchId)`, see [[lastTxnBatch]]) into the staged
-    * directory, and move the marker — under main's branch lock, and
-    * only while the marker still names `base`. Of two writers staged
-    * from one base exactly one publishes; the other throws
+    * run `stage` against it, and move the marker — under main's branch
+    * lock, and only while the marker still names `base`. Of two writers
+    * staged from one base exactly one publishes; the other throws
     * `ConcurrentModificationException` (as a losing branch commit
     * does), and its staged version is a leftover for expiry. A stage
     * returning -1 or `base` staged nothing: the marker stays and `base`
     * is returned. */
-  private[graft] def publish(root: String, txn: Option[(String, Long)] = None)
-                            (stage: Long => Long): Long = {
-    txn.foreach { case (w, _) =>
-      require(!w.contains("\n"), "writerId must be newline-free") }
+  private[graft] def publish(root: String)(stage: Long => Long): Long = {
     val base = latestVersion(root)
     val next = stage(base)
     if (next < 0 || next == base) base
     else {
-      txn.foreach { case (w, b) =>
-        MetaIO.writeString(MetaIO.join(root, s"v=$next", "_txn"), s"$w\n$b")
-      }
       withBranchLock(root, MainBranch) {
         val current = latestVersion(root)
         if (current != base)
@@ -152,8 +148,9 @@ object SnapshotTable {
   private[graft] def stageVersion(df: DataFrame, root: String,
                                   parent: Long = -1L,
                                   statsCols: Seq[String] = Seq.empty,
-                                  bloomCols: Seq[String] = Seq.empty): Long =
-    stageNext(root, parent) { next =>
+                                  bloomCols: Seq[String] = Seq.empty,
+                                  txn: Option[Txn] = None): Long =
+    stageNext(root, parent, txn) { next =>
       // append into the claimed directory: an overwrite would delete
       // it first, and while it is gone another writer can claim it
       df.write.mode("append").parquet(s"$root/v=$next")
@@ -190,11 +187,26 @@ object SnapshotTable {
   //   !last I              the field-id high-water mark
   //   !field I<TAB>name    field id I's name at this version
   //   !default I<TAB>sql   field id I's initial default
+  //   !txn B writer        idempotent writer `writer` committed its
+  //                        batch B at or before this version ([[Txn]])
   //
   // A field a commit kind does not write stays absent (a plain
   // [[commit]] records no manifest and no field ids), and every
   // accessor below is a projection of one parse. Records are read per
   // call, never cached: after GC a version number can be claimed again.
+
+  /** An idempotent writer's stamp (Delta's `SetTransaction`): writer
+    * `writer` has committed every batch up to `batch`. Every record
+    * carries its base's stamps ([[stageNext]]), so the stamps of the
+    * version a writer stages on answer whether a batch is a replay —
+    * one record read, at any history length, through compaction, folds
+    * and expiry. Exactly-once for any writer whose batch ids are
+    * monotone per writer (the Structured Streaming `batchId`
+    * contract). */
+  private[graft] final case class Txn(writer: String, batch: Long) {
+    require(writer.nonEmpty && !writer.exists(c => c == '\n' || c == '\r'),
+      s"writer id must be a non-empty single line, got '$writer'")
+  }
 
   /** One version's commit record. `fields` is None for a version
     * that records no field-id table (plain commits). */
@@ -207,7 +219,8 @@ object SnapshotTable {
       schemaJson: Option[String] = None,
       fields: Option[Seq[(Int, String)]] = None,
       lastId: Int = 0,
-      defaults: Seq[(Int, String)] = Vector.empty) {
+      defaults: Seq[(Int, String)] = Vector.empty,
+      txns: Seq[Txn] = Vector.empty) {
     lazy val schema: Option[types.StructType] = schemaJson.map(
       types.DataType.fromJson(_).asInstanceOf[types.StructType])
 
@@ -225,7 +238,8 @@ object SnapshotTable {
       schemaJson.map(j => s"!schema $j") ++
       fields.toSeq.flatMap(fs => s"!last $lastId" +:
         fs.map { case (id, n) => s"!field $id\t$n" }) ++
-      defaults.map { case (id, sql) => s"!default $id\t$sql" }
+      defaults.map { case (id, sql) => s"!default $id\t$sql" } ++
+      txns.map(t => s"!txn ${t.batch} ${t.writer}")
     ).mkString("\n")
   }
 
@@ -256,6 +270,10 @@ object SnapshotTable {
           case "!field" =>
             c.copy(fields = Some(c.fields.getOrElse(Vector.empty) :+ idAnd(rest)))
           case "!default" => c.copy(defaults = c.defaults :+ idAnd(rest))
+          case "!txn" =>
+            val i = rest.indexOf(' ')
+            c.copy(txns = c.txns :+ Txn(rest.substring(i + 1),
+              rest.substring(0, i).toLong))
           case other => throw new IllegalStateException(
             s"unknown commit record line '$other'")
         }
@@ -453,8 +471,8 @@ object SnapshotTable {
     * order), each group one (keys…, [[EqVerCol]]) frame. A sidecar
     * reads under its key columns' types in the deleting version's
     * recorded schema, so planning reads no footer. */
-  private def eqDeleteGroups(spark: SparkSession, root: String,
-                             eqs: Seq[(Long, Seq[String])])
+  private[graft] def eqDeleteGroups(spark: SparkSession, root: String,
+                                    eqs: Seq[(Long, Seq[String])])
       : Seq[(Seq[String], DataFrame)] =
     eqs.groupBy(_._2).toSeq.sortBy(_._1.mkString(",")).map {
       case (keyCols, group) => keyCols -> group.map { case (d, _) =>
@@ -1736,72 +1754,68 @@ object SnapshotTable {
   private[graft] def stageAppend(slice: DataFrame, root: String,
                                  partitionCol: String, base: Long,
                                  statsCols: Seq[String] = Seq.empty,
-                                 bloomCols: Seq[String] = Seq.empty): Long =
+                                 bloomCols: Seq[String] = Seq.empty,
+                                 txn: Option[Txn] = None): Long =
     stageManifested(slice, root, partitionCol, base, append = true,
-      statsCols = statsCols, bloomCols = bloomCols)
+      statsCols = statsCols, bloomCols = bloomCols, txn = txn)
 
   // ───────── idempotent-writer transactions (Delta SetTransaction) ─────────
 
-  /** [[commitAppend]] that additionally records an idempotent-writer
-    * stamp `(writerId, batchId)` INSIDE the staged version directory —
-    * written before the marker move, so the stamp is atomic with the
-    * commit (Delta's `SetTransaction` action / the `txnAppId` +
-    * `txnVersion` idempotent-write contract). A restarted streaming
-    * writer checks [[lastTxnBatch]] and skips batches it already
-    * landed: crash AFTER the marker move → the stamp is visible and
-    * the replay is a no-op; crash BEFORE it → the unpublished claim is
-    * [[sweepOrphans]] garbage and the replay re-commits. Exactly-once
-    * for any writer whose batch ids are monotone per `writerId` (the
-    * Structured Streaming `batchId` contract). */
+  /** [[commitAppend]] that EXACTLY ONCE lands batch `batchId` of the
+    * idempotent writer `writerId`: the staged record carries the stamp
+    * ([[Txn]]), so it publishes atomically with the rows, and a batch
+    * at or below the writer's stamp in the base version's record is a
+    * replay that stages nothing ([[graft.sources.TableHandle.publishOnce]],
+    * the one exactly-once protocol of both table kinds). A crash after
+    * the marker move leaves the stamp visible and the replay skips; a
+    * crash before it leaves an unpublished claim for [[sweepOrphans]]
+    * and the replay commits. Returns the new version, or the current
+    * one on a replay. */
   def commitAppendTxn(slice: DataFrame, root: String, partitionCol: String,
                       writerId: String, batchId: Long,
                       statsCols: Seq[String] = Seq.empty,
                       bloomCols: Seq[String] = Seq.empty): Long =
-    publish(root, Some(writerId -> batchId))(stageAppend(slice, root,
-      partitionCol, _, statsCols, bloomCols))
+    commitOnce(root, writerId, batchId)(stageAppend(slice, root,
+      partitionCol, _, statsCols, bloomCols, _))
 
   /** The MoR-upsert twin of [[commitAppendTxn]] (an Update-mode
     * streaming sink: each trigger's rows REPLACE their key's older
     * twins via [[upsertMor]]'s append + equality-delete commit —
-    * O(batch), zero table reads) with the same atomic idempotent
-    * stamp. */
+    * O(batch), zero table reads). */
   def commitUpsertTxn(source: DataFrame, root: String, partitionCol: String,
                       keyCols: Seq[String], writerId: String, batchId: Long,
                       statsCols: Seq[String] = Seq.empty,
                       bloomCols: Seq[String] = Seq.empty): Long =
-    publish(root, Some(writerId -> batchId))(stageUpsertMor(source, root,
-      partitionCol, keyCols, _, statsCols, bloomCols))
+    commitOnce(root, writerId, batchId)(stageUpsertMor(source, root,
+      partitionCol, keyCols, _, statsCols, bloomCols, _))
 
   /** The full-snapshot twin of [[commitAppendTxn]] (a Complete-mode
-    * streaming sink replaces the table every trigger): stage + stamp +
-    * marker move. */
+    * streaming sink replaces the table every trigger). */
   def commitTxn(df: DataFrame, root: String,
                 writerId: String, batchId: Long,
                 statsCols: Seq[String] = Seq.empty,
                 bloomCols: Seq[String] = Seq.empty): Long =
-    publish(root, Some(writerId -> batchId))(stageVersion(df, root, _,
-      statsCols, bloomCols))
+    commitOnce(root, writerId, batchId)(stageVersion(df, root, _,
+      statsCols, bloomCols, _))
+
+  private def commitOnce(root: String, writerId: String, batchId: Long)
+                        (stage: (Long, Option[Txn]) => Long): Long =
+    new graft.sources.TableHandle(None, root)
+      .publishOnce(writerId, batchId)(stage).getOrElse(latestVersion(root))
+
+  /** The newest batch `writerId` had committed as of `version`: the
+    * stamp in that version's record, or None. */
+  private[graft] def txnBatch(root: String, version: Long,
+                              writerId: String): Option[Long] =
+    commitOf(root, version).txns.collectFirst { case Txn(`writerId`, b) => b }
 
   /** The newest batch id `writerId` has COMMITTED to this table, or
-    * None — the replay-detection read of the idempotent-write
-    * protocol. Walks the [[publishedChain]] newest-first
-    * (metadata-sized: one record and one stamp per step, no data
-    * reads): a claim that crashed before its marker move and a version
-    * undone by [[rollback]] are off that chain — even once later
-    * commits land on top of the rollback — and a replayed batch must
-    * RE-commit in exactly those states. Note [[expireSnapshots]] can
-    * eventually remove old stamped versions (the walk stops there),
-    * but a live writer's newest stamp rides the current version, which
-    * expiry always keeps. */
+    * None: the stamp in the published version's record (one record
+    * read, no walk). A version undone by [[rollback]] and a claim that
+    * crashed before its marker move are not the published version, so
+    * a replayed batch re-commits in exactly those states. */
   def lastTxnBatch(root: String, writerId: String): Option[Long] =
-    publishedChain(root).flatMap { v =>
-      val p = MetaIO.join(root, s"v=$v", "_txn")
-      if (!MetaIO.exists(p)) None
-      else MetaIO.readString(p).split("\n", 2) match {
-        case Array(w, b) if w == writerId => Some(b.trim.toLong)
-        case _ => None
-      }
-    }.nextOption()
+    txnBatch(root, latestVersion(root), writerId)
 
   /** The published version's ancestry, newest first: the `_latest`
     * version, then each recorded parent (one record read per step),
@@ -2088,13 +2102,14 @@ object SnapshotTable {
     * what lets [[Catalog]] transactions land governed key erasures
     * atomically. */
   private[graft] def stageEqualityDelete(spark: SparkSession, root: String,
-                                         keys: DataFrame, base: Long): Long = {
+                                         keys: DataFrame, base: Long,
+                                         txn: Option[Txn] = None): Long = {
     require(base >= 0, s"no committed version at $root")
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
     val b = commitOf(root, base)
     val carried = carryMeta(spark, root, base, b)
-    stageNext(root, base) { next =>
+    stageNext(root, base, txn) { next =>
       keys.distinct().coalesce(1)
         .write.parquet(s"$root/v=$next/_eqdeletes")
       carried.copy(eqDeletes = b.eqDeletes :+ (next -> keyCols))
@@ -2133,12 +2148,33 @@ object SnapshotTable {
                                     partitionCol: String,
                                     keyCols: Seq[String], base: Long,
                                     statsCols: Seq[String] = Seq.empty,
-                                    bloomCols: Seq[String] = Seq.empty)
+                                    bloomCols: Seq[String] = Seq.empty,
+                                    txn: Option[Txn] = None)
       : Long = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     stageManifested(source, root, partitionCol, base, append = true,
       statsCols = statsCols, bloomCols = bloomCols,
-      eqDeleteKeys = Some(keyCols))
+      eqDeleteKeys = Some(keyCols), txn = txn)
+  }
+
+  /** One CDC batch's staging half (the Debezium batch shape: upserts
+    * plus delete tombstones): `upserts` land as [[stageUpsertMor]] and
+    * `deleteKeys` chain a [[stageEqualityDelete]] version on it, whose
+    * sidecar outranks the batch's own append by the sequence rule — a
+    * key carried by both sides ends DELETED (sources that interleave
+    * ops per key pre-reduce the batch to its last op per key). Zero
+    * table reads, zero rewrites. -1 when both sides are empty. */
+  private[graft] def stageCdc(spark: SparkSession, root: String,
+                              partitionCol: String, keyCols: Seq[String],
+                              upserts: DataFrame, deleteKeys: DataFrame,
+                              base: Long, txn: Option[Txn] = None): Long = {
+    val hasUp = !upserts.isEmpty
+    val v = if (!hasUp) base else stageUpsertMor(upserts, root, partitionCol,
+      keyCols, base, txn = txn)
+    if (!deleteKeys.isEmpty) stageEqualityDelete(spark, root,
+      deleteKeys.select(keyCols.map(col): _*), v, txn)
+    else if (hasUp) v
+    else -1L
   }
 
   /** The one-commit CONDITIONAL-MERGE write (staging half): fast-append
@@ -2317,7 +2353,8 @@ object SnapshotTable {
                               bloomCols: Seq[String] = Seq.empty,
                               eqDeleteKeys: Option[Seq[String]] = None,
                               eqDeleteFrame: Option[DataFrame] = None,
-                              allowCrossEra: Boolean = false)
+                              allowCrossEra: Boolean = false,
+                              txn: Option[Txn] = None)
       : Long = {
     require(eqDeleteKeys.isEmpty || eqDeleteFrame.isEmpty,
       "eqDeleteKeys and eqDeleteFrame are exclusive (one sidecar per commit)")
@@ -2394,7 +2431,7 @@ object SnapshotTable {
     val clustered =
       if (pss.isEmpty || sliceBytes < BigInt(rebalanceBytes)) writeDf
       else writeDf.hint("rebalance", pss.map(_.field): _*)
-    stageNext(root, base) { next =>
+    stageNext(root, base, txn) { next =>
       clustered.write.mode("append").partitionBy(pss.map(_.field): _*)
         .parquet(s"$root/v=$next")
       commitChecksAndStats(slice.sparkSession, root, next, statsCols, bloomCols)

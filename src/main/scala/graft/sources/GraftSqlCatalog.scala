@@ -402,6 +402,9 @@ object GraftSqlCatalog {
     override def exists(h: TableHandle): Boolean =
       MetaIO.exists(sidecar(h.root)) || super.exists(h)
 
+    /** The sidecar's declared schema and write options; a version
+      * older than the current one orders by its own recorded columns
+      * (the sidecar follows every evolution). */
     def meta(h: TableHandle, version: Long): Option[TableMeta] = {
       val p = sidecar(h.root)
       if (!MetaIO.exists(p)) return None
@@ -410,7 +413,10 @@ object GraftSqlCatalog {
         val i = l.indexOf('=')
         l.substring(0, i) -> l.substring(i + 1)
       }.toMap
-      Some(TableMeta(DataType.fromJson(lines.head).asInstanceOf[StructType], opts))
+      val pinned = Option.when(version >= 0 && version != h.version)(
+        SnapshotTable.recordedSchema(h.root, version)).flatten
+      Some(TableMeta(pinned.getOrElse(
+        DataType.fromJson(lines.head).asInstanceOf[StructType]), opts))
     }
 
     private def writeMeta(root: String, meta: TableMeta): Unit =

@@ -59,16 +59,14 @@ import graft.streaming.GovernedStream
   * incremental scan refuses replace snapshots — run consumers below the
   * compaction watermark. MoR deletes resolve per batch.
   *
-  * SINK. Each micro-batch lands EXACTLY once as one commit stamped with
-  * the writer's `(id, batchId)`, so a batch replayed after a
-  * checkpoint-recovery restart is skipped. A plain table commits through
-  * [[SnapshotTable.commitAppendTxn]] / `commitUpsertTxn` / `commitTxn`
-  * (the Delta `SetTransaction` protocol: the stamp is atomic with the
-  * commit); a governed table publishes ONE atomic catalog commit carrying
-  * the rows and the advanced batch id ([[GovernedStream.commitBatch]] /
-  * `commitUpsertBatch` / `commitCdcBatch`, the `_stream_state`
-  * protocol). Append mode is the partition fast-append (`partitionBy`
-  * required); Update mode is the per-key MoR upsert (`mergeKeys`),
+  * SINK. Each micro-batch lands EXACTLY once as one commit whose record
+  * carries the writer's `(id, batchId)` stamp, so a batch replayed
+  * after a checkpoint-recovery restart is skipped. Both kinds commit
+  * through [[TableHandle.publishOnce]] (the Delta `SetTransaction`
+  * protocol: the stamp is atomic with the commit): a new version of a
+  * plain table, one atomic catalog commit of a governed one. Append
+  * mode is the partition fast-append (`partitionBy` required); Update
+  * mode is the per-key MoR upsert (`mergeKeys`),
   * folding equality-delete sidecars once [[SnapshotTable.morDebt]]
   * reaches `foldThreshold` (0 disables); Complete mode replaces a plain
   * table per trigger. `cdcOps` (governed, Update) names a column whose
@@ -308,66 +306,43 @@ private[sources] object GraftStreaming {
           "graft sink cannot derive a stable writer id: the micro-batch " +
             "thread carries no sql.streaming.queryId property and no " +
             "txnAppId option was set — pass .option(\"txnAppId\", <id>)"))
-      if (governed) s"graft-sink-${t.name}-$id" else s"graft-sink-$id"
+      s"graft-sink-$id"
     }
 
     override def addBatch(batchId: Long, data: DataFrame): Unit = {
       val spark = data.sparkSession
-      val writer = writerId(spark)
       val batch0 = GraftStreamBridge.asBatch(data)
-      val batch =
+      val batch1 =
         if (clusterCols.isEmpty) batch0
         else batch0.repartition(clusterCols.map(col): _*)
-      t.catalog match {
-        case Some(cat) => commitGoverned(spark, cat, writer, batchId, batch)
-        case None => commitPlain(spark, writer, batchId, batch)
-      }
+      // the CDC split consumes the micro-batch twice — persist so the
+      // streaming plan executes once
+      val batch = if (cdcOps.isEmpty) batch1 else batch1.persist()
+      val published =
+        try t.publishOnce(writerId(spark), batchId)(stage(batch, _, _))
+        finally if (cdcOps.nonEmpty) batch.unpersist()
+      if (update && published.nonEmpty) t.foldIfOverdue(spark, foldThreshold)
     }
 
-    private def commitPlain(spark: SparkSession, writer: String,
-                            batchId: Long, batch: DataFrame): Unit = {
-      if (SnapshotTable.lastTxnBatch(t.root, writer).exists(_ >= batchId))
-        return // checkpoint-recovery replay: already committed
-      // an empty trigger commits an empty (no-op) append version — rare
-      // (the engine fires batches on offset movement), and a pre-check
-      // would execute the micro-batch plan a second time
-      if (complete)
-        SnapshotTable.commitTxn(batch, t.root, writer, batchId, stats, blooms)
-      else if (update) {
-        SnapshotTable.commitUpsertTxn(batch, t.root, partitionSpec.get,
-          mergeKeys, writer, batchId, stats, blooms)
-        // every unfolded sidecar adds a broadcast anti-join to EVERY
-        // read; the fold is its own commit AFTER the stamped batch —
-        // replay detection walks the published chain through it
-        if (foldThreshold > 0 && SnapshotTable.morDebt(t.root) >= foldThreshold)
-          SnapshotTable.applyDeletes(spark, t.root)
-      } else
-        SnapshotTable.commitAppendTxn(batch, t.root, partitionSpec.get,
-          writer, batchId, stats, blooms)
-    }
-
-    private def commitGoverned(spark: SparkSession, cat: String,
-                               writer: String, batchId: Long,
-                               batch: DataFrame): Unit = {
-      val spec = partitionSpec.get
-      (update, cdcOps) match {
-        case (true, Some(op)) =>
-          // the split consumes the micro-batch twice — persist so the
-          // streaming plan executes once
-          val cached = batch.persist()
-          try GovernedStream.commitCdcBatch(spark, cat, t.name, spec,
-            mergeKeys, writer, batchId,
-            upserts = cached.filter(col(op) =!= "d").drop(op),
-            deleteKeys = cached.filter(col(op) === "d")
-              .select(mergeKeys.map(col): _*),
-            foldThreshold = foldThreshold)
-          finally cached.unpersist()
-        case (true, None) =>
-          GovernedStream.commitUpsertBatch(spark, cat, t.name, spec,
-            mergeKeys, writer, batchId, batch, foldThreshold)
+    /** Stage one micro-batch on `base` with the writer's stamp. An
+      * empty trigger stages an empty (no-op) version — rare (the engine
+      * fires batches on offset movement), and a pre-check would execute
+      * the micro-batch plan a second time. */
+    private def stage(batch: DataFrame, base: Long,
+                      txn: Option[SnapshotTable.Txn]): Long = {
+      lazy val spec = partitionSpec.get
+      (complete, update, cdcOps) match {
+        case (true, _, _) =>
+          SnapshotTable.stageVersion(batch, t.root, base, stats, blooms, txn)
+        case (_, true, Some(op)) =>
+          SnapshotTable.stageCdc(batch.sparkSession, t.root, spec, mergeKeys,
+            upserts = batch.filter(col(op) =!= "d").drop(op),
+            deleteKeys = batch.filter(col(op) === "d"), base, txn)
+        case (_, true, None) =>
+          SnapshotTable.stageUpsertMor(batch, t.root, spec, mergeKeys, base,
+            stats, blooms, txn)
         case _ =>
-          GovernedStream.commitBatch(spark, cat, writer, batchId, batch,
-            t.name, spec)
+          SnapshotTable.stageAppend(batch, t.root, spec, base, stats, blooms, txn)
       }
     }
 

@@ -8,9 +8,10 @@ import graft.operators.{Catalog, SnapshotTable}
 /** One graft table, plain or governed: a plain snapshot table is its
   * root (`catalog` = None, `name` = the root), a governed one is table
   * `name` of the catalog at `catalog`. The SQL table ([[GraftTable]]),
-  * the SQL DML ([[GraftDml]]) and the streaming source and sink
-  * ([[GraftStreaming]]) read and publish through this handle, and it
-  * is the one place that tells the two kinds apart.
+  * the SQL DML ([[GraftDml]]), the streaming source and sink
+  * ([[GraftStreaming]]) and every exactly-once writer
+  * ([[publishOnce]]) read and publish through this handle, and it is
+  * the one place that tells the two kinds apart.
   *
   * An OFFSET orders a table's history: a plain table's version, or a
   * catalog commit of a governed one (a commit may leave the table
@@ -103,6 +104,43 @@ final class TableHandle private[graft] (
       case None => SnapshotTable.publish(root)(stage)
       case Some(cat) => Catalog.publishTable(cat, name, restage)(stage)
     }
+
+  /** Publish one staged version EXACTLY ONCE per batch of the
+    * idempotent writer `writer` — the one protocol of every
+    * exactly-once writer, plain or governed. A replay (`batchId` at or
+    * below the writer's stamp in the base version's record,
+    * [[SnapshotTable.Txn]]) stages nothing; otherwise `stage(base,
+    * stamp)` stages with the stamp, so the stamp publishes atomically
+    * with the rows. The check runs inside the stage: a governed writer
+    * that lost a publish race checks again on the moved table. Returns
+    * the new offset, or None on a replay or when nothing was staged. */
+  private[graft] def publishOnce(writer: String, batchId: Long)
+      (stage: (Long, Option[SnapshotTable.Txn]) => Long): Option[Long] = {
+    val txn = Some(SnapshotTable.Txn(writer, batchId))
+    var staged = false
+    val offset = publish { base =>
+      val v =
+        if (SnapshotTable.txnBatch(root, base, writer).exists(_ >= batchId)) -1L
+        else stage(base, txn)
+      staged = v >= 0 && v != base
+      v
+    }
+    Option.when(staged)(offset)
+  }
+
+  /** Fold the table's merge-on-read sidecars once their count
+    * ([[SnapshotTable.morDebt]]) reaches `threshold` (0 disables): each
+    * unfolded sidecar adds a broadcast anti-join to every read.
+    * Best-effort: a fold that loses a race leaves the debt to a later
+    * call or the maintenance cadence. */
+  private[graft] def foldIfOverdue(spark: SparkSession, threshold: Int): Unit = {
+    val v = version
+    if (threshold > 0 && v >= 0 && SnapshotTable.morDebt(root, v) >= threshold)
+      try catalog match {
+        case None => SnapshotTable.applyDeletes(spark, root)
+        case Some(cat) => Catalog.foldTable(spark, cat, name)
+      } catch { case _: java.util.ConcurrentModificationException => () }
+  }
 
   /** The DSv2 table name. */
   override def toString: String =

@@ -5,23 +5,25 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Bronze, Catalog, MaterializedView, SnapshotTable}
+import graft.sources.TableHandle
 
 /** Streaming ingestion INTO the governed catalog — the missing edge
   * between the reference's two halves: its streaming bronze writer
   * (`processing/spark_jobs/streaming_bronze_writer.py:120-180`) lands
   * micro-batches in an Iceberg table whose commits the Nessie catalog
   * governs. Here every micro-batch becomes ONE atomic catalog commit
-  * carrying both the appended bronze rows and the batch id that
-  * produced them.
+  * whose table version carries both the appended bronze rows and the
+  * batch id that produced them.
   *
   * Exactly-once, not just at-least-once: `foreachBatch` alone replays
   * a batch when the sink commits but the checkpoint write crashes.
   * The classic transactional-sink fix (Delta's `txnAppId`/`txnVersion`)
   * is to commit the batch id ATOMICALLY WITH the data and skip batches
-  * at-or-below the recorded id on replay — here the id lives in a tiny
-  * `_stream_state` catalog table published in the same catalog commit
-  * as the bronze append, so the dedup survives anything the
-  * checkpoint does.
+  * at-or-below the recorded id on replay — here the id is the source's
+  * writer stamp in the table version's commit record
+  * ([[SnapshotTable.Txn]], through [[TableHandle.publishOnce]], the
+  * protocol plain tables use too), so the dedup survives anything the
+  * checkpoint does, and compaction, folds and expiry carry it forward.
   *
   * Scale: the bronze write is an APPEND snapshot
   * ([[SnapshotTable.commitAppend]]) — only the batch's files are
@@ -33,77 +35,33 @@ import graft.operators.{Bronze, Catalog, MaterializedView, SnapshotTable}
   */
 object GovernedStream {
 
-  private val StateTable = "_stream_state"
-
-  /** The highest batch id committed for `sourceId`, or -1. */
+  /** The highest batch id `sourceId` has committed to any table of the
+    * catalog as of catalog commit `commit` (-1 = latest), or -1: the
+    * stamps in those tables' records, with no Spark job. */
   def lastBatchId(spark: SparkSession, catalogRoot: String,
                   sourceId: String, commit: Long = -1L): Long =
-    batchOf(streamState(spark, catalogRoot, commit,
-      Catalog.tableVersions(catalogRoot, commit)), sourceId)
-
-  /** Every source's (source_id, batch_id) row at catalog commit
-    * `commit`, whose table versions are `tables` — ONE collect per
-    * commit attempt. INVARIANT: `_stream_state` stays O(‖sources‖)
-    * forever — exactly one row per source_id (each commit rewrites the
-    * whole tiny table via coalesce(1)), so this driver-side collect is
-    * bounded by the source count, never by batches or data. */
-  private def streamState(spark: SparkSession, catalogRoot: String,
-                          commit: Long, tables: Map[String, Long])
-      : Seq[(String, Long)] =
-    if (!tables.contains(StateTable)) Seq.empty
-    else Catalog.read(spark, catalogRoot, StateTable, commit)
-      .select("source_id", "batch_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-
-  private def batchOf(state: Seq[(String, Long)], sourceId: String): Long =
-    state.collectFirst { case (`sourceId`, b) => b }.getOrElse(-1L)
-
-  /** Stage `_stream_state` with `sourceId` advanced to `batchId`;
-    * other sources' rows carry over. */
-  private def stageState(spark: SparkSession, catalogRoot: String,
-                         tables: Map[String, Long],
-                         state: Seq[(String, Long)], sourceId: String,
-                         batchId: Long): Long = {
-    import spark.implicits._
-    SnapshotTable.stageVersion(
-      (state.filterNot(_._1 == sourceId) :+ (sourceId -> batchId))
-        .toDF("source_id", "batch_id").coalesce(1),
-      Catalog.tableRoot(catalogRoot, StateTable),
-      tables.getOrElse(StateTable, -1L))
-  }
-
-  /** The one body of every governed stream sink, as ONE
-    * [[Catalog.publish]]: read `_stream_state` at the base, skip a
-    * replay (`batchId` at or below the recorded id), stage `table`'s
-    * change against its base version (`stage` returns None for an
-    * empty batch), then stage `_stream_state` with `sourceId` advanced
-    * to `batchId`. A moved table re-runs all of it on the new base.
-    * Returns the new catalog commit, or None when nothing published. */
-  private def commitStreamed(spark: SparkSession, catalogRoot: String,
-                             table: String, sourceId: String, batchId: Long)
-                            (stage: Long => Option[Long]): Option[Long] =
-    Catalog.publish(catalogRoot) { (base, tables) =>
-      val state = streamState(spark, catalogRoot, base, tables)
-      if (batchOf(state, sourceId) >= batchId) None
-      else stage(tables.getOrElse(table, -1L)).map(v => Catalog.Staged(
-        Map(table -> v, StateTable -> stageState(spark, catalogRoot,
-          tables, state, sourceId, batchId))))
-    }.toOption
+    Catalog.tableVersions(catalogRoot, commit).toSeq.flatMap { case (t, v) =>
+      if (t.startsWith(Catalog.ViewKey)) None
+      else SnapshotTable.txnBatch(Catalog.tableRoot(catalogRoot, t), v, sourceId)
+    }.maxOption.getOrElse(-1L)
 
   /** Transactionally commit one micro-batch: append `bronzeBatch` to
-    * the catalog's `bronze` table and advance `sourceId`'s recorded
-    * batch id, as ONE atomic catalog commit. Returns the new catalog
-    * commit, or None when `batchId` was already committed (a replay —
-    * skipped, which is the exactly-once guarantee) or the batch is
-    * empty. Safe from a fresh catalog (bootstraps commit 0). */
+    * the catalog's `table` stamped with `sourceId`'s `batchId`, as ONE
+    * atomic catalog commit. Returns the new catalog commit, or None
+    * when `batchId` was already committed (a replay — skipped, which
+    * is the exactly-once guarantee) or the batch is empty. Safe from a
+    * fresh catalog (bootstraps commit 0). */
   def commitBatch(spark: SparkSession, catalogRoot: String, sourceId: String,
                   batchId: Long, bronzeBatch: DataFrame,
                   table: String = "bronze",
-                  partitionCol: String = "_ingestion_date"): Option[Long] =
-    commitStreamed(spark, catalogRoot, table, sourceId, batchId) { prev =>
-      Option.when(!bronzeBatch.isEmpty)(SnapshotTable.stageAppend(bronzeBatch,
-        Catalog.tableRoot(catalogRoot, table), partitionCol, prev))
+                  partitionCol: String = "_ingestion_date"): Option[Long] = {
+    val t = new TableHandle(Some(catalogRoot), table)
+    t.publishOnce(sourceId, batchId) { (base, txn) =>
+      if (bronzeBatch.isEmpty) -1L
+      else SnapshotTable.stageAppend(bronzeBatch, t.root, partitionCol, base,
+        txn = txn)
     }
+  }
 
   /** Transactionally UPSERT one micro-batch into a governed
     * current-state table — the streaming CDC sink the table formats
@@ -111,31 +69,29 @@ object GovernedStream {
     * batch lands via [[SnapshotTable.stageUpsertMor]] (append + the
     * batch's key set as an equality-delete sidecar, O(batch), zero
     * table reads — where a MERGE-rewrite sink would rewrite touched
-    * partitions every 30 seconds) and publishes atomically with the
-    * advanced batch id, so a replayed batch upserts NOTHING twice
-    * (exactly-once; a re-upsert would be harmlessly idempotent for
-    * same-content rows but not for aggregated state, so it is skipped
-    * outright like [[commitBatch]]). Accumulated sidecars fold
-    * AUTOMATICALLY once their count crosses `foldThreshold` (each
-    * unfolded sidecar taxes every read with one broadcast anti-join;
-    * the fold lands as its own atomic catalog commit AFTER the batch
-    * publishes — exactly-once is untouched, and a fold crash leaves
-    * only an unpublished staged version). 0 disables (the maintenance
-    * cadence, [[graft.operators.Maintenance.runCatalog]], still
-    * folds). Returns the new catalog commit, or None on replay/empty
-    * batch. */
+    * partitions every 30 seconds) stamped with the batch id, so a
+    * replayed batch upserts NOTHING twice (exactly-once; a re-upsert
+    * would be harmlessly idempotent for same-content rows but not for
+    * aggregated state, so it is skipped outright like [[commitBatch]]).
+    * Accumulated sidecars fold AUTOMATICALLY once their count crosses
+    * `foldThreshold` ([[TableHandle.foldIfOverdue]]; the fold lands as
+    * its own atomic catalog commit AFTER the batch publishes and
+    * carries the stamp forward). 0 disables (the maintenance cadence,
+    * [[graft.operators.Maintenance.runCatalog]], still folds). Returns
+    * the new catalog commit, or None on replay/empty batch. */
   def commitUpsertBatch(spark: SparkSession, catalogRoot: String,
                         table: String, partitionCol: String,
                         keyCols: Seq[String], sourceId: String,
                         batchId: Long, batch: DataFrame,
                         foldThreshold: Int = DefaultFoldThreshold)
       : Option[Long] = {
-    val c = commitStreamed(spark, catalogRoot, table, sourceId, batchId) {
-      prev =>
-        Option.when(!batch.isEmpty)(SnapshotTable.stageUpsertMor(batch,
-          Catalog.tableRoot(catalogRoot, table), partitionCol, keyCols, prev))
+    val t = new TableHandle(Some(catalogRoot), table)
+    val c = t.publishOnce(sourceId, batchId) { (base, txn) =>
+      if (batch.isEmpty) -1L
+      else SnapshotTable.stageUpsertMor(batch, t.root, partitionCol, keyCols,
+        base, txn = txn)
     }
-    if (c.isDefined) foldIfOverdue(spark, catalogRoot, table, foldThreshold)
+    if (c.isDefined) t.foldIfOverdue(spark, foldThreshold)
     c
   }
 
@@ -143,33 +99,12 @@ object GovernedStream {
     * upsert sinks: a bounded, plan-visible anti-join count per read. */
   val DefaultFoldThreshold = 16
 
-  /** Fold `table`'s sidecars when the debt crossed `threshold` —
-    * best-effort (a concurrent committer may win the fold's CAS; the
-    * debt then folds on a later trigger or the maintenance cadence). */
-  private def foldIfOverdue(spark: SparkSession, catalogRoot: String,
-                            table: String, threshold: Int): Unit =
-    if (threshold > 0) {
-      val tr = Catalog.tableRoot(catalogRoot, table)
-      val v = Catalog.tableVersions(catalogRoot).getOrElse(table, -1L)
-      if (v >= 0 && SnapshotTable.morDebt(tr, v) >= threshold)
-        try Catalog.foldTable(spark, catalogRoot, table)
-        catch { case _: java.util.ConcurrentModificationException => () }
-    }
-
   /** Transactionally apply one FULL CDC micro-batch — upsert rows AND
-    * delete tombstones (the Debezium batch shape: inserts/updates plus
-    * `op = d` events, which [[commitUpsertBatch]] cannot express) — as
-    * ONE atomic catalog commit with the exactly-once batch id:
-    * the upserts land via [[SnapshotTable.stageUpsertMor]] (append +
-    * key sidecar), the tombstones chain a second staged version whose
-    * equality-delete sidecar masks every strictly-older row with a
-    * matching key ([[SnapshotTable.stageEqualityDelete]]) — still
-    * O(batch), zero table reads, zero rewrites. Within one batch a key
-    * carried by BOTH sides resolves to DELETED (the tombstone sidecar
-    * outranks the batch's own append by the sequence rule) — sources
-    * that interleave ops per key should pre-reduce the batch to its
-    * last op per key, the standard foreachBatch reduction. Returns the
-    * new catalog commit; None on replay or a fully-empty batch. */
+    * delete tombstones ([[SnapshotTable.stageCdc]]: the Debezium batch
+    * shape, which [[commitUpsertBatch]] cannot express) — as ONE atomic
+    * catalog commit stamped with the batch id. O(batch), zero table
+    * reads, zero rewrites. Returns the new catalog commit; None on
+    * replay or a fully-empty batch. */
   def commitCdcBatch(spark: SparkSession, catalogRoot: String,
                      table: String, partitionCol: String,
                      keyCols: Seq[String], sourceId: String,
@@ -177,19 +112,10 @@ object GovernedStream {
                      deleteKeys: DataFrame,
                      foldThreshold: Int = DefaultFoldThreshold)
       : Option[Long] = {
-    val c = commitStreamed(spark, catalogRoot, table, sourceId, batchId) {
-      prev =>
-        val hasUp = !upserts.isEmpty
-        val hasDel = !deleteKeys.isEmpty
-        Option.when(hasUp || hasDel) {
-          val tr = Catalog.tableRoot(catalogRoot, table)
-          val v = if (!hasUp) prev else SnapshotTable.stageUpsertMor(upserts,
-            tr, partitionCol, keyCols, prev)
-          if (!hasDel) v else SnapshotTable.stageEqualityDelete(spark, tr,
-            deleteKeys.select(keyCols.map(col): _*), v)
-        }
-    }
-    if (c.isDefined) foldIfOverdue(spark, catalogRoot, table, foldThreshold)
+    val t = new TableHandle(Some(catalogRoot), table)
+    val c = t.publishOnce(sourceId, batchId)(SnapshotTable.stageCdc(spark,
+      t.root, partitionCol, keyCols, upserts, deleteKeys, _, _))
+    if (c.isDefined) t.foldIfOverdue(spark, foldThreshold)
     c
   }
 

@@ -119,7 +119,7 @@ class CatalogPublishSpec extends GraftSuite {
       .as[(String, Long, Option[Double])].collect().toSeq ===
       Seq(("b", 2L, None), ("c", 3L, None)))
 
-    survivesHeldLock("GovernedStream.commitBatch", 2) {
+    survivesHeldLock("GovernedStream.commitBatch", 1) {
       assert(GovernedStream.commitBatch(spark, root, "src", 0L,
         Seq((1L, "2024-01-01")).toDF("event_id", "_ingestion_date"),
         table = "events").isDefined)

@@ -12,12 +12,13 @@ import graft.operators.SnapshotTable
 
 /** The commit protocol, checked over EVERY public commit entry point
   * (table-driven): the returned version holds ONE commit record
-  * (`_commit`, plus `_txn` on the idempotent-writer paths) naming the
-  * base the commit read as its parent, the `_latest` marker
-  * moves exactly once and lands on the returned version, the
-  * idempotent-writer variants make [[SnapshotTable.lastTxnBatch]]
-  * answer their batch, and a DML statement matching nothing returns
-  * the base without claiming a version directory. */
+  * (`_commit`, and never a `_txn` file) naming the base the commit
+  * read as its parent, the `_latest` marker moves exactly once and
+  * lands on the returned version, the idempotent-writer variants make
+  * [[SnapshotTable.lastTxnBatch]] answer their batch, every entry
+  * point's record carries its base's writer stamps, and a DML
+  * statement matching nothing returns the base without claiming a
+  * version directory. */
 class CommitProtocolSpec extends GraftSuite {
 
   import spark.implicits._
@@ -55,12 +56,13 @@ class CommitProtocolSpec extends GraftSuite {
     } finally ws.close()
   }
 
-  /** `v=N`'s protocol files are its one record — plus the `_txn`
-    * stamp iff `txn` — and none of the per-file layout it replaced. */
-  private def assertOneRecord(root: String, v: Long, txn: Boolean): Unit = {
+  /** `v=N`'s protocol files are its one record — writer stamps ride
+    * it, no `_txn` file ever — and none of the per-file layout it
+    * replaced. */
+  private def assertOneRecord(root: String, v: Long): Unit = {
     val names = graft.operators.MetaIO.listNames(s"$root/v=$v").toSet
     assert(names.contains("_commit"), names)
-    assert(names.contains("_txn") === txn, names)
+    assert(!names.contains("_txn"), names)
     assert((names & Set("_parent", "_committed", "_manifest", "_schema",
       "_fields", "_defaults")).isEmpty, names)
   }
@@ -114,12 +116,25 @@ class CommitProtocolSpec extends GraftSuite {
       assert(v > base)
       assert(SnapshotTable.parentVersion(root, v) === base)
       assert(SnapshotTable.isCommitted(root, v))
-      assertOneRecord(root, v, txn = e.txn.isDefined)
+      assertOneRecord(root, v)
       assert(SnapshotTable.versions(root) === before :+ v)
       assert(SnapshotTable.latestVersion(root) === v)
       assert(moves === 1, s"${e.name} moved _latest $moves times")
       e.txn.foreach { case (writer, b) =>
         assert(SnapshotTable.lastTxnBatch(root, writer) === Some(b))
+      }
+    }
+  }
+
+  entries.foreach { e =>
+    test(s"protocol: ${e.name} carries its base's writer stamps") {
+      val root = seeded()
+      SnapshotTable.commitAppendTxn(batch, root, "p", "w-base", 3L)
+      e.prep(root)
+      val v = e.run(root)
+      assert(SnapshotTable.txnBatch(root, v, "w-base") === Some(3L))
+      e.txn.foreach { case (writer, b) =>
+        assert(SnapshotTable.txnBatch(root, v, writer) === Some(b))
       }
     }
   }
@@ -132,7 +147,7 @@ class CommitProtocolSpec extends GraftSuite {
       markerMoves(root)(SnapshotTable.commitToBranch(batch, root, "dev"))
     assert(SnapshotTable.parentVersion(root, v) === main)
     assert(SnapshotTable.isCommitted(root, v))
-    assertOneRecord(root, v, txn = false)
+    assertOneRecord(root, v)
     assert(SnapshotTable.branchVersion(root, "dev") === v)
     assert(SnapshotTable.latestVersion(root) === main)
     assert(moves === 0)

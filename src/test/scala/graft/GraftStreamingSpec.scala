@@ -448,8 +448,8 @@ class GraftStreamingSpec extends GraftSuite {
     assert(Catalog.read(spark, cat, "trades").count() === 3)
     assert(Catalog.latestCommit(cat) === c1 + 1)
 
-    // forced replay: drop the engine's last commit marker — the
-    // catalog's _stream_state batch id makes the replay a skip
+    // forced replay: drop the engine's last commit marker — the batch
+    // id stamped in the table version's record makes the replay a skip
     val commits = Paths.get(cp, "commits")
     val names = new scala.collection.mutable.ArrayBuffer[Path]
     Files.list(commits).iterator()
@@ -523,5 +523,32 @@ class GraftStreamingSpec extends GraftSuite {
     assert(SnapshotTable.read(spark, root).count() === 2L)
     assert(SnapshotTable.lastTxnBatch(root, "w1") === Some(0L))
     assert(SnapshotTable.lastTxnBatch(root, "w2") === Some(0L))
+  }
+
+  private def dayRow(k: String, n: Long): DataFrame = Seq((k, n, "d1")).toDF("k", "n", "day")
+
+  test("library protocol: a writer's stamp survives compaction and expiry") {
+    val root = s"${tmp()}/t"
+    SnapshotTable.commitAppendTxn(dayRow("a", 1L), root, "day", "w", 0L)
+    SnapshotTable.commitAppendTxn(dayRow("b", 2L), root, "day", "w", 1L)
+    graft.operators.Maintenance.compactAppends(spark, root, "day", minEntries = 2)
+    SnapshotTable.expireSnapshots(root, retainLast = 0)
+    assert(!SnapshotTable.isCommitted(root, 1L), "the stamped version expired")
+    assert(SnapshotTable.lastTxnBatch(root, "w") === Some(1L))
+    // the replay of batch 1 appends nothing
+    SnapshotTable.commitAppendTxn(dayRow("b", 2L), root, "day", "w", 1L)
+    assert(SnapshotTable.read(spark, root).count() === 2L)
+  }
+
+  test("governed protocol: a source's batch id survives compaction and expiry") {
+    import graft.operators.Catalog
+    val cat = s"${tmp()}/cat"
+    GovernedStream.commitBatch(spark, cat, "w", 0L, dayRow("a", 1L), "t", "day")
+    GovernedStream.commitBatch(spark, cat, "w", 1L, dayRow("b", 2L), "t", "day")
+    Catalog.compactTable(spark, cat, "t", "day", minEntries = 2)
+    Catalog.expireCommits(cat, retainLast = 0, graceMs = 0L)
+    assert(GovernedStream.commitBatch(spark, cat, "w", 1L, dayRow("b", 2L), "t",
+      "day") === None)
+    assert(Catalog.read(spark, cat, "t").count() === 2L)
   }
 }

@@ -155,6 +155,7 @@ class GraftTableSpec extends GraftSuite {
       assert(spark.table(t).filter("c IS NULL").count() === 3)
       val old = spark.sql(s"SELECT * FROM $t VERSION AS OF $pin")
       assert(old.columns.toSet === Set("k", "n", "p"))
+      assert(old.columns.toSeq === Seq("k", "n", "p"))
       assert(old.select("k", "n", "p").as[(String, Long, String)].collect()
         .toSeq.sortBy(_._1) === seed)
     }

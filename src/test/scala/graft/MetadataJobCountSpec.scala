@@ -115,19 +115,19 @@ class MetadataJobCountSpec extends GraftSuite {
       Seq(("a", 1L), ("b", 20L)))
   }
 
-  test("a steady-state governed stream commit runs at most three jobs") {
+  test("a governed stream commit runs one job; replay and lastBatchId run none") {
     val cat = Files.createTempDirectory("graft-jobs-stream").toString
     def batch(i: Long): DataFrame = Seq((i, s"e$i", "2024-01-01"))
       .toDF("event_id", "name", "_ingestion_date")
-    // the first commit creates `_stream_state`; later ones read it
     GovernedStream.commitBatch(spark, cat, "src", 0L, batch(0L))
     GovernedStream.commitBatch(spark, cat, "src", 1L, batch(1L))
-    // one state read, the bronze append, the state write
-    assert(pin(3, "commitBatch")(
+    // the bronze append; the batch id rides its commit record
+    assert(pin(1, "commitBatch")(
       GovernedStream.commitBatch(spark, cat, "src", 2L, batch(2L))).isDefined)
-    assert(pin(1, "replayed commitBatch")(
+    assert(pin(0, "replayed commitBatch")(
       GovernedStream.commitBatch(spark, cat, "src", 2L, batch(2L))).isEmpty)
-    assert(GovernedStream.lastBatchId(spark, cat, "src") === 2L)
+    assert(pin(0, "lastBatchId")(
+      GovernedStream.lastBatchId(spark, cat, "src")) === 2L)
   }
 
   test("the catalog publish path adds no job") {
@@ -214,7 +214,10 @@ class MetadataJobCountSpec extends GraftSuite {
     SnapshotTable.upsertMor(spark, root, "source",
       Seq((2L, "merge merge", "b")).toDF("doc_id", "text", "source"),
       Seq("doc_id"))
-    Retrieval.indexCorpusDelta(spark, root)
+    // the delta reads the equality-delete sidecar under its recorded
+    // key type, with no inference job
+    val (_, deltaJobs) = jobsOf(spark)(Retrieval.indexCorpusDelta(spark, root))
+    assert(!deltaJobs.exists(_.startsWith("parquet at Retrieval")), deltaJobs)
     assert(Retrieval.indexSegments(root).size === 2)
     assert(Retrieval.indexTombs(root).size === 1)
     val qs = Seq("qa" -> Seq("merge", "spark"), "qb" -> Seq("window"))

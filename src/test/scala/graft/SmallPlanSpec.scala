@@ -29,9 +29,8 @@ class SmallPlanSpec extends GraftSuite {
 
   /** One streamed catalog: bootstrapped by `runFull` on the first 80 %
     * of the sf0.001 arrivals, then two micro-batches of the rest through
-    * `commitBatch` (the first creates the stream state) and one
-    * refresh; the second commit's and the refresh's jobs, and the
-    * observed-metric fallbacks the refresh took. */
+    * `commitBatch` and one refresh; the second commit's and the
+    * refresh's jobs, and the observed-metric fallbacks the refresh took. */
   private case class Run(cat: String, commitJobs: Seq[String],
                          refreshJobs: Seq[String], fallbacks: Long)
 
@@ -80,7 +79,7 @@ class SmallPlanSpec extends GraftSuite {
   }
 
   test("a steady-state commitBatch of a local frame runs pinned jobs") {
-    assert(on.commitJobs.size <= 3, on.commitJobs.mkString("; "))
+    assert(on.commitJobs.size <= 1, on.commitJobs.mkString("; "))
     assert(off.commitJobs.size === on.commitJobs.size)
   }
 
