@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+
+import graft.sources.TableHandle
 
 /** Multi-table catalog with ATOMIC cross-table commits — the Nessie
   * analog (`infrastructure/init/nessie_setup.py:1-75`).
@@ -392,40 +393,21 @@ object Catalog {
     SnapshotTable.read(spark, tableRoot(root, table), vs(table))
   }
 
-  /** Compact a catalog table's append-fragmented partitions (the
-    * catalog-transaction form of [[Maintenance.compactAppends]] —
-    * catalog tables have no per-table marker, so the compacted version
-    * must publish through a catalog commit): every partition holding at
-    * least `minEntries` manifest entries is rewritten to one directory
-    * and delta-committed; untouched partitions are inherited. Returns
-    * the new catalog commit, or the current one when nothing is
-    * fragmented. Run on the streaming bronze after enough micro-batch
-    * appends ([[graft.streaming.GovernedStream]]). */
+  /** Compact a catalog table's append-fragmented partitions — the
+    * governed twin of [[Maintenance.compactAppends]], publishing the
+    * same stage ([[Maintenance.stageCompaction]], against the table's
+    * version at the current commit) as one catalog commit; a publish
+    * that loses a race stages again on the moved table. Returns the new
+    * catalog commit, or the current one when nothing is fragmented.
+    * Run on the streaming bronze after enough micro-batch appends
+    * ([[graft.streaming.GovernedStream]]). */
   def compactTable(spark: SparkSession, root: String, table: String,
-                   partitionCol: String, minEntries: Int = 4): Long = {
-    val tr = tableRoot(root, table)
-    publishTable(root, table) { prev =>
+                   partitionCol: String, minEntries: Int = 4): Long =
+    new TableHandle(Some(root), table).publish { prev =>
       require(prev >= 0, s"table '$table' not in catalog at $root")
-      val fragmented = SnapshotTable.manifestEntries(tr, prev)
-        .groupBy(_._1).filter(_._2.size >= minEntries).keys.toSeq.sorted
-      if (fragmented.isEmpty) prev
-      else {
-        val values = fragmented.map(_.substring(partitionCol.length + 1))
-        val slice = SnapshotTable.read(spark, tr, prev)
-          .filter(col(partitionCol).cast("string").isin(values: _*))
-          .repartition(col(partitionCol))
-        // analyze coverage survives the rewrite (the compactSnapshot
-        // contract): covered stats/bloom columns re-record through the
-        // staged commit's footer pass, NDV re-sketches the staged
-        // version before it publishes
-        val cov = SnapshotTable.coverage(tr, prev)
-        val staged = SnapshotTable.stageDelta(slice, tr, partitionCol,
-          prev, statsCols = cov.stats, bloomCols = cov.blooms)
-        cov.resketch(spark, tr, staged)
-        staged
-      }
+      Maintenance.stageCompaction(spark, tableRoot(root, table),
+        partitionCol, prev, minEntries, filesPerPartition = 4)
     }
-  }
 
   /** Fold a governed table's accumulated merge-on-read sidecars back
     * into clean data as ONE atomic catalog commit — the governed twin
@@ -775,17 +757,12 @@ object Catalog {
         val names = MetaIO.listNames(tablesDir).sorted
         names.map { name =>
           val tr = tableRoot(root, name)
-          val direct = referenced.getOrElse(name, Set.empty)
           // delta-manifested versions keep their storage roots and
           // merge-on-read sidecars alive: reachability extends through
           // each live version's record (targets are storage versions —
           // one hop suffices)
-          val keep = direct.flatMap(SnapshotTable.reachableFrom(tr, _))
-          val dead = SnapshotTable.versions(tr)
-            .filter(v => !keep(v) && SnapshotTable.isCommitted(tr, v))
-          dead.foreach { v =>
-            MetaIO.delete(MetaIO.join(tr, s"v=$v"), recursive = true)
-          }
+          val dead = SnapshotTable.deleteUnreachable(tr,
+            referenced.getOrElse(name, Set.empty))
           // crashed mid-stage claims (unstamped) go through the table
           // sweep with the same grace discipline
           name -> (dead ++ SnapshotTable.sweepOrphans(tr, graceMs)).sorted

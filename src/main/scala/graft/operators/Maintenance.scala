@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+
+import graft.sources.TableHandle
 
 /** Parquet table maintenance.
   *
@@ -29,15 +31,6 @@ object Maintenance {
       df.repartition(targetFiles).write.mode("overwrite").parquet(outputDir)
     }
     jobs.map(_.outputRecords).sum
-  }
-
-  /** Compaction plan: how many files a directory currently has vs the
-    * target — the "min-input-files" gate the reference passes to
-    * rewrite_data_files. */
-  def needsCompaction(spark: SparkSession, inputDir: String,
-                      minInputFiles: Int): Boolean = {
-    val files = spark.read.parquet(inputDir).inputFiles
-    files.length >= minInputFiles
   }
 
   /** Snapshot-expiry analog for plain parquet output dirs: list versions
@@ -74,81 +67,96 @@ object Maintenance {
     v
   }
 
-  /** Fold a streaming-append table's fragmented partitions back to one
-    * directory each — the compaction half of the append protocol
-    * ([[SnapshotTable.commitAppend]] adds a manifest entry per
-    * micro-batch; this rewrites every partition that accumulated at
-    * least `minEntries` entries and delta-commits the result, so the
-    * new manifest carries ONE entry for each compacted partition and
-    * inherits the rest untouched). Returns the new version, or -1 when
-    * no partition is fragmented enough (never churn a healthy table).
+  /** Fold a plain streaming-append table's fragmented partitions back
+    * to one directory each — the compaction half of the append
+    * protocol ([[SnapshotTable.commitAppend]] adds a manifest entry per
+    * micro-batch): one publish of [[stageCompaction]] against the
+    * current version, so the new manifest carries ONE entry for each
+    * compacted partition and inherits the rest untouched. An append
+    * published while the stage ran makes the publish throw
+    * `ConcurrentModificationException` instead of dropping its rows.
+    * Returns the new version, or -1 when the table has no version or no
+    * partition is fragmented enough (never churn a healthy table).
+    * [[Catalog.compactTable]] is the governed twin. */
+  def compactAppends(spark: SparkSession, root: String, partitionCol: String,
+                     minEntries: Int = 4,
+                     filesPerPartition: Int = 4): Long = {
+    var staged = -1L
+    new TableHandle(None, root).publish { base =>
+      staged = stageCompaction(spark, root, partitionCol, base, minEntries,
+        filesPerPartition)
+      staged
+    }
+    staged
+  }
+
+  /** Stage the compaction of version `base`'s append-fragmented
+    * partitions — the one append-compaction body of both table kinds
+    * ([[compactAppends]], [[Catalog.compactTable]]). Every partition
+    * with at least `minEntries` entries in `base`'s record is read AT
+    * `base`, its rows addressed through the write path's row→dir
+    * expression (so transforms and nested multi-column specs resolve),
+    * laid out by the declared write order ([[laidOut]]) and
+    * delta-staged against `base`: one entry per compacted partition,
+    * the rest inherited. Returns the staged version, or -1 when `base`
+    * is absent or nothing is fragmented — then no Spark job runs.
+    *
+    * ANALYZE coverage survives (the [[compactSnapshot]] contract):
+    * covered stats/bloom columns re-record through the staged commit's
+    * footer pass, and NDV re-sketches the staged version before it
+    * publishes.
     *
     * Scale: write cost = the fragmented partitions only — for a
     * 30-minute ingest cadence that is one day-partition rewrite per
     * maintenance run, not a table rewrite. */
-  def compactAppends(spark: SparkSession, root: String, partitionCol: String,
-                     minEntries: Int = 4,
-                     filesPerPartition: Int = 4): Long = {
-    val v = SnapshotTable.latestVersion(root)
-    if (v < 0) return -1L
-    val fragmented = SnapshotTable.manifestEntries(root, v)
+  private[graft] def stageCompaction(spark: SparkSession, root: String,
+                                     partitionCol: String, base: Long,
+                                     minEntries: Int,
+                                     filesPerPartition: Int): Long = {
+    if (base < 0) return -1L
+    val fragmented = SnapshotTable.manifestEntries(root, base)
       .groupBy(_._1).filter(_._2.size >= minEntries).keys.toSeq.sorted
     if (fragmented.isEmpty) return -1L
-    // fragmented names are full relative partition dirs
-    // (`field=value`, nested for multi-column specs; fields DERIVED
-    // for hidden-partitioning transforms) — rows address them through
-    // the same row→dir expression the write path uses
-    val cur = SnapshotTable.read(spark, root, v)
+    val cur = SnapshotTable.read(spark, root, base)
     val dirc = SnapshotTable.rowDirExpr(
       SnapshotTable.parseSpecs(partitionCol), cur.schema)
-    val touched = cur.filter(dirc.isin(fragmented: _*))
-    // analyze coverage survives (same contract as [[compactSnapshot]]):
-    // the rewritten partitions' files land in a fresh storage version,
-    // so previously covered stats/bloom columns re-record through the
-    // commit's footer pass and NDV re-sketches after (one scan of the
-    // new version only — collectNdv skips covered versions)
-    val cov = SnapshotTable.coverage(root)
-    def reNdv(nv: Long): Long = { cov.resketch(spark, root); nv }
-    SnapshotTable.sortOrderSpec(root) match {
-      case None =>
-        reNdv(SnapshotTable.commitDelta(touched.repartition(dirc),
-          root, partitionCol, statsCols = cov.stats,
-          bloomCols = cov.blooms))
+    val (slice, orderCols) = laidOut(cur.filter(dirc.isin(fragmented: _*)),
+      dirc, SnapshotTable.sortOrderSpec(root),
+      fragmented.size * filesPerPartition)
+    // read only after the fragmentation check: the bloom coverage read
+    // is a Spark job
+    val cov = SnapshotTable.coverage(root, base)
+    val staged = SnapshotTable.stageDelta(slice, root, partitionCol, base,
+      statsCols = (orderCols ++ cov.stats).distinct, bloomCols = cov.blooms)
+    cov.resketch(spark, root, staged)
+    staged
+  }
+
+  /** Lay `touched` (rows of the partitions `dirc` names) out by the
+    * declared write `order`, with the columns whose stats the layout
+    * makes skippable. None: one file per partition directory. A
+    * sort order (Iceberg's `WRITE ORDERED BY`) — compaction is where
+    * it is applied, appends land unsorted by design: range-split into
+    * `files` files clustered on the sort key. A z-order (Delta
+    * `OPTIMIZE ZORDER BY`): range-split along the Morton curve of the
+    * two dimensions, so range predicates on EITHER column prune; a
+    * degenerate slice (empty / all-NULL dimension) stays unsorted. */
+  private def laidOut(touched: DataFrame, dirc: Column,
+                      order: Option[(Seq[String], Boolean)],
+                      files: Int): (DataFrame, Seq[String]) = {
+    def unsorted = (touched.repartition(dirc), Seq.empty[String])
+    order match {
+      case None => unsorted
       case Some((sortCols, false)) =>
-        // the table declares a WRITE ORDER: compaction is where it is
-        // applied (appends land unsorted by design) — range-split each
-        // partition on the sort key into `filesPerPartition` clustered
-        // files and re-record their stats, so the streaming-append
-        // table converges to a stats-skippable layout
-        val slice = touched
-          .repartitionByRange(fragmented.size * filesPerPartition,
-            dirc +: sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-        reNdv(SnapshotTable.commitDelta(slice, root, partitionCol,
-          statsCols = (sortCols ++ cov.stats).distinct,
-          bloomCols = cov.blooms))
+        (touched.repartitionByRange(files, dirc +: sortCols.map(col): _*)
+          .sortWithinPartitions(sortCols.map(col): _*), sortCols)
       case Some((sortCols, true)) =>
-        // Z-ORDER write order (Delta OPTIMIZE ZORDER BY): cluster the
-        // fragmented partitions along the Morton curve of the two
-        // declared dimensions and record stats on BOTH, so range
-        // predicates on EITHER column file-prune after compaction —
-        // the two-dimensional convergence a single-column sort cannot
-        // give a streaming-append table
-        Layout.mortonColumn(touched, sortCols(0), sortCols(1)) match {
-          case None => // degenerate slice (empty / all-NULL dimension)
-            reNdv(SnapshotTable.commitDelta(touched.repartition(dirc),
-              root, partitionCol, statsCols = cov.stats,
-              bloomCols = cov.blooms))
-          case Some(z) =>
-            val slice = touched.withColumn("_zorder", z)
-              .repartitionByRange(fragmented.size * filesPerPartition,
-                dirc, col("_zorder"))
-              .sortWithinPartitions("_zorder")
-              .drop("_zorder")
-            reNdv(SnapshotTable.commitDelta(slice, root, partitionCol,
-              statsCols = (sortCols ++ cov.stats).distinct,
-              bloomCols = cov.blooms))
-        }
+        Layout.mortonColumn(touched, sortCols(0), sortCols(1))
+          .fold(unsorted) { z =>
+            (touched.withColumn("_zorder", z)
+              .repartitionByRange(files, dirc, col("_zorder"))
+              .sortWithinPartitions("_zorder").drop("_zorder"), sortCols)
+          }
     }
   }
 

@@ -931,13 +931,22 @@ object SnapshotTable {
     val retire = versions(root).filter(v => v < current && isCommitted(root, v))
       .sorted.dropRight(math.max(retainLast, 0))
       .filterNot(pinned).toSet
-    val reachable =
-      versions(root).filterNot(retire).flatMap(reachableFrom(root, _)).toSet
-    val removed = retire.filterNot(reachable).toSeq.sorted
-    removed.foreach { v =>
+    deleteUnreachable(root, versions(root).filterNot(retire))
+  }
+
+  /** Delete every committed version that no version of `live`
+    * reaches ([[reachableFrom]]) — the one expiry rule of both table
+    * kinds: a plain table's live set is its unretired versions, a
+    * governed table's the versions its surviving catalog manifests
+    * name. Returns the deleted versions, ascending. */
+  private[graft] def deleteUnreachable(root: String,
+                                       live: Iterable[Long]): Seq[Long] = {
+    val keep = live.flatMap(reachableFrom(root, _)).toSet
+    val dead = versions(root).filter(v => !keep(v) && isCommitted(root, v))
+    dead.foreach { v =>
       MetaIO.delete(MetaIO.join(root, s"v=$v"), recursive = true)
     }
-    removed
+    dead
   }
 
   /** The version directories a read of `v` touches — its own, every
@@ -1613,8 +1622,10 @@ object SnapshotTable {
     * what makes column-stats skipping bite on a streaming-append table
     * whose arrival order scatters the key space. Declarative only:
     * appends stay cheap and UNSORTED (the append path must not pay a
-    * sort); [[Maintenance.compactAppends]] applies the order and
-    * re-records stats for these columns. */
+    * sort); append compaction of either table kind
+    * ([[Maintenance.stageCompaction]]) applies the order and re-records
+    * stats for these columns. A governed table declares it on its
+    * [[Catalog.tableRoot]]. */
   def setSortOrder(root: String, cols: Seq[String],
                    zorder: Boolean = false): Unit = {
     require(cols.nonEmpty, "sort order needs at least one column")

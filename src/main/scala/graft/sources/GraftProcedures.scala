@@ -91,14 +91,9 @@ private[sources] object GraftProcedures {
           rootOf(in.getUTF8String(0).toString), in.getLong(1)))
       }
     case "compact" =>
-      proc("compact",
-        Seq("table" -> StringType, "partition_col" -> StringType,
-          "min_entries" -> IntegerType),
-        VersionOut) { in =>
-        Seq(row(Maintenance.compactAppends(SparkSession.active,
-          rootOf(in.getUTF8String(0).toString),
-          in.getUTF8String(1).toString, in.getInt(2))))
-      }
+      compact(VersionOut, (table, partitionCol, minEntries) =>
+        Maintenance.compactAppends(SparkSession.active, rootOf(table),
+          partitionCol, minEntries))
     case "rollback" =>
       proc("rollback",
         Seq("table" -> StringType, "version" -> LongType),
@@ -193,14 +188,8 @@ private[sources] object GraftProcedures {
         removed.map(c => row(c))
       }
     case "compact" =>
-      proc("compact",
-        Seq("table" -> StringType, "partition_col" -> StringType,
-          "min_entries" -> IntegerType),
-        CommitOut) { in =>
-        Seq(row(Catalog.compactTable(SparkSession.active, catalogRoot,
-          in.getUTF8String(0).toString, in.getUTF8String(1).toString,
-          in.getInt(2))))
-      }
+      compact(CommitOut,
+        Catalog.compactTable(SparkSession.active, catalogRoot, _, _, _))
     case "tag" =>
       proc("tag", Seq("name" -> StringType, "commit" -> LongType),
         CommitOut) { in =>
@@ -231,6 +220,18 @@ private[sources] object GraftProcedures {
         Catalog.tableRoot(catalogRoot, table) -> vs(table)
       })
   }
+
+  /** `compact` for both catalogs (Iceberg's `rewrite_data_files` over
+    * append-fragmented partitions): `run(table, partition_col,
+    * min_entries)` compacts and returns the new version or commit. */
+  private def compact(out: StructType, run: (String, String, Int) => Long)
+      : UnboundProcedure =
+    proc("compact",
+      Seq("table" -> StringType, "partition_col" -> StringType,
+        "min_entries" -> IntegerType), out) { in =>
+      Seq(row(run(in.getUTF8String(0).toString,
+        in.getUTF8String(1).toString, in.getInt(2))))
+    }
 
   /** The ANALYZE family, one sidecar backfill per procedure:
     * `collect_stats` (skipping stats), `collect_blooms` (its

@@ -31,7 +31,8 @@ import graft.sources.TableHandle
   * touched (current-day) partition are inherited by manifest
   * reference. Cost per batch = the batch, at any table size; the
   * accumulated small files fold back via
-  * [[graft.operators.Maintenance.compactAppends]].
+  * [[graft.operators.Catalog.compactTable]], the governed form of the
+  * one append compaction.
   */
 object GovernedStream {
 

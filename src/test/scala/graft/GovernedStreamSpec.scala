@@ -258,4 +258,30 @@ class GovernedStreamSpec extends GraftSuite {
     // a healthy table is never churned
     assert(Maintenance.compactAppends(spark, root, "p", minEntries = 4) === -1L)
   }
+
+  test("an append published while a plain compaction stages makes the publish throw, rows kept") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-compact-race").toString
+    def rows(from: Long): org.apache.spark.sql.DataFrame =
+      spark.range(from, from + 2).select(
+        (col("id") % 2).cast("string").as("p"), col("id").as("x"))
+    // four appends fragment both partitions
+    (0 until 4).foreach(i => SnapshotTable.commitAppend(rows(2L * i), root, "p"))
+    val late = rows(100L)
+    // compactAppends' own publish, with an append landing between the
+    // stage (read at the base) and the marker move
+    intercept[java.util.ConcurrentModificationException] {
+      new graft.sources.TableHandle(None, root).publish { base =>
+        val staged = Maintenance.stageCompaction(spark, root, "p", base,
+          minEntries = 4, filesPerPartition = 4)
+        SnapshotTable.commitAppend(late, root, "p")
+        staged
+      }
+    }
+    assert(SnapshotTable.read(spark, root).select("x").as[Long].collect()
+      .sorted.toSeq === (0L until 8L) ++ (100L until 102L))
+    // compacting again against the moved table keeps the late rows
+    assert(Maintenance.compactAppends(spark, root, "p") > 0)
+    assert(SnapshotTable.read(spark, root).count() === 10L)
+  }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Maintenance, SnapshotTable}
+import graft.operators.{Catalog, Maintenance, SnapshotTable}
 
 /** Hidden partitioning (Iceberg partition transforms): a partition
   * spec of `days(ts)` / `bucket(n,col)` / `truncate(w,col)` derives
@@ -150,6 +150,15 @@ class HiddenPartitionSpec extends GraftSuite {
       .groupBy(_._1).mapValues(_.size)
     assert(postM.values.max === 1)
     assert(SnapshotTable.read(spark, root).collect().toSet === preRows)
+
+    // a governed table compacts the same transform layout
+    val cat = governedAppends("days(ts)",
+      trades +: (0 until 4).map(i => extra.withColumn("id", col("id") + i * 100)))
+    assert(governedEntries(cat).values.max >= 4)
+    val govRows = Catalog.read(spark, cat, "t").collect().toSet
+    Catalog.compactTable(spark, cat, "t", "days(ts)")
+    assert(governedEntries(cat).values.max === 1)
+    assert(Catalog.read(spark, cat, "t").collect().toSet === govRows)
   }
 
   test("spec evolution identity -> days(ts): mixed-era read, then migrate to single era") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Maintenance, SnapshotTable}
+import graft.operators.{Catalog, Maintenance, SnapshotTable}
 
 /** Combined maintenance runner: compaction → expiry → orphan GC. */
 class MaintenanceSpec extends GraftSuite {
@@ -146,11 +146,11 @@ class MaintenanceSpec extends GraftSuite {
     val root = Files.createTempDirectory("graft-maint-sort").toString
     SnapshotTable.setSortOrder(root, Seq("id"))
     // micro-batch appends arrive UNSORTED — ids scattered per batch
-    (0 until 4).foreach { b =>
-      val rows = (0L until 1000L).filter(_ % 4 == b)
-        .map(i => (i, s"g${i % 2}", i * 3L))
-      SnapshotTable.commitAppend(rows.toDF("id", "g", "x"), root, "g")
+    val batches = (0 until 4).map { b =>
+      (0L until 1000L).filter(_ % 4 == b)
+        .map(i => (i, s"g${i % 2}", i * 3L)).toDF("id", "g", "x")
     }
+    batches.foreach(SnapshotTable.commitAppend(_, root, "g"))
     // no stats yet: a range predicate reads every file
     val before = SnapshotTable.readSkipping(spark, root, "id <= 100")
     val allFiles = before.inputFiles.length
@@ -164,6 +164,20 @@ class MaintenanceSpec extends GraftSuite {
       SnapshotTable.read(spark, root).inputFiles.length,
       "sorted compaction must make range predicates prune files")
     assert(after.select("id").as[Long].collect().toSet ===
+      (0L to 100L).toSet)
+
+    // a governed table declares the order on its table root and
+    // compacts to the same skippable layout
+    val cat = governedAppends("g", batches)
+    val tr = Catalog.tableRoot(cat, "t")
+    SnapshotTable.setSortOrder(tr, Seq("id"))
+    Catalog.compactTable(spark, cat, "t", "g", minEntries = 2)
+    val tv = Catalog.tableVersions(cat)("t")
+    val govAfter = SnapshotTable.readSkipping(spark, tr, "id <= 100", tv)
+    assert(govAfter.inputFiles.length <
+      SnapshotTable.read(spark, tr, tv).inputFiles.length,
+      "governed sorted compaction must make range predicates prune files")
+    assert(govAfter.select("id").as[Long].collect().toSet ===
       (0L to 100L).toSet)
   }
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.MaintenanceJobCountSpec.jobsOf
-import graft.operators.{Catalog, IncrementalIvf, Metrics, Retrieval, SnapshotTable}
+import graft.operators.{Catalog, IncrementalIvf, Maintenance, Metrics, Retrieval,
+  SnapshotTable}
 import graft.streaming.GovernedStream
 
 /** Table metadata costs no Spark job: every commit records its schema,
@@ -143,6 +144,10 @@ class MetadataJobCountSpec extends GraftSuite {
       Catalog.foldTable(spark, cat, "d")) === c)
     assert(pin(0, "compactTable with nothing fragmented")(
       Catalog.compactTable(spark, cat, "d", "p")) === c)
+    val plain = tmp("graft-jobs-compact")
+    SnapshotTable.commitDelta(appended, plain, "p", bloomCols = Seq("id"))
+    assert(pin(0, "compactAppends with nothing fragmented")(
+      Maintenance.compactAppends(spark, plain, "p")) === -1L)
   }
 
   test("SQL INSERT INTO, DELETE and MERGE upsert run pinned jobs on both kinds") {

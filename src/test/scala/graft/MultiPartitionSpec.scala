@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Maintenance, SnapshotTable}
+import graft.operators.{Catalog, Maintenance, SnapshotTable}
 
 /** MULTI-column partition specs (Iceberg multi-field layouts): a
   * comma-joined spec like `days(ts),bucket(4,product)` nests one
@@ -89,6 +89,16 @@ class MultiPartitionSpec extends GraftSuite {
     assert(SnapshotTable.manifestEntries(root, cv)
       .groupBy(_._1).forall(_._2.size == 1))
     assert(SnapshotTable.read(spark, root).collect().toSet === preRows)
+
+    // a governed table compacts the same nested layout
+    val cat = governedAppends("days(ts),bucket(4,product)",
+      trades +: (0 until 4).map(i =>
+        extra.withColumn("id", col("id") + 1000 + i * 100)))
+    assert(governedEntries(cat).values.max >= 4)
+    val govRows = Catalog.read(spark, cat, "t").collect().toSet
+    Catalog.compactTable(spark, cat, "t", "days(ts),bucket(4,product)")
+    assert(governedEntries(cat).values.forall(_ == 1))
+    assert(Catalog.read(spark, cat, "t").collect().toSet === govRows)
   }
 
   test("evolution from single to multi-column spec; migration folds to the new layout") {

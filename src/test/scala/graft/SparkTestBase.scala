@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -51,6 +51,28 @@ abstract class GraftSuite extends AnyFunSuite {
       case (key, Some(value)) => spark.conf.set(key, value)
       case (key, None) => spark.conf.unset(key)
     }
+  }
+
+  /** A fresh catalog whose table `t` (partition spec `spec`) holds
+    * each of `batches` as one append commit — a streamed bronze's
+    * fragmented layout, before compaction. Returns the catalog root. */
+  def governedAppends(spec: String, batches: Seq[DataFrame]): String = {
+    import graft.operators.{Catalog, SnapshotTable}
+    val cat = java.nio.file.Files.createTempDirectory("graft-gov-appends").toString
+    batches.foreach { b =>
+      Catalog.publishTable(cat, "t")(SnapshotTable.stageAppend(b,
+        Catalog.tableRoot(cat, "t"), spec, _))
+    }
+    cat
+  }
+
+  /** The manifest entry count of each partition of governed table `t`
+    * at the catalog's current commit. */
+  def governedEntries(cat: String): Map[String, Int] = {
+    import graft.operators.{Catalog, SnapshotTable}
+    SnapshotTable.manifestEntries(Catalog.tableRoot(cat, "t"),
+      Catalog.tableVersions(cat)("t")).groupBy(_._1).view
+      .mapValues(_.size).toMap
   }
 
   /** Sidecar-swap tmp dirs (`.stats.new-*`, `.blooms.new-*`,
