@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, Filter, GlobalLimit
   SHUFFLE_REPLICATE_NL, Sort, Tail, Union, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.DataWritingCommand
+import org.apache.spark.sql.execution.datasources.{V1WriteCommand, V1WritesUtils, WriteFiles}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Late optimizer rule: a plan small enough that AQE would coalesce
@@ -30,6 +31,10 @@ import org.apache.spark.sql.internal.SQLConf
   *    `RebalancePartitions` (no explicit partition count) becomes such
   *    a coalesce, so a partitioned write still writes one file per
   *    partition directory;
+  *  - a file write's partition sort is put back where the coalesce
+  *    broke it: `OptimizeOneRowPlan` drops the write's local sort when
+  *    every input partition holds at most one row, which stops holding
+  *    once the partitions are coalesced into one;
   *  - each equi-join is hinted shuffle-hash, and each other inner or
   *    cross join shuffle-replicate nested-loop (a one-by-one-partition
   *    cartesian product), overriding a broadcast hint.
@@ -102,6 +107,14 @@ object GraftSmallPlanRule extends Rule[LogicalPlan] {
     * one-partition coalesce, which needs none of its own. */
   private def oneTask(p: LogicalPlan, under: Boolean): LogicalPlan = p match {
     case r @ Repartition(1, false, child) => r.copy(child = oneTask(child, under = true))
+    case w: V1WriteCommand => w.mapChildren {
+      case f: WriteFiles =>
+        val c = oneTask(f.child, under = false)
+        val ordered = V1WritesUtils.isOrderingMatched(
+          w.requiredOrdering.map(_.child), c.outputOrdering)
+        f.copy(child = if (ordered) c else Sort(w.requiredOrdering, global = false, c))
+      case c => oneTask(c, under = false)
+    }
     case _ if layout.isDefinedAt(p) => one(oneTask(p.children.head, under = true))
     case u: Union =>
       val children = u.mapChildren(oneTask(_, under = false))

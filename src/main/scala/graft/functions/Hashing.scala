@@ -30,10 +30,7 @@ object Hashing {
     }
   }
 
-  /** Spark SQL array literal of the permutation `a` constants. */
-  def permsASql: String = perms.map(_._1).mkString("array(", "L,", "L)")
-  def permsBSql: String = perms.map(_._2).mkString("array(", "L,", "L)")
-  /** DuckDB list literal of the same constants. */
+  /** DuckDB list literal of the permutation constants. */
   def permsADuck: String = perms.map(_._1).mkString("[", ",", "]")
   def permsBDuck: String = perms.map(_._2).mkString("[", ",", "]")
 

@@ -18,8 +18,9 @@ import graft.sources.TableHandle
   *   <root>/tables/<name>/      a SnapshotTable version store (no
   *                              per-table refs — the catalog owns state)
   *   <root>/_commits/c=N        manifest: "<table> <version>" lines
-  *   <root>/_latest             current catalog commit (atomic marker)
   * }}}
+  * plus the head (the current commit), the branch and tag refs and the
+  * commit lock in the layout [[Refs]] owns.
   *
   * A transaction STAGES a new fully-written version in every updated
   * table (data files on disk, nothing published), writes the next
@@ -31,8 +32,8 @@ import graft.sources.TableHandle
   * manifest — invisible to readers, removed by [[expireCommits]].
   *
   * Concurrency is optimistic, like Nessie's CAS on a branch head: the
-  * publish section runs under an exclusive-create lock directory (the
-  * same primitive as [[SnapshotTable]] branch commits) and re-checks
+  * publish section is a [[Refs.advance]] of main (under the same commit
+  * lock as [[SnapshotTable]] commits and every other head move) and re-checks
   * that every table the commit touches still sits where the
   * committer's base had it — of two committers staging the same table
   * from the same base exactly one publishes; the loser gets
@@ -62,7 +63,6 @@ import graft.sources.TableHandle
   */
 object Catalog {
 
-  private def markerPath(root: String) = MetaIO.join(root, "_latest")
   private def commitsDir(root: String) = MetaIO.join(root, "_commits")
   private def manifestPath(root: String, commit: Long): String =
     MetaIO.join(commitsDir(root), s"c=$commit")
@@ -74,10 +74,7 @@ object Catalog {
   }
 
   /** Latest published catalog commit, or -1 before any. */
-  def latestCommit(root: String): Long = {
-    val m = markerPath(root)
-    if (MetaIO.exists(m)) MetaIO.readString(m).trim.toLong else -1L
-  }
+  def latestCommit(root: String): Long = Refs.head(root)
 
   /** All manifest ids present on disk, ascending (including any
     * unpublished crash leftovers newer than the marker). */
@@ -108,11 +105,6 @@ object Catalog {
     tableVersions(root).keys.toSeq
       .filterNot(_.startsWith(ViewKey)).sorted
 
-  private def moveMarker(root: String, commit: Long): Unit = {
-    MetaIO.mkdirs(MetaIO.join(root))
-    MetaIO.publishString(markerPath(root), commit.toString)
-  }
-
   private def publishedStamp(root: String, commit: Long): String =
     MetaIO.join(commitsDir(root), s".published.c=$commit")
 
@@ -126,25 +118,6 @@ object Catalog {
     * marker are rollback's roll-forward targets and survive GC. */
   def isPublished(root: String, commit: Long): Boolean =
     MetaIO.exists(publishedStamp(root, commit))
-
-  /** Run `body` holding the catalog commit lock (atomic exclusive
-    * `createDirectory` — the same primitive as SnapshotTable branch
-    * commits). Held only for the tiny driver-side publish section;
-    * all staging I/O happens before. A crashed committer's stale lock
-    * is swept by [[expireCommits]] / `SnapshotTable.sweepStaleLocks`. */
-  private def withCommitLock[T](root: String)(body: => T): T = {
-    MetaIO.mkdirs(refsDir(root))
-    val lock = MetaIO.join(refsDir(root), ".lock.main")
-    try MetaIO.claimDir(lock)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"catalog commit in flight at $root (or a crashed committer " +
-            "left the lock — expireCommits sweeps stale locks); " +
-            "re-stage against the current base and retry")
-    }
-    try body finally MetaIO.delete(lock, recursive = true)
-  }
 
   /** Atomically commit already-staged table versions on top of `base`:
     * the new manifest carries the CURRENT mapping overlaid with
@@ -168,12 +141,12 @@ object Catalog {
     * stage re-reads what it derives from). Then allocate the next id
     * past EVERY manifest on disk (so rollback leftovers never block —
     * max+1, NOT base+1), publish the manifest, stamp it, move the
-    * marker. */
+    * marker. The commit lock is held only for this driver-side
+    * section ([[Refs.advance]]); all staging I/O happens before. */
   private[graft] def commitStaged(root: String, staged: Map[String, Long],
                                   base: Long,
                                   drop: Set[String] = Set.empty): Long =
-      withCommitLock(root) {
-    val current = latestCommit(root)
+      Refs.advance(root) { current =>
     val curVs = tableVersions(root, current)
     def lost(why: String) = new TablesMoved(
       s"catalog at $root moved from $base to $current and $why; re-stage " +
@@ -212,7 +185,6 @@ object Catalog {
     // time-travels on.
     MetaIO.writeString(publishedStamp(root, next),
       System.currentTimeMillis().toString)
-    moveMarker(root, next)
     next
   }
 
@@ -423,15 +395,16 @@ object Catalog {
       SnapshotTable.stageApplyDeletes(spark, tableRoot(root, table), prev)
     }
 
-  /** Re-point the catalog at an older published commit (atomic) —
-    * rolls EVERY table back together, which is the point. The
+  /** Re-point the catalog at an older published commit (atomic, and
+    * under the commit lock like every head move) — rolls EVERY table
+    * back together, which is the point. The
     * rolled-back-from manifests stay on disk as roll-forward targets
     * (re-`rollback` to any of them); they never block new commits
     * (allocation is max+1) and GC keeps them while they're newer than
     * current. To discard them deliberately, see [[abandonRollForward]]. */
   def rollback(root: String, commit: Long): Unit = {
     require(commits(root).contains(commit), s"unknown catalog commit $commit")
-    moveMarker(root, commit)
+    Refs.advance(root)(_ => commit)
   }
 
   /** Deliberately discard the rolled-back-from history: delete every
@@ -442,8 +415,7 @@ object Catalog {
     * and fall to the next [[expireCommits]]. Returns the dropped ids.
     * Runs under the commit lock so an in-flight committer (who may be
     * allocating past these ids) can't interleave. */
-  def abandonRollForward(root: String): Seq[Long] = withCommitLock(root) {
-    val current = latestCommit(root)
+  def abandonRollForward(root: String): Seq[Long] = Refs.locked(root) { current =>
     val (branchRefs, tagRefs) = refs(root)
     val pinned = tagRefs.values.toSet ++ branchRefs.values.map(_._1)
     val drop = commits(root).filter(c => c > current && isPublished(root, c))
@@ -527,12 +499,12 @@ object Catalog {
   // them. Publishing is a git fast-forward: allowed only while main
   // still sits at the branch's fork point, and lands the branch head's
   // whole mapping as ONE main commit. Tags pin main commits immutably.
+  // A branch ref holds "<fork> <head>"; no catalog ref is named main.
 
-  private def refsDir(root: String) = MetaIO.join(root, "_refs")
-  private def refPath(root: String, kind: String, name: String): String = {
-    require(name.matches("[A-Za-z0-9._-]+") && name != "main",
-      s"invalid ref name '$name'")
-    MetaIO.join(refsDir(root), s"$kind.$name")
+  /** `name` as a catalog branch or tag name. */
+  private def refName(name: String): String = {
+    require(name != Refs.Main, s"invalid ref name '$name'")
+    name
   }
   private def branchManifest(root: String, name: String, n: Long): String =
     MetaIO.join(commitsDir(root), name, s"c=$n")
@@ -541,34 +513,16 @@ object Catalog {
   def createBranch(root: String, name: String, from: Long = -1L): Long = {
     val fork = if (from >= 0) from else latestCommit(root)
     require(commits(root).contains(fork), s"unknown catalog commit $fork")
-    // tmp + NO-REPLACE atomic rename: fails on an existing target, so
-    // it is atomic content AND an already-exists check in one step — a
-    // concurrent reader never sees an empty ref, a concurrent creator
-    // loses cleanly
-    publishNewRef(root, "branch", name, s"$fork -1",
+    Refs.create(root, "branch", refName(name), s"$fork -1",
       s"branch '$name' already exists")
     fork
   }
 
-  private def publishNewRef(root: String, kind: String, name: String,
-                            content: String, existsMsg: String): Unit = {
-    val p = refPath(root, kind, name)
-    MetaIO.mkdirs(refsDir(root))
-    // exclusive publish: atomic content AND already-exists check in
-    // one step — a concurrent reader never sees an empty ref, a
-    // concurrent creator loses cleanly
-    try MetaIO.publishExclusive(p, content)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(existsMsg)
-    }
-  }
-
   /** (fork main-commit, branch head n; -1 = no branch commits yet). */
   private def branchState(root: String, name: String): (Long, Long) = {
-    val p = refPath(root, "branch", name)
-    require(MetaIO.exists(p), s"unknown catalog branch '$name'")
-    val Array(f, h) = MetaIO.readString(p).trim.split(' ')
+    val ref = Refs.read(root, "branch", refName(name))
+    require(ref.isDefined, s"unknown catalog branch '$name'")
+    val Array(f, h) = ref.get.split(' ')
     (f.toLong, h.toLong)
   }
 
@@ -616,7 +570,7 @@ object Catalog {
           s"branch '$name' commit $next already exists (concurrent " +
             "committer); re-stage against the new head and retry")
     }
-    MetaIO.publishString(refPath(root, "branch", name), s"$fork $next")
+    Refs.repoint(root, "branch", name, s"$fork $next")
     next
   }
 
@@ -673,7 +627,7 @@ object Catalog {
     * versions it referenced become unreferenced — [[expireCommits]]
     * collects them). */
   def dropBranch(root: String, name: String): Unit = {
-    MetaIO.delete(refPath(root, "branch", name))
+    Refs.drop(root, "branch", refName(name))
     MetaIO.delete(MetaIO.join(commitsDir(root), name), recursive = true)
   }
 
@@ -681,29 +635,23 @@ object Catalog {
   def tag(root: String, name: String, commit: Long = -1L): Long = {
     val c = if (commit >= 0) commit else latestCommit(root)
     require(commits(root).contains(c), s"unknown catalog commit $c")
-    publishNewRef(root, "tag", name, c.toString,
+    Refs.create(root, "tag", refName(name), c.toString,
       s"tag '$name' already exists (tags are immutable)")
     c
   }
 
-  def tagCommit(root: String, name: String): Long = {
-    val p = refPath(root, "tag", name)
-    require(MetaIO.exists(p), s"unknown catalog tag '$name'")
-    MetaIO.readString(p).trim.toLong
-  }
+  def tagCommit(root: String, name: String): Long =
+    Refs.read(root, "tag", refName(name))
+      .getOrElse(throw new IllegalArgumentException(s"unknown catalog tag '$name'"))
+      .toLong
 
   def dropTag(root: String, name: String): Unit =
-    MetaIO.delete(refPath(root, "tag", name))
+    Refs.drop(root, "tag", refName(name))
 
   /** All branch names (with fork/head) and tag names (with commit). */
-  def refs(root: String): (Map[String, (Long, Long)], Map[String, Long]) = {
-    val d = refsDir(root)
-    val names = MetaIO.listNames(d).filterNot(_.startsWith("."))
-    def named(kind: String) =
-      names.filter(_.startsWith(s"$kind.")).map(_.stripPrefix(s"$kind."))
-    (named("branch").map(n => n -> branchState(root, n)).toMap,
-      named("tag").map(n => n -> tagCommit(root, n)).toMap)
-  }
+  def refs(root: String): (Map[String, (Long, Long)], Map[String, Long]) =
+    (Refs.names(root, "branch").map(n => n -> branchState(root, n)).toMap,
+      Refs.names(root, "tag").map(n => n -> tagCommit(root, n)).toMap)
 
   /** Catalog-level GC: drop old manifests beyond `retainLast` (the
     * current commit, PUBLISHED newer-than-current roll-forward targets,
@@ -735,7 +683,7 @@ object Catalog {
     drop.foreach(deleteManifest(root, _))
     // a crashed committer's commit lock blocks all publishes — sweep it
     // with the same grace discipline as the table-level locks
-    SnapshotTable.sweepStaleLocks(root, graceMs)
+    Refs.sweepStaleLocks(root, graceMs)
 
     // table-version reachability spans main manifests AND every live
     // branch's manifest namespace — a branch's staged versions must

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types
   * same capability class is a directory-of-versions protocol:
   * `<root>/v=N/` holds the full snapshot for version N and a
   * `_latest` marker file names the current version. Writers publish a
-  * new version directory then atomically move the marker — readers of
+  * new version directory then atomically move the marker ([[Refs]]
+  * holds the marker, the named refs and the commit locks) — readers of
   * any existing version are never disturbed (copy-on-write semantics,
   * the same isolation Iceberg's copy-on-write mode gives).
   *
@@ -38,13 +39,8 @@ import org.apache.spark.sql.types
   */
 object SnapshotTable {
 
-  private def markerPath(root: String) = MetaIO.join(root, "_latest")
-
   /** Latest committed version, or -1 if none. */
-  def latestVersion(root: String): Long = {
-    val m = markerPath(root)
-    if (MetaIO.exists(m)) MetaIO.readString(m).trim.toLong else -1L
-  }
+  def latestVersion(root: String): Long = Refs.head(root)
 
   /** Every version directory on disk (committed or a live claim),
     * ascending; non-numeric `v=` names are not versions. */
@@ -53,11 +49,6 @@ object SnapshotTable {
       .filter(_.startsWith("v="))
       .flatMap(_.stripPrefix("v=").toLongOption)
       .sorted
-
-  private[graft] def moveMarker(root: String, version: Long): Unit = {
-    MetaIO.mkdirs(MetaIO.join(root))
-    MetaIO.publishString(markerPath(root), version.toString)
-  }
 
   /** Atomically claim a version directory ([[MetaIO.claimDir]] — a
     * POSIX atomic createDirectory locally, mkdirs + an exclusive
@@ -113,15 +104,11 @@ object SnapshotTable {
     val base = latestVersion(root)
     val next = stage(base)
     if (next < 0 || next == base) base
-    else {
-      withBranchLock(root, MainBranch) {
-        val current = latestVersion(root)
-        if (current != base)
-          throw new java.util.ConcurrentModificationException(
-            s"table at $root moved from v$base to v$current while v$next " +
-              "was staged; stage again against the current version")
-        moveMarker(root, next)
-      }
+    else Refs.advance(root) { current =>
+      if (current != base)
+        throw new java.util.ConcurrentModificationException(
+          s"table at $root moved from v$base to v$current while v$next " +
+            "was staged; stage again against the current version")
       next
     }
   }
@@ -665,9 +652,10 @@ object SnapshotTable {
     // every spec era with LIVE directories is a directory layout —
     // including pre-evolution eras not yet migrated
     if (op != "add") locally {
+      val history = specHistory(root)
       val liveSpecs = b.entries
-        .flatMap(e => partitionSpecAt(root, e._2)).toSet ++
-        partitionSpec(root)
+        .flatMap(e => specAt(history, e._2)).toSet ++
+        history.lastOption.map(_._1)
       // a transform spec's SOURCE column is equally a layout column —
       // renaming `ts` out from under `days(ts)` would orphan the layout
       val layoutCols = liveSpecs.flatMap(s => parseSpecs(s).map(_.source))
@@ -765,7 +753,8 @@ object SnapshotTable {
         }).filterNot(_ == curSchema.fieldNames.toSeq.map(Option(_)))
     }
     val bySv = leaves.map(svOf).distinct.map(sv => sv -> projOf(sv)).toMap
-    leaves.groupBy(l => (bySv(svOf(l)), partitionSpecAt(root, svOf(l))))
+    val history = specHistory(root)
+    leaves.groupBy(l => (bySv(svOf(l)), specAt(history, svOf(l))))
       .toSeq.sortBy(_._2.min).map {
         case ((None, spec), ls) =>
           // hidden partitioning: a transform era's DERIVED directory
@@ -789,7 +778,7 @@ object SnapshotTable {
           // declared at add time (pre-add files read the default; eras
           // that HAVE the column read real values, NULLs included),
           // null otherwise
-          val partCol = partitionSpec(root)
+          val partCol = history.lastOption.map(_._1)
           val defs = c.defaults.toMap
           val projected = curSchema.fields.toSeq.zip(proj)
             .sortBy { case (f, _) => if (partCol.contains(f.name)) 1 else 0 }
@@ -818,7 +807,7 @@ object SnapshotTable {
     * (atomic, like commit, and under the same main branch lock). */
   def rollback(root: String, version: Long): Unit = {
     require(versions(root).contains(version), s"unknown version $version")
-    withBranchLock(root, MainBranch)(moveMarker(root, version))
+    Refs.advance(root)(_ => version)
   }
 
   /** Change data feed between two committed versions — the Delta CDF /
@@ -961,61 +950,36 @@ object SnapshotTable {
   //
   // The reference's headline catalog feature is git-like branches/tags
   // over table state (Nessie; `infrastructure/init/nessie_setup.py:1-75`).
-  // Same capability class here, over the directory-of-versions protocol:
-  //
-  //   <root>/_refs/branch.<name>   one line: the version the branch heads
-  //   <root>/_refs/tag.<name>      one line: the version the tag pins
-  //   <root>/v=N/_commit           N's record; `!parent P` is its ancestry
-  //
-  // `_latest` IS the main branch (back-compat: every pre-refs table
-  // already has it). Refs are re-pointed with the same tmp-file +
-  // ATOMIC_MOVE publish as `_latest`; branch commits additionally take
-  // a per-branch lock directory (atomic createDirectory) around the
-  // read-check-advance so a concurrent committer to the SAME branch
-  // fails fast instead of silently losing the other's commit. Version
-  // directories stay globally numbered and copy-on-write, so branches
-  // share storage history and never disturb each other's readers.
+  // Same capability class here, over the directory-of-versions protocol,
+  // in the layout [[Refs]] owns: the main head is the latest version, a
+  // branch or tag ref holds one version, and a version's record
+  // (`!parent P`) is its ancestry. Every head move — a commit to any
+  // branch, a fast-forward, a rollback — runs under the branch's commit
+  // lock ([[Refs.advance]]), so a concurrent committer to the SAME
+  // branch fails fast instead of silently losing the other's commit.
+  // Version directories stay globally numbered and copy-on-write, so
+  // branches share storage history and never disturb each other's
+  // readers.
 
-  /** The branch name that aliases the `_latest` marker. */
-  val MainBranch = "main"
-
-  private def refsDir(root: String) = MetaIO.join(root, "_refs")
-
-  private def refPath(root: String, kind: String, name: String) = {
-    require(name.matches("[A-Za-z0-9._-]+"), s"invalid ref name '$name'")
-    MetaIO.join(root, "_refs", s"$kind.$name")
-  }
-
-  private def writeRef(root: String, kind: String, name: String,
-                       version: Long): Unit = {
-    MetaIO.mkdirs(refsDir(root))
-    MetaIO.publishString(refPath(root, kind, name), version.toString)
-  }
+  /** The branch name that aliases the latest version. */
+  val MainBranch = Refs.Main
 
   /** All named refs as `"branch.x" / "tag.y" -> version` (main excluded). */
-  def refs(root: String): Map[String, Long] = {
-    val d = refsDir(root)
-    MetaIO.listNames(d)
-      .filter(n => n.startsWith("branch.") || n.startsWith("tag."))
-      .map(n => n -> MetaIO.readString(MetaIO.join(d, n)).trim.toLong)
+  def refs(root: String): Map[String, Long] =
+    Seq("branch", "tag").flatMap(k => Refs.names(root, k).map(n => s"$k.$n" -> refVersion(root, k, n)))
       .toMap
-  }
 
-  /** Resolve a branch head (main = the `_latest` marker). */
+  private def refVersion(root: String, kind: String, name: String): Long =
+    Refs.read(root, kind, name)
+      .getOrElse(throw new IllegalArgumentException(s"unknown $kind '$name' at $root"))
+      .toLong
+
+  /** Resolve a branch head (main = the latest version). */
   def branchVersion(root: String, name: String): Long =
-    if (name == MainBranch) latestVersion(root)
-    else {
-      val p = refPath(root, "branch", name)
-      require(MetaIO.exists(p), s"unknown branch '$name' at $root")
-      MetaIO.readString(p).trim.toLong
-    }
+    if (name == MainBranch) latestVersion(root) else refVersion(root, "branch", name)
 
   /** Resolve a tag. */
-  def tagVersion(root: String, name: String): Long = {
-    val p = refPath(root, "tag", name)
-    require(MetaIO.exists(p), s"unknown tag '$name' at $root")
-    MetaIO.readString(p).trim.toLong
-  }
+  def tagVersion(root: String, name: String): Long = refVersion(root, "tag", name)
 
   /** Create a branch at `fromVersion` (default: current main head).
     * Fails if the branch already exists — create-only, like
@@ -1024,14 +988,9 @@ object SnapshotTable {
     require(name != MainBranch, "main always exists; cannot be created")
     val v = if (fromVersion >= 0) fromVersion else latestVersion(root)
     require(versions(root).contains(v), s"unknown version $v")
-    MetaIO.mkdirs(refsDir(root))
-    // exclusive publish, not check-then-write: two racing creators
+    // exclusive create, not check-then-write: two racing creators
     // cannot both win
-    try MetaIO.publishExclusive(refPath(root, "branch", name), v.toString)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(s"branch '$name' already exists")
-    }
+    Refs.create(root, "branch", name, v.toString, s"branch '$name' already exists")
     v
   }
 
@@ -1041,13 +1000,8 @@ object SnapshotTable {
   def createTag(root: String, name: String, version: Long = -1L): Long = {
     val v = if (version >= 0) version else latestVersion(root)
     require(versions(root).contains(v), s"unknown version $v")
-    MetaIO.mkdirs(refsDir(root))
-    try MetaIO.publishExclusive(refPath(root, "tag", name), v.toString)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"tag '$name' already exists (tags are immutable)")
-    }
+    Refs.create(root, "tag", name, v.toString,
+      s"tag '$name' already exists (tags are immutable)")
     v
   }
 
@@ -1058,22 +1012,6 @@ object SnapshotTable {
   def readTag(spark: SparkSession, root: String, name: String): DataFrame =
     read(spark, root, tagVersion(root, name))
 
-  /** Run `body` holding the per-branch commit lock (exclusive claim =
-    * test-and-set; the loser fails fast). */
-  private def withBranchLock[A](root: String, name: String)(body: => A): A = {
-    MetaIO.mkdirs(refsDir(root))
-    val lock = MetaIO.join(root, "_refs", s".lock.$name")
-    try MetaIO.claimDir(lock)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"branch '$name' at $root has a commit in flight (or a stale " +
-            s"lock at $lock after a crash, which fails every commit to " +
-            "the branch until it is removed by hand or by sweepStaleLocks)")
-    }
-    try body finally MetaIO.delete(lock, recursive = true)
-  }
-
   /** Publish `df` as a new snapshot on `branch` and advance its head.
     * The version directory is claimed atomically (global numbering —
     * branches share the version space, like Nessie commit hashes), the
@@ -1081,21 +1019,12 @@ object SnapshotTable {
     * under the branch lock: of two committers racing to the same
     * branch, exactly one wins; the loser throws instead of silently
     * overwriting the winner's head. Commits to a non-main branch never
-    * touch `_latest`, so main readers are fully isolated. */
+    * touch main's head, so main readers are fully isolated. */
   def commitToBranch(df: DataFrame, root: String, branch: String): Long =
-    withBranchLock(root, branch) {
-      // the full commit path: CHECK constraints and `_stats` apply to a
-      // branch commit exactly as to a main one, so a violating frame
-      // can never reach main by a later fast-forward
-      val next = stageVersion(df, root, branchVersion(root, branch))
-      moveBranch(root, branch, next)
-      next
-    }
-
-  /** Re-point a branch head (main = the `_latest` marker). */
-  private def moveBranch(root: String, branch: String, version: Long): Unit =
-    if (branch == MainBranch) moveMarker(root, version)
-    else writeRef(root, "branch", branch, version)
+    // the full commit path: CHECK constraints and `_stats` apply to a
+    // branch commit exactly as to a main one, so a violating frame can
+    // never reach main by a later fast-forward
+    Refs.advance(root, branch)(stageVersion(df, root, _))
 
   /** `version`'s recorded parent, or -1 (a root commit, or a version
     * without a record). */
@@ -1121,13 +1050,11 @@ object SnapshotTable {
     * head moves under the target's branch lock, and the precondition is
     * re-checked inside it (no TOCTOU against a concurrent commit). */
   def fastForward(root: String, toBranch: String, fromBranch: String): Long =
-    withBranchLock(root, toBranch) {
-      val target = branchVersion(root, toBranch)
+    Refs.advance(root, toBranch) { target =>
       val source = branchVersion(root, fromBranch)
       require(isAncestor(root, target, source),
         s"'$toBranch' (v$target) is not an ancestor of '$fromBranch' " +
           s"(v$source): not a fast-forward — merge instead")
-      if (source != target) moveBranch(root, toBranch, source)
       source
     }
 
@@ -1149,12 +1076,10 @@ object SnapshotTable {
     * expiry). Main cannot be dropped. */
   def dropBranch(root: String, name: String): Unit = {
     require(name != MainBranch, "cannot drop main")
-    MetaIO.delete(refPath(root, "branch", name))
+    Refs.drop(root, "branch", name)
   }
 
-  def dropTag(root: String, name: String): Unit = {
-    MetaIO.delete(refPath(root, "tag", name))
-  }
+  def dropTag(root: String, name: String): Unit = Refs.drop(root, "tag", name)
 
   // ─────────── partition-manifest delta snapshots (shallow versions) ───────────
   //
@@ -1212,7 +1137,13 @@ object SnapshotTable {
     * written under — era resolution for reads over spec-evolved
     * tables. */
   def partitionSpecAt(root: String, sv: Long): Option[String] =
-    specHistory(root).filter(_._2 <= sv).lastOption.map(_._1)
+    specAt(specHistory(root), sv)
+
+  /** [[partitionSpecAt]] over a history read once: a caller resolving
+    * many storage versions reads `_partition_spec` once, not per
+    * version. */
+  private def specAt(history: Seq[(String, Long)], sv: Long): Option[String] =
+    history.filter(_._2 <= sv).lastOption.map(_._1)
 
   // ───────── hidden partitioning (Iceberg partition transforms) ─────────
   //
@@ -1407,8 +1338,9 @@ object SnapshotTable {
   private def foreignEraEntries(root: String,
                                 entries: Seq[(String, Long)])
       : Seq[(String, Long)] = {
-    val cur = partitionSpec(root)
-    entries.filter(e => partitionSpecAt(root, e._2) != cur)
+    val history = specHistory(root)
+    val cur = history.lastOption.map(_._1)
+    entries.filter(e => specAt(history, e._2) != cur)
   }
 
   /** Rewrite every live directory still laid out under an OLD
@@ -1635,10 +1567,6 @@ object SnapshotTable {
     MetaIO.writeString(sortOrderPath(root),
       (if (zorder) "zorder:" else "") + cols.mkString(","))
   }
-
-  /** The declared write order, if any. */
-  def sortOrder(root: String): Option[Seq[String]] =
-    sortOrderSpec(root).map(_._1)
 
   /** The declared write order WITH its clustering mode: (columns,
     * isZOrder). Z-order (`setSortOrder(..., zorder = true)`) declares
@@ -3453,7 +3381,8 @@ object SnapshotTable {
     // too: their directory value is an exact [v, v] bound on the data
     // column (classic partition pruning, done here at the manifest
     // file listing).
-    val transforms = candidates.groupBy(f => partitionSpecAt(root, svOf(f)))
+    val history = specHistory(root)
+    val transforms = candidates.groupBy(f => specAt(history, svOf(f)))
       .toSeq.flatMap { case (specOpt, fs) =>
         specOpt.toSeq.flatMap(parseSpecs).map(_ -> fs)
       }
@@ -3793,7 +3722,8 @@ object SnapshotTable {
           prev.nulls.orElse(m.nulls))
         case None => derived(key) = m
       }
-    candidates.groupBy(f => partitionSpecAt(root, svOf(f))).foreach {
+    val history = specHistory(root)
+    candidates.groupBy(f => specAt(history, svOf(f))).foreach {
       case (specOpt, fs) =>
         specOpt.toSeq.flatMap(parseSpecs)
           .filter(ps => cols.contains(ps.source)).foreach { ps =>
@@ -4339,18 +4269,8 @@ object SnapshotTable {
     orphans
   }
 
-  /** Remove branch-commit lock directories older than `graceMs` — the
-    * crash recovery for [[withBranchLock]] (a holder that died leaves
-    * the lock forever; no real commit holds one anywhere near an
-    * hour). Returns the lock names removed. */
-  def sweepStaleLocks(root: String, graceMs: Long = 3600000L): Seq[String] = {
-    val d = refsDir(root)
-    if (!MetaIO.exists(d)) return Seq.empty
-    val now = System.currentTimeMillis()
-    val stale = MetaIO.list(d)
-      .filter(p => MetaIO.name(p).startsWith(".lock.") &&
-        now - MetaIO.mtimeMillis(p) > graceMs)
-    stale.foreach(MetaIO.delete(_, recursive = true))
-    stale.map(p => MetaIO.name(p).stripPrefix(".lock."))
-  }
+  /** Remove commit locks older than `graceMs` ([[Refs.sweepStaleLocks]]).
+    * Returns the branch names whose lock was removed. */
+  def sweepStaleLocks(root: String, graceMs: Long = 3600000L): Seq[String] =
+    Refs.sweepStaleLocks(root, graceMs)
 }

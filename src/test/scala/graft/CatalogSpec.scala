@@ -85,6 +85,30 @@ class CatalogSpec extends GraftSuite {
     assert(dropped === Seq(1L))
   }
 
+  test("a rollback under a held main lock throws and leaves the head, on both table kinds") {
+    val root = Files.createTempDirectory("graft-cat-rollback-lock").toString
+    Catalog.transact(root, Seq("t" -> df("v0", 3)))
+    Catalog.transact(root, Seq("t" -> df("v1", 6)))
+    // a concurrent committer holds the commit lock
+    Files.createDirectories(Paths.get(root, "_refs", ".lock.main"))
+    intercept[java.util.ConcurrentModificationException] {
+      Catalog.rollback(root, 0)
+    }
+    assert(Catalog.latestCommit(root) === 1L)
+    Files.delete(Paths.get(root, "_refs", ".lock.main"))
+    Catalog.rollback(root, 0)
+    assert(Catalog.latestCommit(root) === 0L)
+
+    val plain = Files.createTempDirectory("graft-plain-rollback-lock").toString + "/t"
+    SnapshotTable.commit(df("v0", 3), plain)
+    SnapshotTable.commit(df("v1", 6), plain)
+    Files.createDirectories(Paths.get(plain, "_refs", ".lock.main"))
+    intercept[java.util.ConcurrentModificationException] {
+      SnapshotTable.rollback(plain, 0)
+    }
+    assert(SnapshotTable.latestVersion(plain) === 1L)
+  }
+
   test("an entry staged at its base version is no change: a refresh survives a stream commit") {
     val root = Files.createTempDirectory("graft-cat-unchanged").toString
     def batch(i: Long) =

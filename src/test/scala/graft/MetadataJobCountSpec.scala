@@ -81,7 +81,7 @@ class MetadataJobCountSpec extends GraftSuite {
     val recorded = SnapshotTable.Commit()
       .withSchema(spark.read.parquet(s"$root/v=0").schema)
     SnapshotTable.writeCommit(root, 0L, recorded)
-    SnapshotTable.moveMarker(root, 0L)
+    graft.operators.Refs.advance(root)(_ => 0L)
     assert(listingJobs {
       val df = pin(0, "read of a 40-directory version")(
         SnapshotTable.read(spark, root))
@@ -94,7 +94,7 @@ class MetadataJobCountSpec extends GraftSuite {
     val root = tmp("graft-jobs-adopted")
     wide.write.partitionBy("p").parquet(s"$root/v=0")
     SnapshotTable.writeCommit(root, 0L)
-    SnapshotTable.moveMarker(root, 0L)
+    graft.operators.Refs.advance(root)(_ => 0L)
     val before = Metrics.schemaInferences.get
     val (df, jobs) = jobsOf(spark)(SnapshotTable.read(spark, root))
     assert(Metrics.schemaInferences.get - before === 1L)

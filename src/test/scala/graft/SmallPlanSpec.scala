@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.functions._
 
 import graft.MaintenanceJobCountSpec.jobsOf
-import graft.operators.{Bronze, Catalog, GovernedPipeline, Metrics}
+import graft.operators.{Bronze, Catalog, GovernedPipeline, Metrics, SnapshotTable}
 import graft.sources.Tables
 import graft.streaming.GovernedStream
 
@@ -170,6 +170,28 @@ class SmallPlanSpec extends GraftSuite {
       val reps = df.queryExecution.optimizedPlan.collect { case r: Repartition => r }
       assert(reps.size === 1 && !reps.head.child.isInstanceOf[LeafNode])
     }
+  }
+
+  test("a small partitioned write whose rows interleave partition values writes in one task") {
+    val dir = Files.createTempDirectory("graft-smallplan-partitioned").toString
+    // p alternates 0, 1, 0, 1: one task must sort by p before writing,
+    // or it reopens p=0's file after p=1's
+    def frame = spark.range(100, 104)
+      .select((col("id") % 2).cast("string").as("p"), col("id").as("x"))
+    def rows(df: DataFrame) =
+      df.select("p", "x").orderBy("x").collect().map(r => (r.get(0).toString, r.getLong(1))).toSeq
+    val expected = Seq(("0", 100L), ("1", 101L), ("0", 102L), ("1", 103L))
+
+    val (_, written) = Metrics.collectJobs(spark, "partitioned_write")(
+      frame.write.partitionBy("p").parquet(s"$dir/plain"))
+    assert(written.map(_.numTasks) === Seq(1))
+    assert(rows(spark.read.parquet(s"$dir/plain")) === expected)
+
+    val (v, appended) = Metrics.collectJobs(spark, "partitioned_append")(
+      SnapshotTable.commitAppend(frame, s"$dir/t", "p"))
+    assert(appended.nonEmpty && appended.forall(_.numTasks == 1),
+      appended.map(_.numTasks).mkString(", "))
+    assert(rows(SnapshotTable.read(spark, s"$dir/t", v)) === expected)
   }
 }
 

@@ -86,7 +86,7 @@ class NdvStatsSpec extends GraftSuite {
     (0 until 200).map(i => (i.toLong, s"g${i % 4}")).toDF("id", "p")
       .write.partitionBy("p").parquet(s"$root/v=0")
     SnapshotTable.writeCommit(root, 0L)
-    SnapshotTable.moveMarker(root, 0L)
+    graft.operators.Refs.advance(root)(_ => 0L)
     assert(SnapshotTable.read(spark, root).count() === 200L)
     // every live-file path sees the partitioned files: counts, the
     // connector's count pushdown, skipping reads, size, `files`
